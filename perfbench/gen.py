@@ -7,14 +7,17 @@ Every input directory is a function of (workload, seed) alone:
   a seeded order, written as two part files split at a seeded point near
   the middle;
 * curation: the same lake, with the documents replaced by DOCS
-  distinct bag-of-words documents over the base corpus's vocabulary, of
-  which a share NEAR_DUP_RATE are near-copies (NEAR_DUP_EDIT of the
-  words replaced) of an earlier document.
+  documents drawn from the base corpus's own distributions (see
+  `corpus_model`): words by their frequency in the base, each original's
+  length and language by resampling a base original, and near-copies at
+  the base's rate and in the base's form.
 
 Generation is never timed.
 """
+import collections
 import os
 import shutil
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -23,11 +26,43 @@ import pyarrow.parquet as pq
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
-# curation's corpus: size, share of near-copies, and their edit rate
+# curation's corpus size
 DOCS = 1000
-NEAR_DUP_RATE = 0.05
-NEAR_DUP_EDIT = 0.05   # share of a near-copy's words that are replaced
-LANGS = (["en"] * 8) + ["zh", "es", "fr", "de"] * 3
+# the base corpus marks a near-copy by appending this word to a copy of
+# another document, once or more
+MARKER = "dup"
+
+
+@dataclass(frozen=True)
+class CorpusModel:
+    words: list           # vocabulary without the marker
+    word_p: np.ndarray    # each word's share of the base originals' words
+    shapes: list          # (word count, lang) of every base original
+    near_copy_rate: float # share of base documents that are near-copies
+    marker_counts: list   # marker words appended, per base near-copy
+
+
+def corpus_model(base: pa.Table) -> CorpusModel:
+    """The base corpus's distributions. A document is a near-copy when it
+    ends in the marker; stripped of its markers it is an original."""
+    texts = base.column("text").to_pylist()
+    langs = base.column("lang").to_pylist()
+    shapes, marks, freq = [], [], collections.Counter()
+    for text, lang in zip(texts, langs):
+        words = text.split()
+        k = 0
+        while words and words[-1] == MARKER:
+            words.pop()
+            k += 1
+        if k:
+            marks.append(k)
+        else:
+            shapes.append((len(words), lang))
+            freq.update(words)
+    vocab = sorted(freq)
+    counts = np.array([freq[w] for w in vocab], dtype=np.float64)
+    return CorpusModel(vocab, counts / counts.sum(), shapes,
+                       len(marks) / len(texts), marks)
 
 
 def _write_parts(table: pa.Table, path: str, rng: np.random.Generator) -> None:
@@ -43,26 +78,24 @@ def _write_parts(table: pa.Table, path: str, rng: np.random.Generator) -> None:
                            os.path.join(path, f"part-{i:05d}.parquet"))
 
 
-def _documents(base: pa.Table, rng: np.random.Generator) -> pa.Table:
-    vocab = sorted({w for t in base.column("text").to_pylist() for w in t.split()
-                    if w != "dup"})
-    texts = []
-    for i in range(DOCS):
-        if i > 0 and rng.random() < NEAR_DUP_RATE:
-            words = texts[int(rng.integers(0, i))].split()
-            for j in rng.choice(len(words), max(1, int(len(words) * NEAR_DUP_EDIT)),
-                                replace=False):
-                words[j] = vocab[int(rng.integers(0, len(vocab)))]
+def documents(model: CorpusModel, n: int, rng: np.random.Generator) -> pa.Table:
+    texts, langs = [], []
+    for i in range(n):
+        if i > 0 and rng.random() < model.near_copy_rate:
+            src = int(rng.integers(0, i))
+            k = model.marker_counts[int(rng.integers(0, len(model.marker_counts)))]
+            texts.append(texts[src] + f" {MARKER}" * k)
+            langs.append(langs[src])
         else:
-            words = [vocab[k] for k in rng.integers(0, len(vocab),
-                                                    int(rng.integers(10, 101)))]
-        texts.append(" ".join(words))
-    ids = np.arange(DOCS, dtype=np.int64)
+            length, lang = model.shapes[int(rng.integers(0, len(model.shapes)))]
+            idx = rng.choice(len(model.words), size=length, p=model.word_p)
+            texts.append(" ".join(model.words[j] for j in idx))
+            langs.append(lang)
     return pa.table({
-        "doc_id": pa.array(ids),
+        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
         "text": pa.array(texts),
-        "lang": pa.array([LANGS[int(k)] for k in rng.integers(0, len(LANGS), DOCS)]),
-        "source": pa.array([f"src{i % 20}" for i in range(DOCS)]),
+        "lang": pa.array(langs),
+        "source": pa.array([f"src{i % 20}" for i in range(n)]),
         "n_chars": pa.array([len(t) for t in texts], type=pa.int64()),
     })
 
@@ -77,7 +110,7 @@ def generate(base_dir: str, out_dir: str, seed: int, scaled_docs: bool) -> None:
         src = os.path.join(base_dir, f"{t}.parquet")
         table = pq.read_table(src)
         if t == "documents" and scaled_docs:
-            table = _documents(table, rng)
+            table = documents(corpus_model(table), DOCS, rng)
         _write_parts(table, os.path.join(tmp, f"{t}.parquet"), rng)
     shutil.rmtree(out_dir, ignore_errors=True)
     os.rename(tmp, out_dir)

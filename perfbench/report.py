@@ -61,36 +61,55 @@ def _stability(h, calls):
     return out
 
 
-def summarize(h, wl, input_rows, mismatch, traced, cores):
+def summarize(h, wl, input_rows, mismatch, expected_rows, traced, cores):
+    """`mismatch`: call → why its set-up output differs from the oracle;
+    `expected_rows`: call → the oracle's row count."""
     names = [n for n, _ in wl.calls]
     calls = h["calls"]
-    # a call counts as failed in every execution when its output was wrong
-    failed = sum(1 for c in calls if not c["ok"] or c["name"] in mismatch)
+    # an execution fails when it threw, when it forced another row count
+    # than the oracle's, or when the call's set-up output was wrong
+    def bad(name, rows):
+        return rows < 0 or rows != expected_rows.get(name) or name in mismatch
+    failed = sum(1 for c in calls if bad(c["name"], c["rows"]))
+    setup_bad = [n for n in names if bad(n, h["setup_rows"].get(n, -1))]
     attempted = len(calls)
-    # traced runs trace passes 3, 5, …; pass 1 is still warming up
-    traced_passes = [p for p in range(3, h["passes"] + 1, 2) if traced]
-    untraced_passes = [p for p in range(1, h["passes"] + 1)
-                       if p not in traced_passes and not (traced and p == 1)]
+    # traced runs trace passes 2, 4, …
+    traced_passes = [p for p in range(2, h["passes"] + 1, 2) if traced]
+    untraced_passes = [p for p in range(1, h["passes"] + 1) if p not in traced_passes]
     pass_s = h["pass_s"]
-    call_s = [c["s"] for c in calls if c["ok"]]
+    call_s = [c["s"] for c in calls if c["rows"] >= 0]
 
     def pass_sum(field, p):
         return sum(a["acc"][field] for a in h["accs"]
                    if _pass_of(a["key"]) == p and not a["key"].startswith("probe:"))
 
-    batch_s = statistics.median(pass_s[p - 1] for p in untraced_passes)
-    cpu_s = statistics.median(pass_sum("cpu_ns", p) / 1e9 for p in untraced_passes)
+    # a pass is estimated call by call: each call's median over the
+    # passes, summed, so that a burst of host load that hits one call in
+    # one pass and another call in the next moves neither
+    def call_median(value, passes):
+        return sum(statistics.median(value(c) for c in calls
+                                     if c["name"] == n and c["pass"] in passes)
+                   for n in names)
+    cpu_of = {a["key"]: a["acc"]["cpu_ns"] for a in h["accs"] if not a["module"]}
+    batch_s = call_median(lambda c: c["s"], untraced_passes)
+    cpu_s = call_median(lambda c: cpu_of.get(f"{c['pass']}:{c['name']}", 0) / 1e9,
+                        untraced_passes)
     rec = {
-        "correct": failed == 0 and not h["errors"],
+        "correct": failed == 0 and not setup_bad and not h["errors"],
         "attempted": attempted,
         "failed": failed,
         "mismatch": mismatch,
+        "setup_mismatch": setup_bad,
+        "expected_rows": expected_rows,
         "errors": h["errors"],
         "passes": h["passes"],
         "session_s": h["session_s"],
         "peak_rss_mb": h["peak_rss_kb"] / 1024,
         "pass_s": pass_s,
         "call_samples": len(call_s),
+        # one call's wall time over every call of the run; not bounded
+        # metrics (see README)
+        "call_s": {"p50": _pct(call_s, 50), "p90": _pct(call_s, 90)},
         "calls": calls,
         "floor_s": h["floor_s"],
         "stability": _stability(h, names),
@@ -101,8 +120,6 @@ def summarize(h, wl, input_rows, mismatch, traced, cores):
             "setup_s": {"value": h["setup_s"], "unit": "s"},
             "batch_s": {"value": batch_s, "unit": "s"},
             "rows_per_s": {"value": input_rows / batch_s, "unit": "1/s"},
-            "call_s.p50": {"value": _pct(call_s, 50), "unit": "s"},
-            "call_s.p90": {"value": _pct(call_s, 90), "unit": "s"},
             "cpu_s": {"value": cpu_s, "unit": "s"},
             "ok_frac": {"value": 1 - failed / attempted, "unit": "frac"},
         }
@@ -175,8 +192,7 @@ def summarize(h, wl, input_rows, mismatch, traced, cores):
         "ops.reuse_ratio": (listed - run_stages) / listed if listed else 0.0,
         "tables.input_rows": statistics.median(pass_sum("input_rows", p)
                                                for p in traced_passes),
-        "trace_overhead_frac": statistics.median(pass_s[p - 1] for p in traced_passes)
-        / batch_s - 1,
+        "trace_overhead_frac": call_median(lambda c: c["s"], traced_passes) / batch_s - 1,
     })
     units = {"self_s": "s", "jobs": "count", "tasks": "count", "task_s": "s",
              "cpu_s": "s", "shuffle_mb": "MB", "spill_mb": "MB", "wait_s": "s"}
@@ -196,6 +212,10 @@ def lines(rec):
            f"attempted={rec['attempted']} failed={rec['failed']}"]
     for k, v in rec["metrics"].items():
         out.append(f"#   {k:28s} {v['value']:.6g} {v['unit']}")
+    out.append(f"# unbounded: call_s.p50 {rec['call_s']['p50']:.6g} s, "
+               f"call_s.p90 {rec['call_s']['p90']:.6g} s "
+               f"({rec['call_samples']} samples), "
+               f"peak_rss_mb {rec['peak_rss_mb']:.6g} MB")
     varying = sorted(f"{n}.{k}" for n, st in rec["stability"].items()
                      for k, s in st.items() if s["exact"] is False)
     if rec["passes"] > 1:
@@ -206,6 +226,12 @@ def lines(rec):
                    f"calibration={h['calibration_s']:.4f}s")
     for n, why in rec["mismatch"].items():
         out.append(f"# MISMATCH {n}: {why}")
+    for n in rec["setup_mismatch"]:
+        out.append(f"# MISMATCH {n}: set-up execution")
+    for c in rec["calls"]:
+        if c["rows"] >= 0 and c["rows"] != rec["expected_rows"].get(c["name"]):
+            out.append(f"# MISMATCH {c['name']} pass {c['pass']}: {c['rows']} rows, "
+                       f"oracle {rec['expected_rows'].get(c['name'])}")
     for k, why in rec["errors"]:
         out.append(f"# ERROR {k}: {why}")
     return out

@@ -166,9 +166,18 @@ def main() -> None:
     out = os.path.join(work, "harness.json")
     if os.path.exists(out):
         os.remove(out)
+    # a fixed number of passes, the number that fits in --seconds on the
+    # reference host: a time-boxed loop would stop earlier in the JIT
+    # warm-up on a slower host and so move the medians with host speed.
+    # A traced run alternates untraced and traced passes and makes an odd
+    # number of them, so that each traced pass has an untraced one on
+    # either side.
+    passes = max(3 if a.trace else 2, int(a.seconds / wl.pass_s))
+    if a.trace and passes % 2 == 0:
+        passes -= 1
     run_jvm(classes, jars, [
         "--calls", ",".join(n for n, _ in wl.calls),
-        "--input", input_dir, "--seconds", str(a.seconds),
+        "--input", input_dir, "--passes", str(passes),
         "--trace", str(a.trace), "--tables", ",".join(wl.tables),
         "--src", "src/main/scala/graft", "--dump", dump, "--out", out,
         "--cores", str(CORES)])
@@ -176,16 +185,18 @@ def main() -> None:
     t2 = time.perf_counter()
 
     # output check, untimed: every call against its oracle
+    # and every execution's row count against the oracle's
     sqls = h["oracle_sql"]
-    mismatch = {}
+    mismatch, expected_rows = {}, {}
     for n, _ in wl.calls:
         if n not in sqls:
             mismatch[n] = "no oracle SQL"
             continue
         cache = os.path.join(work, "oracle", f"{wl.input_kind}-{a.seed}", n + ".pkl")
         try:
-            why = oracle.check(os.path.join(dump, n + ".parquet"),
-                               oracle.expected(input_dir, sqls[n], cache))
+            want = oracle.expected(input_dir, sqls[n], cache)
+            expected_rows[n] = len(want)
+            why = oracle.check(os.path.join(dump, n + ".parquet"), want)
         except Exception as e:  # a failing oracle run is a failed check
             why = f"{type(e).__name__}: {e}".splitlines()[0]
         if why:
@@ -195,7 +206,7 @@ def main() -> None:
 
     rows = sum(pq.read_metadata(f).num_rows for t in wl.tables
                for f in glob.glob(os.path.join(input_dir, f"{t}.parquet", "*.parquet")))
-    rec = report.summarize(h, wl, rows, mismatch, a.trace == 1, CORES)
+    rec = report.summarize(h, wl, rows, mismatch, expected_rows, a.trace == 1, CORES)
     rec.update({"workload": a.workload, "seed": a.seed, "seconds": a.seconds,
                 "trace": a.trace, "host_before": before, "host_after": after,
                 "phase_s": {"generate": t1 - t0, "harness": t2 - t1, "check": t3 - t2}})

@@ -3,7 +3,9 @@ package perfbench
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.BusDrain
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -22,7 +24,9 @@ final class Acc {
 /** Charges every job, stage and task to the key the submitting thread
   * carried (`perfbench.key`, inherited by threads the program spawns)
   * and, when `attribute` is on, to the module whose source file
-  * submitted the job, read from the job's call site. */
+  * submitted the job, read from the job's call site, or else from the
+  * call site of the SQL execution the job belongs to (the stage jobs
+  * adaptive execution submits from its own threads). */
 final class Recorder(moduleOf: String => Option[String]) extends SparkListener {
   @volatile var attribute = false
   val KeyProp = "perfbench.key"
@@ -32,19 +36,25 @@ final class Recorder(moduleOf: String => Option[String]) extends SparkListener {
   /** (key, module, start ms, end ms) of every finished job. */
   val jobSpans = mutable.ArrayBuffer.empty[(String, String, Long, Long)]
   private val jobOpen = new ConcurrentHashMap[Int, (String, String, Long)]()
+  // SQL execution id → its call site, "<action> at <File>.scala:<line>"
+  private val executionSite = new ConcurrentHashMap[Long, String]()
 
   private def acc(o: (String, String)): Acc = accs.computeIfAbsent(o, _ => new Acc)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     val key = Option(e.properties).flatMap(p => Option(p.getProperty(KeyProp))).getOrElse("-")
+    def moduleAt(site: String): Option[String] =
+      moduleOf(site.split(" at ").lastOption.getOrElse("").split(":").head)
     val module =
       if (!attribute) ""
       else {
         // the result stage is the one this job created; its name is the
-        // job's short call site, "<action> at <File>.scala:<line>"
-        val site = e.stageInfos.maxBy(_.stageId).name
-        val file = site.split(" at ").lastOption.getOrElse("").split(":").head
-        moduleOf(file).getOrElse("")
+        // job's short call site
+        val execution = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(executionSite.get(id.toLong)))
+        moduleAt(e.stageInfos.maxBy(_.stageId).name)
+          .orElse(execution.flatMap(moduleAt)).getOrElse("")
       }
     val o = (key, module)
     val a = acc(o)
@@ -52,6 +62,12 @@ final class Recorder(moduleOf: String => Option[String]) extends SparkListener {
     a.stagesListed += e.stageInfos.size
     e.stageInfos.foreach(s => stageOwner.putIfAbsent(s.stageId, o))
     if (attribute) jobOpen.put(e.jobId, (key, module, e.time))
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart if attribute =>
+      executionSite.put(x.executionId, x.description)
+    case _ =>
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = if (attribute) {
@@ -89,12 +105,13 @@ final class Recorder(moduleOf: String => Option[String]) extends SparkListener {
   * measured as JSON. Arguments are `--name value` pairs:
   *   --calls   name,...         SparkEntry.queries names, in run order
   *   --input   dir              generated input tables
-  *   --seconds s                measured time: passes run while one more fits
-  *   --trace   0|1              module attribution on passes 3, 5, …
-  *                              (at least four passes), then layer probes
+  *   --passes  n                measured passes (a fixed count, so every
+  *                              run stops at the same point of JIT warm-up)
+  *   --trace   0|1              module attribution on passes 2, 4, …,
+  *                              then layer probes
   *   --tables  t1,...           input tables the calls read (traced scans)
   *   --src     dir              graft sources, mapped file → module
-  *   --dump    dir              where the set-up pass writes each output
+  *   --dump    dir              where each call's set-up output is written
   *   --out     file             result JSON
   *   --cores   n
   */
@@ -103,12 +120,8 @@ object Harness {
     val args = argv.grouped(2).map(a => a(0).stripPrefix("--") -> a(1)).toMap
     val calls = args("calls").split(",").toSeq
     val input = args("input")
-    val seconds = args("seconds").toDouble
+    val passes = args("passes").toInt
     val trace = args("trace") == "1"
-    // a traced run: a pass still warming up, then untraced and traced
-    // passes alternating, so each traced pass has an untraced one on
-    // either side
-    val minPasses = if (trace) 4 else 1
     val cores = args("cores")
     val tables = args.getOrElse("tables", "").split(",").toSeq.filter(_.nonEmpty)
 
@@ -162,18 +175,19 @@ object Harness {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // ---- set-up: the session above, one pass that writes every call's
-    // output for the oracle check and pays the codegen warm-up, then one
-    // forced pass so the first measured pass does not still wait on the JIT
-    val dump = args("dump")
+    // ---- set-up: the session above, then one cold pass of the calls; it
+    // pays the codegen warm-up. Each call runs the plan the measured
+    // passes run (toRdd), and its rows (a few dozen) are kept for the
+    // oracle check instead of counted.
+    val setupRows = mutable.ArrayBuffer.empty[(String, Long)]
+    val outputs = mutable.ArrayBuffer.empty[(String, StructType, Array[InternalRow])]
     calls.foreach { n =>
-      try keyed("setup")(fn(n)(spark, input).coalesce(1).write.mode("overwrite")
-        .parquet(s"$dump/$n.parquet"))
-      catch { case t: Throwable => errors += (("setup:" + n) -> msg(t)) }
-      dropState()
-    }
-    calls.foreach { n =>
-      try keyed("setup")(force(fn(n)(spark, input)))
+      try keyed("setup") {
+        val df = fn(n)(spark, input)
+        val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+        setupRows += n -> rows.length.toLong
+        outputs += ((n, df.schema, rows))
+      }
       catch { case t: Throwable => errors += (("setup:" + n) -> msg(t)) }
       dropState()
     }
@@ -181,30 +195,39 @@ object Harness {
     BusDrain(sc)
     val setupS = (now - jvmStart) / 1e3
 
+    // ---- after set-up, untimed: the set-up outputs, written for the
+    // oracle check
+    val dump = args("dump")
+    outputs.foreach { case (n, schema, rows) =>
+      try keyed("dump") {
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        val external = rows.toSeq.map(r => toRow(r).asInstanceOf[Row])
+        spark.createDataFrame(external.asJava, schema).coalesce(1)
+          .write.mode("overwrite").parquet(s"$dump/$n.parquet")
+      }
+      catch { case t: Throwable => errors += (("dump:" + n) -> msg(t)) }
+    }
+
     // ---- measured passes
     val passWall = mutable.ArrayBuffer.empty[Double]
-    val callWall = mutable.ArrayBuffer.empty[(Int, String, Double, Boolean)]
+    // (pass, call, wall s, rows forced; -1 when the call threw)
+    val callWall = mutable.ArrayBuffer.empty[(Int, String, Double, Long)]
     val floorWall = mutable.ArrayBuffer.empty[Double]
     val materialized = mutable.ArrayBuffer.empty[Long]
-    val t0 = System.nanoTime()
-    def elapsed = (System.nanoTime() - t0) / 1e9
-    var pass = 0
-    // a pass starts only when one more of the mean length fits
-    while (pass < minPasses || elapsed * (pass + 1) / pass <= seconds) {
-      pass += 1
+    for (pass <- 1 to passes) {
       BusDrain(sc)
-      val traced = trace && pass > 1 && pass % 2 == 1
+      val traced = trace && pass % 2 == 0
       rec.attribute = traced
       var stored = 0L
       (1 to 3).foreach(i => floorWall += floorProbe(s"floor:$pass:$i"))
       val p0 = System.nanoTime()
       calls.foreach { n =>
         val c0 = System.nanoTime()
-        val ok =
-          try { span(s"$pass:$n", "queries")(force(fn(n)(spark, input))); true }
-          catch { case t: Throwable => errors += (s"$pass:$n" -> msg(t)); false }
+        val rows =
+          try span(s"$pass:$n", "queries")(force(fn(n)(spark, input)))
+          catch { case t: Throwable => errors += (s"$pass:$n" -> msg(t)); -1L }
         val s = (System.nanoTime() - c0) / 1e9
-        callWall += ((pass, n, s, ok))
+        callWall += ((pass, n, s, rows))
         if (traced) stored += sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
         System.err.println(f"[perfbench] pass $pass $n $s%.3fs")
         dropState()
@@ -213,12 +236,18 @@ object Harness {
       materialized += stored
     }
     // layer probes, charged to the traced passes, after the timed ones
-    for (p <- 3 to pass by 2 if trace) {
+    for (p <- 2 to passes by 2 if trace) {
       BusDrain(sc)
       rec.attribute = true
-      try probeCounts ++= Probes.run(spark, tracer, s"probe:$p", input,
-        tables, calls, force, () => dropState())
+      try Probes.run(spark, tracer, s"probe:$p", input, tables, calls, force)
       catch { case t: Throwable => errors += (s"probe:$p" -> msg(t)) }
+      dropState()
+    }
+    // row counts only: the key "yield" is charged to no pass and no layer
+    if (trace && calls.exists(_.startsWith("d"))) {
+      try probeCounts ++= Probes.pairYield(spark, tracer, "yield", input, force,
+        () => dropState())
+      catch { case t: Throwable => errors += ("yield" -> msg(t)) }
     }
     BusDrain(sc)
 
@@ -238,14 +267,15 @@ object Harness {
         s"""{"key":${q(k)},"layer":${q(l)},"start":$s,"end":$e,"kind":"$kind"}"""
       }.mkString("[", ",\n", "]")
     val out =
-      s"""{"setup_s":$setupS,"session_s":$sessionS,"peak_rss_kb":$peakRssKb,"passes":$pass,""" +
+      s"""{"setup_s":$setupS,"session_s":$sessionS,"peak_rss_kb":$peakRssKb,"passes":$passes,""" +
       s""""pass_s":${passWall.mkString("[", ",", "]")},""" +
       s""""materialized_bytes":${materialized.mkString("[", ",", "]")},""" +
       s""""oracle_sql":${calls.flatMap { n => graft.SparkEntry.oracleSql.get(n)
         .map(s => s"${q(n)}:${q(s)}") }.mkString("{", ",", "}")},""" +
       s""""floor_s":${floorWall.mkString("[", ",", "]")},""" +
-      s""""calls":${callWall.map { case (p, n, s, ok) =>
-        s"""{"pass":$p,"name":${q(n)},"s":$s,"ok":$ok}""" }.mkString("[", ",\n", "]")},""" +
+      s""""setup_rows":${setupRows.map { case (n, r) => s"${q(n)}:$r" }.mkString("{", ",", "}")},""" +
+      s""""calls":${callWall.map { case (p, n, s, r) =>
+        s"""{"pass":$p,"name":${q(n)},"s":$s,"rows":$r}""" }.mkString("[", ",\n", "]")},""" +
       s""""probe_counts":${probeCounts.map { case (k, v) => s"[${q(k)},$v]" }.mkString("[", ",", "]")},""" +
       s""""errors":${errors.map { case (k, m) => s"[${q(k)},${q(m)}]" }.mkString("[", ",", "]")},""" +
       s""""accs":$accJson,"spans":$spanJson}"""

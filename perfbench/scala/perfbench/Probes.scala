@@ -11,33 +11,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Layer probes of the traced run. Each calls one layer's public
-  * functions under a span of that layer, outside the timed pass. */
+  * functions under a span of that layer, outside the timed pass; the
+  * pair-yield probe only counts rows. */
 object Probes {
   def run(spark: SparkSession, tracer: Tracer, key: String, input: String,
-      tables: Seq[String], calls: Seq[String], force: DataFrame => Long,
-      drop: () => Unit): Seq[(String, Double)] = {
+      tables: Seq[String], calls: Seq[String], force: DataFrame => Long): Unit = {
     import tracer.span
-    val counts = Seq.newBuilder[(String, Double)]
     // tables: the scan and rebalance of every input the workload reads
     tables.foreach { t =>
       span(s"$key:tables:$t", "tables")(force(Tables.load(spark, input, t)))
     }
     if (calls.contains("mp1_multi_pipeline")) mp1Steps(spark, tracer, key, input, force)
-    if (calls.exists(_.startsWith("d"))) {
+  }
+
+  /** Row counts of `Dedup`'s LSH candidate and pair functions on the
+    * corpus, for `dedup.pair_yield`. No workload call runs these
+    * functions, so their work is keyed apart from every layer. */
+  def pairYield(spark: SparkSession, tracer: Tracer, key: String, input: String,
+      force: DataFrame => Long, drop: () => Unit): Seq[(String, Double)] =
+    tracer.keyed(key) {
       val docs = Tables.load(spark, input, "documents")
       val sh = Dedup.wordShingles(docs, "text", "doc_id", 3)
-      val cands = span(s"$key:dedup:candidates", "dedup")(
-        force(Dedup.lshCandidatesFromShingles(sh, 16, 4)))
+      val cands = force(Dedup.lshCandidatesFromShingles(sh, 16, 4))
       drop()
-      val pairs = span(s"$key:dedup:pairs", "dedup")(
-        force(Dedup.minhashPairsFromShingles(sh, 16, 4, 0.8)))
+      val pairs = force(Dedup.minhashPairsFromShingles(sh, 16, 4, 0.8))
       drop()
-      counts += "dedup.candidates" -> cands.toDouble
-      counts += "dedup.pairs" -> pairs.toDouble
+      Seq("dedup.candidates" -> cands.toDouble, "dedup.pairs" -> pairs.toDouble)
     }
-    drop()
-    counts.result()
-  }
 
   /** `MultiTablePipeline.run`'s public steps on the mp1 inputs, one span
     * per step, then the scoring of the violations against the truth. */
