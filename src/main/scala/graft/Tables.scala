@@ -25,7 +25,7 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     val df = spark.read.parquet(path)
     // data bytes, not the directory-entry size: a Spark-written table
-    // is a DIRECTORY of part files, and File.length() on a directory is
+    // is a DIRECTORY of part files, and a directory's own length is
     // the ~4 KB inode size — under the 64 KB floor, which silently
     // disabled the rebalance for every ScaleUp-shaped input and left
     // each downstream map side on one core (t21's quality scoring ran
@@ -33,14 +33,19 @@ object Tables {
     // recurse: hive-partitioned layouts (split=.../lang=.../part-*)
     // keep their data files in SUBDIRECTORIES — a top-level-only sum
     // reads 0 and silently disables the rebalance again
-    def dataBytes(f: java.io.File): Long =
-      if (f.isDirectory)
-        f.listFiles()
-          .filter(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+    // sized through the path's Hadoop FileSystem, the one the read
+    // uses: java.io.File reads 0 bytes for a file:/hdfs: URI
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataBytes(st: org.apache.hadoop.fs.FileStatus): Long =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath)
+          .filter(p => !p.getPath.getName.startsWith(".") &&
+            !p.getPath.getName.startsWith("_"))
           .map(dataBytes).sum
-      else f.length()
+      else st.getLen
     val size =
-      try dataBytes(new java.io.File(path))
+      try dataBytes(fs.getFileStatus(root))
       catch { case _: Throwable => Long.MaxValue }
     // floor: sub-64KB dimension tables are broadcast fodder; spreading
     // 25 rows over 32 tasks only adds scheduling overhead

@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
   * columns across tables, derive the rules shared by each cluster,
   * evaluate every member column, collect violations).
   *
-  * Spark shape: profiling is the only data-plane pass per table; the
-  * cluster/rule derivation runs on the collected control plane
-  * (#columns rows); the violation scan compiles ALL of a table's
-  * bound rules into one predicate bundle — one more data-plane pass
-  * per table, exactly two scans of each table total.
+  * Spark shape: one profile query over all training tables (one
+  * histogram shuffle, one fold); the cluster/rule derivation runs on
+  * the collected control plane (#columns rows); the violation scan
+  * compiles ALL of a table's scalar rules into one predicate bundle
+  * (one scan) and checks ALL its unique rules with one duplicate-key
+  * aggregation and one semi-join. The job count depends on which rule
+  * kinds are bound, never on how many rules or columns there are.
   */
 object MultiTablePipeline {
 
@@ -98,13 +100,11 @@ object MultiTablePipeline {
     val trainSide = if (trainTables.nonEmpty) trainTables else tables
     // sketch statistics: rule generation reads quartiles only as IQR
     // band endpoints — percentile_approx is the at-scale choice and
-    // deterministic for a fixed input. profileManyCached: the pipeline
-    // consumes the profile twice (vectorize + rule derivation), so the
-    // value histogram is persisted across Pass-A and the branches and
-    // the O(#columns) result materialized once.
-    // derived from the two consumers' own declarations (vectorize's
-    // feature list + RuleGenerator's consumed columns), so a field
-    // added to either cannot silently outrun this pruning
+    // deterministic for a fixed input.
+    // The profile columns read are derived from the two consumers' own
+    // declarations (vectorize's feature list + RuleGenerator's consumed
+    // columns), so a field added to either cannot silently outrun this
+    // pruning
     val consumed = ("table" +: RuleGenerator.consumedProfileColumns) ++
       Clustering.defaultFeatures.filterNot(
         RuleGenerator.consumedProfileColumns.contains)

@@ -1,9 +1,7 @@
 package graft.profile
 
-import graft.ops.CheckpointRotation.Ops
 import graft.model.ColumnProfile
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,9 +23,12 @@ import org.apache.spark.sql.types._
   *    aggregation job: fusing an ObjectHashAggregate with the ~30
   *    codegen-friendly features disables whole-stage codegen for all of
   *    them.
-  *  - A 500-column table is still three jobs, never 500 (the
-  *    reference's per-column Python loop must not be translated
-  *    literally).
+  *  - Pass-A, mode, distinct count and dominant pattern are ONE fold
+  *    of decomposable accumulators over the value histogram; only
+  *    quartiles, first digits, distinct chars and keywords add a
+  *    branch. The job count depends on the requested feature groups,
+  *    never on #columns (the reference's per-column Python loop must
+  *    not be translated literally).
   *  - `exact = false` switches distinct-chars to HLL sketches and
   *    quartiles to percentile_approx — the configuration for scale;
   *    exact mode exists for the DuckDB-oracle tests.
@@ -37,9 +38,10 @@ final case class ProfilerConfig(
     exact: Boolean = true,
     topK: Int = 10,
     /** Which optional feature groups to compute. Pass-A scalar features
-      * are always on; the rest are independent join branches that cost
-      * real jobs — callers that only read a subset should request only
-      * that subset (Catalyst cannot prune an unused outer-join branch).
+      * are always on; mode and pattern fold into Pass-A, the rest are
+      * independent join branches that cost real jobs — callers that only
+      * read a subset should request only that subset (Catalyst cannot
+      * prune an unused outer-join branch).
       * Valid: quartiles, mode, pattern, digits, chars, keywords. */
     features: Set[String] = Profiler.AllFeatures,
     /** Compute the per-char census with the fused native
@@ -96,107 +98,184 @@ object Profiler {
   def longValues(df: DataFrame): DataFrame =
     longFormat(df).filter(!isMissing(col("value")))
 
-  /** Pass-A features over the long format — table-independent
-    * expressions, all primitive-buffer aggregates (codegen'd).
+  /** One decomposable Pass-A accumulator: `agg` is sum, min or max,
+    * each its own combiner, so partial results over any finer grouping
+    * of the rows (the per-pattern level of the fold in [[assemble]])
+    * merge into the column's result by applying `agg` again. */
+  private final case class Acc(name: String, agg: Column => Column, in: Column) {
+    def part: Column = agg(in).as(name)
+    def combine: Column = agg(col(name)).as(name)
+  }
+
+  /** Pass-A accumulators over the long format — table-independent
+    * expressions, so the profiling kernel compiles once per JVM.
+    * [[profileColumns]] finishes them into the profile's features.
     *
-    * Every aggregate is weighted by `w`: `lit(1L)` when aggregating
+    * Every accumulator is weighted by `w`: `lit(1L)` when aggregating
     * data rows directly, or the histogram count when aggregating the
     * (table, column, value) → cnt frame — the per-value expressions
     * (census, type votes, word splits, regex scans) then evaluate once
     * per DISTINCT value instead of once per row, with bit-identical
     * results (counts and sums scale linearly in the multiplicity;
-    * min/max are multiplicity-blind; the decimal mean is exact under
+    * min/max are multiplicity-blind; the decimal sum is exact under
     * any grouping of its terms). */
-  private def featureAggs(cfg: ProfilerConfig, w: Column): Seq[Column] = {
+  private def passAAccs(cfg: ProfilerConfig, w: Column): Seq[Acc] = {
     val s = col("value")
     val miss = isMissing(s)
     val nn = !miss
-    val d = col("value").try_cast(DoubleType)
-    def cntIf(p: Column): Column = coalesce(sum(when(p, w)), lit(0L))
-    // ANSI mode (Spark 4 default) throws on x/0 — guard every ratio
-    def safeDiv(a: Column, b: Column, dflt: Column): Column =
-      when(b =!= 0, a / b).otherwise(dflt)
-    def charCnt(re: String): Column =
-      coalesce(sum(when(nn, length(regexp_replace(s, re, "")).cast(LongType) * w)), lit(0L))
+    val d = s.try_cast(DoubleType)
+    def cntIf(name: String, p: Column) = Acc(name, sum, when(p, w))
+    def perCell(name: String, x: Column) = Acc(name, sum, when(nn, x.cast(LongType) * w))
     // fused path: ONE byte-loop per cell instead of 4 regex rewrites
     val census = graft.functions.CharClassCensus(s)
-    def censusCnt(i: Int): Column =
-      coalesce(sum(when(nn, census.getItem(i) * w)), lit(0L))
-
-    val cnt = coalesce(sum(w), lit(0L))
-    val nullCnt = cntIf(miss)
-    val nnCnt = cnt - nullCnt
-    val alphaChars = if (cfg.fusedCensus) censusCnt(0) else charCnt("[^A-Za-z]")
-    val digitChars = if (cfg.fusedCensus) censusCnt(1) else charCnt("[^0-9]")
-    val punctChars = if (cfg.fusedCensus) censusCnt(2) else charCnt("[^\\p{Punct}]")
-    val spaceChars = if (cfg.fusedCensus) censusCnt(3) else charCnt("[^\\s]")
-    val totalChars = coalesce(sum(when(nn, length(s).cast(LongType) * w)), lit(0L))
-    val wordCnt = coalesce(sum(when(nn, size(split(trim(s), "\\s+")).cast(LongType) * w)), lit(0L))
+    def chars(name: String, i: Int, re: String) = perCell(name,
+      if (cfg.fusedCensus) census.getItem(i) else length(regexp_replace(s, re, "")))
+    val words = split(trim(s), "\\s+")
     // word-class counts (A5; reference: profiling/profiler.py:212-227):
     // whitespace tokens classified whole-token
-    def wordClassCnt(re: String): Column = coalesce(sum(when(nn,
-      size(filter(split(trim(s), "\\s+"), t => t.rlike(re)))
-        .cast(LongType) * w)), lit(0L))
-    val alphaWords = wordClassCnt("^[A-Za-z]+$")
-    val digitWords = wordClassCnt("^[0-9]+$")
-    val punctWords = wordClassCnt("^\\p{Punct}+$")
+    def wordClass(name: String, re: String) =
+      perCell(name, size(filter(words, t => t.rlike(re))))
     // fused path: ONE byte-loop evaluates all six type votes per cell
     // (regex parity spec-checked, incl. trailing-terminator semantics)
     val vote = graft.functions.CellTypeVote(s)
-    def voteCnt(bit: Long): Column =
-      cntIf(nn && vote.bitwiseAND(lit(bit)) =!= 0)
-    def typeCnt(bit: Long, re: String): Column =
-      if (cfg.fusedCensus) voteCnt(bit) else cntIf(nn && s.rlike(re))
-    val ratioOf = (bit: Long, re: String) =>
-      safeDiv(typeCnt(bit, re).cast(DoubleType), nnCnt.cast(DoubleType), lit(0.0))
-    val numCells = typeCnt(graft.functions.CellTypeVote.NumCellBit, NUM_CELL_RE)
-    val alphaCells = typeCnt(graft.functions.CellTypeVote.AlphaCellBit, ALPHA_CELL_RE)
-
+    def cells(name: String, bit: Long, re: String) = cntIf(name, nn &&
+      (if (cfg.fusedCensus) vote.bitwiseAND(lit(bit)) =!= 0 else s.rlike(re)))
+    import graft.functions.CellTypeVote._
     Seq(
-      cnt.as("row_count"),
-      nullCnt.as("null_count"),
-      (nullCnt.cast(DoubleType) / cnt.cast(DoubleType)).as("null_ratio"),
-      alphaChars.as("alpha_chars"),
-      digitChars.as("digit_chars"),
-      punctChars.as("punct_chars"),
-      spaceChars.as("space_chars"),
-      (totalChars - alphaChars - digitChars - punctChars - spaceChars).as("misc_chars"),
-      wordCnt.as("word_count"),
-      alphaWords.as("alpha_words"),
-      digitWords.as("digit_words"),
-      punctWords.as("punct_words"),
-      (wordCnt - alphaWords - digitWords - punctWords).as("misc_words"),
-      safeDiv((totalChars - spaceChars).cast(DoubleType), wordCnt.cast(DoubleType), lit(0.0))
-        .as("avg_word_len"),
-      numCells.as("numeric_cells"),
-      alphaCells.as("alpha_cells"),
-      nullCnt.as("empty_cells"),
-      (nnCnt - numCells - alphaCells).as("other_cells"),
+      Acc("row_count", sum, w),
+      cntIf("null_count", miss),
+      chars("alpha_chars", 0, "[^A-Za-z]"),
+      chars("digit_chars", 1, "[^0-9]"),
+      chars("punct_chars", 2, "[^\\p{Punct}]"),
+      chars("space_chars", 3, "[^\\s]"),
+      perCell("total_chars", length(s)),
+      perCell("word_count", size(words)),
+      wordClass("alpha_words", "^[A-Za-z]+$"),
+      wordClass("digit_words", "^[0-9]+$"),
+      wordClass("punct_words", "^\\p{Punct}+$"),
+      cells("numeric_cells", NumCellBit, NUM_CELL_RE),
+      cells("alpha_cells", AlphaCellBit, ALPHA_CELL_RE),
+      cells("int_cells", IntBit, INT_RE),
+      cells("float_cells", FloatBit, FLOAT_RE),
+      cells("bool_cells", BoolBit, BOOL_RE),
+      cells("date_cells", DateBit, DATE_RE),
+      Acc("min_len", min, when(nn, length(s))),
+      Acc("max_len", max, when(nn, length(s))),
+      cntIf("num_count", d.isNotNull),
+      Acc("num_min", min, d),
+      Acc("num_max", max, d),
+      // decimal-exact sum for the mean: deterministic under any
+      // partitioning and under the histogram grouping. The value cast
+      // must admit int64-magnitude columns (epoch nanos ~ 1.7e18 — a
+      // (24,6) cast throws NUMERIC_VALUE_OUT_OF_RANGE under ANSI for any
+      // value >= 10^18): (30,6)×(13,0) caps to (38,6), which is still
+      // exact while the actual value·count product stays below 10^32.
+      Acc("num_sum", sum, d.cast(DecimalType(30, 6)) * w.cast(DecimalType(13, 0))),
+      Acc("max_digits", max, when(nn, length(regexp_replace(s, "[^0-9]", "")))),
+      Acc("max_decimals", max, length(regexp_extract(s, "^[+-]?\\d+\\.(\\d*?)0*$", 1))))
+  }
+
+  /** Mode and distinct-count accumulators; over the value histogram
+    * only (`cnt` is a value's multiplicity). A null ordering struct
+    * keeps missing values out of the mode, and the min over
+    * (−cnt, value) breaks count ties toward the smallest value. */
+  private def modeAccs: Seq[Acc] = {
+    val nn = !isMissing(col("value"))
+    Seq(
+      Acc("mode_key", min, when(nn, struct((-col("cnt")).as("n"), col("value").as("v")))),
+      Acc("mode_max", max, when(nn, col("cnt"))),
+      Acc("mode_sum", sum, when(nn, col("cnt"))),
+      Acc("distinct_count", sum, when(nn, lit(1L))))
+  }
+
+  /** Dominant pattern over the per-pattern partials of the fold's first
+    * level: a pattern's weight is its present-value count, so a pattern
+    * only blank or NULL cells generalize to never wins, and count ties
+    * break toward the smallest pattern. */
+  private def patternAggs: Seq[Column] = {
+    val n = col("row_count") - coalesce(col("null_count"), lit(0L))
+    val present = when(n > 0, n)
+    Seq(
+      min(when(n > 0, struct((-n).as("n"), col("pattern").as("v")))).as("pattern_key"),
+      (max(present).cast(DoubleType) / sum(present).cast(DoubleType))
+        .as("dominant_pattern_ratio"))
+  }
+
+  /** The finishing projection: every profile column from the folded
+    * accumulators and the joined feature branches. A feature group that
+    * was not requested gets its schema-stable default (distinct_count =
+    * -1 marks "not computed" so type inference does not mistake it for
+    * a real low cardinality). */
+  private def profileColumns(cfg: ProfilerConfig): Seq[Column] = {
+    def n(name: String): Column = coalesce(col(name), lit(0L))
+    // ANSI mode (Spark 4 default) throws on x/0 — guard every ratio
+    def safeDiv(a: Column, b: Column, dflt: Column): Column =
+      when(b =!= 0, a / b).otherwise(dflt)
+    def feature(f: String, c: Column, dflt: Column): Column =
+      if (cfg.features(f)) coalesce(c, dflt) else dflt
+    val rows = n("row_count")
+    val nulls = n("null_count")
+    val nnCnt = rows - nulls
+    val charCols = Seq("alpha_chars", "digit_chars", "punct_chars", "space_chars")
+    val wordCols = Seq("alpha_words", "digit_words", "punct_words")
+    def ratio(c: String): Column =
+      safeDiv(n(c).cast(DoubleType), nnCnt.cast(DoubleType), lit(0.0))
+    val distinct =
+      if (cfg.features("mode")) coalesce(col("distinct_count"), lit(0L)) else lit(-1L)
+    val uniqueRatio = distinct.cast(DoubleType) / rows.cast(DoubleType)
+    // type-vote cascade (reference: profiling/profiler.py:74-127; vote
+    // threshold 0.7, categorical when few distinct values)
+    val t = lit(0.7)
+    val inferredType = when(rows === nulls, "empty")
+      .when(ratio("date_cells") >= t, "date")
+      .when(ratio("bool_cells") >= t, "boolean")
+      .when(ratio("int_cells") >= t, "integer")
+      .when(ratio("float_cells") >= t, "float")
+      .when(distinct > 0 && distinct <= lit(20) && uniqueRatio <= lit(0.1), "categorical")
+      .otherwise("string")
+    Seq(col("table"), col("column"), rows.as("row_count"), nulls.as("null_count"),
+      (nulls.cast(DoubleType) / rows.cast(DoubleType)).as("null_ratio"),
+      distinct.as("distinct_count"), uniqueRatio.as("unique_ratio")) ++
+    charCols.map(c => n(c).as(c)) ++ Seq(
+      charCols.map(n).foldLeft(n("total_chars"))(_ - _).as("misc_chars"),
+      n("word_count").as("word_count")) ++
+    wordCols.map(c => n(c).as(c)) ++ Seq(
+      wordCols.map(n).foldLeft(n("word_count"))(_ - _).as("misc_words"),
+      safeDiv((n("total_chars") - n("space_chars")).cast(DoubleType),
+        n("word_count").cast(DoubleType), lit(0.0)).as("avg_word_len"),
+      n("numeric_cells").as("numeric_cells"),
+      n("alpha_cells").as("alpha_cells"),
+      nulls.as("empty_cells"),
+      (nnCnt - n("numeric_cells") - n("alpha_cells")).as("other_cells"),
       // long, not int: DuckDB LENGTH() is BIGINT and the driver's hash
       // compare is dtype-sensitive (CORRECTNESS_r02 p1)
-      coalesce(min(when(nn, length(s))), lit(0)).cast(LongType).as("min_len"),
-      coalesce(max(when(nn, length(s))), lit(0)).cast(LongType).as("max_len"),
-      safeDiv(totalChars.cast(DoubleType), nnCnt.cast(DoubleType),
-        lit(0.0)).as("avg_len"),
-      cntIf(d.isNotNull).as("num_count"),
-      coalesce(min(d), lit(Double.NaN)).as("num_min"),
-      coalesce(max(d), lit(Double.NaN)).as("num_max"),
-      // decimal-exact mean: deterministic under any partitioning and
-      // under the histogram grouping. The value cast must admit int64-
-      // magnitude columns (epoch nanos ~ 1.7e18 — a (24,6) cast throws
-      // NUMERIC_VALUE_OUT_OF_RANGE under ANSI for any value >= 10^18):
-      // (30,6)×(13,0) caps to (38,6), which is still exact while the
-      // actual value·count product stays below 10^32.
-      safeDiv(sum(d.cast(DecimalType(30, 6)) * w.cast(DecimalType(13, 0)))
-          .cast(DoubleType), cntIf(d.isNotNull), lit(Double.NaN))
-        .as("num_mean"),
-      coalesce(max(when(nn, length(regexp_replace(s, "[^0-9]", "")))), lit(0)).as("max_digits"),
-      coalesce(max(length(regexp_extract(s, "^[+-]?\\d+\\.(\\d*?)0*$", 1))), lit(0))
-        .as("max_decimals"),
-      ratioOf(graft.functions.CellTypeVote.IntBit, INT_RE).as("ratio_int"),
-      ratioOf(graft.functions.CellTypeVote.FloatBit, FLOAT_RE).as("ratio_float"),
-      ratioOf(graft.functions.CellTypeVote.BoolBit, BOOL_RE).as("ratio_bool"),
-      ratioOf(graft.functions.CellTypeVote.DateBit, DATE_RE).as("ratio_date"))
+      coalesce(col("min_len"), lit(0)).cast(LongType).as("min_len"),
+      coalesce(col("max_len"), lit(0)).cast(LongType).as("max_len"),
+      safeDiv(n("total_chars").cast(DoubleType), nnCnt.cast(DoubleType), lit(0.0))
+        .as("avg_len"),
+      n("num_count").as("num_count"),
+      coalesce(col("num_min"), lit(Double.NaN)).as("num_min"),
+      coalesce(col("num_max"), lit(Double.NaN)).as("num_max"),
+      safeDiv(col("num_sum").cast(DoubleType), n("num_count"), lit(Double.NaN))
+        .as("num_mean")) ++
+    Seq("num_q1", "num_median", "num_q3").map(q =>
+      feature("quartiles", col(q), lit(Double.NaN)).as(q)) ++ Seq(
+      coalesce(col("max_digits"), lit(0)).as("max_digits"),
+      coalesce(col("max_decimals"), lit(0)).as("max_decimals"),
+      ratio("int_cells").as("ratio_int"),
+      ratio("float_cells").as("ratio_float"),
+      ratio("bool_cells").as("ratio_bool"),
+      ratio("date_cells").as("ratio_date"),
+      inferredType.as("inferred_type"),
+      feature("pattern", col("pattern_key").getField("v"), lit("")).as("dominant_pattern"),
+      feature("pattern", col("dominant_pattern_ratio"), lit(0.0)).as("dominant_pattern_ratio"),
+      feature("mode", col("mode_key").getField("v"), lit("")).as("mode_value"),
+      feature("mode", col("mode_max").cast(DoubleType) / col("mode_sum").cast(DoubleType),
+        lit(0.0)).as("mode_ratio"),
+      feature("digits", col("first_digit_mode"), lit(0)).as("first_digit_mode"),
+      feature("chars", col("distinct_chars"), lit(0L)).as("distinct_chars"),
+      (if (cfg.features("keywords")) coalesce(col("top_keywords"), array())
+       else array().cast("array<string>")).as("top_keywords"))
   }
 
   /** Quartiles in their own job: exact mode sorts (ExactPercentiles —
@@ -219,20 +298,6 @@ object Profiler {
         coalesce(pcts.getItem(2), lit(Double.NaN)).as("num_q3"))
     }
 
-  /** Type-vote cascade (reference: profiling/profiler.py:74-127; vote
-    * threshold 0.7, categorical when few distinct values). */
-  private def inferredType: Column = {
-    val t = lit(0.7)
-    when(col("row_count") === col("null_count"), "empty")
-      .when(col("ratio_date") >= t, "date")
-      .when(col("ratio_bool") >= t, "boolean")
-      .when(col("ratio_int") >= t, "integer")
-      .when(col("ratio_float") >= t, "float")
-      .when(col("distinct_count") > 0 && col("distinct_count") <= lit(20) &&
-            col("unique_ratio") <= lit(0.1), "categorical")
-      .otherwise("string")
-  }
-
   /** Generalize a value to its character-class pattern: digits→9,
     * letters→A, whitespace→space, punctuation kept
     * (reference: profiling/profiler.py:134-165). One fused byte pass
@@ -247,46 +312,23 @@ object Profiler {
 
   /** Frequency features. ALL of them are functions of the
     * (table, column, value) → count histogram, so that histogram is the
-    * ONLY data-cardinality shuffle: every branch below consumes the
-    * same `valueHist` frame, Spark serves it from one exchange
-    * (ReusedExchange — the branches join into a single query), and the
-    * per-value work (pattern generalization, tokenization, char
-    * explode) runs once per DISTINCT value instead of once per row.
-    * Downstream shuffles carry keyspace-sized data only. */
-  private def valueHist(present: DataFrame): DataFrame =
-    present.groupBy("table", "column", "value").agg(count(lit(1)).as("cnt"))
+    * ONLY data-cardinality shuffle: mode, distinct count and dominant
+    * pattern fold into the Pass-A aggregation over it ([[assemble]]),
+    * the branches below consume the same frame, and the per-value work
+    * (pattern generalization, tokenization, char explode) runs once per
+    * DISTINCT value instead of once per row. Downstream shuffles carry
+    * keyspace-sized data only. */
+  private def valueHist(long: DataFrame): DataFrame =
+    long.groupBy("table", "column", "value").agg(count(lit(1)).as("cnt"))
 
-  private def modeDistinctFrame(hist: DataFrame): DataFrame =
-    hist.groupBy("table", "column").agg(
-        min_by(col("value"), struct((-col("cnt")).as("n"), col("value"))).as("mode_value"),
-        (max("cnt").cast(DoubleType) / sum("cnt").cast(DoubleType)).as("mode_ratio"),
-        count(lit(1)).cast(LongType).as("distinct_count"))
+  /** Feature groups read from the histogram: all but quartiles. */
+  private def histNeeded(cfg: ProfilerConfig): Boolean =
+    Seq("mode", "pattern", "digits", "chars", "keywords").exists(cfg.features)
 
-  /** [[modeDistinctFrame]]'s aggregates restated over the UNFILTERED
-    * histogram (missing-value rows masked per-aggregate), so they fold
-    * into the Pass-A aggregation — same groupBy(table, column), one
-    * fewer branch join. Identical semantics: a null ordering struct
-    * makes min_by skip the row exactly as the branch's filter dropped
-    * it, and an all-missing column yields null/0 which the assembly's
-    * coalesce maps to the same defaults as a missing join row. */
-  private def modeAggsInline: Seq[Column] = {
-    val nn = !isMissing(col("value"))
-    Seq(
-      min_by(col("value"),
-        when(nn, struct((-col("cnt")).as("n"), col("value")))).as("mode_value"),
-      (max(when(nn, col("cnt"))).cast(DoubleType) /
-        sum(when(nn, col("cnt"))).cast(DoubleType)).as("mode_ratio"),
-      count(when(nn, lit(1))).cast(LongType).as("distinct_count"))
-  }
-
-  private def patternFrame(hist: DataFrame): DataFrame =
-    hist.groupBy(col("table"), col("column"), patternOf(col("value")).as("pattern"))
-      .agg(sum("cnt").as("cnt"))
-      .groupBy("table", "column").agg(
-        min_by(col("pattern"), struct((-col("cnt")).as("n"), col("pattern")))
-          .as("dominant_pattern"),
-        (max("cnt").cast(DoubleType) / sum("cnt").cast(DoubleType))
-          .as("dominant_pattern_ratio"))
+  /** Feature groups that read the histogram a SECOND time, as a branch
+    * of their own beside the Pass-A fold. */
+  private def histBranches(cfg: ProfilerConfig): Boolean =
+    Seq("digits", "chars", "keywords").exists(cfg.features)
 
   private def firstDigitFrame(hist: DataFrame): DataFrame =
     hist.select(col("table"), col("column"), col("cnt"),
@@ -380,85 +422,41 @@ object Profiler {
       ProfilerConfig(exact = exact, features = features, maxGroupRows = n))
   }
 
-  /** Profile every column of `df` in three jobs (features, quartiles,
-    * frequency aggs). Returns one row per column, schema matching
-    * [[graft.model.ColumnProfile]]. */
+  /** Profile every column of `df`. Returns one row per column, schema
+    * matching [[graft.model.ColumnProfile]]. */
   def profile(df: DataFrame, table: String, cfg: ProfilerConfig = ProfilerConfig()): DataFrame =
     profileMany(Seq(table -> df), cfg)
 
-  /** Profile a whole set of tables in the SAME three jobs: the long
-    * formats union into one frame keyed by (table, column), so every
-    * aggregation pass shuffles once for all tables. Callers profiling
-    * a lake (clustering, multi-table pipeline) get #jobs independent
-    * of #tables. */
+  /** Profile a whole set of tables in ONE query: the long formats union
+    * into one frame keyed by (table, column), so every aggregation pass
+    * shuffles once for all tables. The job count depends on the
+    * requested feature groups only — never on #tables or #columns.
+    * Lazy, so narrow gate queries keep Catalyst's column pruning. */
   def profileMany(tables: Seq[(String, DataFrame)],
       cfg: ProfilerConfig = ProfilerConfig()): DataFrame = {
     val long = longFormatMany(tables)
-    val histNeeded = Seq("mode", "pattern", "digits", "chars", "keywords")
-      .exists(cfg.features)
-    val fullHist =
-      if (histNeeded) Some(long.groupBy("table", "column", "value")
-        .agg(count(lit(1)).as("cnt")))
-      else None
-    assemble(long, fullHist, cfg)
+    assemble(long, if (histNeeded(cfg)) Some(valueHist(long)) else None, cfg)
   }
 
-  /** [[profileMany]] with the value histogram persisted for the
-    * duration and the result — an O(#columns) frame — materialized
-    * eagerly: the data scan and the histogram shuffle run ONCE for
-    * Pass-A and every frequency branch, instead of once per consumer
-    * (exchange/stage reuse does not fire across the branch subtrees —
-    * verified post-execution on the physical plan). The persisted
-    * histogram is bounded by the distinct-value count, spills to disk
-    * under pressure, and is released before returning. Use when the
-    * profile will actually be consumed (pipelines, clustering);
-    * [[profileMany]] stays lazy so narrow gate queries keep Catalyst's
-    * column pruning. */
-  def profileManyCached(tables: Seq[(String, DataFrame)],
-      cfg: ProfilerConfig = ProfilerConfig(),
-      columns: Seq[String] = Nil): DataFrame = {
-    val long = longFormatMany(tables)
-    val histNeeded = Seq("mode", "pattern", "digits", "chars", "keywords")
-      .exists(cfg.features)
-    // `columns` narrows the materialized frame BEFORE the eager
-    // checkpoint — the projection sits above the aggregation in the
-    // same plan, so Catalyst prunes the unrequested Pass-A aggregates
-    // instead of computing them into the checkpoint
-    def narrow(df: DataFrame): DataFrame =
-      if (columns.isEmpty) df else df.select(columns.map(c => col(c)): _*)
-    if (!histNeeded) narrow(assemble(long, None, cfg)).lockedCheckpoint()
-    else {
-      val fullHist = long.groupBy("table", "column", "value")
-        .agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try narrow(assemble(long, Some(fullHist), cfg)).lockedCheckpoint()
-      finally fullHist.unpersist(false)
-    }
-  }
-
-  /** [[profileManyCached]] for SINGLE consumption: identical plan, but
-    * the O(#columns) result is collect()ed directly instead of
-    * checkpoint-then-collect — one materialization job fewer. Callers
-    * that consume the profile exactly once, on the driver (the
-    * multi-table pipeline, the cluster queries), should prefer this;
-    * keep [[profileManyCached]] when the frame feeds further Spark
-    * plans. */
+  /** [[profileMany]] collected on the driver, for callers that consume
+    * the O(#columns) profile there (the multi-table pipeline, the
+    * cluster queries). `columns` narrows the result inside the plan, so
+    * Catalyst prunes the unrequested aggregates. When a branch reads
+    * the value histogram beside the Pass-A fold, the histogram is
+    * persisted for the duration: exchange reuse does not fire across
+    * the branch subtrees, so the data scan and histogram shuffle would
+    * otherwise run once per consumer. */
   def profileManyRows(tables: Seq[(String, DataFrame)],
       cfg: ProfilerConfig = ProfilerConfig(),
       columns: Seq[String] = Nil): Seq[org.apache.spark.sql.Row] = {
     val long = longFormatMany(tables)
-    val histNeeded = Seq("mode", "pattern", "digits", "chars", "keywords")
-      .exists(cfg.features)
-    def narrow(df: DataFrame): DataFrame =
-      if (columns.isEmpty) df else df.select(columns.map(c => col(c)): _*)
-    if (!histNeeded) narrow(assemble(long, None, cfg)).collect().toSeq
-    else {
-      val fullHist = long.groupBy("table", "column", "value")
-        .agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try narrow(assemble(long, Some(fullHist), cfg)).collect().toSeq
-      finally fullHist.unpersist(false)
-    }
+    val hist = if (histNeeded(cfg)) Some(valueHist(long)) else None
+    val shared = hist.filter(_ => histBranches(cfg))
+    shared.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val prof = assemble(long, hist, cfg)
+    try (if (columns.isEmpty) prof else prof.select(columns.map(col): _*))
+      .collect().toSeq
+    finally shared.foreach(_.unpersist(false))
   }
 
   /** [[profileManyRows]] with [[profileManyAuto]]'s exact/sketch
@@ -471,20 +469,6 @@ object Profiler {
       Some(tables.map(t => cheapCount(t._2)).max) else None
     val exact = n.forall(_ <= exactThreshold)
     profileManyRows(tables,
-      ProfilerConfig(exact = exact, features = features, maxGroupRows = n),
-      columns)
-  }
-
-  /** [[profileManyCached]] with [[profileManyAuto]]'s exact/sketch
-    * switch. */
-  def profileManyAutoCached(tables: Seq[(String, DataFrame)],
-      exactThreshold: Long = 200000L,
-      features: Set[String] = AllFeatures,
-      columns: Seq[String] = Nil): DataFrame = {
-    val n = if (exactnessMatters(features))
-      Some(tables.map(t => cheapCount(t._2)).max) else None
-    val exact = n.forall(_ <= exactThreshold)
-    profileManyCached(tables,
       ProfilerConfig(exact = exact, features = features, maxGroupRows = n),
       columns)
   }
@@ -508,8 +492,7 @@ object Profiler {
     * merge (distinct counts are not additive); the histogram state is
     * strictly more informative and linear in distinct values. */
   def incrementState(tables: Seq[(String, DataFrame)]): DataFrame =
-    longFormatMany(tables)
-      .groupBy("table", "column", "value").agg(count(lit(1)).as("cnt"))
+    valueHist(longFormatMany(tables))
 
   /** State of the union of increments: re-aggregate the unioned
     * histograms. Associative and commutative — fold in any order,
@@ -646,87 +629,47 @@ object Profiler {
       .withColumn("hhi", col("sum_sq").cast(DoubleType) /
         (col("n").cast(DoubleType) * col("n").cast(DoubleType)))
 
-  /** Joins Pass-A with the requested feature branches into the final
-    * profile frame.
+  /** Folds Pass-A and joins the requested feature branches into the
+    * final profile frame.
     *
-    * When the value histogram is available (any frequency branch
+    * When the value histogram is available (any frequency feature
     * requested), Pass-A aggregates FROM it, weighted by cnt: the
     * per-value expressions (census, type votes, word splits, regex
     * scans) evaluate once per DISTINCT value instead of once per row,
-    * and no second scan of the data is needed. Otherwise Pass-A is a
-    * direct map-side partial aggregation over rows — no
-    * data-cardinality shuffle at all. */
-  private def assemble(long: DataFrame, fullHistOpt: Option[DataFrame],
+    * and no second scan of the data is needed. Mode and distinct count
+    * fold into the same aggregation. With `pattern` requested the fold
+    * has two levels: level 1 groups by (table, column, pattern of the
+    * value), level 2 combines the partials by (table, column) and picks
+    * the dominant pattern on the way — no separate pattern branch.
+    * Without the histogram Pass-A is a direct map-side partial
+    * aggregation over rows — no data-cardinality shuffle at all. */
+  private def assemble(long: DataFrame, histOpt: Option[DataFrame],
       cfg: ProfilerConfig): DataFrame = {
-    val present = long.filter(!isMissing(col("value")))
-    val (passA, hist) = fullHistOpt match {
+    val keys = Seq(col("table"), col("column"))
+    def agg(df: DataFrame, by: Seq[Column], aggs: Seq[Column]): DataFrame =
+      df.groupBy(by: _*).agg(aggs.head, aggs.tail: _*)
+    val passA = histOpt match {
       case Some(fullHist) =>
-        val fa = featureAggs(cfg, col("cnt")) ++
-          (if (cfg.features("mode")) modeAggsInline else Nil)
-        (fullHist.groupBy("table", "column").agg(fa.head, fa.tail: _*),
-          fullHist.filter(!isMissing(col("value"))))
-      case None =>
-        val fa = featureAggs(cfg, lit(1L))
-        (long.groupBy("table", "column").agg(fa.head, fa.tail: _*),
-          valueHist(present))
+        val accs = passAAccs(cfg, col("cnt")) ++
+          (if (cfg.features("mode")) modeAccs else Nil)
+        if (cfg.features("pattern"))
+          agg(agg(fullHist, keys :+ patternOf(col("value")).as("pattern"),
+              accs.map(_.part)),
+            keys, accs.map(_.combine) ++ patternAggs)
+        else agg(fullHist, keys, accs.map(_.part))
+      case None => agg(long, keys, passAAccs(cfg, lit(1L)).map(_.part))
     }
-    val modeFolded = cfg.features("mode") && fullHistOpt.nonEmpty
+    lazy val hist = histOpt.get.filter(!isMissing(col("value")))
     val branches = Seq.newBuilder[DataFrame]
-    if (cfg.features("quartiles")) branches += quartilesFrame(present, cfg)
-    if (cfg.features("mode") && !modeFolded) branches += modeDistinctFrame(hist)
-    if (cfg.features("pattern")) branches += patternFrame(hist)
+    if (cfg.features("quartiles"))
+      branches += quartilesFrame(long.filter(!isMissing(col("value"))), cfg)
     if (cfg.features("digits")) branches += firstDigitFrame(hist)
     if (cfg.features("chars")) branches += charsFrame(hist, cfg)
     if (cfg.features("keywords")) branches += keywordsFrame(hist, cfg)
-
-    val joined = branches.result()
+    branches.result()
       .foldLeft(passA)((acc, b) =>
         acc.join(broadcast(b), Seq("table", "column"), "left_outer"))
-    // columns of disabled feature groups get schema-stable defaults
-    // (distinct_count = -1 marks "not computed" so type inference does
-    // not mistake it for a real low cardinality)
-    val defaults: Seq[(String, Column)] = Seq(
-      "num_q1" -> lit(Double.NaN), "num_median" -> lit(Double.NaN),
-      "num_q3" -> lit(Double.NaN), "dominant_pattern" -> lit(""),
-      "dominant_pattern_ratio" -> lit(0.0), "mode_value" -> lit(""),
-      "mode_ratio" -> lit(0.0), "first_digit_mode" -> lit(0),
-      "distinct_chars" -> lit(0L),
-      "top_keywords" -> array().cast("array<string>"),
-      "distinct_count" -> lit(-1L))
-    defaults.foldLeft(joined) { case (acc, (name, dflt)) =>
-        if (acc.columns.contains(name)) acc else acc.withColumn(name, dflt)
-      }
-      .withColumn("distinct_count", coalesce(col("distinct_count"),
-        if (cfg.features("mode")) lit(0L) else lit(-1L)))
-      .withColumn("unique_ratio",
-        col("distinct_count").cast(DoubleType) / col("row_count").cast(DoubleType))
-      .withColumn("inferred_type", inferredType)
-      .withColumn("num_q1", coalesce(col("num_q1"), lit(Double.NaN)))
-      .withColumn("num_median", coalesce(col("num_median"), lit(Double.NaN)))
-      .withColumn("num_q3", coalesce(col("num_q3"), lit(Double.NaN)))
-      .withColumn("dominant_pattern", coalesce(col("dominant_pattern"), lit("")))
-      .withColumn("dominant_pattern_ratio", coalesce(col("dominant_pattern_ratio"), lit(0.0)))
-      .withColumn("mode_value", coalesce(col("mode_value"), lit("")))
-      .withColumn("mode_ratio", coalesce(col("mode_ratio"), lit(0.0)))
-      .withColumn("first_digit_mode", coalesce(col("first_digit_mode"), lit(0)))
-      .withColumn("distinct_chars", coalesce(col("distinct_chars"), lit(0L)))
-      .withColumn("top_keywords", coalesce(col("top_keywords"), array()))
-      .select(
-        col("table"), col("column"), col("row_count"), col("null_count"),
-        col("null_ratio"), col("distinct_count"), col("unique_ratio"),
-        col("alpha_chars"), col("digit_chars"), col("punct_chars"),
-        col("space_chars"), col("misc_chars"), col("word_count"),
-        col("alpha_words"), col("digit_words"), col("punct_words"),
-        col("misc_words"),
-        col("avg_word_len"), col("numeric_cells"), col("alpha_cells"),
-        col("empty_cells"), col("other_cells"), col("min_len"), col("max_len"),
-        col("avg_len"), col("num_count"), col("num_min"), col("num_max"),
-        col("num_mean"), col("num_q1"), col("num_median"), col("num_q3"),
-        col("max_digits"), col("max_decimals"), col("ratio_int"),
-        col("ratio_float"), col("ratio_bool"), col("ratio_date"),
-        col("inferred_type"), col("dominant_pattern"),
-        col("dominant_pattern_ratio"), col("mode_value"), col("mode_ratio"),
-        col("first_digit_mode"), col("distinct_chars"), col("top_keywords"))
+      .select(profileColumns(cfg): _*)
   }
 
   def profileTyped(df: DataFrame, table: String,

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.StringType
   * Scale design: ALL scalar rules for a table evaluate in ONE scan —
   * each rule becomes a boolean column, violations unpivot to the long
   * Violation layout only for flagged cells (violations are sparse;
-  * exploding them is cheap). Relational rules add: a window per
-  * uniquely-keyed column set (unique/FD) or a broadcast/shuffle
-  * anti-join (inclusion). Nothing collects to the driver.
+  * exploding them is cheap). Relational rules add: one duplicate-key
+  * semi-join for ALL single-column unique rules, one per composite key
+  * and FD rule, and a broadcast/shuffle anti-join per inclusion rule.
+  * Nothing collects to the driver.
   */
 object ViolationScanner {
 
@@ -116,21 +117,36 @@ object ViolationScanner {
             col("h.rule"), col("h.severity")))
       }
 
-    // --- unique rules: duplicate-key semi-join (skew-safe at scale).
-    // A window `count().over(partitionBy(value))` buffers each key group
-    // in ONE task, so a hot key (a mostly-constant column a uniqueness
-    // rule got mis-assigned to) becomes an unsplittable straggler. The
-    // groupBy form partial-aggregates map-side and the semi-join back is
-    // AQE-broadcastable/skew-splittable. Null-safe equality keeps the
-    // window semantics for NULL keys (NULLs group together).
-    val uniqueViolations = rules.collect { case r @ UniqueRule(c, sev) =>
-      val v = col(s"`$c`").cast(StringType)
-      val dup = df.groupBy(v.as("__dupv")).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).select(col("__dupv"))
-      df.join(dup, v <=> dup("__dupv"), "left_semi")
-        .select(lit(c).as("column"), key.as("row_id"), v.as("value"),
-          lit(r.name).as("rule"), lit(sev).as("severity"))
-    }
+    // --- unique rules: ONE duplicate-key semi-join for all of them. The
+    // rules' columns unpivot to a long (row_id, rule_idx, value) frame;
+    // one groupBy finds every rule's duplicated values (keyed by rule
+    // index, so two rules on one column count apart, as they flag
+    // apart) and one semi-join flags their rows. groupBy, not a window
+    // `count().over(partitionBy(value))`: it partial-aggregates
+    // map-side, so a hot key (a mostly-constant column a uniqueness
+    // rule got mis-assigned to) is no unsplittable straggler, and the
+    // semi-join back is AQE-broadcastable/skew-splittable. Null-safe
+    // equality keeps NULL keys grouped together.
+    val uniqueRules = rules.collect { case r: UniqueRule => r }
+    val uniqueViolations: Option[DataFrame] =
+      if (uniqueRules.isEmpty) None
+      else {
+        val cells = uniqueRules.zipWithIndex.map { case (r, i) =>
+          struct(lit(i).as("rule_idx"), lit(r.column).as("column"),
+            col(s"`${r.column}`").cast(StringType).as("value"),
+            lit(r.name).as("rule"), lit(r.severity).as("severity"))
+        }
+        val long = df.select(key.as("row_id"), explode(array(cells: _*)).as("u"))
+          .select(col("row_id"), col("u.*"))
+        val dup = long.groupBy(col("rule_idx").as("__dup_idx"), col("value").as("__dup_v"))
+          .agg(count(lit(1)).as("__n"))
+          .filter(col("__n") > 1)
+        Some(long.join(dup,
+            col("rule_idx") === col("__dup_idx") && col("value") <=> col("__dup_v"),
+            "left_semi")
+          .select(col("column"), col("row_id"), col("value"), col("rule"),
+            col("severity")))
+      }
 
     // --- composite-key rules: same duplicate semi-join over the
     // multi-column tuple. Grouping is by the ACTUAL columns (not a
@@ -174,7 +190,7 @@ object ViolationScanner {
           lit(r.name).as("rule"), lit(sev).as("severity"))
     }
 
-    val parts = scalarViolations.toSeq ++ uniqueViolations ++
+    val parts = scalarViolations.toSeq ++ uniqueViolations.toSeq ++
       compositeViolations ++ fdViolations ++ inclViolations
     val all = parts.reduceLeft(_.unionByName(_))
     all.select(lit(table).as("table"), col("column"), col("row_id"),

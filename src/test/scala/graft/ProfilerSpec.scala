@@ -214,6 +214,34 @@ class ProfilerSpec extends SparkSpec {
     }
   }
 
+  test("mode and dominant-pattern tie-breaks, on rows and on state") {
+    // mode_tie:  a:2 b:2 c:1 → the smallest value wins the count tie
+    // pat_tie:   AA:2 99:2 → the smallest pattern wins
+    // blank_pat: three blank cells generalize to " " like the present
+    //            "\t" does; blanks are missing, so " " weighs 1 < A:2
+    // dead:      NULL/blank only → no mode, no pattern, no distincts
+    val df = Seq[(String, String, String, String)](
+      ("b", "ab", " ", null), ("a", "12", " ", ""), ("b", "cd", " ", "  "),
+      ("a", "34", "\t", null), ("c", "", "x", ""), (null, null, "y", " "))
+      .toDF("mode_tie", "pat_tie", "blank_pat", "dead")
+    val cfg = ProfilerConfig(features = Set("mode", "pattern"))
+    val fromRows = Profiler.profileManyRows(Seq("t" -> df), cfg)
+    val fromState = Profiler.profileFromState(
+      Profiler.incrementState(Seq("t" -> df)), cfg).collect().toSeq
+    for ((via, rows) <- Seq("rows" -> fromRows, "state" -> fromState)) {
+      val p = rows.map(r => r.getAs[String]("column") ->
+        ((r.getAs[String]("mode_value"), r.getAs[Double]("mode_ratio"),
+          r.getAs[Long]("distinct_count"), r.getAs[String]("dominant_pattern"),
+          r.getAs[Double]("dominant_pattern_ratio")))).toMap
+      assert(p("mode_tie") === (("a", 2.0 / 5.0, 3L, "A", 1.0)), via)
+      assert(p("pat_tie") === (("12", 1.0 / 4.0, 4L, "99", 2.0 / 4.0)), via)
+      assert(p("blank_pat") === (("\t", 1.0 / 3.0, 3L, "A", 2.0 / 3.0)), via)
+      assert(p("dead") === (("", 0.0, 0L, "", 0.0)), via)
+    }
+    assert(fromRows.sortBy(_.getAs[String]("column")) ===
+      fromState.sortBy(_.getAs[String]("column")))
+  }
+
   test("profileFromState rejects quartiles") {
     val s = Profiler.incrementState(Seq("t" -> mini))
     intercept[IllegalArgumentException] {

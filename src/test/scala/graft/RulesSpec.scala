@@ -62,6 +62,26 @@ class RulesSpec extends SparkSpec {
     assert(violationsFor(Seq(UniqueRule("name")))("unique(name)") == Set(1L, 5L))
   }
 
+  test("unique rules of one table check in one pass, NULLs grouping together") {
+    // data columns named like the scan's own working columns must stay
+    // data: the key is `id`, and `row_id` here is just another column
+    val df = Seq[(Long, String, String, Long)](
+      (1L, "a", "v1", 10L), (2L, "b", "v2", 20L), (3L, "a", "v3", 30L),
+      (4L, null, "v4", 40L), (5L, null, "v5", 50L), (6L, "c", "v6", 60L))
+      .toDF("id", "column", "value", "row_id")
+    val rules = Seq(UniqueRule("column", "warning"), UniqueRule("value"))
+    val got = ViolationScanner.scan(df, "t", rules, "id").collect()
+      .map(r => (r.getAs[String]("table"), r.getAs[String]("column"),
+        r.getAs[Long]("row_id"), Option(r.getAs[String]("value")),
+        r.getAs[String]("rule"), r.getAs[String]("severity")))
+      .sortBy(_._3).toSeq
+    assert(got === Seq(
+      ("t", "column", 1L, Some("a"), "unique(column)", "warning"),
+      ("t", "column", 3L, Some("a"), "unique(column)", "warning"),
+      ("t", "column", 4L, None, "unique(column)", "warning"),
+      ("t", "column", 5L, None, "unique(column)", "warning")))
+  }
+
   test("cross-field rule") {
     val v = violationsFor(Seq(CrossFieldRule("amt_pos", "amount > 0")))
     assert(v("cross_field(amt_pos)") == Set(2L))

@@ -392,6 +392,30 @@ class ScaleSpec extends SparkSpec {
       rm(dir)
     }
   }
+
+  test("Tables.load sizes a file: URI like the plain path") {
+    import spark.implicits._
+    // java.io.File reads 0 bytes for a URI, which skipped the rebalance
+    // for every file:/hdfs: input; the Hadoop FileSystem sizes both
+    val dir = java.nio.file.Files.createTempDirectory("graft_load_uri").toFile
+    try {
+      (1 to 30000).map(i => (i.toLong, s"some longer padding text $i"))
+        .toDF("doc_id", "text")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${dir.getAbsolutePath}/documents.parquet")
+      val plain = Tables.load(spark, dir.getAbsolutePath, "documents")
+      val uri = Tables.load(spark, dir.toURI.toString.stripSuffix("/"), "documents")
+      assert(uri.rdd.getNumPartitions == plain.rdd.getNumPartitions)
+      assert(uri.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+      assert(uri.count() == 30000L)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm)
+        f.delete()
+      }
+      rm(dir)
+    }
+  }
   test("the multilingual pipelines stay equi-join shaped (l7 batch, w15 gate chain)") {
     // l7: script-shingle jaccard + CC + per-script gates — nothing may
     // plan as a cartesian/BNLJ; the LM cut join must broadcast
