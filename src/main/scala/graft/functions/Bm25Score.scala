@@ -8,8 +8,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused per-row BM25 retrieval gate (the [[LmScore]]/[[KnScore]]
-  * family): ONE pass over the string returning
+/** Fused per-row BM25 retrieval gate (the [[BigramScore]] family): ONE pass over the string returning
   * [best_query_id (−1 if no term matches), best_score_fp, n_tokens]
   * against a driver-built query-term model — the DEPLOYED form of
   * [[graft.text.Bm25]] for append-mode streams ("does this incoming
@@ -74,7 +73,7 @@ object Bm25Score {
     * `queryIds` are the (ascending) external query ids; `avgdl` the
     * training corpus max(1, ⌊T/N⌋). Value equality over the payload so
     * Catalyst canonicalization dedups structurally identical score
-    * columns (the [[LmScore.Model]] lesson). */
+    * columns (as [[BigramScore.Model]] does). */
   final class Model(val terms: Array[String], val idf: Array[Long],
       val off: Array[Int], val queryIdx: Array[Int],
       val queryIds: Array[Long], val avgdl: Long) extends Serializable {

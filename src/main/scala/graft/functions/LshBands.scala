@@ -24,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * in microseconds. Same upgrade as PieceCounts/DotProduct.
   *
   * BIT-IDENTICAL to the Column/oracle formulation (spec + w9 oracle
-  * pin): gram hash = first 15 md5 hex chars parsed base-16 mod 2^30
-  * ([[graft.dedup.Dedup.md5Long]]); permutation i (1-based) maps h →
+  * pin): gram hash = [[BigramScore.bucket]](gram, 2^30) (first 15 md5
+  * hex chars parsed base-16 mod 2^30, [[graft.dedup.Dedup.md5Long]]);
+  * permutation i (1-based) maps h →
   * (2i+1)·h + (7919·i mod P) mod P with P = 2^31−1; bucket = md5 hex
   * of the band's minima joined by "," as decimal strings. Fewer than
   * `shingleSize` words → empty array (the caller's explode drops the
@@ -88,7 +89,7 @@ object LshBands {
       }
       val gram = sb.toString
       if (seen.add(gram)) {
-        val h = hash30(md, gram)
+        val h = BigramScore.bucket(gram, 1 << 30)
         var p = 0
         while (p < numPerms) {
           val v = (as(p) * h + bs(p)) % P
@@ -114,17 +115,8 @@ object LshBands {
     new GenericArrayData(out)
   }
 
-  /** = pmod(md5Long(s), 2^30): first 15 md5 hex chars base-16, mod
-    * 2^30. 15 hex chars fit 60 bits, so the parse is exact. */
-  private def hash30(md: java.security.MessageDigest, s: String): Long = {
-    val hex = hexOf(md, s)
-    java.lang.Long.parseLong(hex.substring(0, 15), 16) % 1073741824L
-  }
-
-  private def hexMd5(md: java.security.MessageDigest, s: String): String =
-    hexOf(md, s)
-
-  private def hexOf(md: java.security.MessageDigest, s: String): String = {
+  /** The 32-hex md5 band key. */
+  private def hexMd5(md: java.security.MessageDigest, s: String): String = {
     md.reset()
     val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val cs = new Array[Char](32)

@@ -1,7 +1,8 @@
 package graft.functions
 
 /** The ONE copy of the family byte-classification rule every native
-  * text kernel walks (TokenArray, LmScore, RepetitionStats; the
+  * text kernel walks (TokenArray — and through it BigramScore's
+  * single-model gates — RepetitionStats, UnigramEncode, Bm25Score; the
   * round-8 QualityStats/MarkerLangId predate it and keep their judged
   * inline loops with a pointer here): over the LOWERCASED UTF-8 bytes,
   * a token code point is ASCII [a-z0-9] or — in the accented class — a

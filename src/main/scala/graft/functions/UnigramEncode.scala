@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused per-row unigram-LM tokenizer encode (the [[LmScore]] family):
+/** Fused per-row unigram-LM tokenizer encode (the [[BigramScore]] family):
   * ONE pass over the string returning [n_words, n_pieces, cost_fp]
   * against a driver-built piece-cost model — the Viterbi segmentation
   * of [[graft.text.UnigramLm]] as a shuffle-free map, append-mode
@@ -62,17 +62,10 @@ object UnigramEncode {
   private val F = 65536L
   private val CntScale = 1048576L
 
-  /** nllFp(q) = 30·F − lg2_fp(q) for q ∈ [1, 2³⁰] — the shared ladder
-    * arithmetic in closed Long form (Long.numberOfLeadingZeros gives
-    * the exact ⌊log2⌋ the 31-branch CASE computes). */
-  def nllFp(q: Long): Long = {
-    val e = 63 - java.lang.Long.numberOfLeadingZeros(q)
-    31L * F - e * F - (q * F) / (1L << e)
-  }
-
-  /** Driver-built piece costs. Value equality over the payload so
-    * Catalyst canonicalization dedups structurally identical encode
-    * columns (the [[LmScore.Model]] lesson). */
+  /** Driver-built piece costs (per piece, [[BigramScore.nllFp]] of its
+    * probability). Value equality over the payload so Catalyst
+    * canonicalization dedups structurally identical encode columns
+    * (as [[BigramScore.Model]] does). */
   final class Model(val costs: Map[String, Long], val maxPieceLen: Int,
       val maxWordLen: Int) extends Serializable {
     val unkCost: Long = 30L * F

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.dedup.{Components, Decontamination, Dedup}
+import graft.functions.BigramScore
 import graft.text.{Chunking, Packing, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -756,9 +757,10 @@ object CorpusQueries {
       TextQueries.SLmB2, TextQueries.SLmB1)
     val lmArr = ScriptLm.denseCounts(c2, c1,
       TextQueries.SLmB2, TextQueries.SLmB1)
-    val st = graft.functions.ScriptLmScore(
+    val st = BigramScore(
       ScriptText.tokens(col("text2")), ScriptLm.scriptIndex(col("script")),
-      lmArr._1, lmArr._2, TextQueries.SLmB2, TextQueries.SLmB1)
+      new BigramScore.AddOne(lmArr._1, lmArr._2, TextQueries.SLmB2,
+        TextQueries.SLmB1))
     val lmScored = stage(qual
       .withColumn("__st", st)
       .select(col("doc_id").as("id"), col("script"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.BigramScore
 import graft.streaming.StreamingQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,7 +29,7 @@ object StreamQueries {
     * 10.75 · 2¹⁰ · 2¹⁶) — the planted w13 corpus is clipped/
     * concatenated text and its en training slice is small, so scores
     * sit ~1.5 bits above w14's raw-document gate; probed at the gate SF
-    * (W13LmProbe: en p90 10.73 vs de/es/fr/zh p50 ≈ 10.9), this keeps
+    * (en p90 10.73 vs de/es/fr/zh p50 ≈ 10.9), this keeps
     * ~90% of the trusted language and rejects most of the rest. */
   private val Lm13Thresh = 721420288L
   /** w15's script-aware LSH shingle size (word 5-grams for worded
@@ -842,7 +843,7 @@ object StreamQueries {
     *    CJK documents carry char-5-gram bands) with `try_element_at`
     *    band joins, the quality gate is the per-script
     *    [[graft.text.ScriptText.qualityE4]] cut, and the LM gate is
-    *    the native per-row [[graft.functions.ScriptLmScore]] kernel
+    *    the native per-row [[graft.functions.BigramScore]] kernel
     *    against cut LITERALS with the EXPLICIT unscorable policy —
     *    `lm_scorable = false` documents are KEPT, never the silent
     *    language filter w13's `n_grams > 0` conjunct is;
@@ -965,9 +966,10 @@ object StreamQueries {
       .filter(ScriptText.qualityE4("text2") >=
         when(col("script") === "cjk", CorpusQueries.L7QCjk)
           .otherwise(CorpusQueries.L7QOther))
-    val stats = graft.functions.ScriptLmScore(
+    val stats = BigramScore(
       ScriptText.tokens(col("text2")), ScriptLm.scriptIndex(col("script")),
-      lm._1, lm._2, TextQueries.SLmB2, TextQueries.SLmB1)
+      new BigramScore.AddOne(lm._1, lm._2, TextQueries.SLmB2,
+        TextQueries.SLmB1))
     scripted.withColumn("__st", stats)
       .filter(ScriptLm.gateKept(col("script"), element_at(col("__st"), 1),
         element_at(col("__st"), 2), cuts))
@@ -1021,10 +1023,11 @@ object StreamQueries {
     // kernel form (r14; pinned ≡ the score() join form per row, so the
     // cuts are identical literals) — one map-side pass over the
     // checkpointed base instead of two gram-grain joins + re-agg
-    val cutSt = graft.functions.ScriptLmScore(
+    val cutSt = BigramScore(
       graft.text.ScriptText.tokens(col("text2")),
-      ScriptLm.scriptIndex(col("script")), lm._1, lm._2,
-      TextQueries.SLmB2, TextQueries.SLmB1)
+      ScriptLm.scriptIndex(col("script")),
+      new BigramScore.AddOne(lm._1, lm._2, TextQueries.SLmB2,
+        TextQueries.SLmB1))
     val cuts = ScriptLm.percentileCuts(corpus
         .withColumn("script",
           graft.text.ScriptText.dominantScript(col("text2")))
@@ -1278,7 +1281,7 @@ object StreamQueries {
   /** The t32 Kneser–Ney scorer in its DEPLOYED stream form: the dense
     * KN statistics (bigram counts + prefix/continuation type counts +
     * the type total) collected driver-side and every document scored
-    * by the native [[graft.functions.KnScore]] kernel — ONE per-row
+    * by the native [[graft.functions.BigramScore]] kernel — ONE per-row
     * fold instead of the join form's four bucket equi-joins per gram
     * (which ran linear at the ×100 rehearsal); no shuffle, no state,
     * append-mode legal (StreamingSpec pins the MemoryStream run).
@@ -1437,7 +1440,7 @@ object StreamQueries {
     * language-segmented dense arrays, per-language percentile cuts
     * trained on the history's own score distribution, and the incoming
     * dump (odd doc ids) scored per row by the native
-    * [[graft.functions.ScriptLmScore]] kernel routed by the t1
+    * [[graft.functions.BigramScore]] kernel routed by the t1
     * language vote and gated against its OWN language's literal cut.
     * The deployed stage is pure columns — no shuffle, no state,
     * append-mode legal (StreamingSpec pins the MemoryStream run);

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.BigramScore
 import graft.text.{Sampling, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1455,15 +1456,16 @@ object TextQueries {
     // scoring in the dense DEPLOYED form (r14; the l7/w15 device): the
     // per-(script, bucket) counts collect into fixed-size dense arrays
     // (|Scripts|·(b2+b1) longs — corpus-size-independent) and each row
-    // scores via the native ScriptLmScore kernel, replacing two
+    // scores via the native BigramScore kernel, replacing two
     // gram-grain hashed-count joins + a per-doc re-aggregation + a
     // join back. Pinned ≡ the score() join form per row (ScriptLmSpec);
     // the ORACLE below still replays the join form in SQL, so the
     // kernel ≡ join identity stays cross-engine-pinned by this query.
     val lmArr = ScriptLm.denseCounts(c2, c1, SLmB2, SLmB1)
-    val st = graft.functions.ScriptLmScore(
+    val st = BigramScore(
       graft.text.ScriptText.tokens(col("text2")),
-      ScriptLm.scriptIndex(col("script")), lmArr._1, lmArr._2, SLmB2, SLmB1)
+      ScriptLm.scriptIndex(col("script")),
+      new BigramScore.AddOne(lmArr._1, lmArr._2, SLmB2, SLmB1))
     val scored = graft.ops.StagePersists.track(d2
       .withColumn("script",
         graft.text.ScriptText.dominantScript(col("text2")))
@@ -1565,9 +1567,10 @@ object TextQueries {
     // the oracle still replays the join form.
     val langKeys = graft.text.TextAnalysis.markers.keys.toSeq.sorted
     val lmArr = ScriptLm.denseCounts(c2, c1, SLmB2, SLmB1, keys = langKeys)
-    val st = graft.functions.ScriptLmScore(
+    val st = BigramScore(
       graft.text.ScriptText.tokens(col("text")),
-      ScriptLm.keyIndex(route, langKeys), lmArr._1, lmArr._2, SLmB2, SLmB1)
+      ScriptLm.keyIndex(route, langKeys),
+      new BigramScore.AddOne(lmArr._1, lmArr._2, SLmB2, SLmB1))
     val scored = graft.ops.StagePersists.track(docs
       .withColumn("script", route)
       .withColumn("__st", st)
@@ -1646,7 +1649,7 @@ object TextQueries {
       docs.filter(col("lang") === "en"), "text", KnB2, KnB1)
     // scoring in the dense DEPLOYED form (r14; the w17 device): the
     // counts collect into O(b2+b1) arrays and each row scores via the
-    // native KnScore kernel, replacing four bucket-grain joins + a
+    // native BigramScore kernel, replacing four bucket-grain joins + a
     // per-doc re-aggregation + a join back. KneserNeySpec pins kernel
     // ≡ the knScore join form per row; the ORACLE below still replays
     // the join form in SQL, so the identity stays cross-engine-pinned.

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.{BigramScore, TokenArray}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
@@ -305,7 +306,8 @@ object LanguageModel {
   }
 
   /** Collect the KN statistics into the dense form
-    * [[graft.functions.KnScore]] consumes: (d2, c1, n1, cont, T).
+    * [[graft.functions.BigramScore.KneserNey]] holds: (d2, c1, n1,
+    * cont, T).
     * Envelope checked here, driver-side and free: max c₂ ≤ 2³¹ − 1
     * keeps the discounted numerator 4·c₂·2³⁰ Long-exact (n1 ≤ c1 and
     * cont ≤ b1 bound the backoff terms by construction). */
@@ -333,8 +335,9 @@ object LanguageModel {
   }
 
   /** (n_grams, nll_fp) for the KN estimator as PURE COLUMNS — the
-    * deployed per-row form ([[graft.functions.KnScore]] kernel; no
-    * shuffle, no state, append-mode legal — the w17 gate).
+    * deployed per-row form ([[graft.functions.BigramScore]] over
+    * [[graft.functions.TokenArray.asciiTokens]]; no shuffle, no state,
+    * append-mode legal — the w17 gate).
     * KneserNeySpec pins kernel ≡ [[knScore]] per row. */
   def knNllColumns(d2: Seq[Long], c1: Seq[Long], n1: Seq[Long],
       cont: Seq[Long], t: Long, b2: Int, b1: Int,
@@ -342,8 +345,8 @@ object LanguageModel {
     require(d2.size == b2 && c1.size == b1 && n1.size == b1 &&
       cont.size == b1, s"dense KN sizes (${d2.size}, ${c1.size}, " +
       s"${n1.size}, ${cont.size}) must match ($b2, $b1)")
-    val stats = graft.functions.KnScore(col(s"`$textCol`"), d2, c1, n1,
-      cont, t)
+    val stats = BigramScore(TokenArray.asciiTokens(col(s"`$textCol`")),
+      lit(0), new BigramScore.KneserNey(d2, c1, n1, cont, t))
     (element_at(stats, 1), element_at(stats, 2))
   }
 
@@ -373,9 +376,10 @@ object LanguageModel {
 
   /** (n_grams, nll_fp) as PURE COLUMNS over a text column — no shuffle,
     * no state, stream-legal verbatim (the w13 scoreColumns convention).
-    * Fused into the native [[graft.functions.LmScore]] kernel: the
-    * Column form ([[nllColumnsReference]]) folds an aggregate HOF with
-    * two md5 expressions and two 31-branch ladders per gram, all
+    * Fused into the native [[graft.functions.BigramScore]] kernel over
+    * [[graft.functions.TokenArray.asciiTokens]]: the Column form
+    * ([[nllColumnsReference]]) folds an aggregate HOF with two md5
+    * expressions and two 31-branch ladders per gram, all
     * interpreted — measured ~21 s for 50 k docs at sf1 vs ~0.3 s fused
     * (LmScoreSpec pins bit-equality; the w14 oracle pins it
     * cross-engine). */
@@ -383,7 +387,8 @@ object LanguageModel {
       textCol: String): (Column, Column) = {
     require(d2.size == b2 && d1.size == b1,
       s"dense count sizes (${d2.size}, ${d1.size}) must match ($b2, $b1)")
-    val stats = graft.functions.LmScore(col(s"`$textCol`"), d2, d1)
+    val stats = BigramScore(TokenArray.asciiTokens(col(s"`$textCol`")),
+      lit(0), new BigramScore.AddOne(d2, d1, b2, b1))
     (element_at(stats, 1), element_at(stats, 2))
   }
 

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.BigramScore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -38,7 +39,7 @@ import org.apache.spark.sql.functions._
   * count tables — linear, broadcastable; the deployed form collects
   * the counts into ONE concatenated dense array (script-offset
   * indexed) and scores per row via the native
-  * [[graft.functions.ScriptLmScore]] kernel — no shuffle, no state,
+  * [[graft.functions.BigramScore]] kernel — no shuffle, no state,
   * append-mode stream legal (the w15 chain). Counts are ADDITIVE per
   * (script, bucket) with a constant smoothing vocabulary, so
   * incremental maintenance is EXACT ([[foldHashedCounts]], the
@@ -175,7 +176,7 @@ object ScriptLm {
 
   /** Collect per-script counts into ONE concatenated dense array pair
     * (segment s = script index s·b2 … s·b2+b2−1), the deployed form
-    * [[graft.functions.ScriptLmScore]] consumes. Missing (script,
+    * [[graft.functions.BigramScore.AddOne]] holds. Missing (script,
     * bucket) pairs densify to 0 — a script absent from the reference
     * scores against all-zero counts (maximal NLL), the conservative
     * default. Overflow envelope checked driver-side like
@@ -254,19 +255,11 @@ object ScriptLm {
       .otherwise(LanguageModel.avgKey(nllFp, nGrams) <= thr)
   }
 
-  /** [[gateKept]]'s cut dispatch as a SQL CASE over a `script`
-    * column — shared with the w15 mirror so both engines compare
-    * against the same literals. */
-  def gateCutSql(cuts: Seq[(String, Long)]): String =
-    if (cuts.isEmpty) Long.MaxValue.toString
-    else "CASE script " + cuts.map { case (s, t) => s"WHEN '$s' THEN $t" }
-      .mkString(" ") + s" ELSE ${Long.MaxValue} END"
-
   /** (script, n_grams, nll_fp, lm_scorable) as PURE COLUMNS over a
     * text column — no shuffle, no state, stream-legal (the w15 gate).
     * The script vote and token array are codegen'd builtin regex
     * Columns; the per-gram fold is the native
-    * [[graft.functions.ScriptLmScore]] kernel over the concatenated
+    * [[graft.functions.BigramScore]] kernel over the concatenated
     * dense counts (the interpreted HOF form pays two md5 expressions
     * and two 31-branch ladders per gram — the measured w14 cliff).
     * ScriptLmSpec pins kernel ≡ the [[score]] join form per row. */
@@ -287,8 +280,8 @@ object ScriptLm {
       s"dense count sizes (${d2.size}, ${d1.size}) must be " +
         s"(${keys.size}·$b2, ${keys.size}·$b1)")
     val t = col(s"`$textCol`")
-    val stats = graft.functions.ScriptLmScore(
-      ScriptText.tokens(t), keyIndex(route, keys), d2, d1, b2, b1)
+    val stats = BigramScore(ScriptText.tokens(t), keyIndex(route, keys),
+      new BigramScore.AddOne(d2, d1, b2, b1))
     val n = element_at(stats, 1)
     (route, n, element_at(stats, 2), route =!= noneKey && n > 0L)
   }

@@ -111,7 +111,7 @@ object UnigramLm {
     rows.map { case (p, cnt) =>
       val q = math.min(math.max(cnt * LanguageModel.PScale / total, 1L),
         LanguageModel.PScale)
-      p -> graft.functions.UnigramEncode.nllFp(q)
+      p -> graft.functions.BigramScore.nllFp(q)
     }.toMap
   }
 
@@ -153,7 +153,7 @@ object UnigramLm {
       val c = usage.getOrElse(p, 0L)
       val q = math.min(math.max(c * LanguageModel.PScale / tot, 1L),
         LanguageModel.PScale)
-      p -> graft.functions.UnigramEncode.nllFp(q)
+      p -> graft.functions.BigramScore.nllFp(q)
     }.toMap
     new graft.functions.UnigramEncode.Model(costs2, model0.maxPieceLen,
       model0.maxWordLen)

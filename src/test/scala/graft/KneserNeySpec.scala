@@ -119,6 +119,24 @@ class KneserNeySpec extends SparkSpec {
     graft.ops.StagePersists.release(spark)
   }
 
+  test("KN model has one segment: any other segment index scores [0, 0]") {
+    import graft.functions.{BigramScore, TokenArray}
+    val lm = LanguageModel
+    val ref = Seq((0L, "the cat sat on the mat the cat ran off"))
+      .toDF("doc_id", "text")
+    val (c2, c1, cont, totals) = lm.knHashedCounts(ref, "text", B2, B1)
+    val (d2, dc1, dn1, dco, t) = lm.knDenseCounts(c2, c1, cont, totals, B2, B1)
+    val model = new BigramScore.KneserNey(d2, dc1, dn1, dco, t)
+    val docs = Seq("the cat sat on the mat", "the cat ran").toDF("text")
+    def scored(seg: Int): Seq[Seq[Long]] = docs.select(BigramScore(
+        TokenArray.asciiTokens(col("text")), lit(seg), model).as("s"))
+      .as[Seq[Long]].collect().toSeq
+    assert(scored(0).forall(_.head > 0L)) // segment 0 really scores
+    Seq(1, -1, 7).foreach(seg =>
+      assert(scored(seg).forall(_ == Seq(0L, 0L)), s"segment $seg"))
+    graft.ops.StagePersists.release(spark)
+  }
+
   test("KN discounts less than add-one on frequent seen bigrams") {
     // "the cat" occurs twice in a tiny reference: the KN estimate keeps
     // most of its raw mass (discount 3/4 of one count), while add-one

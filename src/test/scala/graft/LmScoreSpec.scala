@@ -3,7 +3,8 @@ package graft
 import graft.text.LanguageModel
 import org.apache.spark.sql.functions._
 
-/** Pins the native [[graft.functions.LmScore]] kernel bit-identical to
+/** Pins the native [[graft.functions.BigramScore]] add-one scorer over
+  * [[graft.functions.TokenArray.asciiTokens]] bit-identical to
   * the Column reference form
   * ([[LanguageModel.nllColumnsReference]]) — the aggregate-HOF fold
   * with per-gram md5 buckets and CASE ladders it replaces. */
@@ -28,6 +29,25 @@ class LmScoreSpec extends SparkSpec {
     "ends with separator...",
     "...starts with separator"
   ).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+
+  /** (id, n_grams, nll_fp) of the malformed-UTF-8 rows of the random
+    * corpus test below, as the inline [a-z0-9] walk of the original
+    * LmScore kernel scored them: the token-array scorer must keep the
+    * [[graft.functions.TokenWalk]] family rule on every byte string. */
+  private val malformedPins: Seq[(Long, Long, Long)] = Seq(
+    (344L, 3L, 332213L), (345L, 8L, 783692L), (346L, 0L, 0L),
+    (347L, 1L, 92469L), (351L, 0L, 0L), (352L, 5L, 485321L),
+    (353L, 2L, 135095L), (355L, 3L, 298524L), (356L, 5L, 467342L),
+    (360L, 3L, 282676L), (361L, 6L, 503637L), (362L, 11L, 955639L),
+    (363L, 2L, 191556L), (365L, 5L, 503862L), (366L, 6L, 497106L),
+    (367L, 4L, 390272L), (368L, 5L, 565356L), (370L, 7L, 657497L),
+    (371L, 3L, 220618L), (372L, 4L, 374696L), (374L, 6L, 678041L),
+    (375L, 7L, 784969L), (376L, 0L, 0L), (378L, 5L, 550581L),
+    (379L, 9L, 853206L), (380L, 6L, 554196L), (381L, 1L, 53834L),
+    (383L, 3L, 296868L), (384L, 7L, 663858L), (393L, 8L, 695648L),
+    (394L, 8L, 713536L), (395L, 5L, 620316L), (396L, 6L, 470958L),
+    (397L, 3L, 239178L), (398L, 3L, 292524L), (400L, 6L, 603112L),
+    (401L, 7L, 725877L))
 
   test("native kernel == Column reference fold, bit for bit") {
     val df = adversarial.toDF("id", "text")
@@ -87,6 +107,7 @@ class LmScoreSpec extends SparkSpec {
 
   test("native kernel == Column reference on a 300-string random corpus " +
       "(ScalaCheck, every classification boundary)") {
+    // plus NULL, empty, astral (non-BMP) and malformed UTF-8 rows
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val atom: Gen[String] = Gen.oneOf(
@@ -100,17 +121,53 @@ class LmScoreSpec extends SparkSpec {
     val texts = Gen.listOfN(300, genText)
       .apply(Gen.Parameters.default, Seed(97L)).getOrElse(Nil)
     assert(texts.nonEmpty)
-    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("id", "text")
+    // astral (non-BMP, surrogate-pair) code points between ASCII runs
+    val astralAtom: Gen[String] = Gen.frequency(
+      (3, Gen.alphaLowerChar.map(_.toString)), (1, Gen.const(" ")),
+      (2, Gen.oneOf("😀", "𝐀", "𠀀", "🇫🇷", "𐍈")))
+    val astral = Gen.listOfN(40, Gen.chooseNum(1, 30).flatMap(n =>
+        Gen.listOfN(n, astralAtom).map(_.mkString)))
+      .apply(Gen.Parameters.default, Seed(98L)).getOrElse(Nil)
+    // random bytes biased to token bytes, continuation bytes and
+    // multi-byte leads: mostly malformed once cast to string
+    val genBytes = Gen.chooseNum(0, 30).flatMap(n => Gen.listOfN(n,
+      Gen.frequency((5, Gen.choose('a'.toInt, 'z'.toInt)),
+        (2, Gen.choose('0'.toInt, '9'.toInt)), (2, Gen.const(' '.toInt)),
+        (4, Gen.choose(0x80, 0xff)))).map(_.map(_.toByte).toArray))
+    val bytes = Gen.listOfN(60, genBytes)
+      .apply(Gen.Parameters.default, Seed(99L)).getOrElse(Nil)
+    assert(astral.nonEmpty && bytes.nonEmpty)
+    val rows: Seq[(Option[String], Option[Array[Byte]])] =
+      (texts ++ astral :+ "").map(t => (Some(t), None)) ++
+        Seq((None, None)) ++ bytes.map(b => (None, Some(b)))
+    val df = rows.zipWithIndex.map { case ((t, b), i) => (i.toLong, t, b) }
+      .toDF("id", "s", "b")
+      .select($"id", coalesce($"s", $"b".cast("string")).as("text"))
+    val nullId = (texts.size + astral.size + 1).toLong
+    def wellFormed(b: Array[Byte]): Boolean =
+      scala.util.Try(java.nio.charset.StandardCharsets.UTF_8.newDecoder()
+        .decode(java.nio.ByteBuffer.wrap(b))).isSuccess
+    val malformed = bytes.zipWithIndex.collect {
+      case (b, i) if !wellFormed(b) => nullId + 1 + i }.toSet
+    // the model trains on the original random corpus only
     val (c2, c1) = LanguageModel.hashedCounts(
-      df.filter($"id" % 3 === 0), "text", b2 = 16, b1 = 8)
+      df.filter($"id" < texts.size && $"id" % 3 === 0), "text",
+      b2 = 16, b1 = 8)
     val (d2, d1) = LanguageModel.denseCounts(c2, c1, 16, 8)
     val (nN, nS) = LanguageModel.nllColumns(d2, d1, 16, 8, "text")
     val (rN, rS) = LanguageModel.nllColumnsReference(d2, d1, 16, 8, "text")
-    val bad = df.select($"id", nN.as("nn"), nS.as("ns"),
-        rN.as("rn"), rS.as("rs"))
-      .filter($"nn" =!= $"rn" || $"ns" =!= $"rs").collect()
+    val got = df.select($"id", nN.as("nn"), nS.as("ns"),
+        rN.as("rn"), rS.as("rs")).collect()
+    val bad = got.filter(r => r.getLong(0) != nullId &&
+        !malformed(r.getLong(0)) &&
+        (r.getLong(1) != r.getLong(3) || r.getLong(2) != r.getLong(4)))
     assert(bad.isEmpty, bad.take(3).mkString("; "))
+    val nul = got.find(_.getLong(0) == nullId).get
+    assert(nul.isNullAt(1) && nul.isNullAt(2), s"NULL text scored: $nul")
+    val mal = got.filter(r => malformed(r.getLong(0)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    assert(mal.nonEmpty && mal.exists(_._2 > 1L))
+    assert(mal == malformedPins, mal.mkString(", "))
   }
 
   test("size contract: dense arrays must match the bucket counts") {

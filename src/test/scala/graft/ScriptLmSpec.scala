@@ -4,7 +4,7 @@ import graft.text.{LanguageModel, ScriptLm, ScriptText}
 import org.apache.spark.sql.functions._
 
 /** Per-script hashed LM ([[ScriptLm]]): the native
-  * [[graft.functions.ScriptLmScore]] kernel against the join-form
+  * [[graft.functions.BigramScore]] kernel against the join-form
   * [[ScriptLm.score]], exact incremental count folding, the
   * percentile-cut trainer, and the explicit unscorable policy. */
 class ScriptLmSpec extends SparkSpec {

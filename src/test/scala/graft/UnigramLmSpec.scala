@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.UnigramEncode
+import graft.functions.{BigramScore, UnigramEncode}
 import graft.text.UnigramLm
 import org.apache.spark.sql.functions._
 
@@ -111,7 +111,7 @@ class UnigramLmSpec extends SparkSpec {
     val want = model0.costs.keysIterator.map { p =>
       val c = usage.getOrElse(p, 0L)
       val q = math.min(math.max(c * 1073741824L / tot, 1L), 1073741824L)
-      p -> UnigramEncode.nllFp(q)
+      p -> BigramScore.nllFp(q)
     }.toMap
     assert(model2.costs === want)
     // hard-EM likelihood law (integer floors included): the corpus
@@ -165,7 +165,7 @@ class UnigramLmSpec extends SparkSpec {
     val total = vocab.map(_._2).sum
     val wantCosts = vocab.map { case (p, c) =>
       val q = math.min(math.max(c * 1073741824L / total, 1L), 1073741824L)
-      p -> UnigramEncode.nllFp(q)
+      p -> BigramScore.nllFp(q)
     }.toMap
     assert(model.costs === wantCosts)
     // per-doc stats == per-token wordKey sums
