@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   *   reps = 0 with a planDir dumps plans only.
   */
 object Meter {
+  /** Local cores for the measurement tools: `SPARK_GRAFT_CPUS` when
+    * set, else the cores this JVM sees. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
@@ -19,7 +24,6 @@ object Meter {
     val only = if (args.length > 3)
       args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet
     else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // measurement-harness override (NOT the bench contract — Bench.scala
     // is the driver's timing surface and always runs local[$cpus]):
     // SPARK_GRAFT_METER_MASTER=local-cluster[4,8,8192] launches real
@@ -79,9 +83,16 @@ object Meter {
           }
         }
       })
-    def snap(): (Long, Long, Long, Long, Long, Long, Long, Long) =
+    // whole-stage codegen: classes compiled (cache misses, driver and
+    // executor threads alike) and their compile time in ns — JVM-wide
+    // counters, read as deltas around each run
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def compileNs(): Long =
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+    def snap(): (Long, Long, Long, Long, Long, Long, Long, Long, Long, Long) =
       (jobs.get, stages.get, tasks.get, taskMs.get, shufR.get, shufW.get,
-        gcMs.get, cpuNs.get)
+        gcMs.get, cpuNs.get, compiles(), compileNs())
     names.foreach { name =>
       if (planDir != "-") {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -107,7 +118,9 @@ object Meter {
             f"tasks=${b1._3 - b0._3} taskSec=${(b1._4 - b0._4) / 1e3}%.1f " +
             f"shufMB=${(b1._5 - b0._5 + b1._6 - b0._6) / 1e6}%.1f " +
             f"gcSec=${(b1._7 - b0._7) / 1e3}%.1f " +
-            f"cpuSec=${(b1._8 - b0._8) / 1e9}%.1f")
+            f"cpuSec=${(b1._8 - b0._8) / 1e9}%.1f " +
+            f"compiles=${b1._9 - b0._9} " +
+            f"compileSec=${(b1._10 - b0._10) / 1e9}%.2f")
           best = math.min(best, s)
         } catch { case t: Throwable =>
           println(s"[meter] $name rep$r FAILED: ${t.getClass.getSimpleName}: " +

@@ -180,29 +180,9 @@ object BigramScore {
     31L * F - e * F - (q * F) / (1L << e)
   }
 
-  // per-thread digest: getInstance per call pays a JCA provider lookup
-  // + allocation on the declared hot path
-  private val mdPool = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** = pmod([[graft.dedup.Dedup.md5Long]](s), m): the first 15 md5 hex
-    * digits (the digest's top 60 bits, so the value is exact and
-    * non-negative) mod the bucket count. */
-  def bucket(s: String, m: Int): Int = {
-    val md = mdPool.get()
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var h = 0L
-    var i = 0
-    while (i < 7) {
-      h = (h << 8) | (d(i) & 0xff)
-      i += 1
-    }
-    h = (h << 4) | ((d(7) >> 4) & 0xf)
-    (h % m).toInt
-  }
+  /** = pmod([[graft.dedup.Dedup.md5Long]](s), m): the md5 60-bit
+    * prefix ([[Md5.long60]]) mod the bucket count. */
+  def bucket(s: String, m: Int): Int = (Md5.long60(s) % m).toInt
 
   /** Column wrapper (Spark 4 classic API via [[GraftBridge]]). */
   def apply(tokens: Column, segment: Column, model: Model): Column =

@@ -64,7 +64,6 @@ case class LshBands(child: Expression, shingleSize: Int, numPerms: Int,
 
 object LshBands {
   private val P = graft.dedup.Dedup.P
-  private val HEX = "0123456789abcdef".toCharArray
 
   /** One flat pass: distinct k-gram hashes → perm minima → band
     * buckets. */
@@ -72,7 +71,6 @@ object LshBands {
       rowsPerBand: Int): ArrayData = {
     val n = words.numElements()
     if (n < k) return new GenericArrayData(Array.empty[Any])
-    val md = java.security.MessageDigest.getInstance("MD5")
     val seen = new java.util.HashSet[String]()
     val mins = Array.fill(numPerms)(Long.MaxValue)
     val as = Array.tabulate(numPerms)(p => (2L * (p + 1) + 1))
@@ -109,24 +107,10 @@ object LshBands {
         sb.append(mins(b * rowsPerBand + r))
         r += 1
       }
-      out(b) = InternalRow(b, UTF8String.fromString(hexMd5(md, sb.toString)))
+      out(b) = InternalRow(b, UTF8String.fromString(Md5.hexOf(sb.toString)))
       b += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** The 32-hex md5 band key. */
-  private def hexMd5(md: java.security.MessageDigest, s: String): String = {
-    md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val cs = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      cs(2 * i) = HEX((d(i) >> 4) & 0xf)
-      cs(2 * i + 1) = HEX(d(i) & 0xf)
-      i += 1
-    }
-    new String(cs)
   }
 
   /** Column wrapper (Spark 4 classic API via [[GraftBridge]]). */

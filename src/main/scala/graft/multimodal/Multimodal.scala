@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.functions.Md5
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -41,10 +42,9 @@ object Multimodal {
   object StubDecoder extends MediaDecoder {
     def decodeBatch(ids: Seq[Long], blobs: Seq[Array[Byte]]): Seq[MediaFeatures] =
       ids.zip(blobs).map { case (id, bytes) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = md.digest(bytes).map("%02x".format(_)).mkString
-        val h = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-        MediaFeatures(id, bytes.length.toLong, hex,
+        val d = Md5.digest(bytes)
+        val h = Md5.top60(d)
+        MediaFeatures(id, bytes.length.toLong, Md5.hex(d),
           (1 + h % 1024).toInt, (1 + (h / 1024) % 1024).toInt,
           (1 + h % 3).toInt)
       }
@@ -113,13 +113,11 @@ object Multimodal {
     * (not raw digests) keeps the oracle to `md5(varchar)`, which every
     * engine has. */
   object StubGrayscaleDecoder extends GrayscaleDecoder {
-    private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
     def decodeGrayscaleBatch(ids: Seq[Long],
         blobs: Seq[Array[Byte]]): Seq[(Long, Array[Int])] =
       ids.zip(blobs).map { case (id, bytes) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val blocks = Iterator.iterate(hex(md.digest(bytes)))(
-          prev => hex(md.digest(prev.getBytes("UTF-8")))).take(5).toSeq
+        val blocks = Iterator.iterate(Md5.hex(Md5.digest(bytes)))(Md5.hexOf)
+          .take(5).toSeq
         val hexs = blocks.mkString
         (id, Array.tabulate(72)(i =>
           Integer.parseInt(hexs.substring(2 * i, 2 * i + 2), 16)))
@@ -192,13 +190,12 @@ object Multimodal {
   object StubAudioDecoder extends AudioDecoder {
     def decodeAudioBatch(ids: Seq[Long], blobs: Seq[Array[Byte]]): Seq[AudioFeatures] =
       ids.zip(blobs).map { case (id, bytes) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = md.digest(bytes).map("%02x".format(_)).mkString
-        val h = java.lang.Long.parseLong(hex.substring(0, 15), 16)
+        val d = Md5.digest(bytes)
+        val h = Md5.top60(d)
         val rate = h % 4 match {
           case 0 => 16000L; case 1 => 22050L; case 2 => 44100L; case _ => 48000L
         }
-        AudioFeatures(id, bytes.length.toLong, hex, rate,
+        AudioFeatures(id, bytes.length.toLong, Md5.hex(d), rate,
           1L + (h >> 2) % 2,
           500L + (bytes.length.toLong * 977L) % 120000L,
           (h >> 3) % 10)
@@ -262,13 +259,11 @@ object Multimodal {
     * byte values, the first 65 are the windows. Oracle-portable
     * (`md5(varchar)` only). */
   object StubAudioEnergyDecoder extends AudioEnergyDecoder {
-    private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
     def energyBatch(ids: Seq[Long],
         blobs: Seq[Array[Byte]]): Seq[(Long, Array[Int])] =
       ids.zip(blobs).map { case (id, bytes) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val blocks = Iterator.iterate(hex(md.digest(bytes)))(
-          prev => hex(md.digest(prev.getBytes("UTF-8")))).take(5).toSeq
+        val blocks = Iterator.iterate(Md5.hex(Md5.digest(bytes)))(Md5.hexOf)
+          .take(5).toSeq
         val hexs = blocks.mkString
         (id, Array.tabulate(65)(i =>
           Integer.parseInt(hexs.substring(2 * i, 2 * i + 2), 16)))
@@ -369,12 +364,8 @@ object Multimodal {
     * [[sampleFrameTimes]]'s metadata path (the spec asserts it). */
   object StubFrameDecoder extends FrameDecoder {
     def decodeFrames(id: Long, blob: Array[Byte], tsMs: Seq[Long]): Seq[String] = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val csum = md.digest(blob).map("%02x".format(_)).mkString
-      tsMs.map { ts =>
-        val md2 = java.security.MessageDigest.getInstance("MD5")
-        md2.digest(s"$csum:$ts".getBytes("UTF-8")).map("%02x".format(_)).mkString
-      }
+      val csum = Md5.hex(Md5.digest(blob))
+      tsMs.map(ts => Md5.hexOf(s"$csum:$ts"))
     }
   }
 
@@ -416,11 +407,8 @@ object Multimodal {
         window: Int): Seq[Long] = {
       val n = math.max((blob.length + window - 1) / window, 1)
       (0 until n).map { i =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val seg = java.util.Arrays.copyOfRange(blob, i * window,
-          math.min((i + 1) * window, blob.length))
-        val hex = md.digest(seg).map("%02x".format(_)).mkString
-        java.lang.Long.parseLong(hex.substring(0, 15), 16)
+        Md5.top60(Md5.digest(java.util.Arrays.copyOfRange(blob, i * window,
+          math.min((i + 1) * window, blob.length))))
       }
     }
   }

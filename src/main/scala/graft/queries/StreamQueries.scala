@@ -19,6 +19,9 @@ object StreamQueries {
   // 0 threshold while the Spark side, a def, read the real values).
   private[graft] val LmB2 = 8192
   private[graft] val LmB1 = 2048
+  /** w13's DSIR bucket count; it divides LmB2, which lets [[w13Tables]]
+    * fold the LM's bigram buckets down to DSIR's. */
+  private val DsirB = 4096
   /** w14's cutoff: 9.25 bits/gram (¼-bit steps are exact:
     * 9.25 · 2¹⁰ · 2¹⁶): at the gate SF the en-trained hashed LM
     * averages ~9.18 bits on en documents and ~9.3 on the rest, so this
@@ -428,7 +431,7 @@ object StreamQueries {
     *  - every data-plane stage up to packing is STATELESS per row: the
     *    near-dup probe keeps its 4 band buckets as COLUMNS (
     *    [[graft.dedup.Dedup.lshBandArray]]) and anti-probes the static
-    *    corpus-bucket table with four stream-static left joins — an
+    *    corpus-bucket table with four stream-static left-anti joins — an
     *    exploded probe would need an append-illegal re-aggregation;
     *    the repetition gate is the in-row
     *    [[graft.text.TextAnalysis.inlineDupTrigramFrac]];
@@ -477,44 +480,99 @@ object StreamQueries {
         shingleSize = 3, numPerms = 16, rowsPerBand = 4)
       .select("band", "bucket").distinct()
 
-  private def w13DenseWeights(cleaned: DataFrame): Seq[Long] =
-    graft.text.Importance.denseWeights(
-      graft.text.Importance.hashedWeights(cleaned,
-        cleaned.filter(col("lang") === "en"), "text", "doc_id",
-        n = 2, buckets = 4096), buckets = 4096)
+  /** w13's trained DSIR weights and hashed-LM arrays from ONE gram
+    * pass over the cleaned corpus. Every bigram occurrence is hashed
+    * once (an `en` one's first word once more) and counted, by one
+    * aggregation and one collect, into one dense offset space:
+    *
+    *   [0, LmB2)              non-`en` bigrams, pmod(md5Long(g), LmB2)
+    *   [LmB2, 2·LmB2)         `en` bigrams, the same bucket
+    *   [2·LmB2, 2·LmB2+LmB1)  `en` first words, pmod(md5Long(w₁), LmB1)
+    *
+    * The driver folds the bigram buckets to DSIR's (md5Long ≥ 0 and
+    * DsirB divides LmB2, so pmod(h, LmB2) % DsirB = pmod(h, DsirB)):
+    * raw counts are all bigrams, target counts the `en` ones. The
+    * result equals [[graft.text.Importance.hashedWeights]] (raw =
+    * cleaned, target = its `en` rows) + `denseWeights`, and
+    * [[graft.text.LanguageModel.hashedCounts]] (`en` rows) +
+    * `denseCounts`, guards included (W13TablesSpec pins both). */
+  private[graft] def w13Tables(cleaned: DataFrame)
+      : (Seq[Long], (Seq[Long], Seq[Long])) = {
+    val g = col("g")
+    val b2 = pmod(graft.dedup.Dedup.md5Long(g), lit(LmB2.toLong))
+    val b1 = pmod(graft.dedup.Dedup.md5Long(substring_index(g, " ", 1)),
+      lit(LmB1.toLong))
+    val counts = new Array[Long](2 * LmB2 + LmB1)
+    cleaned
+      .select(coalesce(col("lang") === "en", lit(false)).as("__en"),
+        explode(graft.text.Importance.gramArray(col("text"), 2)).as("g"))
+      .select(explode(when(col("__en"), array(b2 + LmB2, b1 + 2 * LmB2))
+        .otherwise(array(b2))).as("k"))
+      .groupBy("k").agg(count(lit(1)))
+      .collect().foreach(r => counts(r.getLong(0).toInt) = r.getLong(1))
+    val enB2 = counts.slice(LmB2, 2 * LmB2).toSeq
+    val raw = new Array[Long](DsirB)
+    val tgt = new Array[Long](DsirB)
+    (0 until LmB2).foreach { b =>
+      raw(b % DsirB) += counts(b) + enB2(b)
+      tgt(b % DsirB) += enB2(b)
+    }
+    (graft.text.Importance.weightsOf(raw.toSeq, tgt.toSeq),
+      graft.text.LanguageModel.checkedDense(enB2,
+        counts.slice(2 * LmB2, 2 * LmB2 + LmB1).toSeq, LmB2))
+  }
 
-  // the CCNet-style fluency gate: hashed bigram LM trained on the
-  // cleaned corpus's trusted subset (the w14 deployment form — dense
-  // O(b2+b1) arrays, per-row native scoring on the stream)
-  private def w13LmCounts(cleaned: DataFrame): (DataFrame, DataFrame) =
-    graft.text.LanguageModel.hashedCounts(
-      cleaned.filter(col("lang") === "en"), "text", LmB2, LmB1)
+  /** √(n_min/n) sampling probabilities per `keyCol` value of the gate
+    * survivors — the temperature-rebalance rule the w13 and w15 twins
+    * train. The counts are a handful of rows: one collect, then the
+    * probabilities on the driver (Spark's sqrt is Math.sqrt, so they
+    * are bit-identical) as a local frame. No survivors, no probs. */
+  private[graft] def samplingProbs(gated: DataFrame, keyCol: String): DataFrame = {
+    val counts = gated.groupBy(keyCol).agg(count(lit(1))).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    val nMin = counts.map(_._2).minOption.getOrElse(0L)
+    val spark = gated.sparkSession
+    import spark.implicits._
+    counts.map { case (k, n) => (k, math.sqrt(nMin.toDouble / n.toDouble)) }
+      .toDF(keyCol, "p")
+  }
 
-  /** √(n_min/n) sampling probabilities over a (key, __n) count frame —
-    * the temperature-rebalance rule both twins train on the gate
-    * survivors. */
-  private def sqrtMinProbs(counts: DataFrame, keyCol: String): DataFrame =
-    counts.crossJoin(broadcast(counts.agg(min("__n").as("__nmin"))))
-      .select(col(keyCol),
-        sqrt(col("__nmin").cast("double") / col("__n").cast("double")).as("p"))
+  /** Rows whose LSH bands (`bandsCol`, [[graft.dedup.Dedup.lshBandArray]]
+    * form, element k+1 = band k) hit no (band, bucket) of the static
+    * corpus table: one left-anti join per band, all four against ONE
+    * broadcast keyed `band:bucket` (an identical build side, so
+    * exchange reuse plans it once). `refBuckets` is distinct on (band,
+    * bucket), so this is the per-band left-outer probe with every match
+    * column null. try_element_at: the band array is EMPTY for docs
+    * under the shingle size, and a plain element_at throws under ANSI;
+    * the null key never equi-matches, so empty-band docs pass the probe
+    * — the no-bands-no-collision semantics of the aggregated path.
+    * Stream-static left-anti joins are append-legal. */
+  private def bandAntiProbe(df: DataFrame, bandsCol: String,
+      refBuckets: DataFrame): DataFrame = {
+    val ref = broadcast(refBuckets.select(
+      concat(col("band").cast("string"), lit(":"), col("bucket")).as("__rk")))
+    (0 until 4).foldLeft(df) { (acc, k) =>
+      acc.join(ref, concat(lit(s"$k:"),
+          try_element_at(col(bandsCol), lit(k + 1)).getField("bucket")) ===
+          col("__rk"), "left_anti")
+    }
+  }
 
   /** Batch-trained control plane: (blocked sources, corpus LSH
-    * buckets, dense DSIR weights, per-language sampling thresholds).
-    * The corpus state is the cleaned prior dump (doc_id % 3 == 0); the
-    * sampling thresholds are trained on the gate survivors the chain
-    * itself produces — history standing in for the stream. */
+    * buckets, dense DSIR weights, dense LM arrays, per-language
+    * sampling thresholds). The corpus state is the cleaned prior dump
+    * (doc_id % 3 == 0); the sampling thresholds are trained on the gate
+    * survivors the chain itself produces — history standing in for the
+    * stream. */
   private[graft] def w13Control(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Seq[Long], (Seq[Long], Seq[Long]), DataFrame) = {
     val planted = w13Planted(Tables.load(spark, dir, "documents"))
     val blocked = w13BlockedFrame(planted).localCheckpoint(true)
     val cleaned = w13CleanedFrame(planted, blocked).localCheckpoint(true)
     val refBuckets = w13RefBucketsFrame(cleaned).localCheckpoint(true)
-    val dense = w13DenseWeights(cleaned)
-    val (lmC2, lmC1) = w13LmCounts(cleaned)
-    val lm = graft.text.LanguageModel.denseCounts(lmC2, lmC1, LmB2, LmB1)
-    val gated = w13Gated(cleaned, refBuckets, dense, lm)
-    val counts = gated.groupBy("lang").agg(count(lit(1)).as("__n"))
-    val probs = sqrtMinProbs(counts, "lang").localCheckpoint(true)
+    val (dense, lm) = w13Tables(cleaned)
+    val probs = samplingProbs(w13Gated(cleaned, refBuckets, dense, lm), "lang")
     (blocked, refBuckets, dense, lm, probs)
   }
 
@@ -522,27 +580,13 @@ object StreamQueries {
     * rows — shared by control-plane training and the live chain. */
   private[graft] def w13Gated(cleaned: DataFrame, refBuckets: DataFrame,
       dense: Seq[Long], lm: (Seq[Long], Seq[Long])): DataFrame = {
-    val withBands = cleaned.withColumn("__bb",
-      graft.dedup.Dedup.lshBandArray(col("text"),
-        shingleSize = 3, numPerms = 16, rowsPerBand = 4))
-    // try_element_at: __bb is EMPTY for docs under shingleSize words
-    // (c4Clean's >=2-lines-of->=5-words gate happens to exclude them
-    // here, but the probe pattern must not depend on that — a plain
-    // element_at throws under ANSI on the first short doc). NULL band
-    // keys never equi-match, so empty-band docs pass the probe — the
-    // same no-bands-no-collision semantics as the aggregated path.
-    val probed = (0 until 4).foldLeft(withBands) { (df, k) =>
-      val ref = refBuckets.filter(col("band") === k)
-        .select(col("bucket").as(s"__r$k"))
-      df.join(broadcast(ref),
-          try_element_at(col("__bb"), lit(k + 1)).getField("bucket") === col(s"__r$k"),
-          "left_outer")
-    }
-    val survivors = probed
-      .filter((0 until 4).map(k => col(s"__r$k").isNull).reduce(_ && _))
+    val survivors = bandAntiProbe(cleaned.withColumn("__bb",
+        graft.dedup.Dedup.lshBandArray(col("text"),
+          shingleSize = 3, numPerms = 16, rowsPerBand = 4)),
+        "__bb", refBuckets)
       .select(col("doc_id"), col("lang"), col("text"))
     val (_, score) = graft.text.Importance.scoreColumns(
-      dense, "text", n = 2, buckets = 4096)
+      dense, "text", n = 2, buckets = DsirB)
     // fluency gate: per-row native LM scoring (w14's kernel), threshold
     // cross-multiplied so the comparison stays integer
     val (lmN, lmNll) = graft.text.LanguageModel.nllColumns(
@@ -596,22 +640,18 @@ object StreamQueries {
     // r14 barrier surgery (guide §2.6, the w15 treatment): `blocked`
     // stays LAZY — its one consumer is the broadcast anti-join inside
     // the cleaned checkpoint job, so the sourceStats aggregation builds
-    // inside that job instead of paying its own barrier; the three
-    // independent control tables off the cleaned base (corpus buckets,
-    // dense DSIR weights, dense LM counts) keep their materializations
-    // but OVERLAP on driver threads instead of running nose to tail.
-    // Every trained table is the SAME frame definition w13Control uses.
+    // inside that job instead of paying its own barrier; the corpus
+    // buckets and the one-pass DSIR/LM tables off the cleaned base
+    // OVERLAP on driver threads instead of running nose to tail.
+    // Every trained table is the SAME definition w13Control uses.
     val blocked = w13BlockedFrame(planted)
     val cleaned = w13CleanedFrame(planted, blocked).localCheckpoint(true)
-    val (lmC2, lmC1) = w13LmCounts(cleaned)
-    val (refBuckets, dense, lm) = graft.ops.Overlap.par3(
+    val (refBuckets, (dense, lm)) = graft.ops.Overlap.par2(
       () => w13RefBucketsFrame(cleaned).localCheckpoint(true),
-      () => w13DenseWeights(cleaned),
-      () => graft.text.LanguageModel.denseCounts(lmC2, lmC1, LmB2, LmB1))
+      () => w13Tables(cleaned))
     val gated = graft.ops.StagePersists.track(
       w13Gated(cleaned, refBuckets, dense, lm))
-    val counts = gated.groupBy("lang").agg(count(lit(1)).as("__n"))
-    val probs = sqrtMinProbs(counts, "lang").localCheckpoint(true)
+    val probs = samplingProbs(gated, "lang")
     val sampled = graft.text.Sampling.weightedSample(gated, "lang", "doc_id",
       probs)
     val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text",
@@ -933,9 +973,8 @@ object StreamQueries {
         TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       .sortBy(_._1)
-    val gated = w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts)
-    val counts = gated.groupBy("script").agg(count(lit(1)).as("__n"))
-    val probs = sqrtMinProbs(counts, "script").localCheckpoint(true)
+    val probs = samplingProbs(
+      w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts), "script")
     (hashes, refBuckets, lm, cuts, probs)
   }
 
@@ -948,18 +987,10 @@ object StreamQueries {
     val fresh = planted.withColumn("__h", md5(col("text2")))
       .join(broadcast(hashes), Seq("__h"), "left_anti")
       .drop("__h")
-    val withBands = fresh.withColumn("__bb",
-      graft.functions.LshBands(ScriptText.tokens(col("text2")),
-        W15ShingleN, 16, 4))
-    val probed = (0 until 4).foldLeft(withBands) { (df, k) =>
-      val ref = refBuckets.filter(col("band") === k)
-        .select(col("bucket").as(s"__r$k"))
-      df.join(broadcast(ref),
-        try_element_at(col("__bb"), lit(k + 1)).getField("bucket") === col(s"__r$k"),
-        "left_outer")
-    }
-    val survivors = probed
-      .filter((0 until 4).map(k => col(s"__r$k").isNull).reduce(_ && _))
+    val survivors = bandAntiProbe(fresh.withColumn("__bb",
+        graft.functions.LshBands(ScriptText.tokens(col("text2")),
+          W15ShingleN, 16, 4)),
+        "__bb", refBuckets)
       .select(col("doc_id"), col("text2"))
     val scripted = survivors
       .withColumn("script", ScriptText.dominantScript(col("text2")))
@@ -1042,12 +1073,7 @@ object StreamQueries {
       .toSeq.sortBy(_._1)
     val gated = graft.ops.StagePersists.track(
       w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts))
-    val counts = gated.groupBy("script").agg(count(lit(1)).as("__n"))
-    // checkpointed like the w15Control original: the one-row
-    // broadcast cross (the documented totals pattern) must not ride
-    // into the data-plane plan, where the blanket no-BNLJ plan-shape
-    // pin (ScaleSpec) would flag it
-    val probs = sqrtMinProbs(counts, "script").localCheckpoint(true)
+    val probs = samplingProbs(gated, "script")
     val sampled = graft.text.Sampling.weightedSample(gated, "script",
       "doc_id", probs)
     val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text2",

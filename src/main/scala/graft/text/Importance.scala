@@ -50,27 +50,30 @@ object Importance {
       lit(s" exceeds the Long-exact envelope ($bound); " +
         "recompute with DecimalType(38,0) weight/sum columns"))).cast("long"))
 
-  /** (id, __gs = n-gram array) — ONE tokenizer definition shared by
-    * training ([[grams]]) and scoring ([[scoreWithWeights]]), so the
-    * two cannot drift. Built by zipping n SHIFTED SLICES of the word
+  /** The n-gram array of a text column — ONE tokenizer definition
+    * shared by training ([[grams]]), scoring ([[scoreColumns]]), the
+    * LM's bigrams and w13's one-pass tables, so they cannot drift.
+    * Built by zipping n SHIFTED SLICES of the word
     * array, NOT by per-index element_at into a prior projection:
     * CollapseProject inlines a deterministic projected expression into
     * the consuming lambda, so the element_at form re-ran the
     * split-lower-filter once per gram index × per lambda reference —
     * measured 170s for 2.65M bigrams at sf1 vs 2.8s for this form,
     * whose word array is referenced only n times per ROW. */
-  private def withGramArray(df: DataFrame, textCol: String, idCol: String,
-      n: Int): DataFrame = {
-    val ws = graft.functions.TokenArray.asciiTokens(col(s"`$textCol`"))
+  private[graft] def gramArray(text: Column, n: Int): Column = {
+    val ws = graft.functions.TokenArray.asciiTokens(text)
     val len = size(ws) - (n - 1)
     val gs = (1 until n).foldLeft(slice(ws, lit(1), len)) { (acc, j) =>
       zip_with(acc, slice(ws, lit(1 + j), len),
         (a, b) => concat(a, lit(" "), b))
     }
-    df.select(col(s"`$idCol`").as("id"),
-      when(size(ws) >= n, gs)
-        .otherwise(array().cast("array<string>")).as("__gs"))
+    when(size(ws) >= n, gs).otherwise(array().cast("array<string>"))
   }
+
+  private def withGramArray(df: DataFrame, textCol: String, idCol: String,
+      n: Int): DataFrame =
+    df.select(col(s"`$idCol`").as("id"),
+      gramArray(col(s"`$textCol`"), n).as("__gs"))
 
   private def grams(df: DataFrame, textCol: String, idCol: String,
       n: Int): DataFrame =
@@ -167,17 +170,42 @@ object Importance {
       maxDocGrams: Long = 1L << 20): Seq[Long] = {
     val wmap: Map[Long, Long] = weights.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val maxAbsW = wmap.values.foldLeft(0L)((m, w) => math.max(m, math.abs(w)))
-    require(maxAbsW <= Long.MaxValue / math.max(maxDocGrams, 1L),
-      s"[graft] DSIR hashed weights reach |w|=$maxAbsW; documents with up " +
-        s"to $maxDocGrams grams could overflow the Long score sum — " +
-        "retrain with smaller corpora totals or DecimalType(38,0) scoring")
     // DENSE array literal indexed by bucket: element_at on a map
     // literal is a LINEAR scan of all `buckets` entries per gram
     // (ArrayBasedMapData has no hash index) — O(docs × grams × buckets),
     // measured 224s at sf1 — while an array ordinal access is O(1).
     // 4096 longs ≈ 32 KB of plan literal: still control-plane sized.
-    (0 until buckets).map(b => wmap.getOrElse(b.toLong, 0L))
+    checkedSum((0 until buckets).map(b => wmap.getOrElse(b.toLong, 0L)),
+      maxDocGrams)
+  }
+
+  private def checkedSum(dense: Seq[Long], maxDocGrams: Long): Seq[Long] = {
+    val maxAbsW = dense.foldLeft(0L)((m, w) => math.max(m, math.abs(w)))
+    require(maxAbsW <= Long.MaxValue / math.max(maxDocGrams, 1L),
+      s"[graft] DSIR hashed weights reach |w|=$maxAbsW; documents with up " +
+        s"to $maxDocGrams grams could overflow the Long score sum — " +
+        "retrain with smaller corpora totals or DecimalType(38,0) scoring")
+    dense
+  }
+
+  /** The dense weights [[hashedWeights]] + [[denseWeights]] train, from
+    * dense per-bucket raw and target gram counts already on the driver
+    * — with both of their guards: each side's total inside
+    * `maxSafeTotal`, every |weight| inside the `maxDocGrams` sum
+    * envelope. */
+  private[graft] def weightsOf(raw: Seq[Long], tgt: Seq[Long],
+      maxSafeTotal: Long = SafeTotalBound,
+      maxDocGrams: Long = 1L << 20): Seq[Long] = {
+    require(raw.size == tgt.size,
+      s"bucket counts differ in size: ${raw.size} vs ${tgt.size}")
+    val (nr, nt) = (raw.sum, tgt.sum)
+    Seq("raw" -> nr, "target" -> nt).foreach { case (side, tot) =>
+      require(tot <= maxSafeTotal, s"[graft] DSIR $side gram total $tot " +
+        s"exceeds the Long-exact envelope ($maxSafeTotal); recompute " +
+        "with DecimalType(38,0) weight/sum columns")
+    }
+    checkedSum(raw.indices.map(b => tgt(b) * nr - raw(b) * nt),
+      maxDocGrams)
   }
 
   /** (n_grams, score) as PURE COLUMNS over a text column — the form a
@@ -185,13 +213,7 @@ object Importance {
     * score without losing its other columns). */
   def scoreColumns(dense: Seq[Long], textCol: String, n: Int,
       buckets: Int): (Column, Column) = {
-    val ws = graft.functions.TokenArray.asciiTokens(col(s"`$textCol`"))
-    val len = size(ws) - (n - 1)
-    val gs0 = (1 until n).foldLeft(slice(ws, lit(1), len)) { (acc, j) =>
-      zip_with(acc, slice(ws, lit(1 + j), len),
-        (a, b) => concat(a, lit(" "), b))
-    }
-    val gs = when(size(ws) >= n, gs0).otherwise(array().cast("array<string>"))
+    val gs = gramArray(col(s"`$textCol`"), n)
     (size(gs).cast("long"),
       aggregate(gs, lit(0L), (acc, g) =>
         acc + element_at(typedLit(dense),

@@ -107,20 +107,15 @@ object LanguageModel {
     * à-ÿ-extended one, deliberately: a split on `[^a-zà-ÿ0-9]+` loses
     * the JVM regex ASCII fast path and measured 4× slower over the
     * same corpus (26.6 s vs 6.9 s for the sf1 bigram explode), and the
-    * LM gate sits in the hot crawl path. Bigrams are built by zipping
-    * two shifted slices — the CollapseProject-safe form
-    * ([[Importance.withGramArray]] documents the measured cliff the
+    * LM gate sits in the hot crawl path. Bigrams are
+    * [[Importance.gramArray]]'s two zipped shifted slices — the
+    * CollapseProject-safe form (its doc gives the measured cliff the
     * per-index element_at alternative hits). Emits one row per bigram
     * OCCURRENCE: (id, g, w1). */
   private def bigrams(df: DataFrame, textCol: String,
       idCol: String): DataFrame = {
-    val ws = graft.functions.TokenArray.asciiTokens(col(s"`$textCol`"))
-    val len = size(ws) - 1
-    val gs = zip_with(slice(ws, lit(1), len), slice(ws, lit(2), len),
-      (a, b) => concat(a, lit(" "), b))
     df.select(col(s"`$idCol`").as("id"),
-        when(size(ws) >= 2, gs).otherwise(array().cast("array<string>"))
-          .as("__gs"))
+        Importance.gramArray(col(s"`$textCol`"), 2).as("__gs"))
       .select(col("id"), explode(col("__gs")).as("g"))
       .withColumn("w1", substring_index(col("g"), " ", 1))
   }
@@ -365,6 +360,14 @@ object LanguageModel {
     // overlap them (guide §2.6, r14)
     val (d2, d1) = graft.ops.Overlap.par2(
       () => dense(c2, b2), () => dense(c1, b1))
+    checkedDense(d2, d1, b2, maxSafeDen)
+  }
+
+  /** Dense (d2, d1) bucket counts, checked against the (c₂+1)·2³⁰
+    * envelope [[denseCounts]] guards — for counts a caller collected
+    * itself (w13's one-pass tables). */
+  private[graft] def checkedDense(d2: Seq[Long], d1: Seq[Long], b2: Int,
+      maxSafeDen: Long = SafeDenBound): (Seq[Long], Seq[Long]) = {
     val worst = math.max(d2.foldLeft(0L)(math.max) + 1L,
       d1.foldLeft(0L)(math.max) + b2.toLong)
     require(worst <= maxSafeDen,

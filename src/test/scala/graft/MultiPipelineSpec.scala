@@ -42,34 +42,10 @@ class MultiPipelineSpec extends SparkSpec {
     // profile = one histogram shuffle and one fold (+ the quartiles
     // branch); scan = one predicate pass and one semi-join for all
     // unique rules per table. A reintroduced feature-branch join or a
-    // per-rule rescan raises the count above the bound. Jobs are
-    // counted by a local property, which the broadcast and subquery
-    // threads inherit; a sentinel job after the run drains the bus.
-    val sc = spark.sparkContext
-    val counted = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("graft.jobGuard")) match {
-          case Some("run") => counted.incrementAndGet()
-          case Some("drain") => drained.countDown()
-          case _ =>
-        }
-    }
+    // per-rule rescan raises the count above the bound.
     val orders = Tables.load(spark, sf, "orders")
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.jobGuard", "run")
-      runOnLake(orders).collect()
-      sc.setLocalProperty("graft.jobGuard", "drain")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(counted.get <= MaxJobs, s"${counted.get} jobs, bound $MaxJobs")
-    } finally {
-      sc.setLocalProperty("graft.jobGuard", null)
-      sc.removeSparkListener(listener)
-    }
+    val jobs = jobsOf(runOnLake(orders).collect())
+    assert(jobs <= MaxJobs, s"$jobs jobs, bound $MaxJobs")
   }
 
   test("shared rules only emerge from multi-member clusters") {

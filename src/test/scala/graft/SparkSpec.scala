@@ -23,4 +23,34 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf: String = SparkSpec.sf
+
+  /** Spark jobs `body` starts. Jobs are counted by a local property,
+    * which the broadcast and subquery threads inherit; a sentinel job
+    * after the body drains the listener bus. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("graft.jobGuard")) match {
+          case Some("run") => counted.incrementAndGet()
+          case Some("drain") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.jobGuard", "run")
+      body
+      sc.setLocalProperty("graft.jobGuard", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      counted.get
+    } finally {
+      sc.setLocalProperty("graft.jobGuard", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
