@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Benchmark main. Prints self-contained JSON lines the driver parses.
@@ -39,13 +38,7 @@ object Bench {
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -125,17 +118,14 @@ object Bench {
       }
     }))
 
-    // clearCache misses localCheckpoint RDDs — drop every persisted RDD
-    // so earlier queries can't pressure later ones
+    // drop every tracked persist, cached plan and checkpoint so earlier
+    // queries can't pressure later ones
     def dropState(): Unit =
       // swallow teardown errors: after a SIGTERM the context is stopping
       // and an uncaught throw here would print a stack trace AFTER the
       // shutdown hook's total line in the driver's merged tail
-      try {
-        graft.ops.StagePersists.release(spark)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      } catch { case t: Throwable =>
+      try graft.ops.StagePersists.dropAll(spark)
+      catch { case t: Throwable =>
         // silent only during shutdown (a stack here would displace the
         // hook's total line from the merged tail); live failures get one
         // line — pinned persists would contaminate later timings

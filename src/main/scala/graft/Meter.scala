@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (spark_optimization_guide §1):
   * times individual queries with the same forced materialization the
@@ -31,26 +30,17 @@ object Meter {
     // contention from engine scaling (see RESULTS_SF1 r14 addendum)
     val master = sys.env.getOrElse("SPARK_GRAFT_METER_MASTER",
       s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
+    val spark = LocalSession.builder(cpus, master)
       .config("spark.executor.memory",
         sys.env.getOrElse("SPARK_GRAFT_METER_EXEC_MEM", "4g"))
       .config("spark.executor.extraClassPath",
         sys.env.getOrElse("SPARK_GRAFT_METER_EXEC_CP",
           new java.io.File("target/scala-2.13/classes").getAbsolutePath))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only.contains(n))
-    def drop(): Unit = {
-      graft.ops.StagePersists.release(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
+    def drop(): Unit = graft.ops.StagePersists.dropAll(spark)
     // empirical breakdown (guide §1.1): jobs/stages/tasks + task time +
     // shuffle bytes per query run, so scheduling floor (many jobs, tiny
     // task time) separates from real compute at a glance

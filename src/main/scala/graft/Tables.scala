@@ -102,13 +102,4 @@ object Tables {
       s"planted-id offset $offset assumes $idCol < $offset; got max=$maxId" +
         " — raise the offsets in BOTH the query construction and its oracle")
   }
-
-  /** Register every table as a temp view so spark.sql(...) works too.
-    * `events` goes through [[loadEvents]] so the SQL surface sees the
-    * same normalized TimestampType ts as the DataFrame callers. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach { n =>
-      val df = if (n == "events") loadEvents(spark, sfDir) else load(spark, sfDir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

@@ -1,6 +1,6 @@
 package graft.cluster
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -39,11 +39,11 @@ object Clustering {
         features.map(f => coalesce(col(f).cast(DoubleType), lit(0.0)).as(f)): _*)
     // One row per (table, column) — broadcast-sized at any lake scale —
     // but its lineage is the full profiling agg over every table.
-    // localCheckpoint (not cache) both materializes it once AND
+    // A checkpoint (not cache) both materializes it once AND
     // truncates the plan: everything downstream (the stats agg here,
     // driver clustering, MLlib fits) would otherwise re-plan the
     // ~10³-expression profiling tree on every job.
-    val checkpointed = cleaned.lockedCheckpoint()
+    val checkpointed = StagePersists.checkpoint(cleaned)
     // Scaling statistics come from ONE tiny agg and compile into plain
     // column expressions — an MLlib Scaler.fit costs extra jobs and
     // non-codegen transform overhead for the same arithmetic
@@ -284,23 +284,6 @@ object Clustering {
         .maxBy { case (n, s) => (s, n) }
       (id, best, score)
     }.toDF("column_id", "rule", "cosine")
-  }
-
-  /** Per-cluster feature stats (A19/A20; reference:
-    * rules/cluster_matcher.py:200-247): pseudo-centroid plus min/max/std
-    * per feature. */
-  def clusterStats(profiles: DataFrame, assignments: DataFrame,
-      features: Seq[String] = defaultFeatures): DataFrame = {
-    val joined = profiles
-      .withColumn("column_id", concat_ws("::", col("table"), col("column")))
-      .join(assignments, "column_id")
-    val aggs = features.flatMap { f =>
-      Seq(avg(col(f)).as(s"${f}_mean"), min(col(f)).as(s"${f}_min"),
-        max(col(f)).as(s"${f}_max"),
-        coalesce(stddev_pop(col(f)), lit(0.0)).as(s"${f}_std"))
-    }
-    joined.groupBy("cluster_id")
-      .agg(count(lit(1)).as("n_columns"), aggs: _*)
   }
 
   /** Within-cluster outlier columns (M14; reference:

@@ -1,6 +1,6 @@
 package graft.cluster
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.sql.DataFrame
@@ -14,18 +14,17 @@ import org.apache.spark.sql.types.DoubleType
   *
   * MLlib GBTRegressor over the profile control plane: input is
   * O(#columns) rows, so the fit is cheap at any lake scale; the input
-  * is localCheckpointed because boosting runs ~#trees × #iters jobs.
+  * is checkpointed because boosting runs ~#trees × #iters jobs.
   */
 object StrategyPredictor {
 
   def assemble(profiles: DataFrame,
       features: Seq[String] = Clustering.defaultFeatures): DataFrame =
-    new VectorAssembler()
+    StagePersists.checkpoint(new VectorAssembler()
       .setInputCols(features.toArray).setOutputCol("features")
       .transform(profiles.select(
         (col("table") +: col("column") +: col("label").cast(DoubleType).as("label") +:
-          features.map(f => coalesce(col(f).cast(DoubleType), lit(0.0)).as(f))): _*))
-      .lockedCheckpoint()
+          features.map(f => coalesce(col(f).cast(DoubleType), lit(0.0)).as(f))): _*)))
 
   /** Fit a seeded GBT on profiles carrying a `label` column (observed
     * strategy F1). */

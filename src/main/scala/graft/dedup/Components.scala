@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.ops.StagePersists
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   * CHECKSUMS ever reaches the driver — no union-find, no collected
   * adjacency — so the same loop runs unchanged on a 10^11-edge graph.
   *
-  * Each round's result is eagerly localCheckpoint'ed: the loop would
+  * Each round's result is checkpointed (eager): the loop would
   * otherwise stack 2·rounds shuffles of lineage, and a lost-block
   * replay through a nondeterministic ancestor could diverge from the
   * checksummed state the convergence test saw.
@@ -29,17 +30,17 @@ object Components {
     * `maxRounds` — silently returning a half-merged labelling would
     * corrupt a dedup downstream.
     *
-    * Checkpoint lifecycle: each round's eager localCheckpoint SUPERSEDES
-    * the previous round's — on a 10^11-edge graph retaining all ~15
-    * rounds would pin 15 O(E) edge-set copies on the executors. The new
-    * checkpoint is materialized first (eager), then the superseded one
-    * is released, so at most TWO edge sets are ever live; only the
-    * final fixpoint (which the returned labels frame reads) stays
-    * persisted for the caller's query. */
+    * Checkpoint lifecycle: each round's edge set is checkpointed
+    * ([[StagePersists.checkpoint]]) and SUPERSEDES the previous
+    * round's — on a 10^11-edge graph retaining all ~15 rounds would pin
+    * 15 O(E) edge-set copies on the executors. The new checkpoint is
+    * materialized first (eager), then the superseded one is freed
+    * ([[StagePersists.free]]), so at most TWO edge sets are ever live;
+    * only the final fixpoint (which the returned labels frame reads)
+    * stays persisted for the caller's query. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 50): (DataFrame, Int) = {
-    val rot = new graft.ops.CheckpointRotation(pairs.sparkSession.sparkContext)
-    var edges = rot.rotate(pairs
+    var edges = StagePersists.checkpoint(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
@@ -48,7 +49,9 @@ object Components {
     var rounds = 0
     var done = edges.isEmpty
     while (!done && rounds < maxRounds) {
-      edges = rot.rotate(smallStar(largeStar(edges)))
+      val next = StagePersists.checkpoint(smallStar(largeStar(edges)))
+      StagePersists.free(edges)
+      edges = next
       val s = checksum(edges)
       done = s == sig
       sig = s
@@ -204,10 +207,8 @@ object Components {
     // (tiny: one root per touched component, and consumed by TWO joins
     // below) — also severs the cross-frame constraint lineage that
     // Catalyst's union constraint rewrite mishandles (see labels).
-    import graft.ops.CheckpointRotation.Ops
-    val touched = endpoints.join(stored, "id")
-      .select(col("component_id").as("__root")).distinct()
-      .lockedCheckpoint()
+    val touched = StagePersists.checkpoint(endpoints.join(stored, "id")
+      .select(col("component_id").as("__root")).distinct())
     val touchedMembers = stored.join(touched,
       stored("component_id") === touched("__root"), "left_semi")
     // closure input: new pairs + star edges of the touched components
@@ -229,25 +230,11 @@ object Components {
     // the checkpoint (tiny: blast-radius-sized, and the closure loop
     // already materialized it) truncates them. Skipped when the
     // adaptive fast path already returned a LocalRelation (r14).
-    val relabeled = checkpointUnlessLocal(adaptiveComponents(sub, "u", "v"))
+    val relabeled = StagePersists.checkpoint(adaptiveComponents(sub, "u", "v"))
     val untouched = stored.join(touched,
       stored("component_id") === touched("__root"), "left_anti")
     untouched.select("id", "component_id").unionByName(relabeled)
   }
-
-  /** lockedCheckpoint, SKIPPED when the frame is already a driver-local
-    * LocalRelation — the [[adaptiveComponents]] fast path's output. A
-    * checkpoint there costs a full materialization job and buys
-    * nothing: a LocalRelation has no lineage to truncate and no
-    * union-constraint chains for Catalyst to mishandle (the reasons
-    * the checkpoint exists on the distributed path). */
-  private[dedup] def checkpointUnlessLocal(df: DataFrame): DataFrame =
-    df.queryExecution.logical match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-      case _ =>
-        import graft.ops.CheckpointRotation.Ops
-        df.lockedCheckpoint()
-    }
 
   /** (count, xor-of-row-hashes) — an order-independent edge-set
     * fingerprint; equal fingerprints on consecutive rounds = fixpoint.

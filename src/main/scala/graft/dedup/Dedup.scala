@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -388,7 +388,7 @@ object Dedup {
       return minhashNearDupReps(df, textCol, idCol, shingleSize, numPerms,
         rowsPerBand, threshold)
     // exact-dup collapse: gid = min id per distinct text
-    val members = graft.ops.StagePersists.track(
+    val members = StagePersists.track(
       df.select(col(s"`$idCol`").as("id"), md5(col(s"`$textCol`")).as("__h"))
         .withColumn("gid", min(col("id")).over(
           org.apache.spark.sql.expressions.Window.partitionBy("__h")))
@@ -431,7 +431,7 @@ object Dedup {
     // shuffle re-runs per consumer. MEMORY_AND_DISK so the 100 TB case
     // spills instead of OOMing; tracked in StagePersists so long-lived
     // sessions can release it after materializing the result.
-    val sh = graft.ops.StagePersists.track(
+    val sh = StagePersists.track(
       wordShingles(df, textCol, idCol, shingleSize))
     minhashPairsFromShingles(sh, numPerms, rowsPerBand, threshold)
   }
@@ -449,9 +449,9 @@ object Dedup {
     // buckets are self-joined by lshCandidates: checkpoint the tiny
     // (id, band, bucket) frame so the signature aggregation doesn't run
     // once per join side
-    val buckets = lshBucketsWide(minhashWide(sh, numPerms), numPerms, rowsPerBand)
-      .repartition(sh.sparkSession.sparkContext.defaultParallelism)
-      .lockedCheckpoint()
+    val buckets = StagePersists.checkpoint(
+      lshBucketsWide(minhashWide(sh, numPerms), numPerms, rowsPerBand)
+        .repartition(sh.sparkSession.sparkContext.defaultParallelism))
     lshCandidates(buckets)
   }
 
@@ -463,12 +463,11 @@ object Dedup {
     * gram row ONCE for both sides instead of once per consumer. */
   def lshCandidatesFromHashedShingles(shH: DataFrame, numPerms: Int,
       rowsPerBand: Int): DataFrame = {
-    val buckets = lshBucketsWide(
+    val buckets = StagePersists.checkpoint(lshBucketsWide(
         minhashWideFromHashed(shH.select(col("id"),
           pmod(col("shingle"), lit(1073741824L)).as("__x")), numPerms),
         numPerms, rowsPerBand)
-      .repartition(shH.sparkSession.sparkContext.defaultParallelism)
-      .lockedCheckpoint()
+      .repartition(shH.sparkSession.sparkContext.defaultParallelism))
     lshCandidates(buckets)
   }
 
@@ -521,9 +520,9 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     // each shingle frame feeds three consumers (signatures, sizes, its
     // verify-join side): persist so the split+explode runs once per side
-    val cs = graft.ops.StagePersists.track(
+    val cs = StagePersists.track(
       wordShingles(corpus, textCol, idCol, shingleSize))
-    val bs = graft.ops.StagePersists.track(
+    val bs = StagePersists.track(
       wordShingles(batch, textCol, idCol, shingleSize))
     val cb = lshBucketsWide(minhashWide(cs, numPerms), numPerms, rowsPerBand)
     val bb = lshBucketsWide(minhashWide(bs, numPerms), numPerms, rowsPerBand)
@@ -602,7 +601,7 @@ object Dedup {
     * groupBy-HAVING even at buckets = 4). */
   def frequentShingles(df: DataFrame, textCol: String, idCol: String,
       k: Int, minDf: Long, buckets: Int = 1 << 16): DataFrame = {
-    val sh = graft.ops.StagePersists.track(
+    val sh = StagePersists.track(
       wordShingles(df, textCol, idCol, k).select("shingle"))
     val b = pmod(md5Long(col("shingle")), lit(buckets.toLong))
     val cand = sh.groupBy(b.as("__b")).agg(count(lit(1)).as("__bc"))
@@ -652,7 +651,7 @@ object Dedup {
     // was CodegenFallback — a closure and a fresh slice array per
     // window on the corpus scan; PosShingles is the flat loop, pinned
     // bit-identical in PosShinglesSpec (reference form retained below).
-    val occ = graft.ops.StagePersists.track(toks.select(col("id"),
+    val occ = StagePersists.track(toks.select(col("id"),
         explode(graft.functions.PosShingles(ws, k)).as("o"))
       .select(col("o.g").as("g"), col("id"), col("o.pos").as("pos")))
     val first = occ.groupBy("g")
@@ -703,7 +702,7 @@ object Dedup {
     // and the final rebuild join): persist the split — the expensive
     // pass — once; the posexplode re-derives from the cached arrays
     // for pennies (StagePersists release contract applies)
-    val toks = graft.ops.StagePersists.track(
+    val toks = StagePersists.track(
       df.select(col(s"`$idCol`").as("id"),
         split(col(s"`$textCol`"), java.util.regex.Pattern.quote(sep))
           .as("__lines")))
@@ -797,13 +796,12 @@ object Dedup {
     // 4 rows of 4 longs per doc, self-joined below: checkpoint so the
     // signature pipeline (distinct words + 64 bit votes) runs once,
     // not once per join side
-    val banded = sigs.select(col("id"), col("simhash"),
+    val banded = StagePersists.checkpoint(sigs.select(col("id"), col("simhash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),
           pmod(shiftright(col("simhash"), b * 16), lit(65536L)).as("key"))): _*)).as("bk"))
       .select(col("id"), col("simhash"), col("bk.band"), col("bk.key"))
-      .repartition(sigs.sparkSession.sparkContext.defaultParallelism)
-      .lockedCheckpoint()
+      .repartition(sigs.sparkSession.sparkContext.defaultParallelism))
     val a = banded.select(col("band"), col("key"), col("id").as("ida"),
       col("simhash").as("siga"))
     val b = banded.select(col("band"), col("key"), col("id").as("idb"),

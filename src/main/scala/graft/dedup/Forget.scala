@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.ops.StagePersists
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -94,11 +95,10 @@ object Forget {
     * `connectedComponents(pairs among corpus ∖ deletes)`. */
   def components(stored: DataFrame, pairs: DataFrame, deletes: DataFrame,
       aCol: String = "ida", bCol: String = "idb"): DataFrame = {
-    import graft.ops.CheckpointRotation.Ops
     val delIds = deletes.select(col("id")).distinct()
-    val touched = stored.join(delIds, Seq("id"), "left_semi")
-      .select(col("component_id").as("__root")).distinct()
-      .lockedCheckpoint()
+    val touched = StagePersists.checkpoint(
+      stored.join(delIds, Seq("id"), "left_semi")
+        .select(col("component_id").as("__root")).distinct())
     val untouched = stored.join(touched,
       stored("component_id") === touched("__root"), "left_anti")
     val survivors = stored.join(touched,
@@ -112,7 +112,7 @@ object Forget {
     // blast-radius-sized; checkpointed for the same Catalyst
     // union-constraint reasons as incrementalComponents (skipped on
     // the LocalRelation fast path — nothing to truncate, r14)
-    val relabeled = Components.checkpointUnlessLocal(
+    val relabeled = StagePersists.checkpoint(
       Components.adaptiveComponents(pSub, "u", "v"))
     untouched.select("id", "component_id").unionByName(relabeled)
   }

@@ -9,13 +9,16 @@ package graft.ops
   * job-submission barriers for work that fits the cluster side by side
   * (at sf0.1 the barrier latency IS most of the wall time — the w15
   * finding: task-seconds fell 149→130 in r13 while the wall stayed
-  * flat because four localCheckpoints ran nose to tail).
+  * flat because four checkpoints ran nose to tail).
   *
   * Thunks must be independent (none reads another's result) and
-  * side-effect-safe under concurrency — RDD persist/checkpoint
-  * materialization coordinates per-partition in the block manager, so
-  * two thunks racing to materialize one shared tracked persist compute
-  * it once. Failures rethrow the original cause on the calling thread.
+  * side-effect-safe under concurrency — RDD persist materialization
+  * coordinates per-partition in the block manager, so two thunks racing
+  * to materialize one shared tracked persist compute it once, and each
+  * [[StagePersists.checkpoint]] owns its RDD through the frame it
+  * returns, so concurrent checkpoints need no lock and [[StagePersists.free]]
+  * of one never touches another's. Failures rethrow the original cause
+  * on the calling thread.
   * Frames should be CONSTRUCTED on the calling thread; thunks only
   * trigger the actions.
   */

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.ops.CheckpointRotation.Ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,7 +93,7 @@ object Scale {
       require(dt == org.apache.spark.sql.types.LongType,
         s"prefixSums accumulates in Long; column $c is $dt — cast first")
     }
-    // Eager localCheckpoint, not persist: repartitionByRange samples its
+    // An eager checkpoint, not persist: repartitionByRange samples its
     // boundaries, so a lineage replay (lost block after executor
     // failure) could land rows in DIFFERENT partitions than the ones
     // whose offsets were collected below — silently corrupting every
@@ -111,13 +110,12 @@ object Scale {
     // parallel; row-count small, per-row cost large). With an explicit
     // count AQE leaves the layout alone, and the cost of a few
     // near-empty partitions on tiny inputs is nil.
-    val ranged = df
+    val ranged = StagePersists.checkpoint(df
       .repartitionByRange(
         df.sparkSession.sessionState.conf.numShufflePartitions,
         col(s"`$orderCol`"))
       .sortWithinPartitions(orderCol)
-      .withColumn("__pid", spark_partition_id())
-      .lockedCheckpoint()
+      .withColumn("__pid", spark_partition_id()))
     val aggs = sumCols.map(c => sum(col(s"`$c`")).as(s"__p_$c")) :+
       min(col(s"`$orderCol`")).as("__first")
     val pidStats = ranged.groupBy("__pid").agg(aggs.head, aggs.tail: _*)

@@ -2,27 +2,35 @@ package graft.ops
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
-/** Registry for operator-owned stage persists, giving long-lived
-  * sessions an explicit release handle.
+/** The one module that materializes a stage or releases one.
+  *
+  *  - [[checkpoint]]: materialize a frame once, here, and cut its
+  *    lineage (an eager local checkpoint). Used for pushdown barriers,
+  *    frames several jobs reuse, and each round of an iterative loop.
+  *  - [[free]]: release one checkpoint [[checkpoint]] returned — the
+  *    step an iterative loop takes once the next round's checkpoint has
+  *    materialized, so at most two rounds are ever live.
+  *  - [[track]]: persist a frame that must outlive the operator that
+  *    built it (the operator returns a lazy frame that reads it),
+  *    registered for session-scoped [[release]].
+  *  - [[scoped]]: persist frames for the length of one call.
+  *  - [[release]] / [[dropAll]]: drop what a query left behind.
   *
   * Some composed operators (the corpus pipelines' stage boundaries,
-  * trigramFamiliarity's shingle frame) persist corpus-sized
+  * trigramFamiliarity's shingle frame) track corpus-sized
   * intermediates because multiple consumers would otherwise re-execute
   * the whole upstream (measured 124s → 11s on the sf1 l2 rehearsal).
-  * Those frames are only needed until the query's terminal action
-  * completes, but the operator cannot release them itself — the frame
-  * it returns is lazy, so the persist must outlive the call.
-  *
-  * This engine's entry points (Bench, Verify, the driver harness) drop
-  * ALL session persist state between queries, so nothing accumulates
-  * there. A library caller composing several corpus queries in one
-  * long-lived session instead calls [[release]] after materializing
-  * each result — the documented contract for every operator that
-  * persists through [[track]].
+  * This engine's entry points (Bench, Verify, Meter) call [[dropAll]]
+  * between queries, so nothing accumulates there. A library caller
+  * composing several corpus queries in one long-lived session instead
+  * calls [[release]] after materializing each result — the documented
+  * contract for every operator that persists through [[track]].
   */
 object StagePersists {
 
@@ -37,6 +45,27 @@ object StagePersists {
   // globally), closing the stopped-context pinning hole.
   private val byCtx =
     new java.util.IdentityHashMap[SparkContext, mutable.Buffer[DataFrame]]()
+
+  /** Eagerly materialize `df` and return a frame over the result, with
+    * its lineage cut. A driver-local frame (a `LocalRelation`) is
+    * returned as is: it has no lineage to cut, and checkpointing it
+    * would cost a job for nothing. The returned frame's plan is a
+    * `LogicalRDD` over the checkpointed RDD, which is how [[free]]
+    * finds what to release — no registry, no lock, safe from
+    * concurrent threads. */
+  def checkpoint(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case _: LocalRelation => df
+    case _ => df.localCheckpoint(true)
+  }
+
+  /** Release the checkpoint behind a frame [[checkpoint]] returned. The
+    * frame must not be read afterwards. On any other frame (a local
+    * one [[checkpoint]] passed through, or a lazy plan) it does
+    * nothing. */
+  def free(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
 
   /** Persist `df` (MEMORY_AND_DISK — spill, don't OOM, at 100 TB) and
     * register it for session-scoped release. Returns `df`. */
@@ -54,6 +83,15 @@ object StagePersists {
     df
   }
 
+  /** Run `body` with `dfs` persisted (MEMORY_AND_DISK), and release
+    * them when it returns or throws: for frames one call scans several
+    * times and nothing reads afterwards. */
+  def scoped[A](dfs: Seq[DataFrame])(body: => A): A = {
+    dfs.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try body
+    finally dfs.foreach(_.unpersist(blocking = false))
+  }
+
   /** Release every operator-owned stage persist registered in this
     * session. Safe to call any time after the consuming query's
     * terminal action; subsequent re-use of a released frame recomputes
@@ -61,6 +99,15 @@ object StagePersists {
   def release(spark: SparkSession): Unit = synchronized {
     Option(byCtx.remove(spark.sparkContext))
       .foreach(_.foreach(_.unpersist(blocking = false)))
+  }
+
+  /** Drop all of the session's cached state between queries: the
+    * tracked persists, the catalog cache, and every persisted RDD —
+    * the last catches the checkpoints, which no catalog call sees. */
+  def dropAll(spark: SparkSession): Unit = {
+    release(spark)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 
   /** Number of live tracked persists for the session (test hook). */

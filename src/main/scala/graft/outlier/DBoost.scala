@@ -1,6 +1,6 @@
 package graft.outlier
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -58,20 +58,6 @@ object DBoost {
         sum("cnt").as("n_values"))
       .withColumn("peaked",
         (col("n_classes") <= maxClasses && col("top_mass") >= peakMass).cast("int"))
-
-  /** Histogram outliers: cells in peaked columns whose value carries
-    * less than `minRatio` of the mass. */
-  def histogramOutliers(long: DataFrame, maxClasses: Int = 16,
-      peakMass: Double = 0.8, minRatio: Double = 0.05): DataFrame = {
-    val hist = long.groupBy("column", "value").agg(count(lit(1)).as("cnt"))
-    val totals = hist.groupBy("column").agg(
-      count(lit(1)).as("n_classes"), sum("cnt").as("tot"), max("cnt").as("mx"))
-      .filter(col("n_classes") <= maxClasses &&
-        col("mx").cast(DoubleType) / col("tot").cast(DoubleType) >= peakMass)
-    hist.join(broadcast(totals), Seq("column"))
-      .filter(col("cnt").cast(DoubleType) / col("tot").cast(DoubleType) < minRatio)
-      .select(col("column"), col("value"), col("cnt"))
-  }
 
   // ---- A23 — one-pass streaming Stats ----------------------------------
 
@@ -191,7 +177,7 @@ object DBoost {
   def gmmOutliers(df: DataFrame, column: String, keyCol: String, k: Int = 2,
       cutoff: Double = 1e-4, seed: Long = 42L, trainCap: Int = 100000): DataFrame = {
     val d = col(s"`$column`").cast(DoubleType)
-    val values = df.filter(d.isNotNull).select(d.as("__v")).lockedCheckpoint()
+    val values = StagePersists.checkpoint(df.filter(d.isNotNull).select(d.as("__v")))
     val n = values.count()
     val sample =
       (if (n <= trainCap) values

@@ -1,5 +1,6 @@
 package graft.profile
 
+import graft.ops.StagePersists
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -167,30 +168,27 @@ object ExactPercentiles {
     if (maxGroupRows.exists(underCap)) return (hist, lazyState)
     // No caller bound: one eager control-plane job decides. The
     // checkpoint runs the sketch aggregation ONCE for the screen and
-    // the final join (it's a tiny frame, one row per group). Created
-    // through a rotation so the refinement path can RELEASE it — the
-    // refined state is independently checkpointed, and only one state
-    // checkpoint should survive the call.
-    val screenRot = new graft.ops.CheckpointRotation(present.sparkSession.sparkContext)
-    val state = screenRot.rotate(lazyState)
+    // the final join (it's a tiny frame, one row per group). The
+    // refinement path frees it — the refined state is independently
+    // checkpointed, and only one state checkpoint should survive the
+    // call.
+    val state = StagePersists.checkpoint(lazyState)
     val naMax = state.agg(max(col("__na"))).collect()
       .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
       .getOrElse(0L)
     if (!underCap(naMax)) {
-      // persist covers refineBrackets' ≤ maxRounds·(1+|ps|) rescans of
-      // the histogram; the refined state it returns is eagerly
-      // checkpointed (independent of h), so the persist is released
-      // here rather than retained past the query — the caller's final
-      // walk recomputes hist once, which beats pinning an O(distinct
-      // values) frame on the executors indefinitely.
-      val h = hist.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try (hist, refineBrackets(h, state, groupCols, ps.map(_._2), candidateCap))
-      finally {
-        h.unpersist(blocking = false)
-        // the refined state is independently checkpointed — the screen
-        // checkpoint is superseded and must not outlive the call
-        screenRot.release()
+      // the scoped persist covers refineBrackets' ≤ maxRounds·(1+|ps|)
+      // rescans of the histogram; the refined state it returns is
+      // eagerly checkpointed (independent of hist), so the persist is
+      // released on return rather than retained past the query — the
+      // caller's final walk recomputes hist once, which beats pinning
+      // an O(distinct values) frame on the executors indefinitely.
+      try StagePersists.scoped(Seq(hist)) {
+        (hist, refineBrackets(hist, state, groupCols, ps.map(_._2), candidateCap))
       }
+      // the refined state is independently checkpointed — the screen
+      // checkpoint is superseded and must not outlive the call
+      finally StagePersists.free(state)
     } else (hist, state)
   }
 
@@ -211,9 +209,9 @@ object ExactPercentiles {
       groupCols: Seq[String], ps: Seq[Double], cap: Int,
       maxRounds: Int = 8): DataFrame = {
     val gs = groupCols.map(g => col(s"`$g`"))
-    // superseded-checkpoint rotation: ≤ 2 state snapshots ever live
-    val rot = new graft.ops.CheckpointRotation(hist.sparkSession.sparkContext)
-    var state = rot.rotate(state0)
+    // each round's checkpoint frees the one it supersedes: ≤ 2 state
+    // snapshots ever live
+    var state = StagePersists.checkpoint(state0)
     var round = 0
     while (round < maxRounds) {
       val joined = hist.join(broadcast(state), groupCols)
@@ -226,8 +224,11 @@ object ExactPercentiles {
         .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
         .getOrElse(0L)
       if (worst <= cap) return state
-      ps.indices.foreach { i => state = refineOne(hist, state, groupCols, ps(i), i) }
-      state = rot.rotate(state)
+      val next = StagePersists.checkpoint(ps.indices.foldLeft(state) { (s, i) =>
+        refineOne(hist, s, groupCols, ps(i), i)
+      })
+      StagePersists.free(state)
+      state = next
       round += 1
     }
     throw new IllegalStateException(

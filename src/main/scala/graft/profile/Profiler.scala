@@ -1,6 +1,7 @@
 package graft.profile
 
 import graft.model.ColumnProfile
+import graft.ops.StagePersists
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -451,12 +452,11 @@ object Profiler {
       columns: Seq[String] = Nil): Seq[org.apache.spark.sql.Row] = {
     val long = longFormatMany(tables)
     val hist = if (histNeeded(cfg)) Some(valueHist(long)) else None
-    val shared = hist.filter(_ => histBranches(cfg))
-    shared.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val prof = assemble(long, hist, cfg)
-    try (if (columns.isEmpty) prof else prof.select(columns.map(col): _*))
-      .collect().toSeq
-    finally shared.foreach(_.unpersist(false))
+    StagePersists.scoped(hist.filter(_ => histBranches(cfg)).toSeq) {
+      val prof = assemble(long, hist, cfg)
+      (if (columns.isEmpty) prof else prof.select(columns.map(col): _*))
+        .collect().toSeq
+    }
   }
 
   /** [[profileManyRows]] with [[profileManyAuto]]'s exact/sketch
@@ -552,8 +552,8 @@ object Profiler {
     // twice): persist so the state aggregation runs once per side —
     // the trigramFamiliarity convention; StagePersists release
     // contract applies
-    val a = graft.ops.StagePersists.track(aState)
-    val b = graft.ops.StagePersists.track(bState)
+    val a = StagePersists.track(aState)
+    val b = StagePersists.track(bState)
     def totals(s: DataFrame, suffix: String): DataFrame =
       s.groupBy("table", "column").agg(
         sum("cnt").as(s"n_$suffix"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.StagePersists
 import graft.dedup.{Components, Decontamination, Dedup}
 import graft.functions.BigramScore
 import graft.text.{Chunking, Packing, Sampling, TextAnalysis}
@@ -37,11 +38,11 @@ object CorpusQueries {
     * This is the in-engine form of what a production pipeline does
     * between stages (materialize the surviving corpus); MEMORY_AND_DISK
     * so the 100 TB case spills instead of OOMing. Lifecycle contract: a
-    * long-lived session calls `graft.ops.StagePersists.release(spark)`
-    * after materializing the pipeline result (this engine's entry
-    * points drop all persist state between queries instead). */
+    * long-lived session calls `StagePersists.release(spark)` after
+    * materializing the pipeline result (this engine's entry points call
+    * `StagePersists.dropAll` between queries instead). */
   private def stage(df: DataFrame): DataFrame =
-    graft.ops.StagePersists.track(df)
+    StagePersists.track(df)
 
   def corpusPipeline(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))
@@ -700,13 +701,12 @@ object CorpusQueries {
     // downstream pass — and the checkpoint doubles as the pushdown
     // barrier that keeps the derivation CASE out of the fused gate
     // stages' generated code
-    val base = TextQueries.Scripts
+    val base = StagePersists.checkpoint(TextQueries.Scripts
       .derived(Tables.load(spark, dir, "documents"))
       .select(col("doc_id"),
         when(col("doc_id") % 41 === 0,
           TextQueries.Scripts.toUntracked(col("text2")))
-          .otherwise(col("text2")).as("text2"))
-      .localCheckpoint(true)
+          .otherwise(col("text2")).as("text2")))
     val doubled = base
       .unionByName(base.select((col("doc_id") + 1000000L).as("doc_id"),
         col("text2")))

@@ -6,7 +6,7 @@ import graft.profile.{Profiler, ProfilerConfig}
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 
 /** l8 — the INCREMENTAL DUMP-INGEST loop, composed end to end: the
   * operational pipeline a between-dumps corpus (the Dolma/CCNet loop)
@@ -73,7 +73,7 @@ object IngestQueries {
   private val Revision = " revised edition with improved prose quality."
 
   private def stage(df: DataFrame): DataFrame =
-    graft.ops.StagePersists.track(df)
+    StagePersists.track(df)
 
   /** Candidate-first Jaccard verify (the minhashNearDuplicates shape,
     * over caller-shared shingle frames): expand each candidate pair by
@@ -133,7 +133,8 @@ object IngestQueries {
   private[graft] def ingest(corpus: DataFrame,
       dumpRaw: DataFrame): Ingested = {
     // stage 1: within-dump exact dedup (min-id survivor)
-    val d1 = Dedup.dropExactDuplicates(dumpRaw, "text", "doc_id").lockedCheckpoint()
+    val d1 = StagePersists.checkpoint(
+      Dedup.dropExactDuplicates(dumpRaw, "text", "doc_id"))
     // stage 2: Bloom prefilter (stored corpus filter, broadcast bitmap,
     // map-side probe) + exact confirm-join on the HIT slice only —
     // false positives are rescued by the confirm, so the gate is exact
@@ -147,19 +148,17 @@ object IngestQueries {
     // walks the multiplied tree at optimize time — the plan-blowup twin
     // of the round-11 w15 pushed-filter case. The barrier replaces the
     // whole probe subtree with a LogicalRDD.
-    val probed = d1
+    val probed = StagePersists.checkpoint(d1
       .withColumn("bloom_hit",
         BloomDedup.probeColumn(col("text"), bm, BloomM, BloomK))
-      .withColumn("__h", md5(col("text")))
-      .lockedCheckpoint()
+      .withColumn("__h", md5(col("text"))))
     val confirmed = probed.filter(col("bloom_hit"))
       .join(broadcast(truth), Seq("__h"), "left_outer")
       .select(col("doc_id"), coalesce(col("__dup"), lit(false)).as("__isdup"))
-    val d2 = probed
+    val d2 = StagePersists.checkpoint(probed
       .join(confirmed, Seq("doc_id"), "left_outer")
       .filter(!coalesce(col("__isdup"), lit(false)))
-      .select("doc_id", "lang", "text")
-      .lockedCheckpoint()
+      .select("doc_id", "lang", "text"))
     // stage 3: near-dup fold into the stored component map + keep-best.
     // ONE pair machinery over the lake (r14; the d17 treatment):
     // signatures, buckets and Jaccard are per-document/per-pair
@@ -192,9 +191,8 @@ object IngestQueries {
     val corpusPairs = flagged.filter(!col("__new")).select("ida", "idb")
     val stored = Components.adaptiveComponents(corpusPairs, "ida", "idb")
     val newPairs = flagged.filter(col("__new")).select("ida", "idb")
-    val folded =
-      Components.incrementalComponents(stored, newPairs, "ida", "idb")
-        .lockedCheckpoint()
+    val folded = StagePersists.checkpoint(
+      Components.incrementalComponents(stored, newPairs, "ida", "idb"))
     // no checkpoint on the lake (r13): corpus is persisted and d2 is
     // already a checkpoint, so the union is free to re-derive — the
     // old checkpoint re-materialized a full corpus-sized copy of rows
@@ -205,9 +203,9 @@ object IngestQueries {
     // longs per doc
     val scored = stage(lake.select(col("doc_id").as("id"),
       TextAnalysis.qualityE4("text").as("q")))
-    val kb = Components.keepBest(folded, scored, "id", "component_id", "q")
-      .select(col("id").as("doc_id"), col("component_id"), col("keep"))
-      .lockedCheckpoint()
+    val kb = StagePersists.checkpoint(
+      Components.keepBest(folded, scored, "id", "component_id", "q")
+        .select(col("id").as("doc_id"), col("component_id"), col("keep")))
     // kept has ONE consumer in the query (the manifest rollup; the
     // spec's extra reads are test-side) — a persist would be pure
     // cache write-through (r13)
@@ -686,7 +684,7 @@ object IngestQueries {
     // adaptive ≡ distributed pin in ComponentsSpec covers both sides).
     // (no checkpoint: below the bound the labels are a LocalRelation —
     // free to re-read; above it they derive from the star loop's own
-    // retained rotation checkpoint)
+    // retained fixpoint checkpoint)
     val stored = Components.adaptiveComponents(pairs, "ida", "idb")
     val bm = graft.text.Bm25
     // postings persisted (r14): the folded state's dfreq (two
@@ -700,14 +698,14 @@ object IngestQueries {
     // term-grain and consumed twice (n_terms count + the df join):
     // persisted so the fold's subtract-join runs once (r14)
     val folded = folded0.copy(dfreq = stage(folded0.dfreq))
-    val labels2 = graft.dedup.Forget.components(stored, pairs,
-      deletes.select(col("doc_id").as("id"))).lockedCheckpoint()
+    val labels2 = StagePersists.checkpoint(graft.dedup.Forget.components(
+      stored, pairs, deletes.select(col("doc_id").as("id"))))
     // persisted (r14): keepBest consumes (labels ⋈ scored) twice, so
     // the ×10⁴ quality census ran over the remaining lake per consumer
     val scored = stage(remaining.select(col("doc_id").as("id"),
       TextAnalysis.qualityE4("text").as("q")))
-    val kb = Components.keepBest(labels2, scored, "id", "component_id", "q")
-      .lockedCheckpoint()
+    val kb = StagePersists.checkpoint(
+      Components.keepBest(labels2, scored, "id", "component_id", "q"))
     def cnt(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("v1"))
         .select(lit("a_counts").as("section"), lit(name).as("k"),

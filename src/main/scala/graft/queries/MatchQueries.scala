@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import graft.Tables
 import graft.cluster.Clustering
 import graft.matching.ColumnMatcher
@@ -60,10 +60,10 @@ object MatchQueries {
 
   def columnMatch(spark: SparkSession, dir: String): DataFrame = {
     // one profiling pass for both sides (profileMany), split by table
-    val both = Profiler.profileManyAuto(
+    val both = StagePersists.checkpoint(Profiler.profileManyAuto(
       Seq("customer" -> Tables.load(spark, dir, "customer"),
         "supplier" -> Tables.load(spark, dir, "supplier")),
-      features = Set("mode")).lockedCheckpoint()
+      features = Set("mode")))
     ColumnMatcher.candidates(both.filter(col("table") === "customer"),
         both.filter(col("table") === "supplier"))
       .orderBy("src_column", "tgt_column")
@@ -174,14 +174,14 @@ object MatchQueries {
     import graft.rules._
     import graft.transfer._
     val need = Set("quartiles", "mode", "pattern")
-    val both = Profiler.profileManyAuto(
+    val both = StagePersists.checkpoint(Profiler.profileManyAuto(
       Seq("customer" -> Tables.load(spark, dir, "customer"),
         "supplier" -> Tables.load(spark, dir, "supplier")),
-      features = need).lockedCheckpoint()
+      features = need))
     val srcProfiles = both.filter(col("table") === "customer")
     val tgtProfiles = both.filter(col("table") === "supplier")
-    val cands = ColumnMatcher.candidates(srcProfiles, tgtProfiles)
-      .lockedCheckpoint()
+    val cands = StagePersists.checkpoint(
+      ColumnMatcher.candidates(srcProfiles, tgtProfiles))
     val mapping = ColumnMatcher.assign(cands).toMap
     val scores = cands.collect().map { r =>
       (r.getAs[String]("src_column"), r.getAs[String]("tgt_column")) ->
@@ -280,10 +280,10 @@ object MatchQueries {
 
   def keywordOverlap(spark: SparkSession, dir: String): DataFrame = {
     val kw = Set("mode", "keywords")
-    val both = Profiler.profileManyAuto(
+    val both = StagePersists.checkpoint(Profiler.profileManyAuto(
       Seq("part" -> Tables.load(spark, dir, "part"),
         "documents" -> Tables.load(spark, dir, "documents")),
-      features = kw).lockedCheckpoint()
+      features = kw))
     val src = both.filter(col("table") === "part")
     val tgt = both.filter(col("table") === "documents")
     ColumnMatcher.keywordSimilarity(src, tgt)

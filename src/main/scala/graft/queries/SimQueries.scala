@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import graft.Tables
 import graft.sim.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -134,7 +134,7 @@ object SimQueries {
   private val IvfMaxSample = 10000
 
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").lockedCheckpoint()
+    val emb = StagePersists.checkpoint(Tables.load(spark, dir, "embeddings"))
     // corpus = all vectors; the query_id predicate pushes into the
     // probe branch, so only NQueries vectors fan out to their lists.
     // nprobe = 7 of 8: the synthetic embeddings cluster weakly, so
@@ -522,12 +522,12 @@ object SimQueries {
     * (tracked: the explode + (doc, term) agg is the operator's
     * dominant corpus pass). */
   private[queries] def bm25Postings(docs2: DataFrame): DataFrame =
-    graft.ops.StagePersists.track(
+    StagePersists.track(
       graft.text.Bm25.postings(docs2, "text", "doc_id"))
 
   private[queries] def bm25Probes(docs2: DataFrame,
       post: DataFrame): DataFrame = {
-    val fullDf = graft.ops.StagePersists.track(
+    val fullDf = StagePersists.track(
       post.groupBy("term").agg(count(lit(1)).as("__cdf")))
     val nDocs = broadcast(docs2.agg(count(lit(1)).as("__nd")))
     val probeTerms = post
@@ -536,7 +536,7 @@ object SimQueries {
     // tracked: every broadcast of the query frame (candidate semi-join,
     // pair join, df join, the w18 dense model) would otherwise re-run
     // the full-vocabulary df aggregation
-    graft.ops.StagePersists.track(graft.ops.Scale.saltedTopK(
+    StagePersists.track(graft.ops.Scale.saltedTopK(
         fullDf.join(broadcast(probeTerms), Seq("term"))
           .crossJoin(nDocs).filter(col("__cdf") * 4L <= col("__nd")),
         Seq(col("query_id")), Seq(col("__cdf"), col("term")),
@@ -683,9 +683,9 @@ object SimQueries {
     val even = docs2.filter(hkey === 0L)
     val odd = docs2.filter(hkey === 1L)
     val stored = bm.buildState(even, "text", "doc_id",
-      Some(graft.ops.StagePersists.track(bm.postings(even, "text", "doc_id"))))
+      Some(StagePersists.track(bm.postings(even, "text", "doc_id"))))
     val batch = bm.buildState(odd, "text", "doc_id",
-      Some(graft.ops.StagePersists.track(bm.postings(odd, "text", "doc_id"))))
+      Some(StagePersists.track(bm.postings(odd, "text", "doc_id"))))
     val folded = bm.foldState(stored, batch)
     val probes = bm25Probes(docs2, folded.post)
     val dumpHits = bm.scoreFromState(folded, probes)
@@ -770,18 +770,17 @@ object SimQueries {
     * intersection is engine-identical. IvfRecallSpec pins the
     * nprobe = nlist ⇒ recall ≡ 1 law. */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(spark, dir, "embeddings").lockedCheckpoint()
+    val emb = StagePersists.checkpoint(Tables.load(spark, dir, "embeddings"))
     val qs = emb.filter(col("vec_id") < NQueries)
     // barriers: each side's plan carries 64-term unrolled vector
     // arithmetic; joining the two raw plans sends Catalyst's optimizer
     // super-linear (40s of planning at ANY sf vs ~2s of execution)
-    val exact = Similarity.cosineTopK(emb, qs, "vec_id", "embedding", IvfK)
-      .lockedCheckpoint()
-    val approx = Similarity.ivfCosineTopK(emb, "vec_id", "embedding",
+    val exact = StagePersists.checkpoint(
+      Similarity.cosineTopK(emb, qs, "vec_id", "embedding", IvfK))
+    val approx = StagePersists.checkpoint(Similarity.ivfCosineTopK(emb, "vec_id", "embedding",
         k = IvfK, nlist = IvfNlist, nprobe = IvfNprobe,
         maxSample = IvfMaxSample)
-      .filter(col("query_id") < NQueries)
-      .lockedCheckpoint()
+      .filter(col("query_id") < NQueries))
     val hits = exact
       .join(approx.select("query_id", "neighbor_id"),
         Seq("query_id", "neighbor_id"), "left_semi")

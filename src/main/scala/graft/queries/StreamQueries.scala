@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.StagePersists
 import graft.functions.BigramScore
 import graft.streaming.StreamingQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -568,9 +569,9 @@ object StreamQueries {
   private[graft] def w13Control(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, Seq[Long], (Seq[Long], Seq[Long]), DataFrame) = {
     val planted = w13Planted(Tables.load(spark, dir, "documents"))
-    val blocked = w13BlockedFrame(planted).localCheckpoint(true)
-    val cleaned = w13CleanedFrame(planted, blocked).localCheckpoint(true)
-    val refBuckets = w13RefBucketsFrame(cleaned).localCheckpoint(true)
+    val blocked = StagePersists.checkpoint(w13BlockedFrame(planted))
+    val cleaned = StagePersists.checkpoint(w13CleanedFrame(planted, blocked))
+    val refBuckets = StagePersists.checkpoint(w13RefBucketsFrame(cleaned))
     val (dense, lm) = w13Tables(cleaned)
     val probs = samplingProbs(w13Gated(cleaned, refBuckets, dense, lm), "lang")
     (blocked, refBuckets, dense, lm, probs)
@@ -645,11 +646,11 @@ object StreamQueries {
     // OVERLAP on driver threads instead of running nose to tail.
     // Every trained table is the SAME definition w13Control uses.
     val blocked = w13BlockedFrame(planted)
-    val cleaned = w13CleanedFrame(planted, blocked).localCheckpoint(true)
+    val cleaned = StagePersists.checkpoint(w13CleanedFrame(planted, blocked))
     val (refBuckets, (dense, lm)) = graft.ops.Overlap.par2(
-      () => w13RefBucketsFrame(cleaned).localCheckpoint(true),
+      () => StagePersists.checkpoint(w13RefBucketsFrame(cleaned)),
       () => w13Tables(cleaned))
-    val gated = graft.ops.StagePersists.track(
+    val gated = StagePersists.track(
       w13Gated(cleaned, refBuckets, dense, lm))
     val probs = samplingProbs(gated, "lang")
     val sampled = graft.text.Sampling.weightedSample(gated, "lang", "doc_id",
@@ -912,7 +913,7 @@ object StreamQueries {
     * corpus, so the band probe provably bites in every script.
     *
     * `base` must be a MATERIALIZED frame (the [[w15Base]] output
-    * behind a localCheckpoint): the gate filters are deterministic, so
+    * behind a checkpoint): the gate filters are deterministic, so
     * Catalyst pushes them below the planted projections and
     * SUBSTITUTES the whole derivation CASE into every
     * script_stats/script_tokens reference — the fused gate stage's
@@ -927,7 +928,7 @@ object StreamQueries {
           floor(length(col("text2")) * 0.8).cast("int")).as("text2")))
 
   private[graft] def w15Planted(docs: DataFrame): DataFrame =
-    w15PlantedFrom(w15Base(docs).localCheckpoint(true))
+    w15PlantedFrom(StagePersists.checkpoint(w15Base(docs)))
 
   /** Batch-trained control plane: (corpus content hashes, script LSH
     * corpus buckets, per-script dense LM arrays, per-script LM cut
@@ -961,10 +962,10 @@ object StreamQueries {
     val docs = Tables.load(spark, dir, "documents")
     // materialized once: a pushdown barrier (see w15PlantedFrom) AND
     // the shared input of every control table below
-    val base = w15Base(docs).localCheckpoint(true)
+    val base = StagePersists.checkpoint(w15Base(docs))
     val corpus = base.filter(col("doc_id") % 3 === 0)
-    val hashes = w15HashesFrame(corpus).localCheckpoint(true)
-    val refBuckets = w15RefBucketsFrame(corpus).localCheckpoint(true)
+    val hashes = StagePersists.checkpoint(w15HashesFrame(corpus))
+    val refBuckets = StagePersists.checkpoint(w15RefBucketsFrame(corpus))
     val (c2, c1) = w15LmCounts(corpus)
     val lm = ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2, TextQueries.SLmB1)
     val cuts = ScriptLm.percentileCuts(
@@ -1035,7 +1036,7 @@ object StreamQueries {
     // path (StreamingSpec) still goes through w15Control + w15Chain.
     import graft.text.ScriptLm
     val docs = Tables.load(spark, dir, "documents")
-    val base = w15Base(docs).localCheckpoint(true)
+    val base = StagePersists.checkpoint(w15Base(docs))
     val corpus = base.filter(col("doc_id") % 3 === 0)
     // r14 barrier surgery (guide §2.6): the r13 twin trained hashes,
     // refBuckets, the dense LM and the percentile cuts as FOUR serial
@@ -1048,7 +1049,7 @@ object StreamQueries {
     val hashes = w15HashesFrame(corpus)
     val (c2, c1) = w15LmCounts(corpus)
     val (refBuckets, lm) = graft.ops.Overlap.par2(
-      () => w15RefBucketsFrame(corpus).localCheckpoint(true),
+      () => StagePersists.checkpoint(w15RefBucketsFrame(corpus)),
       () => ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2, TextQueries.SLmB1))
     // the percentile cuts train on the corpus scored in the dense
     // kernel form (r14; pinned ≡ the score() join form per row, so the
@@ -1071,7 +1072,7 @@ object StreamQueries {
         TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
       .collect().map(r => (r.getString(0), r.getLong(1)))
       .toSeq.sortBy(_._1)
-    val gated = graft.ops.StagePersists.track(
+    val gated = StagePersists.track(
       w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts))
     val probs = samplingProbs(gated, "script")
     val sampled = graft.text.Sampling.weightedSample(gated, "script",
@@ -1497,7 +1498,7 @@ object StreamQueries {
     val (lang, n, nll, scorable) = ScriptLm.nllColumnsBy(d2, d1,
       TextQueries.SLmB2, TextQueries.SLmB1, "text", route, keys,
       noneKey = "unknown")
-    val scoredAll = graft.ops.StagePersists.track(
+    val scoredAll = StagePersists.track(
       docs.select(col("doc_id"), lang.as("script"), n.as("n_grams"),
         nll.as("nll_fp"), scorable.as("lm_scorable")))
     val cuts = ScriptLm.percentileCuts(

@@ -44,10 +44,4 @@ object Dictionary {
       .join(broadcast(d), col("__v") === col("__dict_v"), "left_anti")
       .select("value").distinct()
   }
-
-  /** Membership predicate for use inside a violation scan: true when
-    * the value IS in the (collected, broadcast-as-literal) dictionary.
-    * For big dictionaries use [[misses]] (anti-join) instead. */
-  def memberOf(c: Column, values: Seq[String]): Column =
-    normalize(c).isin(values.map(v => v.toLowerCase): _*)
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,11 +88,10 @@ object Similarity {
       val planes = hyperplanes(planesPerBand, dim, seed = 42L + b)
       struct(lit(b).as("band"), lshBucket(col(s"`$vecCol`"), planes).as("key"))
     }
-    val banded = df
+    val banded = StagePersists.checkpoint(df
       .select(col(idCol).as("id"), explode(array(bandKeys: _*)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .lockedCheckpoint()
+      .repartition(df.sparkSession.sparkContext.defaultParallelism))
     val cands = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.ops.StagePersists
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -214,9 +215,7 @@ object BpeTrainer {
   def trainMerges(df: DataFrame, textCol: String, numMerges: Int,
       minFreq: Long = 2L): Seq[(Int, String, String, Long)] = {
     require(numMerges >= 1, "need at least one merge")
-    val sc = df.sparkSession.sparkContext
-    val rot = new graft.ops.CheckpointRotation(sc)
-    var state = rot.rotate(df
+    var state = StagePersists.checkpoint(df
       .select(explode(words(col(s"`$textCol`"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(col("n"),
@@ -239,13 +238,15 @@ object BpeTrainer {
         case Some(row) =>
           val (l, r, c) = (row.getString(0), row.getString(1), row.getLong(2))
           out += ((rank, l, r, c))
-          state = rot.rotate(state.select(col("n"),
+          val next = StagePersists.checkpoint(state.select(col("n"),
             applyMerge(col("p"), l, r).as("p")))
+          StagePersists.free(state)
+          state = next
           rank += 1
         case None => continue = false
       }
     }
-    rot.release()
+    StagePersists.free(state)
     out.result()
   }
 }

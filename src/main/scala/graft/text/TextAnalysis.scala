@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.ops.CheckpointRotation.Ops
+import graft.ops.StagePersists
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -55,13 +55,6 @@ object TextAnalysis {
     * cross-engine) without materializing the token array. */
   def tokenCount(c: String): Column =
     element_at(graft.functions.QualityStats(col(s"`$c`")), 5)
-
-  /** BPE-ish subword proxy: letter runs, digit runs, and single
-    * punctuation marks each count as one piece (a deterministic stand-in
-    * for a real tokenizer's piece count). */
-  def pieceCount(c: String): Column =
-    size(filter(split(col(s"`$c`"), "(?<=[^\\p{L}\\p{N}])|(?=[^\\p{L}\\p{N}])"),
-      p => trim(p) =!= "")).cast(LongType)
 
   /** Quality heuristics (reference gestures: length/punct/stopword
     * ratios). Returns [0,1]; higher is better. Components:
@@ -128,8 +121,9 @@ object TextAnalysis {
       explode(tokens(col(s"`$textCol`"))).as("word"))
     // tf feeds BOTH the scoring join and the doc-frequency rollup;
     // without the tracked persist the explode+groupBy executes twice
-    // (measured 33s → 6s at sf1). Release contract: StagePersists.
-    val tf = graft.ops.StagePersists.track(
+    // (measured 33s → 6s at sf1). It outlives this call: the session
+    // releases it (StagePersists.release, or dropAll between queries).
+    val tf = StagePersists.track(
       toks.groupBy("id", "word").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("doc_freq"))
     val n = broadcast(df.agg(count(lit(1)).as("__n")))
@@ -213,12 +207,12 @@ object TextAnalysis {
     * same-length cohort instead of the column cardinality. */
   def typoPairs(df: DataFrame, column: String, maxDist: Int = 2,
       maxDistinct: Long = 10000): DataFrame = {
-    // localCheckpoint: the guard count and both join sides reuse one
+    // checkpoint: the guard count and both join sides reuse one
     // distinct computation instead of three scans
-    val values = df.select(col(s"`$column`").cast("string").as("v"))
+    val values = StagePersists.checkpoint(
+      df.select(col(s"`$column`").cast("string").as("v"))
       .filter(col("v").isNotNull && col("v") =!= "")
-      .distinct()
-      .lockedCheckpoint()
+      .distinct())
     require(values.count() <= maxDistinct,
       s"$column has more than $maxDistinct distinct values; typo pairing would blow up")
     val banded = values.select(col("v"), length(col("v")).as("len"),
@@ -380,15 +374,15 @@ object TextAnalysis {
     * than 3 chars have no trigrams: n_trigrams 0, familiarity null. */
   def trigramFamiliarity(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     // two consumers (doc-frequency agg + the join back): persist so the
-    // corpus-sized explode — the dominant stage — runs once. Tracked in
-    // StagePersists: long-lived sessions release via
-    // StagePersists.release(spark) after materializing the result.
+    // corpus-sized explode — the dominant stage — runs once. Tracked,
+    // so it outlives this call: the session releases it
+    // (StagePersists.release, or dropAll between queries).
     // fused native kernel (r13): the per-CHARACTER higher-order
     // transform + substr chain was CodegenFallback — a closure call and
     // a fresh substring per character of every document; CharShingles
     // is the flat loop, pinned bit-identical in CharShinglesSpec (the
     // retained reference form below it).
-    val tris = graft.ops.StagePersists.track(df
+    val tris = StagePersists.track(df
       .select(col(s"`$idCol`").as("id"), lower(col(s"`$textCol`")).as("__t"))
       .select(col("id"), explode(
         graft.functions.CharShingles(col("__t"), 3)).as("tri")))

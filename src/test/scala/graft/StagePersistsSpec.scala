@@ -1,7 +1,10 @@
 package graft
 
-import graft.ops.StagePersists
+import graft.ops.{Overlap, StagePersists}
 import graft.text.TextAnalysis
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 class StagePersistsSpec extends SparkSpec {
   import spark.implicits._
@@ -49,5 +52,65 @@ class StagePersistsSpec extends SparkSpec {
     StagePersists.release(spark)
     assert(StagePersists.trackedCount(spark) == 0)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  }
+
+  private def rddOf(df: DataFrame): Int =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.id
+      case p => fail(s"not a checkpoint plan: ${p.getClass.getSimpleName}")
+    }
+
+  test("checkpoint of a driver-local frame runs no job and returns it") {
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(Row(1L), Row(2L), Row(3L)),
+      StructType(Seq(StructField("x", LongType))))
+    var out: DataFrame = null
+    assert(jobsOf { out = StagePersists.checkpoint(local) } == 0)
+    assert(out eq local)
+    // free on a frame checkpoint passed through is a no-op
+    StagePersists.free(out)
+    assert(out.count() == 3)
+  }
+
+  test("checkpoint of a distributed frame materializes it behind a LogicalRDD") {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val lazyDf = spark.range(0, 100, 1, 4).toDF("x").filter("x % 3 = 0")
+    var out: DataFrame = null
+    assert(jobsOf { out = StagePersists.checkpoint(lazyDf) } >= 1)
+    val id = rddOf(out)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == Set(id))
+    assert(out.count() == 34)
+    StagePersists.free(out)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("concurrent checkpoints each own their RDD: free releases only its own") {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val a0 = spark.range(0, 1000, 1, 4).toDF("x").filter("x % 2 = 0")
+    val b0 = spark.range(0, 1000, 1, 4).toDF("x").filter("x % 5 = 0")
+    val (a, b) = Overlap.par2(
+      () => StagePersists.checkpoint(a0), () => StagePersists.checkpoint(b0))
+    val (ia, ib) = (rddOf(a), rddOf(b))
+    assert(ia != ib)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == Set(ia, ib))
+    StagePersists.free(a)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == Set(ib))
+    assert(b.count() == 200)
+    assert(b.agg(org.apache.spark.sql.functions.sum("x")).head().getLong(0) ==
+      (0L until 1000L by 5L).sum)
+    StagePersists.free(b)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("dropAll leaves no persisted RDD behind") {
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
+      .toDF("doc_id", "text")
+    StagePersists.track(docs.select("doc_id")).count()
+    StagePersists.checkpoint(spark.range(0, 10, 1, 2).toDF("x")).count()
+    spark.range(0, 10).toDF("x").cache().count()
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+    StagePersists.dropAll(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(StagePersists.trackedCount(spark) == 0)
   }
 }

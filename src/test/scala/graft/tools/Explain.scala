@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
+    val spark = graft.LocalSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { n =>
       println(s"===== $n =====")

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dev utility: run ONE SparkEntry query by name, print result head +
   * timing, optionally write parquet. Usage: QProbe <name> <sfDir> [out]. */
 object QProbe {
@@ -7,12 +6,7 @@ object QProbe {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val cpus = graft.Meter.cpus
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     val df = graft.SparkEntry.queries(name)(spark, dir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Documents-table ×N scale-up with DENSE ids (doc_id·N + copy) for
@@ -20,13 +19,7 @@ object ScaleDocs {
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = graft.Meter.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
     val out = docs

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic ×N scale-up of a testdata directory for scale rehearsals
@@ -22,13 +22,7 @@ object ScaleUp {
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val cpus = graft.Meter.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def src(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-stage breakdown of one declared query: stage id, task-seconds,
   * tasks, shuffle bytes, and the stage's callsite (operator hint) —
   * the guide §1.1 "which stage is the time going to" loop without the
@@ -12,13 +10,7 @@ object StageProbe {
     val sfDir = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
     val cpus = graft.Meter.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val t0w = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -42,9 +34,7 @@ object StageProbe {
       graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
       println(f"[probe] $name rep$r total ${(System.nanoTime() - t0) / 1e9}%.2f s")
       if (r == reps) rows.forEach(s => println("  " + s))
-      graft.ops.StagePersists.release(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      graft.ops.StagePersists.dropAll(spark)
     }
     spark.stop()
   }
