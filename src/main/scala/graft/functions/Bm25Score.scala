@@ -127,31 +127,18 @@ object Bm25Score {
   }
 
   def scoreOf(m: Model, s: UTF8String): Array[Long] = {
-    val low = s.toLowerCase.getBytes
-    val n = low.length
-    val nt = m.terms.length
-    val scr = scratchFor(nt, m.queryIds.length)
+    val scr = scratchFor(m.terms.length, m.queryIds.length)
     val tf = scr.tf
     val touched = scr.touched
     var nTouched = 0
     var dl = 0L
-    var i = 0
-    while (i < n) {
-      if (TokenWalk.tokenLen(low, i, n, ascii = true) > 0) {
-        var j = i + 1
-        while (j < n && TokenWalk.tokenLen(low, j, n, ascii = true) > 0) j += 1
-        dl += 1L
-        val w = new String(low, i, j - i,
-          java.nio.charset.StandardCharsets.UTF_8)
-        val idx = m.lookup.get(w)
-        if (idx != null) {
-          val t = idx.intValue()
-          if (tf(t) == 0L) { touched(nTouched) = t; nTouched += 1 }
-          tf(t) += 1L
-        }
-        i = j
-      } else {
-        i += TokenWalk.sepStep(low(i) & 0xff)
+    TokenWalk.foreachAsciiWord(s) { w =>
+      dl += 1L
+      val idx = m.lookup.get(w)
+      if (idx != null) {
+        val t = idx.intValue()
+        if (tf(t) == 0L) { touched(nTouched) = t; nTouched += 1 }
+        tf(t) += 1L
       }
     }
     if (nTouched == 0) return Array(-1L, 0L, dl)

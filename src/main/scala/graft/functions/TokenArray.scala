@@ -23,21 +23,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * The kernel pays neither the regex nor the HOF filter: token slices
   * are zero-copy UTF8String views over the lowercased buffer.
   *
-  * BIT-IDENTICAL to the regex formulation for well-formed input
-  * (spec-pinned; the oracles of every consumer pin it cross-engine):
+  * BIT-IDENTICAL to the regex formulation on ANY input bytes
+  * (TokenArrayPropertySpec pins well-formed strings and arbitrary byte
+  * arrays; the oracles of every consumer pin it cross-engine):
   * lowercase = the same UTF8String.toLowerCase the `lower` builtin
-  * applies (full-case mappings agree); token code points = ASCII
-  * [a-z0-9] ∪ U+00E0–U+00FF (the à-ÿ range — 2-byte sequences, so a
-  * byte walk classifies exactly); every other code point (3/4-byte
-  * sequences included, all bytes ≥ 0x80 but with lead bytes ≥ 0xE0)
-  * is a separator.
-  *
-  * On MALFORMED UTF-8 the kernels follow the [[TokenWalk]] family rule
-  * (a bare continuation byte advances 2, which can skip a following
-  * token byte) and may diverge from the regex — equality is pinned for
-  * well-formed strings plus kernel-internal consistency only
-  * (TokenArrayPropertySpec guards the family rule). Do NOT assume
-  * regex equality on arbitrary bytes in a new kernel.
+  * applies (full-case mappings agree, and malformed bytes come back
+  * re-encoded as U+FFFD, so the walk only sees well-formed UTF-8);
+  * token code points = ASCII [a-z0-9] ∪ U+00E0–U+00FF (the à-ÿ range —
+  * 2-byte sequences, so a byte walk classifies exactly); every other
+  * code point (3/4-byte sequences included, all bytes ≥ 0x80 but with
+  * lead bytes ≥ 0xE0) is a separator.
   */
 case class TokenArray(child: Expression, ascii: Boolean)
     extends UnaryExpression {
@@ -75,7 +70,7 @@ object TokenArray {
       // advance to the next token byte ([[TokenWalk]] — the family
       // classification rule, single-sourced), so size(TokenArray(c))
       // == the QualityStats token count and trigrams over these tokens
-      // == RepetitionStats on EVERY input, well-formed or not
+      // == RepetitionStats on every input
       var start = -1
       while (i < n && start < 0) {
         if (TokenWalk.tokenLen(low, i, n, ascii) > 0) start = i

@@ -171,32 +171,20 @@ object UnigramEncode {
   }
 
   def encodeOf(m: Model, s: UTF8String): Array[Long] = {
-    val low = s.toLowerCase.getBytes
-    val n = low.length
     var nWords = 0L
     var nPieces = 0L
     var cost = 0L
     // per-row memo: the DP runs once per distinct word per document
     val memo = new java.util.HashMap[String, java.lang.Long]()
-    var i = 0
-    while (i < n) {
-      if (TokenWalk.tokenLen(low, i, n, ascii = true) > 0) {
-        var j = i + 1
-        while (j < n && TokenWalk.tokenLen(low, j, n, ascii = true) > 0) j += 1
-        val w = new String(low, i, j - i,
-          java.nio.charset.StandardCharsets.UTF_8)
-        var key = memo.get(w)
-        if (key == null) {
-          key = java.lang.Long.valueOf(wordKey(m, w))
-          memo.put(w, key)
-        }
-        nWords += 1L
-        cost += key.longValue / CntScale
-        nPieces += key.longValue % CntScale
-        i = j
-      } else {
-        i += TokenWalk.sepStep(low(i) & 0xff)
+    TokenWalk.foreachAsciiWord(s) { w =>
+      var key = memo.get(w)
+      if (key == null) {
+        key = java.lang.Long.valueOf(wordKey(m, w))
+        memo.put(w, key)
       }
+      nWords += 1L
+      cost += key.longValue / CntScale
+      nPieces += key.longValue % CntScale
     }
     Array(nWords, nPieces, cost)
   }

@@ -168,10 +168,10 @@ object ExactPercentiles {
     if (maxGroupRows.exists(underCap)) return (hist, lazyState)
     // No caller bound: one eager control-plane job decides. The
     // checkpoint runs the sketch aggregation ONCE for the screen and
-    // the final join (it's a tiny frame, one row per group). The
-    // refinement path frees it — the refined state is independently
-    // checkpointed, and only one state checkpoint should survive the
-    // call.
+    // the final join (it's a tiny frame, one row per group); the
+    // refinement path hands it to refineBrackets, which frees it once
+    // a refined state supersedes it, so one state checkpoint survives
+    // the call.
     val state = StagePersists.checkpoint(lazyState)
     val naMax = state.agg(max(col("__na"))).collect()
       .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
@@ -183,12 +183,9 @@ object ExactPercentiles {
       // released on return rather than retained past the query — the
       // caller's final walk recomputes hist once, which beats pinning
       // an O(distinct values) frame on the executors indefinitely.
-      try StagePersists.scoped(Seq(hist)) {
+      StagePersists.scoped(Seq(hist)) {
         (hist, refineBrackets(hist, state, groupCols, ps.map(_._2), candidateCap))
       }
-      // the refined state is independently checkpointed — the screen
-      // checkpoint is superseded and must not outlive the call
-      finally StagePersists.free(state)
     } else (hist, state)
   }
 
@@ -204,14 +201,18 @@ object ExactPercentiles {
     * walk state is ≤ RefineBins+2 rows. The new bracket is
     * [min x of the bin holding rank ⌊p(n−1)⌋, max x of the bin holding
     * ⌈p(n−1)⌉] — real data values, so the final exact walk is
-    * unchanged. */
+    * unchanged.
+    *
+    * Takes ownership of `state0`, a checkpointed state: it is returned
+    * as is when already under the cap, else freed once the first
+    * refined state supersedes it. Each round's checkpoint frees the one
+    * it supersedes, so ≤ 2 state snapshots are ever live and exactly
+    * one survives the call, on the exception path too. */
   private[graft] def refineBrackets(hist: DataFrame, state0: DataFrame,
       groupCols: Seq[String], ps: Seq[Double], cap: Int,
       maxRounds: Int = 8): DataFrame = {
     val gs = groupCols.map(g => col(s"`$g`"))
-    // each round's checkpoint frees the one it supersedes: ≤ 2 state
-    // snapshots ever live
-    var state = StagePersists.checkpoint(state0)
+    var state = state0
     var round = 0
     while (round < maxRounds) {
       val joined = hist.join(broadcast(state), groupCols)

@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.ops.StagePersists
 import graft.dedup.{Components, Decontamination, Dedup}
-import graft.functions.BigramScore
 import graft.text.{Chunking, Packing, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -72,14 +71,14 @@ object CorpusQueries {
   // ---- shared DuckDB mirror fragments (l1 + l2) --------------------------
 
   private val WsSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    OracleSql.asciiWordsSql("text")
 
   /** MinHash-LSH verified near-dup pairs → transitive closure →
     * non-canonical ids, over a CTE `exact(doc_id, text, …)` — the
     * d4/d7 oracle fragments shared verbatim by both pipeline mirrors. */
   private def nearDupCtesSql: String = {
     val ws = WsSql
-    val h30 = "(('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT"
+    val h30 = OracleSql.md5BucketSql("g", 1073741824)
     val perms = (0 until DedupQueries.NumPerms).map { p =>
       val a = 2 * (p + 1) + 1
       val b = (7919L * (p + 1)) % Dedup.P
@@ -126,36 +125,17 @@ object CorpusQueries {
       |  HAVING src <> LEAST(src, MIN(dst)))""".stripMargin
 
   private val WsqSql =
-    "list_filter(string_split_regex(lower(text), '[^a-zà-ÿ0-9]+'), w -> w <> '')"
+    OracleSql.wordsSql("text")
 
   /** The t2 quality score scaled to an exact ×10⁴ integer (as a
     * DOUBLE-valued FLOOR; callers CAST) — the order-independent form
-    * summable across engines. Shared with the r14 source-rules
-    * mirror. */
-  private[queries] val qualityE4ExprSql: String = qualityExprSqlParts
+    * summable across engines. Shared with the source-rules mirror. */
+  private[queries] val qualityE4ExprSql: String =
+    s"FLOOR(${TextQueries.rawQualitySql} * 10000 + 0.5)"
   /** The t2 quality-score expression (round4'd) over a `text` column —
     * mirrors TextAnalysis.qualityScore term by term. Shared with the
     * d11 keep-best mirror. */
   private[queries] val qualityExprSql: String = s"$qualityE4ExprSql / 10000.0"
-  private lazy val qualityExprSqlParts: String = {
-    val len = "CAST(LENGTH(text) AS DOUBLE)"
-    val alpha = "CAST(LENGTH(regexp_replace(text, '[^A-Za-zà-ÿ]', '', 'g')) AS DOUBLE)"
-    val digits = "CAST(LENGTH(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)"
-    val punct = "CAST(LENGTH(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE)"
-    val nTok = s"CAST(len($WsqSql) AS DOUBLE)"
-    s"""FLOOR((
-       |      (CASE WHEN $len >= 200 AND $len <= 20000 THEN 1.0
-       |            WHEN $len < 200 THEN $len / 200.0
-       |            ELSE 20000.0 / $len END) * 0.3
-       |      + (CASE WHEN $len > 0 THEN $alpha / $len ELSE 0.0 END) * 0.3
-       |      + (CASE WHEN $nTok > 0 THEN
-       |           CASE WHEN $alpha / $nTok >= 3 AND $alpha / $nTok <= 10
-       |                THEN 1.0 ELSE 0.5 END
-       |         ELSE 0.0 END) * 0.2
-       |      + (1.0 - LEAST((CASE WHEN $len > 0 THEN $punct / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-       |      + (1.0 - LEAST((CASE WHEN $len > 0 THEN $digits / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-       |    ) * 10000 + 0.5)""".stripMargin
-  }
 
   /** t7 chunking + t10 packing over CTE `src(doc_id, text)` — the final
     * CTEs plus the segment SELECT both mirrors end with. `tokExpr`
@@ -320,7 +300,7 @@ object CorpusQueries {
        |  FROM counts, mn),
        |sampled AS (
        |  SELECT k.doc_id, k.text FROM kept k JOIN probs p ON k.lang = p.lang
-       |  WHERE ('0x' || substr(md5(k.doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT < p.thr),
+       |  WHERE ${OracleSql.md5LongSql("k.doc_id::VARCHAR")} < p.thr),
        |${chunkPackTailSql("sampled")}""".stripMargin
   }
 
@@ -462,7 +442,7 @@ object CorpusQueries {
        |  FROM counts, mn),
        |sampled AS (
        |  SELECT k.doc_id, k.text FROM kept k JOIN probs p ON k.lang = p.lang
-       |  WHERE ('0x' || substr(md5(k.doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT < p.thr),
+       |  WHERE ${OracleSql.md5LongSql("k.doc_id::VARCHAR")} < p.thr),
        |${chunkPackTailSql("sampled")}""".stripMargin
   }
 
@@ -513,7 +493,7 @@ object CorpusQueries {
        |         WHEN h < ${thr(1)} THEN 'val'
        |         ELSE 'test' END AS split
        |  FROM (SELECT doc_id, lang, text,
-       |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT AS h
+       |    ${OracleSql.md5LongSql("doc_id::VARCHAR")} AS h
        |    FROM documents)),
        |hc AS (SELECT md5(text) AS h2, COUNT(*) AS hc FROM documents GROUP BY 1),
        |g AS (
@@ -583,7 +563,7 @@ object CorpusQueries {
   }
 
   val c4PipelineSql: String = {
-    val w4 = "list_filter(string_split_regex(lower(l), '[^a-z0-9]+'), x -> x <> '')"
+    val w4 = OracleSql.asciiWordsSql("l")
     s"""WITH planted AS (
        |  SELECT doc_id, lang,
        |    substr(text, 1, 60) || '.' || chr(10) ||
@@ -695,12 +675,10 @@ object CorpusQueries {
     // population that carries the LM gate's unscorable-KEPT policy
     // end to end (stage 4); a letterless filler would die at the
     // quality cut before the policy could bite
-    // base MATERIALIZED once (r14; the w15Base convention): the
-    // planted-copy union references base three times, so the script
-    // derivation (translate CASE) ran once per branch of every
-    // downstream pass — and the checkpoint doubles as the pushdown
-    // barrier that keeps the derivation CASE out of the fused gate
-    // stages' generated code
+    // base materialized once: the planted-copy union references it
+    // three times, and the checkpoint is the pushdown barrier that
+    // keeps the derivation CASE out of the fused gate stages'
+    // generated code (the w15Base convention)
     val base = StagePersists.checkpoint(TextQueries.Scripts
       .derived(Tables.load(spark, dir, "documents"))
       .select(col("doc_id"),
@@ -715,9 +693,8 @@ object CorpusQueries {
           substring(col("text2"), lit(1),
             floor(length(col("text2")) * 0.8).cast("int")).as("text2")))
     // stage 1: exact dedup (min-id survivor). The ×10⁴ script quality
-    // is computed ONCE here and persisted with the stage (r13
-    // optimization): it feeds both the keep-best score and the stage-3
-    // gate, which each re-ran the census kernel over ~the whole corpus.
+    // is computed once here and persisted with the stage: it feeds
+    // both the keep-best score and the stage-3 gate.
     val exact = stage(Dedup.dropExactDuplicates(doubled, "text2", "doc_id")
       .withColumn("__q", ScriptText.qualityE4("text2")))
     // stage 2: script-aware near-dups -> components -> keep best quality
@@ -743,39 +720,21 @@ object CorpusQueries {
     val qual = stage(withScript.filter(col("__q") >=
         when(col("script") === "cjk", L7QCjk).otherwise(L7QOther))
       .select("doc_id", "text2", "script"))
-    // stage 4: per-script LM percentile gate (unscorable kept, tagged)
-    // — deployed in the DENSE form (the w15/w18 device, r13
-    // optimization): the hashed counts collect into per-script arrays
-    // and scoring is the map-side native kernel, replacing two
-    // gram-grain joins + a per-doc re-aggregation + a join back. The
-    // kernel is pinned ≡ the hashed-count join form (w15's oracle
-    // replays that form in SQL against the kernel output), and qual's
-    // persisted `script` column is the same dominantScript expression
-    // score() derived internally.
+    // stage 4: per-script LM percentile gate (unscorable kept, tagged),
+    // scored in the dense deployed form; qual's persisted `script` is
+    // the route score() derives, and w15's oracle replays the join form
+    // in SQL against the same kernel
     val ref = qual.filter(col("doc_id") % 3 === 0).select("doc_id", "text2")
     val (c2, c1) = ScriptLm.hashedCounts(ref, "text2",
       TextQueries.SLmB2, TextQueries.SLmB1)
-    val lmArr = ScriptLm.denseCounts(c2, c1,
-      TextQueries.SLmB2, TextQueries.SLmB1)
-    val st = BigramScore(
-      ScriptText.tokens(col("text2")), ScriptLm.scriptIndex(col("script")),
-      new BigramScore.AddOne(lmArr._1, lmArr._2, TextQueries.SLmB2,
-        TextQueries.SLmB1))
-    val lmScored = stage(qual
-      .withColumn("__st", st)
-      .select(col("doc_id").as("id"), col("script"),
-        element_at(col("__st"), 1).as("n_grams"),
-        element_at(col("__st"), 2).as("nll_fp"),
-        (col("script") =!= "none" && element_at(col("__st"), 1) > 0L)
-          .as("lm_scorable")))
+    val lmScored = stage(ScriptLm.withScores(qual,
+      ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2, TextQueries.SLmB1),
+      TextQueries.SLmB2, TextQueries.SLmB1, "text2", col("script")))
     val cuts = ScriptLm.percentileCuts(lmScored,
       TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
-    val lmKept = lmScored.join(broadcast(cuts), Seq("script"), "left_outer")
-      .filter(when(!col("lm_scorable"), lit(true))
-        .otherwise(graft.text.LanguageModel.avgKey(
-          col("nll_fp"), col("n_grams")) <= col("cut")))
-      .select(col("id").as("doc_id"), col("script"))
-    val kept = stage(qual.select("doc_id", "text2").join(lmKept, Seq("doc_id")))
+    val kept = stage(lmScored.filter(ScriptLm.gateKept(col("script"),
+        col("n_grams"), col("nll_fp"), cuts))
+      .select("doc_id", "text2", "script"))
     // stage 5: temperature-rebalanced sampling by script
     val sampled = Sampling.temperatureSample(kept, "script", "doc_id")
     // stages 6-7: chunk and pack at the script-aware token grain
@@ -895,7 +854,7 @@ object CorpusQueries {
        |sampled AS (
        |  SELECT k.doc_id, k.text2 AS text FROM kept k
        |  JOIN probs p ON k.script = p.script
-       |  WHERE ('0x' || substr(md5(k.doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
+       |  WHERE ${OracleSql.md5LongSql("k.doc_id::VARCHAR")}
        |          < p.thr),
        |${chunkPackTailSql("sampled", Scripts.toksSql("text"))}""".stripMargin
   }
@@ -1006,7 +965,7 @@ object CorpusQueries {
     * C4/line-dedup fragments over the extracted text, the d1 min-id
     * survivor, and the l5 stats tail. */
   val htmlPipelineSql: String = {
-    val w4 = "list_filter(string_split_regex(lower(l), '[^a-z0-9]+'), x -> x <> '')"
+    val w4 = OracleSql.asciiWordsSql("l")
     s"""WITH h0 AS (
        |  SELECT doc_id, lang,
        |    ${TextQueries.htmlPageSql(s"'${TextQueries.sqLit(HtmlNews)}' ||")} AS html

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 object DedupQueries {
 
   // Shared DuckDB fragments -------------------------------------------------
-  private val WS = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+  private val WS = OracleSql.asciiWordsSql("text")
   /** word 3-gram shingles, distinct per doc */
   private val GRAMS3 =
     s"""g0 AS (
@@ -22,7 +22,7 @@ object DedupQueries {
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id)""".stripMargin
   private def h30(e: String) =
-    s"(('0x' || substr(md5($e), 1, 15))::UBIGINT % 1073741824)::BIGINT"
+    OracleSql.md5BucketSql(e, 1073741824)
 
   // ---- d1: exact duplicate groups --------------------------------------
 
@@ -1041,7 +1041,7 @@ object DedupQueries {
     * this replay agree bit for bit, false positives included. */
   val bloomDedupSql: String = {
     def pos(e: String) =
-      s"(('0x' || substr(md5(j::VARCHAR || ':' || $e), 1, 15))::UBIGINT % $BloomM)::BIGINT"
+      OracleSql.md5BucketSql(s"j::VARCHAR || ':' || $e", BloomM)
     s"""WITH dump AS (
        |  SELECT d.doc_id + 1000000 AS doc_id,
        |    CASE WHEN d.doc_id % 5 = 0 THEN d.text
@@ -1176,7 +1176,7 @@ object DedupQueries {
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
        |gh AS (SELECT doc_id,
-       |  (('0x' || substr(md5(g), 1, 15))::UBIGINT)::BIGINT AS h FROM grams),
+       |  (${OracleSql.md5U60Sql("g")})::BIGINT AS h FROM grams),
        |tpairs AS (
        |  SELECT a.doc_id AS ida, b.doc_id AS idb, COUNT(*) AS common
        |  FROM gh a JOIN gh b ON a.h = b.h AND a.doc_id < b.doc_id

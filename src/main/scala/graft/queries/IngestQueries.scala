@@ -286,11 +286,11 @@ object IngestQueries {
     * the d11 quality argmax, flat token/df counts, the p1 profile
     * stats, and the l4 manifest rollup. */
   val incrementalIngestSql: String = {
-    val wsD = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    val wsD = OracleSql.asciiWordsSql("text")
     val wsQ = TextQueries.WS
-    val h30 = "(('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT"
+    val h30 = OracleSql.md5BucketSql("g", 1073741824)
     def pos(e: String) =
-      s"(('0x' || substr(md5(j::VARCHAR || ':' || $e), 1, 15))::UBIGINT % $BloomM)::BIGINT"
+      OracleSql.md5BucketSql(s"j::VARCHAR || ':' || $e", BloomM)
     val perms = (0 until DedupQueries.NumPerms).map { p =>
       val a = 2 * (p + 1) + 1
       val b = (7919L * (p + 1)) % Dedup.P
@@ -521,9 +521,9 @@ object IngestQueries {
     * join, the minhash band CTEs on BOTH sides with a per-doc
     * distinct-band hit count, and the shared ×10⁴ quality cut. */
   val streamIngestGateSql: String = {
-    val wsD = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    val wsD = OracleSql.asciiWordsSql("text")
     def pos(e: String) =
-      s"(('0x' || substr(md5(j::VARCHAR || ':' || $e), 1, 15))::UBIGINT % $BloomM)::BIGINT"
+      OracleSql.md5BucketSql(s"j::VARCHAR || ':' || $e", BloomM)
     def perms(src: String) = (0 until DedupQueries.NumPerms).map { p =>
       val a = 2 * (p + 1) + 1
       val b = (7919L * (p + 1)) % Dedup.P
@@ -536,7 +536,7 @@ object IngestQueries {
          |  FROM $src WHERE len($wsD) >= 3),
          |${src}grams AS (SELECT DISTINCT doc_id, g FROM ${src}g0),
          |${src}hashes AS (SELECT doc_id,
-         |  (('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT AS h
+         |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
          |  FROM ${src}grams),
          |${src}sigs AS (${perms(src)}),
          |${src}bands AS (
@@ -736,8 +736,8 @@ object IngestQueries {
     * keep-best argmax, flat token/df counts. Hash equality is the
     * fold ≡ rebuild proof. */
   val deleteFoldSql: String = {
-    val ws = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
-    val h30 = "(('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT"
+    val ws = OracleSql.asciiWordsSql("text")
+    val h30 = OracleSql.md5BucketSql("g", 1073741824)
     val perms = (0 until DedupQueries.NumPerms).map { p =>
       val a = 2 * (p + 1) + 1
       val b = (7919L * (p + 1)) % Dedup.P

@@ -17,12 +17,12 @@ object MultimodalQueries {
       .orderBy("id")
 
   val mediaFeaturesSql: String =
-    """SELECT doc_id AS id,
+    s"""SELECT doc_id AS id,
       |  octet_length(encode(text))::BIGINT AS n_bytes,
       |  md5(text) AS checksum,
-      |  (1 + ('0x' || substr(md5(text), 1, 15))::UBIGINT % 1024)::INT AS width,
-      |  (1 + (('0x' || substr(md5(text), 1, 15))::UBIGINT // 1024) % 1024)::INT AS height,
-      |  (1 + ('0x' || substr(md5(text), 1, 15))::UBIGINT % 3)::INT AS n_channels
+      |  (1 + ${OracleSql.md5U60Sql("text")} % 1024)::INT AS width,
+      |  (1 + (${OracleSql.md5U60Sql("text")} // 1024) % 1024)::INT AS height,
+      |  (1 + ${OracleSql.md5U60Sql("text")} % 3)::INT AS n_channels
       |FROM documents ORDER BY id""".stripMargin
 
   // ---- mm2: perceptual dHash image near-duplicates ----------------------
@@ -105,7 +105,7 @@ object MultimodalQueries {
     s"""WITH meta AS (
        |  SELECT doc_id AS id, md5(text) AS csum,
        |    1000 + (octet_length(encode(text)) * 977) % 60000 AS duration_ms,
-       |    (24 + (('0x' || substr(md5(text), 1, 15))::UBIGINT % 2) * 6)::BIGINT AS fps
+       |    (24 + (${OracleSql.md5U60Sql("text")} % 2) * 6)::BIGINT AS fps
        |  FROM documents),
        |frames AS (
        |  SELECT id, csum, duration_ms, fps,
@@ -129,15 +129,15 @@ object MultimodalQueries {
       .orderBy("id")
 
   val audioFeaturesSql: String =
-    """SELECT doc_id AS id,
+    s"""SELECT doc_id AS id,
       |  octet_length(encode(text))::BIGINT AS n_bytes,
       |  md5(text) AS checksum,
-      |  (CASE ('0x' || substr(md5(text), 1, 15))::UBIGINT % 4
+      |  (CASE ${OracleSql.md5U60Sql("text")} % 4
       |     WHEN 0 THEN 16000 WHEN 1 THEN 22050 WHEN 2 THEN 44100
       |     ELSE 48000 END)::BIGINT AS sample_rate,
-      |  (1 + (('0x' || substr(md5(text), 1, 15))::UBIGINT // 4) % 2)::BIGINT AS n_channels,
+      |  (1 + (${OracleSql.md5U60Sql("text")} // 4) % 2)::BIGINT AS n_channels,
       |  (500 + (octet_length(encode(text)) * 977) % 120000)::BIGINT AS duration_ms,
-      |  ((('0x' || substr(md5(text), 1, 15))::UBIGINT // 8) % 10)::BIGINT AS loudness_bucket
+      |  ((${OracleSql.md5U60Sql("text")} // 8) % 10)::BIGINT AS loudness_bucket
       |FROM documents ORDER BY id""".stripMargin
 
   // ---- mm5: audio fingerprint near-dups ----------------------------------
@@ -237,8 +237,7 @@ object MultimodalQueries {
        |  LEFT JOIN documents p ON p.doc_id = d.doc_id - 1),
        |fr AS (
        |  SELECT DISTINCT doc_id AS id,
-       |    ('0x' || substr(md5(substr(text, (i * $VWindow + 1)::INT,
-       |      $VWindow)), 1, 15))::UBIGINT::BIGINT AS fhash
+       |    ${OracleSql.md5LongSql(s"substr(text, (i * $VWindow + 1)::INT, $VWindow)")} AS fhash
        |  FROM (SELECT doc_id, text,
        |          unnest(range(0, GREATEST((len(text) - 1) // $VWindow, 0)
        |            + 1)) AS i

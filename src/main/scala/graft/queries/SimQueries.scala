@@ -195,7 +195,7 @@ object SimQueries {
        |  SELECT * FROM (
        |    SELECT embedding::DOUBLE[] AS e, vec_id,
        |      row_number() OVER (ORDER BY
-       |        ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::UBIGINT::BIGINT,
+       |        ${OracleSql.md5LongSql("vec_id::VARCHAR")},
        |        vec_id) AS rn
        |    FROM embeddings)
        |  WHERE rn <= $IvfMaxSample),
@@ -262,7 +262,7 @@ object SimQueries {
   }
 
   private val MixWs =
-    "list_filter(string_split_regex(lower(text), '[^a-zà-ÿ0-9]+'), w -> w <> '')"
+    OracleSql.wordsSql("text")
 
   val domainMixSql: String = {
     val dot = "list_dot_product(e.embedding::DOUBLE[], c.cv)"
@@ -591,8 +591,7 @@ object SimQueries {
        |  FROM documents),
        |t AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-       |      w -> w <> '') AS ws
+       |    ${OracleSql.asciiWordsSql("text")} AS ws
        |  FROM docs2),
        |tf AS (
        |  SELECT doc_id, dl, term, COUNT(*)::BIGINT AS tf
@@ -699,9 +698,8 @@ object SimQueries {
   val bm25IncrementalSql: String =
     s"""WITH $Bm25ChainSql,
        |${bm25ScoreSql(
-        "WHERE c.doc_id <> q.query_id AND ('0x' || " +
-          "substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 15))" +
-          "::UBIGINT % 2 = 1")}
+        "WHERE c.doc_id <> q.query_id AND " +
+          s"${OracleSql.md5U60Sql("CAST(c.doc_id AS VARCHAR)")} % 2 = 1")}
        |SELECT query_id, doc_id, score_fp, rk FROM (
        |  SELECT query_id, doc_id, score_fp,
        |    ROW_NUMBER() OVER (PARTITION BY query_id

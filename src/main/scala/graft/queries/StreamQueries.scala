@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.StagePersists
-import graft.functions.BigramScore
 import graft.streaming.StreamingQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -135,7 +134,7 @@ object StreamQueries {
       .orderBy("id", "shingle")
   }
 
-  private val WS5 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+  private val WS5 = OracleSql.asciiWordsSql("text")
 
   val streamDecontaminationSql: String =
     s"""WITH g0 AS (
@@ -169,14 +168,14 @@ object StreamQueries {
   }
 
   val streamWeightedSampleSql: String =
-    """WITH probs AS (
+    s"""WITH probs AS (
       |  SELECT DISTINCT lang,
       |    CAST(FLOOR(LEAST(CAST((LENGTH(lang) * 37) % 50 + 25 AS DOUBLE) / 100.0, 1.0)
       |      * 1152921504606846976.0) AS BIGINT) AS thr
       |  FROM documents)
       |SELECT d.lang, d.doc_id
       |FROM documents d JOIN probs p ON d.lang = p.lang
-      |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT < p.thr
+      |WHERE ${OracleSql.md5LongSql("d.doc_id::VARCHAR")} < p.thr
       |ORDER BY d.lang, d.doc_id""".stripMargin
 
   // ---- w6: streaming sequence packing ------------------------------------
@@ -318,7 +317,7 @@ object StreamQueries {
   }
 
   private val WS3 =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    OracleSql.asciiWordsSql("text")
 
   val streamNearDupEvidenceSql: String = {
     val perms = (0 until 16).map { p =>
@@ -332,7 +331,7 @@ object StreamQueries {
        |  FROM documents WHERE len($WS3) >= 3),
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |hashes AS (SELECT doc_id,
-       |  (('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT AS h
+       |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
        |  FROM grams),
        |sigs AS ($perms),
        |bands AS (
@@ -440,10 +439,15 @@ object StreamQueries {
     *    operator ([[graft.text.Packing.streamingBinSegments]]), in the
     *    one position Spark permits it (last).
     *
-    * Batch mode runs the identical code path (state starts empty, one
-    * group invocation per shard), which is what the DuckDB oracle
-    * certifies; StreamingSpec feeds the same corpus through
-    * MemoryStream micro-batches and pins stream ≡ batch. */
+    * One definition serves both modes: the chain is a gate (source
+    * gate, C4 clean, band probe, quality/repetition/DSIR/LM gates) and
+    * a tail (sample, chunk, pack). The stream runs
+    * [[W13Control.chain]] = tail(gate(stream)); the declared query runs
+    * the tail over [[W13Control.gated]], the gate already run over the
+    * same bounded planted frame to train the thresholds. StreamingSpec
+    * feeds the planted corpus through MemoryStream micro-batches and
+    * asserts the stream's rows equal the declared query's, the rows
+    * the DuckDB oracle certifies. */
   private[graft] def w13Planted(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("source"),
       concat(
@@ -454,12 +458,6 @@ object StreamQueries {
         when(col("doc_id") % 6 === 0,
           lit("\nthis page is lorem ipsum filler text only."))
           .otherwise(lit(""))).as("text"))
-
-  // ---- shared w13 control-plane FRAME definitions (r14; the ADVICE
-  // factor): the batch twin and the streaming control plane consume
-  // ONE definition of each trained table — materialization policy
-  // (checkpoint / persist / overlap) stays the caller's, so an edit to
-  // a gate or threshold can no longer desynchronize the twins.
 
   private def w13BlockedFrame(planted: DataFrame): DataFrame =
     graft.rules.CorpusRules.sourceStats(planted, "source", "text",
@@ -560,26 +558,41 @@ object StreamQueries {
     }
   }
 
-  /** Batch-trained control plane: (blocked sources, corpus LSH
-    * buckets, dense DSIR weights, dense LM arrays, per-language
-    * sampling thresholds). The corpus state is the cleaned prior dump
-    * (doc_id % 3 == 0); the sampling thresholds are trained on the gate
-    * survivors the chain itself produces — history standing in for the
+  /** w13's batch-trained control plane: the blocked sources, the
+    * corpus LSH buckets, the dense DSIR weights and LM arrays, the
+    * per-language sampling thresholds, and the gated frame they were
+    * trained on. The corpus state is the cleaned prior dump
+    * (doc_id % 3 == 0); the thresholds are trained on the gate
+    * survivors of the same planted frame, history standing in for the
     * stream. */
-  private[graft] def w13Control(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Seq[Long], (Seq[Long], Seq[Long]), DataFrame) = {
+  private[graft] case class W13Control(blocked: DataFrame,
+      refBuckets: DataFrame, dense: Seq[Long], lm: (Seq[Long], Seq[Long]),
+      probs: DataFrame, gated: DataFrame) {
+    /** The chain over a (possibly streaming) planted frame. */
+    def chain(planted: DataFrame): DataFrame =
+      w13Tail(w13Gated(w13CleanedFrame(planted, blocked), refBuckets, dense,
+        lm), probs)
+  }
+
+  private[graft] def w13Control(spark: SparkSession, dir: String): W13Control = {
     val planted = w13Planted(Tables.load(spark, dir, "documents"))
-    val blocked = StagePersists.checkpoint(w13BlockedFrame(planted))
+    // `blocked` stays lazy: its one batch consumer is the broadcast
+    // anti-join inside the cleaned checkpoint's job. The corpus buckets
+    // and the one-pass DSIR/LM tables both read the cleaned base and
+    // overlap on driver threads.
+    val blocked = w13BlockedFrame(planted)
     val cleaned = StagePersists.checkpoint(w13CleanedFrame(planted, blocked))
-    val refBuckets = StagePersists.checkpoint(w13RefBucketsFrame(cleaned))
-    val (dense, lm) = w13Tables(cleaned)
-    val probs = samplingProbs(w13Gated(cleaned, refBuckets, dense, lm), "lang")
-    (blocked, refBuckets, dense, lm, probs)
+    val (refBuckets, (dense, lm)) = graft.ops.Overlap.par2(
+      () => StagePersists.checkpoint(w13RefBucketsFrame(cleaned)),
+      () => w13Tables(cleaned))
+    val gated = StagePersists.track(w13Gated(cleaned, refBuckets, dense, lm))
+    W13Control(blocked, refBuckets, dense, lm, samplingProbs(gated, "lang"),
+      gated)
   }
 
   /** The stateless mid-chain (probe + gates) over already-cleaned
     * rows — shared by control-plane training and the live chain. */
-  private[graft] def w13Gated(cleaned: DataFrame, refBuckets: DataFrame,
+  private def w13Gated(cleaned: DataFrame, refBuckets: DataFrame,
       dense: Seq[Long], lm: (Seq[Long], Seq[Long])): DataFrame = {
     val survivors = bandAntiProbe(cleaned.withColumn("__bb",
         graft.dedup.Dedup.lshBandArray(col("text"),
@@ -609,19 +622,12 @@ object StreamQueries {
   }
 
 
-  /** The full data-plane chain over a (possibly streaming) planted
-    * frame, given the trained control plane. */
-  private[graft] def w13Chain(planted: DataFrame, blocked: DataFrame,
-      refBuckets: DataFrame, dense: Seq[Long], lm: (Seq[Long], Seq[Long]),
-      probs: DataFrame): DataFrame = {
-    val gatedSrc = planted.join(broadcast(blocked), Seq("source"), "left_anti")
-    val cleaned = graft.text.Cleaning.c4Clean(gatedSrc, "text", "doc_id",
-        keep = Seq("lang"))
-      .filter(col("kept"))
-      .select(col("id").as("doc_id"), col("lang"),
-        col("clean_text").as("text"))
-    val kept = w13Gated(cleaned, refBuckets, dense, lm)
-    val sampled = graft.text.Sampling.weightedSample(kept, "lang", "doc_id", probs)
+  /** The chain's tail over gated rows: threshold sampling, chunking,
+    * and the stateful packer (last, the one position Spark permits
+    * it). */
+  private def w13Tail(gated: DataFrame, probs: DataFrame): DataFrame = {
+    val sampled = graft.text.Sampling.weightedSample(gated, "lang", "doc_id",
+      probs)
     val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text",
       window = 32, step = 24, keep = Seq("lang"))
     graft.text.Packing.streamingBinSegments(chunks, "lang", "doc_id",
@@ -629,74 +635,24 @@ object StreamQueries {
   }
 
   def streamCorpusPipeline(spark: SparkSession, dir: String): DataFrame = {
-    // r13 optimization — the batch twin shares what the stream cannot
-    // (the w15 device): the control plane trains on the cleaned/gated
-    // frames of the SAME planted corpus the data plane consumes
-    // ("history standing in for the stream"), so c4Clean and the gate
-    // chain each ran twice for identical rows. Clean once, gate once,
-    // train the thresholds on the shared gated frame, deploy on it.
-    // Identical output; the streaming path (StreamingSpec) still goes
-    // through w13Control + w13Chain unchanged.
-    val planted = w13Planted(Tables.load(spark, dir, "documents"))
-    // r14 barrier surgery (guide §2.6, the w15 treatment): `blocked`
-    // stays LAZY — its one consumer is the broadcast anti-join inside
-    // the cleaned checkpoint job, so the sourceStats aggregation builds
-    // inside that job instead of paying its own barrier; the corpus
-    // buckets and the one-pass DSIR/LM tables off the cleaned base
-    // OVERLAP on driver threads instead of running nose to tail.
-    // Every trained table is the SAME definition w13Control uses.
-    val blocked = w13BlockedFrame(planted)
-    val cleaned = StagePersists.checkpoint(w13CleanedFrame(planted, blocked))
-    val (refBuckets, (dense, lm)) = graft.ops.Overlap.par2(
-      () => StagePersists.checkpoint(w13RefBucketsFrame(cleaned)),
-      () => w13Tables(cleaned))
-    val gated = StagePersists.track(
-      w13Gated(cleaned, refBuckets, dense, lm))
-    val probs = samplingProbs(gated, "lang")
-    val sampled = graft.text.Sampling.weightedSample(gated, "lang", "doc_id",
-      probs)
-    val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text",
-      window = 32, step = 24, keep = Seq("lang"))
-    graft.text.Packing.streamingBinSegments(chunks, "lang", "doc_id",
-        "token_start", "n_tokens", seqLen = 256)
-      .orderBy("lang", "bin_id", "seq")
+    val c = w13Control(spark, dir)
+    w13Tail(c.gated, c.probs).orderBy("lang", "bin_id", "seq")
   }
 
   val streamCorpusPipelineSql: String = {
-    val wsq = "list_filter(string_split_regex(lower(text), '[^a-zà-ÿ0-9]+'), w -> w <> '')"
-    val ws3 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
-    val w4l = "list_filter(string_split_regex(lower(l), '[^a-z0-9]+'), x -> x <> '')"
-    // t2 quality over an aliased text column (the CTE names each stage's
-    // text `text`, so the t2 fragment applies verbatim)
-    val len = "CAST(LENGTH(text) AS DOUBLE)"
-    val alpha = "CAST(LENGTH(regexp_replace(text, '[^A-Za-zà-ÿ]', '', 'g')) AS DOUBLE)"
-    val digits = "CAST(LENGTH(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)"
-    val punct = "CAST(LENGTH(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE)"
-    val nTok = s"CAST(len($wsq) AS DOUBLE)"
-    val qual =
-      s"""(
-         |  (CASE WHEN $len >= 200 AND $len <= 20000 THEN 1.0
-         |        WHEN $len < 200 THEN $len / 200.0
-         |        ELSE 20000.0 / $len END) * 0.3
-         |  + (CASE WHEN $len > 0 THEN $alpha / $len ELSE 0.0 END) * 0.3
-         |  + (CASE WHEN $nTok > 0 THEN
-         |       CASE WHEN $alpha / $nTok >= 3 AND $alpha / $nTok <= 10
-         |            THEN 1.0 ELSE 0.5 END
-         |     ELSE 0.0 END) * 0.2
-         |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $punct / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-         |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $digits / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-         |)""".stripMargin
+    val wsq = OracleSql.wordsSql("text")
+    val ws3 = OracleSql.asciiWordsSql("text")
+    val w4l = OracleSql.asciiWordsSql("l")
+    val qual = TextQueries.rawQualitySql
     val e4 = s"CAST(FLOOR($qual * 10000 + 0.5) AS BIGINT)"
     val perms = (0 until 16).map { p =>
       val a = 2 * (p + 1) + 1
       val b = (7919L * (p + 1)) % graft.dedup.Dedup.P
       s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${graft.dedup.Dedup.P}) AS min_hash FROM chashes GROUP BY doc_id"
     }.mkString("\nUNION ALL\n")
-    val bkt = "(('0x' || substr(md5(g), 1, 15))::UBIGINT % 4096)::BIGINT"
+    val bkt = OracleSql.md5BucketSql("g", 4096)
     // the LM gate's bucket hashes and fixed-point log2 ladders (the w14
     // mirror, trained on the cleaned corpus's en subset)
-    def lmBkt(e: String, m: Int) =
-      s"(('0x' || substr(md5($e), 1, 15))::UBIGINT % $m)::BIGINT"
     val lmECase = "CASE " + graft.text.LanguageModel.ladder
       .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
       .mkString(" ") + " ELSE 0 END"
@@ -743,7 +699,7 @@ object StreamQueries {
        |  FROM clean WHERE len($ws3) >= 3),
        |cgrams AS (SELECT DISTINCT doc_id, g FROM cg0),
        |chashes AS (SELECT doc_id,
-       |  (('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT AS h
+       |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
        |  FROM cgrams),
        |sigs AS ($perms),
        |bands AS (
@@ -794,16 +750,16 @@ object StreamQueries {
        |          i -> $wsq[i] || ' ' || $wsq[i+1] || ' ' || $wsq[i+2]))
        |      ELSE [] END AS g3
        |    FROM survivors)),
-       |lmcr AS (SELECT ${lmBkt("g", LmB2)} AS b2k, COUNT(*) AS c2
+       |lmcr AS (SELECT ${OracleSql.md5BucketSql("g", LmB2)} AS b2k, COUNT(*) AS c2
        |         FROM rg JOIN clean USING (doc_id) WHERE lang = 'en' GROUP BY 1),
-       |lmc1 AS (SELECT ${lmBkt("split_part(g, ' ', 1)", LmB1)} AS b1k, COUNT(*) AS c1
+       |lmc1 AS (SELECT ${OracleSql.md5BucketSql("split_part(g, ' ', 1)", LmB1)} AS b1k, COUNT(*) AS c1
        |         FROM rg JOIN clean USING (doc_id) WHERE lang = 'en' GROUP BY 1),
        |lmq AS (
        |  SELECT doc_id, LEAST(GREATEST(
        |    ((coalesce(c2, 0) + 1) * $lmPs) // (coalesce(c1, 0) + $LmB2),
        |    1), $lmPs) AS q
-       |  FROM (SELECT doc_id, ${lmBkt("g", LmB2)} AS b2k,
-       |          ${lmBkt("split_part(g, ' ', 1)", LmB1)} AS b1k
+       |  FROM (SELECT doc_id, ${OracleSql.md5BucketSql("g", LmB2)} AS b2k,
+       |          ${OracleSql.md5BucketSql("split_part(g, ' ', 1)", LmB1)} AS b1k
        |        FROM (SELECT doc_id,
        |                unnest(list_transform(range(1, len($ws3)),
        |                  i -> $ws3[i] || ' ' || $ws3[i + 1])) AS g
@@ -833,7 +789,7 @@ object StreamQueries {
        |  FROM counts, mn),
        |sampled AS (
        |  SELECT k.doc_id, k.lang, k.text FROM kept k JOIN probs p ON k.lang = p.lang
-       |  WHERE ('0x' || substr(md5(k.doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT < p.thr),
+       |  WHERE ${OracleSql.md5LongSql("k.doc_id::VARCHAR")} < p.thr),
        |toks AS (
        |  SELECT doc_id, lang, regexp_extract_all(text, '\\S+') AS t FROM sampled),
        |starts AS (
@@ -884,16 +840,18 @@ object StreamQueries {
     *    CJK documents carry char-5-gram bands) with `try_element_at`
     *    band joins, the quality gate is the per-script
     *    [[graft.text.ScriptText.qualityE4]] cut, and the LM gate is
-    *    the native per-row [[graft.functions.BigramScore]] kernel
-    *    against cut LITERALS with the EXPLICIT unscorable policy —
+    *    [[graft.text.ScriptLm.withScores]]' per-row kernel against cut
+    *    LITERALS with the EXPLICIT unscorable policy —
     *    `lm_scorable = false` documents are KEPT, never the silent
     *    language filter w13's `n_grams > 0` conjunct is;
     *  - per-script threshold sampling, script-grain chunking, and the
     *    per-shard stateful packer (shard = script) last.
     *
-    * Batch mode runs the identical code path (the DuckDB oracle);
-    * StreamingSpec feeds the same corpus through MemoryStream
-    * micro-batches and pins stream ≡ batch. */
+    * As for w13, the stream runs [[W15Control.chain]] = tail(gate(
+    * stream)) and the declared query runs the tail over
+    * [[W15Control.gated]]; StreamingSpec asserts the MemoryStream rows
+    * equal the declared query's, the rows the DuckDB oracle
+    * certifies. */
   private[graft] def w15Base(docs: DataFrame): DataFrame =
     TextQueries.Scripts.derived(docs)
       .select(col("doc_id"),
@@ -930,16 +888,6 @@ object StreamQueries {
   private[graft] def w15Planted(docs: DataFrame): DataFrame =
     w15PlantedFrom(StagePersists.checkpoint(w15Base(docs)))
 
-  /** Batch-trained control plane: (corpus content hashes, script LSH
-    * corpus buckets, per-script dense LM arrays, per-script LM cut
-    * literals, per-script sampling thresholds). The corpus state is
-    * the prior dump (doc_id % 3 == 0); sampling thresholds are trained
-    * on the gate survivors the chain itself produces — history
-    * standing in for the stream. */
-  // ---- shared w15 control-plane FRAME definitions (r14; the ADVICE
-  // factor, as for w13 above): one definition per trained table,
-  // materialization policy stays the caller's.
-
   private def w15HashesFrame(corpus: DataFrame): DataFrame =
     corpus.select(md5(col("text2")).as("__h")).distinct()
 
@@ -951,37 +899,49 @@ object StreamQueries {
       .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"))
       .distinct()
 
-  private def w15LmCounts(corpus: DataFrame): (DataFrame, DataFrame) =
-    graft.text.ScriptLm.hashedCounts(corpus, "text2",
-      TextQueries.SLmB2, TextQueries.SLmB1)
+  /** w15's batch-trained control plane: the corpus content hashes, the
+    * script LSH corpus buckets, the per-script dense LM arrays and cut
+    * literals, the per-script sampling thresholds, and the gated frame
+    * they were trained on. The corpus state is the prior dump
+    * (doc_id % 3 == 0); the thresholds are trained on the gate
+    * survivors of the same planted frame, history standing in for the
+    * stream. */
+  private[graft] case class W15Control(hashes: DataFrame,
+      refBuckets: DataFrame, lm: (Seq[Long], Seq[Long]),
+      cuts: Seq[(String, Long)], probs: DataFrame, gated: DataFrame) {
+    /** The chain over a (possibly streaming) planted frame. */
+    def chain(planted: DataFrame): DataFrame =
+      w15Tail(w15Gated(planted, hashes, refBuckets, lm, cuts), probs)
+  }
 
-  private[graft] def w15Control(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, (Seq[Long], Seq[Long]), Seq[(String, Long)],
-         DataFrame) = {
-    import graft.text.ScriptLm
-    val docs = Tables.load(spark, dir, "documents")
+  private[graft] def w15Control(spark: SparkSession, dir: String): W15Control = {
+    import graft.text.{ScriptLm, ScriptText}
+    import TextQueries.{SLmB1, SLmB2}
     // materialized once: a pushdown barrier (see w15PlantedFrom) AND
     // the shared input of every control table below
-    val base = StagePersists.checkpoint(w15Base(docs))
+    val base = StagePersists.checkpoint(w15Base(Tables.load(spark, dir,
+      "documents")))
     val corpus = base.filter(col("doc_id") % 3 === 0)
-    val hashes = StagePersists.checkpoint(w15HashesFrame(corpus))
-    val refBuckets = StagePersists.checkpoint(w15RefBucketsFrame(corpus))
-    val (c2, c1) = w15LmCounts(corpus)
-    val lm = ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2, TextQueries.SLmB1)
-    val cuts = ScriptLm.percentileCuts(
-        ScriptLm.score(corpus, c2, c1, TextQueries.SLmB2, TextQueries.SLmB1,
-          "text2", "doc_id"),
-        TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      .sortBy(_._1)
-    val probs = samplingProbs(
-      w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts), "script")
-    (hashes, refBuckets, lm, cuts, probs)
+    // `hashes` stays lazy (one broadcast consumer: its distinct builds
+    // inside the gated job); the corpus buckets and the dense LM
+    // arrays overlap on driver threads
+    val hashes = w15HashesFrame(corpus)
+    val (c2, c1) = ScriptLm.hashedCounts(corpus, "text2", SLmB2, SLmB1)
+    val (refBuckets, lm) = graft.ops.Overlap.par2(
+      () => StagePersists.checkpoint(w15RefBucketsFrame(corpus)),
+      () => ScriptLm.denseCounts(c2, c1, SLmB2, SLmB1))
+    val cuts = ScriptLm.percentileCuts(ScriptLm.withScores(corpus, lm,
+        SLmB2, SLmB1, "text2", ScriptText.dominantScript(col("text2"))),
+      TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
+    val gated = StagePersists.track(
+      w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts))
+    W15Control(hashes, refBuckets, lm, cuts, samplingProbs(gated, "script"),
+      gated)
   }
 
   /** The stateless gate chain (probes + per-script gates) — shared by
     * control-plane training and the live stream. */
-  private[graft] def w15Gated(planted: DataFrame, hashes: DataFrame,
+  private def w15Gated(planted: DataFrame, hashes: DataFrame,
       refBuckets: DataFrame, lm: (Seq[Long], Seq[Long]),
       cuts: Seq[(String, Long)]): DataFrame = {
     import graft.text.{ScriptLm, ScriptText}
@@ -998,24 +958,18 @@ object StreamQueries {
       .filter(ScriptText.qualityE4("text2") >=
         when(col("script") === "cjk", CorpusQueries.L7QCjk)
           .otherwise(CorpusQueries.L7QOther))
-    val stats = BigramScore(
-      ScriptText.tokens(col("text2")), ScriptLm.scriptIndex(col("script")),
-      new BigramScore.AddOne(lm._1, lm._2, TextQueries.SLmB2,
-        TextQueries.SLmB1))
-    scripted.withColumn("__st", stats)
-      .filter(ScriptLm.gateKept(col("script"), element_at(col("__st"), 1),
-        element_at(col("__st"), 2), cuts))
+    ScriptLm.withScores(scripted, lm, TextQueries.SLmB2, TextQueries.SLmB1,
+        "text2", col("script"))
+      .filter(ScriptLm.gateKept(col("script"), col("n_grams"),
+        col("nll_fp"), cuts))
       .select("doc_id", "script", "text2")
   }
 
-  /** The full data-plane chain over a (possibly streaming) planted
-    * frame, given the trained control plane. */
-  private[graft] def w15Chain(planted: DataFrame, hashes: DataFrame,
-      refBuckets: DataFrame, lm: (Seq[Long], Seq[Long]),
-      cuts: Seq[(String, Long)], probs: DataFrame): DataFrame = {
-    val kept = w15Gated(planted, hashes, refBuckets, lm, cuts)
-    val sampled = graft.text.Sampling.weightedSample(kept, "script", "doc_id",
-      probs)
+  /** The chain's tail over gated rows: per-script threshold sampling,
+    * script-grain chunking, and the per-shard stateful packer. */
+  private def w15Tail(gated: DataFrame, probs: DataFrame): DataFrame = {
+    val sampled = graft.text.Sampling.weightedSample(gated, "script",
+      "doc_id", probs)
     val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text2",
       window = 32, step = 24, keep = Seq("script"),
       tokenizer = graft.text.ScriptText.tokens)
@@ -1024,65 +978,8 @@ object StreamQueries {
   }
 
   def streamMultilingual(spark: SparkSession, dir: String): DataFrame = {
-    // r13 optimization — the batch twin shares what the stream cannot:
-    // (a) ONE materialization of the derived base (w15Control and
-    // w15Planted each built their own, two derivation passes + two
-    // checkpoints), and (b) the gate chain runs ONCE — the control
-    // plane trains its sampling thresholds on the gate survivors of
-    // the SAME planted frame the data plane consumes here ("history
-    // standing in for the stream"), so the trained-on frame and the
-    // gated frame are identical by construction and the second
-    // execution was pure recompute. Identical output; the streaming
-    // path (StreamingSpec) still goes through w15Control + w15Chain.
-    import graft.text.ScriptLm
-    val docs = Tables.load(spark, dir, "documents")
-    val base = StagePersists.checkpoint(w15Base(docs))
-    val corpus = base.filter(col("doc_id") % 3 === 0)
-    // r14 barrier surgery (guide §2.6): the r13 twin trained hashes,
-    // refBuckets, the dense LM and the percentile cuts as FOUR serial
-    // driver barriers off the one materialized base — task-seconds had
-    // already dropped (149→130) but the wall stayed flat because the
-    // control plane ran nose to tail. Now: hashes stays LAZY (one
-    // broadcast consumer — its distinct builds inside the gated job)
-    // and the three remaining materializations (corpus buckets, dense
-    // LM arrays, percentile cuts) overlap on driver threads.
-    val hashes = w15HashesFrame(corpus)
-    val (c2, c1) = w15LmCounts(corpus)
-    val (refBuckets, lm) = graft.ops.Overlap.par2(
-      () => StagePersists.checkpoint(w15RefBucketsFrame(corpus)),
-      () => ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2, TextQueries.SLmB1))
-    // the percentile cuts train on the corpus scored in the dense
-    // kernel form (r14; pinned ≡ the score() join form per row, so the
-    // cuts are identical literals) — one map-side pass over the
-    // checkpointed base instead of two gram-grain joins + re-agg
-    val cutSt = BigramScore(
-      graft.text.ScriptText.tokens(col("text2")),
-      ScriptLm.scriptIndex(col("script")),
-      new BigramScore.AddOne(lm._1, lm._2, TextQueries.SLmB2,
-        TextQueries.SLmB1))
-    val cuts = ScriptLm.percentileCuts(corpus
-        .withColumn("script",
-          graft.text.ScriptText.dominantScript(col("text2")))
-        .withColumn("__st", cutSt)
-        .select(col("script"),
-          element_at(col("__st"), 1).as("n_grams"),
-          element_at(col("__st"), 2).as("nll_fp"),
-          (col("script") =!= "none" && element_at(col("__st"), 1) > 0L)
-            .as("lm_scorable")),
-        TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-      .toSeq.sortBy(_._1)
-    val gated = StagePersists.track(
-      w15Gated(w15PlantedFrom(base), hashes, refBuckets, lm, cuts))
-    val probs = samplingProbs(gated, "script")
-    val sampled = graft.text.Sampling.weightedSample(gated, "script",
-      "doc_id", probs)
-    val chunks = graft.text.Chunking.tokenChunks(sampled, "doc_id", "text2",
-      window = 32, step = 24, keep = Seq("script"),
-      tokenizer = graft.text.ScriptText.tokens)
-    graft.text.Packing.streamingBinSegments(chunks, "script", "doc_id",
-        "token_start", "n_tokens", seqLen = 512)
-      .orderBy("script", "bin_id", "seq")
+    val c = w15Control(spark, dir)
+    w15Tail(c.gated, c.probs).orderBy("script", "bin_id", "seq")
   }
 
   /** Mirror of [[streamMultilingual]]: derivation + filler + planted
@@ -1104,7 +1001,7 @@ object StreamQueries {
          |  FROM $src WHERE len(ws) >= $sn),
          |${pre}grams AS (SELECT DISTINCT doc_id, g FROM ${pre}g0),
          |${pre}h AS (SELECT doc_id,
-         |  (('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT AS h
+         |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
          |  FROM ${pre}grams),
          |${pre}sig AS (${(0 until 16).map { p =>
              val a = 2 * (p + 1) + 1
@@ -1199,7 +1096,7 @@ object StreamQueries {
        |sampled AS (
        |  SELECT k.doc_id, k.script, k.text2 AS text FROM kept k
        |  JOIN probs p ON k.script = p.script
-       |  WHERE ('0x' || substr(md5(k.doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT
+       |  WHERE ${OracleSql.md5LongSql("k.doc_id::VARCHAR")}
        |          < p.thr),
        |toksf AS (SELECT doc_id, script, ${toks("text")} AS t FROM sampled),
        |starts AS (
@@ -1258,8 +1155,7 @@ object StreamQueries {
   }
 
   val streamLmGateSql: String = {
-    val ws4 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
-    def bkt(e: String, m: Int) = s"(('0x' || substr(md5($e), 1, 15))::UBIGINT % $m)::BIGINT"
+    val ws4 = OracleSql.asciiWordsSql("text")
     val eCase = "CASE " + graft.text.LanguageModel.ladder
       .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
       .mkString(" ") + " ELSE 0 END"
@@ -1270,8 +1166,8 @@ object StreamQueries {
     val topF = 31L * graft.text.LanguageModel.F
     s"""WITH t AS (SELECT doc_id, lang, $ws4 AS ws FROM documents),
        |rb AS (
-       |  SELECT doc_id, lang, ${bkt("g", LmB2)} AS b2k,
-       |    ${bkt("split_part(g, ' ', 1)", LmB1)} AS b1k
+       |  SELECT doc_id, lang, ${OracleSql.md5BucketSql("g", LmB2)} AS b2k,
+       |    ${OracleSql.md5BucketSql("split_part(g, ' ', 1)", LmB1)} AS b1k
        |  FROM (SELECT doc_id, lang,
        |          unnest(list_transform(range(1, len(ws)),
        |            i -> ws[i] || ' ' || ws[i + 1])) AS g
@@ -1440,18 +1336,17 @@ object StreamQueries {
     * threshold derivation, and the md5 gate over the md5-odd dump. */
   val streamMixtureSampleSql: String =
     s"""WITH ${TextQueries.domainReweightChainSql(
-         "WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))" +
-           "::UBIGINT % 2 = 0")},
+         s"WHERE ${OracleSql.md5U60Sql("CAST(doc_id AS VARCHAR)")} % 2 = 0")},
        |rates AS (
        |  SELECT domain AS source,
        |    (((weight_fp * ${1L << 40}) // MAX(weight_fp) OVER ())
        |      * ${1L << 20})::BIGINT AS rate_thr
        |  FROM wt)
        |SELECT d.doc_id, d.source,
-       |  ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::UBIGINT
+       |  ${OracleSql.md5U60Sql("CAST(d.doc_id AS VARCHAR)")}
        |    ::BIGINT AS sample_key,
        |  r.rate_thr,
-       |  ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::UBIGINT
+       |  ${OracleSql.md5U60Sql("CAST(d.doc_id AS VARCHAR)")}
        |    ::BIGINT < r.rate_thr AS kept
        |FROM documents d JOIN rates r USING (source)
        |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))
@@ -1490,26 +1385,22 @@ object StreamQueries {
       TextQueries.SLmB2, TextQueries.SLmB1)
     val (d2, d1) = ScriptLm.denseCounts(c2, c1, TextQueries.SLmB2,
       TextQueries.SLmB1, keys = keys)
-    // ONE kernel-scored per-row stage serves both populations — the
-    // history pass that trains the cuts runs the exact same deployed
-    // columns the stream gate runs (kernel ≡ join form, ScriptLmSpec);
-    // the join-form scoreBy here cost ~2× the whole query at the ×100
-    // rehearsal
-    val (lang, n, nll, scorable) = ScriptLm.nllColumnsBy(d2, d1,
-      TextQueries.SLmB2, TextQueries.SLmB1, "text", route, keys,
-      noneKey = "unknown")
-    val scoredAll = StagePersists.track(
-      docs.select(col("doc_id"), lang.as("script"), n.as("n_grams"),
-        nll.as("nll_fp"), scorable.as("lm_scorable")))
+    // ONE kernel-scored per-row stage serves both populations: the
+    // history pass that trains the cuts runs the same deployed columns
+    // the stream gate runs (the join-form scoreBy here cost ~2× the
+    // whole query at the ×100 rehearsal)
+    val scoredAll = StagePersists.track(ScriptLm.withScores(docs, (d2, d1),
+        TextQueries.SLmB2, TextQueries.SLmB1, "text", route, keys,
+        noneKey = "unknown")
+      .select("doc_id", "script", "n_grams", "nll_fp", "lm_scorable"))
     val cuts = ScriptLm.percentileCuts(
-        scoredAll.filter(col("doc_id") % 2 === 0),
-        TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
+      scoredAll.filter(col("doc_id") % 2 === 0),
+      TextQueries.SLmKeepNum, TextQueries.SLmKeepDen)
     scoredAll.filter(col("doc_id") % 2 === 1)
       .select(col("doc_id"), col("script").as("lang"), col("n_grams"),
-        col("nll_fp"), col("lm_scorable"))
-      .withColumn("kept", graft.text.ScriptLm.gateKept(col("lang"),
-        col("n_grams"), col("nll_fp"), cuts, noneKey = "unknown"))
+        col("nll_fp"), col("lm_scorable"),
+        ScriptLm.gateKept(col("script"), col("n_grams"), col("nll_fp"), cuts,
+          noneKey = "unknown").as("kept"))
       .orderBy("doc_id")
   }
 
@@ -1607,7 +1498,7 @@ object StreamQueries {
   /** Mirror: the shared l11 chain over the md5-even history, the
     * threshold CASE, and the md5 gate + shard hash over the odd dump. */
   val streamTrainingFeedSql: String = {
-    val key = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::UBIGINT"
+    val key = OracleSql.md5U60Sql("CAST(doc_id AS VARCHAR)")
     s"""WITH ${SimQueries.epochPlanChainSql(s"WHERE $key % 2 = 0")},
        |plan AS (
        |  SELECT lang,
@@ -1619,8 +1510,7 @@ object StreamQueries {
        |  SELECT doc_id, lang, n AS n_toks,
        |    ($key)::BIGINT AS sample_key
        |  FROM (SELECT doc_id, lang,
-       |          len(list_filter(string_split_regex(lower(text),
-       |            '[^a-zà-ÿ0-9]+'), w -> w <> ''))::BIGINT AS n
+       |          len(${OracleSql.wordsSql("text")})::BIGINT AS n
        |        FROM documents WHERE $key % 2 = 1))
        |SELECT d.doc_id, d.lang, d.n_toks, d.sample_key, r.rate_thr,
        |  d.sample_key < r.rate_thr AS admitted,

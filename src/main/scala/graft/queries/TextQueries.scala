@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.BigramScore
 import graft.text.{Sampling, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,7 +10,7 @@ import org.apache.spark.sql.types.LongType
   * scoring, token stats, fingerprinting). */
 object TextQueries {
 
-  private[queries] val WS = "list_filter(string_split_regex(lower(text), '[^a-zà-ÿ0-9]+'), w -> w <> '')"
+  private[queries] val WS = OracleSql.wordsSql("text")
 
   // ---- t1: language identification -------------------------------------
 
@@ -49,19 +48,7 @@ object TextQueries {
     val alpha = "CAST(LENGTH(regexp_replace(text, '[^A-Za-zà-ÿ]', '', 'g')) AS DOUBLE)"
     val digits = "CAST(LENGTH(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)"
     val punct = "CAST(LENGTH(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE)"
-    val nTok = s"CAST(len($WS) AS DOUBLE)"
-    s"""(
-       |  (CASE WHEN $len >= 200 AND $len <= 20000 THEN 1.0
-       |        WHEN $len < 200 THEN $len / 200.0
-       |        ELSE 20000.0 / $len END) * 0.3
-       |  + (CASE WHEN $len > 0 THEN $alpha / $len ELSE 0.0 END) * 0.3
-       |  + (CASE WHEN $nTok > 0 THEN
-       |       CASE WHEN $alpha / $nTok >= 3 AND $alpha / $nTok <= 10
-       |            THEN 1.0 ELSE 0.5 END
-       |     ELSE 0.0 END) * 0.2
-       |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $punct / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-       |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $digits / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-       |)""".stripMargin
+    OracleSql.qualitySql(len, alpha, punct, digits, s"CAST(len($WS) AS DOUBLE)")
   }
 
   val qualitySql: String =
@@ -90,13 +77,13 @@ object TextQueries {
       .orderBy("doc_id")
 
   val fingerprintsSql: String = {
-    val ws4 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    val ws4 = OracleSql.asciiWordsSql("text")
     s"""WITH g0 AS (
        |  SELECT doc_id, unnest(list_transform(range(1, greatest(len($ws4) - 2, 1)),
        |    i -> $ws4[i] || ' ' || $ws4[i+1] || ' ' || $ws4[i+2] || ' ' || $ws4[i+3])) AS g
        |  FROM documents WHERE len($ws4) >= 4),
        |grams AS (SELECT DISTINCT doc_id, g FROM g0)
-       |SELECT doc_id, MIN(('0x' || substr(md5(g), 1, 15))::UBIGINT)::BIGINT AS fingerprint
+       |SELECT doc_id, MIN(${OracleSql.md5U60Sql("g")})::BIGINT AS fingerprint
        |FROM grams GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
@@ -247,7 +234,7 @@ object TextQueries {
     * ops in both engines) → integer threshold ⌊p·2^60⌋ against the
     * 60-bit md5 prefix of the id. */
   val weightedSampleSql: String =
-    """WITH counts AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
+    s"""WITH counts AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
       |mn AS (SELECT MIN(n) AS n_min FROM counts),
       |probs AS (
       |  SELECT lang,
@@ -256,7 +243,7 @@ object TextQueries {
       |  FROM counts, mn)
       |SELECT d.lang, d.doc_id
       |FROM documents d JOIN probs p ON d.lang = p.lang
-      |WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT < p.thr
+      |WHERE ${OracleSql.md5LongSql("d.doc_id::VARCHAR")} < p.thr
       |ORDER BY d.lang, d.doc_id""".stripMargin
 
   // ---- t12: PII-style redaction -------------------------------------------
@@ -410,7 +397,7 @@ object TextQueries {
        |       WHEN h < ${thr(1)} THEN 'val'
        |       ELSE 'test' END AS split
        |FROM (SELECT doc_id,
-       |  ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT AS h
+       |  ${OracleSql.md5LongSql("doc_id::VARCHAR")} AS h
        |  FROM documents)
        |ORDER BY doc_id""".stripMargin
   }
@@ -678,7 +665,7 @@ object TextQueries {
        |         WHEN h < ${thr(1)} THEN 'val'
        |         ELSE 'test' END AS split
        |  FROM (SELECT doc_id, text,
-       |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::UBIGINT::BIGINT AS h
+       |    ${OracleSql.md5LongSql("doc_id::VARCHAR")} AS h
        |    FROM documents)),
        |b0 AS (
        |  SELECT doc_id, split, unnest(list_transform(range(1, len($WS)),
@@ -787,7 +774,7 @@ object TextQueries {
   }
 
   val c4CleanSql: String = {
-    val w4 = "list_filter(string_split_regex(lower(l), '[^a-z0-9]+'), x -> x <> '')"
+    val w4 = OracleSql.asciiWordsSql("l")
     s"""WITH planted AS (
        |  SELECT doc_id,
        |    substr(text, 1, 60) || '.' || chr(10) ||
@@ -832,7 +819,7 @@ object TextQueries {
   }
 
   val dsirScoresSql: String = {
-    val ws4 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    val ws4 = OracleSql.asciiWordsSql("text")
     s"""WITH t AS (SELECT doc_id, lang, $ws4 AS ws FROM documents),
        |rg AS (
        |  SELECT doc_id, lang,
@@ -885,8 +872,8 @@ object TextQueries {
   }
 
   val dsirHashedScoresSql: String = {
-    val ws4 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
-    val bkt = "(('0x' || substr(md5(g), 1, 15))::UBIGINT % 4096)::BIGINT"
+    val ws4 = OracleSql.asciiWordsSql("text")
+    val bkt = OracleSql.md5BucketSql("g", 4096)
     s"""WITH t AS (SELECT doc_id, lang, source, $ws4 AS ws FROM documents),
        |rg AS (
        |  SELECT doc_id, lang, source,
@@ -992,35 +979,21 @@ object TextQueries {
       val digits = s"CAST(length(regexp_replace($t, '[^0-9]', '', 'g')) AS DOUBLE)"
       val punct = s"CAST(length(regexp_replace($t, '[^[:punct:]]', '', 'g')) AS DOUBLE)"
       val nTok = s"CAST(len(${toksSql(t)}) AS DOUBLE)"
-      s"""CAST(FLOOR((
-         |  (CASE WHEN $len >= 200 AND $len <= 20000 THEN 1.0
-         |        WHEN $len < 200 THEN $len / 200.0
-         |        ELSE 20000.0 / $len END) * 0.3
-         |  + (CASE WHEN $len > 0 THEN $alpha / $len ELSE 0.0 END) * 0.3
-         |  + (CASE WHEN $nTok > 0 THEN
-         |       CASE WHEN $alpha / $nTok >= 3 AND $alpha / $nTok <= 10
-         |            THEN 1.0 ELSE 0.5 END
-         |     ELSE 0.0 END) * 0.2
-         |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $punct / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-         |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $digits / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-         |) * 10000 + 0.5) AS BIGINT)""".stripMargin
+      s"CAST(FLOOR(${OracleSql.qualitySql(len, alpha, punct, digits, nTok)} * 10000 + 0.5) AS BIGINT)"
     }
 
     // ---- shared per-script hashed-LM fragments (t29 / l7 / w15) --------
     // The fixed-point smoothing and log2-ladder text lives ONCE so the
-    // three mirrors cannot drift (they were three hand-synced copies).
-
-    def lmBucketSql(e: String, m: Int): String =
-      s"(('0x' || substr(md5($e), 1, 15))::UBIGINT % $m)::BIGINT"
+    // three mirrors cannot drift.
 
     /** `<pre>cb2`/`<pre>cb1`: per-(script, bucket) bigram and prefix
       * counts over a bigram CTE `$gg(doc_id, script, g, w1)`; `where`
       * restricts the training population (e.g. "WHERE doc_id % 3 = 0 "). */
     def lmCountsSql(gg: String, b2: Int, b1: Int, where: String = "",
         pre: String = "c"): String =
-      s"""${pre}b2 AS (SELECT script, ${lmBucketSql("g", b2)} AS b2k,
+      s"""${pre}b2 AS (SELECT script, ${OracleSql.md5BucketSql("g", b2)} AS b2k,
          |  COUNT(*) AS c2 FROM $gg ${where}GROUP BY 1, 2),
-         |${pre}b1 AS (SELECT script, ${lmBucketSql("w1", b1)} AS b1k,
+         |${pre}b1 AS (SELECT script, ${OracleSql.md5BucketSql("w1", b1)} AS b1k,
          |  COUNT(*) AS c1 FROM $gg ${where}GROUP BY 1, 2)""".stripMargin
 
     /** `<pre>qq`/`<pre>per`: smoothed bucket probability + fixed-point
@@ -1041,8 +1014,8 @@ object TextQueries {
          |  SELECT doc_id, LEAST(GREATEST(
          |    ((coalesce(c2, 0) + 1) * $pscale) // (coalesce(c1, 0) + $b2),
          |    1), $pscale) AS q
-         |  FROM (SELECT doc_id, script, ${lmBucketSql("g", b2)} AS b2k,
-         |          ${lmBucketSql("w1", b1)} AS b1k FROM $gg
+         |  FROM (SELECT doc_id, script, ${OracleSql.md5BucketSql("g", b2)} AS b2k,
+         |          ${OracleSql.md5BucketSql("w1", b1)} AS b1k FROM $gg
          |        WHERE script <> '$noneKey')
          |  LEFT JOIN ${cntPre}b2 USING (script, b2k)
          |  LEFT JOIN ${cntPre}b1 USING (script, b1k)),
@@ -1143,30 +1116,11 @@ object TextQueries {
     val scriptExact = scriptExactSql
     // marker vote (t1 semantics) over the derived column, for the
     // Latin fallback branch
-    val wsLat = s"list_filter(string_split_regex(lower($t), '[^a-zà-ÿ0-9]+'), w -> w <> '')"
+    val wsLat = OracleSql.wordsSql(t)
     val hits = graft.text.TextAnalysis.markers.keys.toSeq.sorted.map { lang =>
       val set = graft.text.TextAnalysis.markers(lang).map(w => s"'$w'").mkString("[", ",", "]")
       s"SELECT doc_id, '$lang' AS lang, len(list_filter($wsLat, w -> list_contains($set, w))) AS n FROM docs2"
     }.mkString("\nUNION ALL\n")
-    // script-aware quality (t2 formula, substituted inputs)
-    val len = s"CAST(LENGTH($t) AS DOUBLE)"
-    val alpha = s"CAST($nLet AS DOUBLE)"
-    val digits = s"CAST(length(regexp_replace($t, '[^0-9]', '', 'g')) AS DOUBLE)"
-    val punct = s"CAST(length(regexp_replace($t, '[^[:punct:]]', '', 'g')) AS DOUBLE)"
-    val nTok = s"CAST(len($toks) AS DOUBLE)"
-    val qual =
-      s"""(
-         |  (CASE WHEN $len >= 200 AND $len <= 20000 THEN 1.0
-         |        WHEN $len < 200 THEN $len / 200.0
-         |        ELSE 20000.0 / $len END) * 0.3
-         |  + (CASE WHEN $len > 0 THEN $alpha / $len ELSE 0.0 END) * 0.3
-         |  + (CASE WHEN $nTok > 0 THEN
-         |       CASE WHEN $alpha / $nTok >= 3 AND $alpha / $nTok <= 10
-         |            THEN 1.0 ELSE 0.5 END
-         |     ELSE 0.0 END) * 0.2
-         |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $punct / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-         |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $digits / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
-         |)""".stripMargin
     s"""WITH $derivedSql,
        |mhits AS (
        |$hits
@@ -1182,7 +1136,7 @@ object TextQueries {
        |  SELECT doc_id, $nLatin AS c_lat, $nCjk AS c_cjk, $nCyr AS c_cyr,
        |    $nAr AS c_ar, $nGr AS c_gr, $nLet AS c_let,
        |    CAST(len($toks) AS BIGINT) AS n_toks,
-       |    CAST(FLOOR($qual * 10000 + 0.5) AS BIGINT) AS q_e4
+       |    ${qualityE4Sql(t)} AS q_e4
        |  FROM docs2)
        |SELECT c.doc_id,
        |  c.c_lat AS n_latin, c.c_cjk AS n_cjk, c.c_cyr AS n_cyrillic,
@@ -1374,7 +1328,7 @@ object TextQueries {
   }
 
   val lmPerplexitySql: String = {
-    val ws4 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    val ws4 = OracleSql.asciiWordsSql("text")
     // the ⌊log2⌋ CASE ladders, interpolated from the SAME constants the
     // Spark expression chains on (LanguageModel.ladder)
     val eCase = "CASE " + graft.text.LanguageModel.ladder
@@ -1453,35 +1407,17 @@ object TextQueries {
           .otherwise(col("text2")).as("text2"))
     val ref = d2.filter(col("doc_id") % 3 === 0)
     val (c2, c1) = ScriptLm.hashedCounts(ref, "text2", SLmB2, SLmB1)
-    // scoring in the dense DEPLOYED form (r14; the l7/w15 device): the
-    // per-(script, bucket) counts collect into fixed-size dense arrays
-    // (|Scripts|·(b2+b1) longs — corpus-size-independent) and each row
-    // scores via the native BigramScore kernel, replacing two
-    // gram-grain hashed-count joins + a per-doc re-aggregation + a
-    // join back. Pinned ≡ the score() join form per row (ScriptLmSpec);
-    // the ORACLE below still replays the join form in SQL, so the
-    // kernel ≡ join identity stays cross-engine-pinned by this query.
-    val lmArr = ScriptLm.denseCounts(c2, c1, SLmB2, SLmB1)
-    val st = BigramScore(
-      graft.text.ScriptText.tokens(col("text2")),
-      ScriptLm.scriptIndex(col("script")),
-      new BigramScore.AddOne(lmArr._1, lmArr._2, SLmB2, SLmB1))
-    val scored = graft.ops.StagePersists.track(d2
-      .withColumn("script",
+    // scored in the dense deployed form; the oracle below replays the
+    // score() join form in SQL, so kernel ≡ join form stays pinned
+    // cross-engine by this query
+    val scored = graft.ops.StagePersists.track(ScriptLm.withScores(d2,
+        ScriptLm.denseCounts(c2, c1, SLmB2, SLmB1), SLmB2, SLmB1, "text2",
         graft.text.ScriptText.dominantScript(col("text2")))
-      .withColumn("__st", st)
-      .select(col("doc_id").as("id"), col("script"),
-        element_at(col("__st"), 1).as("n_grams"),
-        element_at(col("__st"), 2).as("nll_fp"),
-        (col("script") =!= "none" && element_at(col("__st"), 1) > 0L)
-          .as("lm_scorable")))
+      .select(col("doc_id"), col("script"), col("n_grams"), col("nll_fp"),
+        col("lm_scorable")))
     val cuts = ScriptLm.percentileCuts(scored, SLmKeepNum, SLmKeepDen)
-    scored.join(broadcast(cuts), Seq("script"), "left_outer")
-      .select(col("id").as("doc_id"), col("script"), col("n_grams"),
-        col("nll_fp"), col("lm_scorable"),
-        when(!col("lm_scorable"), lit(true))
-          .otherwise(graft.text.LanguageModel.avgKey(
-            col("nll_fp"), col("n_grams")) <= col("cut")).as("kept"))
+    scored.withColumn("kept", ScriptLm.gateKept(col("script"),
+        col("n_grams"), col("nll_fp"), cuts))
       .orderBy("doc_id")
   }
 
@@ -1557,35 +1493,21 @@ object TextQueries {
     val route = TextAnalysis.langId("text")
     val ref = docs.filter(col("doc_id") % 3 === 0)
     val (c2, c1) = ScriptLm.hashedCountsBy(ref, "text", route, SLmB2, SLmB1)
-    // dense deployed form over the LANGUAGE key set (r14; see t29):
-    // the routed key space is the fixed marker-language set, so the
-    // dense arrays are |langs|·(b2+b1) longs at any corpus size.
-    // Counts routed 'unknown' never reach a score on either path (the
-    // join form filters the noneKey before the join; the kernel routes
-    // keyIndex = −1 to the unscorable 0/0), so dropping them from the
-    // dense arrays is exact. Pinned ≡ scoreBy per row (ScriptLmSpec);
-    // the oracle still replays the join form.
+    // dense deployed form over the LANGUAGE key set: |langs|·(b2+b1)
+    // longs at any corpus size. Counts routed 'unknown' never reach a
+    // score on either path (the join form filters the noneKey before
+    // the join; the kernel routes keyIndex = −1 to the unscorable 0/0),
+    // so dropping them from the dense arrays is exact.
     val langKeys = graft.text.TextAnalysis.markers.keys.toSeq.sorted
-    val lmArr = ScriptLm.denseCounts(c2, c1, SLmB2, SLmB1, keys = langKeys)
-    val st = BigramScore(
-      graft.text.ScriptText.tokens(col("text")),
-      ScriptLm.keyIndex(route, langKeys),
-      new BigramScore.AddOne(lmArr._1, lmArr._2, SLmB2, SLmB1))
-    val scored = graft.ops.StagePersists.track(docs
-      .withColumn("script", route)
-      .withColumn("__st", st)
-      .select(col("doc_id").as("id"), col("script"),
-        element_at(col("__st"), 1).as("n_grams"),
-        element_at(col("__st"), 2).as("nll_fp"),
-        (col("script") =!= "unknown" && element_at(col("__st"), 1) > 0L)
-          .as("lm_scorable")))
+    val scored = graft.ops.StagePersists.track(ScriptLm.withScores(docs,
+        ScriptLm.denseCounts(c2, c1, SLmB2, SLmB1, keys = langKeys),
+        SLmB2, SLmB1, "text", route, langKeys, noneKey = "unknown")
+      .select(col("doc_id"), col("script"), col("n_grams"), col("nll_fp"),
+        col("lm_scorable")))
     val cuts = ScriptLm.percentileCuts(scored, SLmKeepNum, SLmKeepDen)
-    scored.join(broadcast(cuts), Seq("script"), "left_outer")
-      .select(col("id").as("doc_id"), col("script").as("lang"),
-        col("n_grams"), col("nll_fp"), col("lm_scorable"),
-        when(!col("lm_scorable"), lit(true))
-          .otherwise(graft.text.LanguageModel.avgKey(
-            col("nll_fp"), col("n_grams")) <= col("cut")).as("kept"))
+    scored.select(col("doc_id"), col("script").as("lang"), col("n_grams"),
+        col("nll_fp"), col("lm_scorable"), ScriptLm.gateKept(col("script"),
+          col("n_grams"), col("nll_fp"), cuts, noneKey = "unknown").as("kept"))
       .orderBy("doc_id")
   }
 
@@ -1668,9 +1590,7 @@ object TextQueries {
     * term the [[graft.text.LanguageModel.knScore]] spec, nested floors
     * included. Shared by the t32 and w17 mirrors. */
   private[queries] val KnChainSql: String = {
-    val ws4 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
-    def bkt(e: String, m: Int) =
-      s"(('0x' || substr(md5($e), 1, 15))::UBIGINT % $m)::BIGINT"
+    val ws4 = OracleSql.asciiWordsSql("text")
     val eCase = "CASE " + graft.text.LanguageModel.ladder
       .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
       .mkString(" ") + " ELSE 0 END"
@@ -1681,9 +1601,9 @@ object TextQueries {
     val topF = 31L * graft.text.LanguageModel.F
     s"""t AS (SELECT doc_id, lang, $ws4 AS ws FROM documents),
        |rb AS (
-       |  SELECT doc_id, lang, ${bkt("g", KnB2)} AS b,
-       |    ${bkt("split_part(g, ' ', 1)", KnB1)} AS j,
-       |    ${bkt("split_part(g, ' ', 2)", KnB1)} AS u
+       |  SELECT doc_id, lang, ${OracleSql.md5BucketSql("g", KnB2)} AS b,
+       |    ${OracleSql.md5BucketSql("split_part(g, ' ', 1)", KnB1)} AS j,
+       |    ${OracleSql.md5BucketSql("split_part(g, ' ', 2)", KnB1)} AS u
        |  FROM (SELECT doc_id, lang,
        |          unnest(list_transform(range(1, len(ws)),
        |            i -> ws[i] || ' ' || ws[i + 1])) AS g
@@ -1766,7 +1686,7 @@ object TextQueries {
       .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
       .mkString(" ") + " ELSE 1 END"
     private val asciiToks =
-      "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+      OracleSql.asciiWordsSql("text")
     private val pieceVals =
       (1 to ug.MaxPieceLen).map(l => s"($l)").mkString(",")
 
@@ -2017,8 +1937,7 @@ object TextQueries {
        |  SELECT doc_id, $gopherDeriveSql AS text FROM documents),
        |st AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-       |      w -> w <> '') AS ws,
+       |    ${OracleSql.asciiWordsSql("text")} AS ws,
        |    string_split(text, chr(10)) AS lines,
        |    (len(text) - len(replace(text, '#', '')))::BIGINT AS hashes,
        |    ((len(text) - len(replace(text, '...', ''))) // 3)::BIGINT AS ell
@@ -2083,7 +2002,7 @@ object TextQueries {
     val pCase = "CASE " + lm.ladder
       .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
       .mkString(" ") + " ELSE 1 END"
-    val ws4 = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    val ws4 = OracleSql.asciiWordsSql("text")
     val topF = 31L * lm.F
     val F = lm.F
     s"""t AS (SELECT doc_id, lang, source, $ws4 AS ws FROM documents $where),
@@ -2199,7 +2118,7 @@ object TextQueries {
   private[queries] def htmlExtractCtesSql(src: String): String = {
     val stops = graft.text.HtmlText.DefaultStops
       .map(s => s"'$s'").mkString("[", ", ", "]")
-    val wsV = "list_filter(string_split_regex(lower(v), '[^a-z0-9]+'), w -> w <> '')"
+    val wsV = OracleSql.asciiWordsSql("v")
     s"""b AS (
        |  SELECT doc_id, string_split(regexp_replace(regexp_replace(html,
        |    '(?is)<script[^>]*>.*?</script>|<style[^>]*>.*?</style>',
@@ -2301,7 +2220,7 @@ object TextQueries {
   }
 
   val gopherRepetitionSql: String = {
-    val ws4 = "list_filter(string_split_regex(lower(text2), '[^a-z0-9]+'), w -> w <> '')"
+    val ws4 = OracleSql.asciiWordsSql("text2")
     def r4(x: String) = s"FLOOR(($x) * 10000 + 0.5) / 10000.0"
     def frac(num: String, den: String) =
       r4(s"CAST(COALESCE($num, 0) AS DOUBLE) / CAST(GREATEST($den, 1) AS DOUBLE)")
@@ -2434,8 +2353,8 @@ object TextQueries {
   }
 
   val leakageSafeSplitSql: String = {
-    val ws = "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
-    val h30 = "(('0x' || substr(md5(g), 1, 15))::UBIGINT % 1073741824)::BIGINT"
+    val ws = OracleSql.asciiWordsSql("text")
+    val h30 = OracleSql.md5BucketSql("g", 1073741824)
     val perms = (0 until 16).map { p =>
       val a = 2 * (p + 1) + 1
       val b = (7919L * (p + 1)) % graft.dedup.Dedup.P
@@ -2491,7 +2410,7 @@ object TextQueries {
        |       WHEN h < ${thr(1)} THEN 'val'
        |       ELSE 'test' END AS split
        |FROM (SELECT doc_id, group_key,
-       |  ('0x' || substr(md5(group_key::VARCHAR), 1, 15))::UBIGINT::BIGINT AS h
+       |  ${OracleSql.md5LongSql("group_key::VARCHAR")} AS h
        |  FROM keyed)
        |ORDER BY doc_id""".stripMargin
   }

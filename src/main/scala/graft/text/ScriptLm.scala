@@ -215,9 +215,11 @@ object ScriptLm {
     * collapses the corpus to its distinct (script, key) VALUES before
     * any window runs; the per-script running sum then orders that
     * count frame — control-plane sized (distinct fixed-point keys, not
-    * documents) with ≤ #scripts partitions. Returns (script, cut). */
+    * documents) with ≤ #scripts partitions. Returns the collected
+    * (script, cut) literals, sorted by script: the form [[gateKept]]
+    * deploys. */
   def percentileCuts(scored: DataFrame, keepNum: Int = 7,
-      keepDen: Int = 10): DataFrame = {
+      keepDen: Int = 10): Seq[(String, Long)] = {
     require(keepNum >= 1 && keepNum <= keepDen,
       s"keep fraction must be in (0, 1]: $keepNum/$keepDen")
     import org.apache.spark.sql.expressions.Window
@@ -231,6 +233,7 @@ object ScriptLm {
       .withColumn("__n", sum("__c").over(Window.partitionBy("script")))
       .filter(col("__cum") * keepDen >= col("__n") * keepNum)
       .groupBy("script").agg(min("__avg").as("cut"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
   }
 
   /** The gate decision under the explicit policy, as a pure Column:
@@ -238,9 +241,10 @@ object ScriptLm {
     * [[LanguageModel.avgKey]] integer) is within their OWN script's
     * cut; unscorable documents (script 'none' or zero grams) are
     * KEPT — tagged by `lm_scorable`, for downstream routing, never
-    * silently deleted. `cuts` is the collected [[percentileCuts]]
-    * table (the deployed literal form); scripts without a cut (absent
-    * from the reference) keep everything — the conservative route. */
+    * silently deleted. `cuts` is the [[percentileCuts]] table; scripts
+    * without a cut (absent from the reference) keep everything — the
+    * conservative route. When the cuts were trained on the frame being
+    * gated, every scorable row's script has a cut. */
   def gateKept(script: Column, nGrams: Column, nllFp: Column,
       cuts: Seq[(String, Long)], noneKey: String = "none"): Column = {
     val thr = cuts.foldLeft(Option.empty[Column]) {
@@ -255,34 +259,30 @@ object ScriptLm {
       .otherwise(LanguageModel.avgKey(nllFp, nGrams) <= thr)
   }
 
-  /** (script, n_grams, nll_fp, lm_scorable) as PURE COLUMNS over a
-    * text column — no shuffle, no state, stream-legal (the w15 gate).
-    * The script vote and token array are codegen'd builtin regex
-    * Columns; the per-gram fold is the native
-    * [[graft.functions.BigramScore]] kernel over the concatenated
-    * dense counts (the interpreted HOF form pays two md5 expressions
-    * and two 31-branch ladders per gram — the measured w14 cliff).
-    * ScriptLmSpec pins kernel ≡ the [[score]] join form per row. */
-  def nllColumns(d2: Seq[Long], d1: Seq[Long], b2: Int, b1: Int,
-      textCol: String): (Column, Column, Column, Column) =
-    nllColumnsBy(d2, d1, b2, b1, textCol,
-      ScriptText.dominantScript(col(s"`$textCol`")), Scripts, noneKey = "none")
-
-  /** [[nllColumns]] over an arbitrary routing expression and key set —
-    * the deployed form of [[scoreBy]] (per-LANGUAGE models: route by
-    * [[TextAnalysis.langId]], keys = the sorted marker codes, noneKey
-    * 'unknown'). Segment order in the dense arrays must match `keys`
-    * ([[denseCounts]] with the same `keys` builds them). */
-  def nllColumnsBy(d2: Seq[Long], d1: Seq[Long], b2: Int, b1: Int,
-      textCol: String, route: Column, keys: Seq[String],
-      noneKey: String): (Column, Column, Column, Column) = {
+  /** `df` plus the gate's score columns — `script` (the routing key
+    * `route`), `n_grams`, `nll_fp` and `lm_scorable` — the deployed
+    * per-row form of [[scoreBy]]: no shuffle, no state, stream-legal.
+    * The native [[graft.functions.BigramScore]] kernel over the
+    * concatenated dense counts (`lm`, [[denseCounts]] built with the
+    * same `keys`) runs ONCE per row into one column both statistics
+    * read; two inlined kernel calls would score every row twice. A
+    * frame that already carries `script` passes `col("script")` as the
+    * route. ScriptLmSpec pins this ≡ the [[score]]/[[scoreBy]] join
+    * form per row. */
+  def withScores(df: DataFrame, lm: (Seq[Long], Seq[Long]), b2: Int,
+      b1: Int, textCol: String, route: Column, keys: Seq[String] = Scripts,
+      noneKey: String = "none"): DataFrame = {
+    val (d2, d1) = lm
     require(d2.size == keys.size * b2 && d1.size == keys.size * b1,
       s"dense count sizes (${d2.size}, ${d1.size}) must be " +
         s"(${keys.size}·$b2, ${keys.size}·$b1)")
-    val t = col(s"`$textCol`")
-    val stats = BigramScore(ScriptText.tokens(t), keyIndex(route, keys),
-      new BigramScore.AddOne(d2, d1, b2, b1))
-    val n = element_at(stats, 1)
-    (route, n, element_at(stats, 2), route =!= noneKey && n > 0L)
+    val st = BigramScore(ScriptText.tokens(col(s"`$textCol`")),
+      keyIndex(col("script"), keys), new BigramScore.AddOne(d2, d1, b2, b1))
+    df.withColumn("script", route)
+      .withColumn("__st", st)
+      .withColumn("n_grams", element_at(col("__st"), 1))
+      .withColumn("nll_fp", element_at(col("__st"), 2))
+      .withColumn("lm_scorable", col("script") =!= noneKey && col("n_grams") > 0L)
+      .drop("__st")
   }
 }

@@ -146,6 +146,34 @@ class ExactPercentilesSpec extends SparkSpec {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 
+  test("refinement takes over the screen state: one checkpoint, no copy job") {
+    import graft.ops.StagePersists
+    val rng = new scala.util.Random(23)
+    val long = Seq.fill(20000)("g" -> rng.nextDouble() * 1e6).toDF("g", "x")
+    // a state already under the cap is returned as is: the candidate
+    // count is the only work, no checkpoint copies it
+    val hist = long.groupBy($"g", $"x".as("__x")).agg(count(lit(1)).as("__cnt"))
+    val state0 = StagePersists.checkpoint(long.groupBy("g")
+      .agg(count(lit(1)).as("__na"))
+      .select($"g", $"__na", lit(Double.NegativeInfinity).as("__lo_0"),
+        lit(Double.PositiveInfinity).as("__hi_0")))
+    var out: org.apache.spark.sql.DataFrame = null
+    val roundZero = jobsOf {
+      out = ExactPercentiles.refineBrackets(hist, state0, Seq("g"), Seq(0.5),
+        cap = 1000000)
+    }
+    assert(out eq state0)
+    // re-checkpointing the state it was handed cost one job more: 6
+    assert(roundZero == 5, s"$roundZero jobs")
+    StagePersists.free(state0)
+    // the whole refinement-path call: 24 jobs with the second
+    // checkpoint of the screen state
+    val jobs = jobsOf(ExactPercentiles.byGroupsSketched(long, Seq("g"), "x",
+      Seq("med" -> 0.5), accuracy = 100, candidateCap = 200).collect())
+    assert(jobs == 23, s"$jobs jobs")
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  }
+
   test("refinement handles duplicate-heavy and tiny-gap distributions") {
     val ps2 = Seq("med" -> 0.5)
     // 90% of mass on one value, the rest microscopically spread around

@@ -37,9 +37,9 @@ class ScriptLmSpec extends SparkSpec {
     val (c2, c1) = ScriptLm.hashedCounts(ref, "text", B2, B1)
     val joined = ScriptLm.score(df, c2, c1, B2, B1, "text", "id")
     val (d2, d1) = ScriptLm.denseCounts(c2, c1, B2, B1)
-    val (script, n, nll, scorable) = ScriptLm.nllColumns(d2, d1, B2, B1, "text")
-    val kernel = df.select($"id", script.as("script"), n.as("n_grams"),
-      nll.as("nll_fp"), scorable.as("lm_scorable"))
+    val kernel = ScriptLm.withScores(df, (d2, d1), B2, B1, "text",
+        ScriptText.dominantScript($"text"))
+      .select($"id", $"script", $"n_grams", $"nll_fp", $"lm_scorable")
     val a = joined.orderBy("id").collect().toSeq
     val b = kernel.orderBy("id").collect().toSeq
     assert(a == b, s"join form:\n${a.mkString("\n")}\nkernel:\n${b.mkString("\n")}")
@@ -107,8 +107,7 @@ class ScriptLmSpec extends SparkSpec {
     val df = (latin ++ cjk).toDF("id", "text")
     val (c2, c1) = ScriptLm.hashedCounts(df.filter($"id" % 2 === 0), "text", B2, B1)
     val scored = ScriptLm.score(df, c2, c1, B2, B1, "text", "id")
-    val cuts = ScriptLm.percentileCuts(scored, 7, 10)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val cuts = ScriptLm.percentileCuts(scored, 7, 10).toMap
     assert(cuts.keySet == Set("latin", "cjk"))
     val kept = scored
       .withColumn("kept", ScriptLm.gateKept($"script", $"n_grams",
@@ -123,7 +122,7 @@ class ScriptLmSpec extends SparkSpec {
     }
   }
 
-  test("language-routed generic path: nllColumnsBy == scoreBy, row for row") {
+  test("language-routed generic path: withScores == scoreBy, row for row") {
     import graft.text.TextAnalysis
     val keys = TextAnalysis.markers.keys.toSeq.sorted
     // marker-led documents for three languages, one unroutable
@@ -140,10 +139,9 @@ class ScriptLmSpec extends SparkSpec {
     val joined = ScriptLm.scoreBy(docs, c2, c1, B2, B1, "text", "id",
       route, noneKey = "unknown")
     val (d2, d1) = ScriptLm.denseCounts(c2, c1, B2, B1, keys = keys)
-    val (lang, n, nll, scorable) = ScriptLm.nllColumnsBy(d2, d1, B2, B1,
-      "text", route, keys, noneKey = "unknown")
-    val kernel = docs.select($"id", lang.as("script"), n.as("n_grams"),
-      nll.as("nll_fp"), scorable.as("lm_scorable"))
+    val kernel = ScriptLm.withScores(docs, (d2, d1), B2, B1, "text", route,
+        keys, noneKey = "unknown")
+      .select($"id", $"script", $"n_grams", $"nll_fp", $"lm_scorable")
     val a = joined.orderBy("id").collect().toSeq
     val b = kernel.orderBy("id").collect().toSeq
     assert(a == b, s"join form:\n${a.mkString("\n")}\nkernel:\n${b.mkString("\n")}")

@@ -718,15 +718,11 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = sf // sf0.001 keeps the spec fast; w13's gate run is sf0.01
-    val docsStatic = graft.Tables.load(spark, dir, "documents")
-    // control plane batch-trained once (static tables + literal weights)
-    val (blocked, refBuckets, dense, lm, probs) =
-      graft.queries.StreamQueries.w13Control(spark, dir)
-    val planted = graft.queries.StreamQueries.w13Planted(docsStatic)
     val outCols = Seq("lang", "bin_id", "seq", "doc_id", "token_start",
       "token_len")
-    val batch = graft.queries.StreamQueries
-      .w13Chain(planted, blocked, refBuckets, dense, lm, probs)
+    // the declared query: the chain's tail over the control plane's
+    // gated frame — the rows the DuckDB oracle certifies
+    val batch = graft.queries.StreamQueries.streamCorpusPipeline(spark, dir)
       .select(outCols.head, outCols.tail: _*)
       .as[(String, Long, Long, Long, Long, Long)].collect().toSet
     assert(batch.nonEmpty)
@@ -736,12 +732,12 @@ class StreamingSpec extends SparkSpec {
     // stateful packer, all in ONE append-mode query. Micro-batches
     // split the corpus in doc_id order (the packer's ordering
     // contract).
-    val rows = planted.orderBy("doc_id")
-      .as[(Long, String, String, String)].collect()
+    val control = graft.queries.StreamQueries.w13Control(spark, dir)
+    val rows = graft.queries.StreamQueries
+      .w13Planted(graft.Tables.load(spark, dir, "documents"))
+      .orderBy("doc_id").as[(Long, String, String, String)].collect()
     val input = MemoryStream[(Long, String, String, String)]
-    val stream = input.toDF().toDF("doc_id", "lang", "source", "text")
-    val q = graft.queries.StreamQueries
-      .w13Chain(stream, blocked, refBuckets, dense, lm, probs)
+    val q = control.chain(input.toDF().toDF("doc_id", "lang", "source", "text"))
       .writeStream.format("memory").queryName("w13_out")
       .outputMode("append").start()
     try {
@@ -760,14 +756,10 @@ class StreamingSpec extends SparkSpec {
   test("w15: the multilingual crawl→corpus chain runs as ONE append-mode stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val docsStatic = graft.Tables.load(spark, sf, "documents")
-    val (hashes, refBuckets, lm, cuts, probs) =
-      graft.queries.StreamQueries.w15Control(spark, sf)
-    val planted = graft.queries.StreamQueries.w15Planted(docsStatic)
     val outCols = Seq("script", "bin_id", "seq", "doc_id", "token_start",
       "token_len")
-    val batch = graft.queries.StreamQueries
-      .w15Chain(planted, hashes, refBuckets, lm, cuts, probs)
+    // the declared query's rows (the oracle-certified ones)
+    val batch = graft.queries.StreamQueries.streamMultilingual(spark, sf)
       .select(outCols.head, outCols.tail: _*)
       .as[(String, Long, Long, Long, Long, Long)].collect().toSet
     assert(batch.nonEmpty)
@@ -775,11 +767,12 @@ class StreamingSpec extends SparkSpec {
     // anti-probe, script-LSH band probe, per-script quality + LM gates
     // (unscorable kept), threshold sampling, script-grain chunking, and
     // the per-shard stateful packer — ONE append-mode query.
-    val rows = planted.orderBy("doc_id").as[(Long, String)].collect()
+    val control = graft.queries.StreamQueries.w15Control(spark, sf)
+    val rows = graft.queries.StreamQueries
+      .w15Planted(graft.Tables.load(spark, sf, "documents"))
+      .orderBy("doc_id").as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text2")
-    val q = graft.queries.StreamQueries
-      .w15Chain(stream, hashes, refBuckets, lm, cuts, probs)
+    val q = control.chain(input.toDF().toDF("doc_id", "text2"))
       .writeStream.format("memory").queryName("w15_out")
       .outputMode("append").start()
     try {
@@ -874,14 +867,13 @@ class StreamingSpec extends SparkSpec {
     val (c2, c1) = ScriptLm.hashedCountsBy(hist, "text", route, 64, 32)
     val (d2, d1) = ScriptLm.denseCounts(c2, c1, 64, 32, keys = keys)
     val cuts = ScriptLm.percentileCuts(
-        ScriptLm.scoreBy(hist, c2, c1, 64, 32, "text", "doc_id", route,
-          noneKey = "unknown"), 7, 10)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-    val (lang, n, nll, scorable) = ScriptLm.nllColumnsBy(d2, d1, 64, 32,
-      "text", route, keys, noneKey = "unknown")
+      ScriptLm.scoreBy(hist, c2, c1, 64, 32, "text", "doc_id", route,
+        noneKey = "unknown"), 7, 10)
     def stage(df: org.apache.spark.sql.DataFrame) =
-      df.select($"doc_id", lang.as("lang"), n.as("n_grams"),
-          nll.as("nll_fp"), scorable.as("lm_scorable"))
+      ScriptLm.withScores(df, (d2, d1), 64, 32, "text", route, keys,
+          noneKey = "unknown")
+        .select($"doc_id", $"script".as("lang"), $"n_grams", $"nll_fp",
+          $"lm_scorable")
         .withColumn("kept", ScriptLm.gateKept($"lang", $"n_grams",
           $"nll_fp", cuts, noneKey = "unknown"))
     val batch = stage(rows.toDF("doc_id", "text"))

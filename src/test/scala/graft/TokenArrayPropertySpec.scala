@@ -56,6 +56,35 @@ class TokenArrayPropertySpec extends SparkSpec {
         .mkString("; "))
   }
 
+  test("native tokenizer == regex split of the lower-cased string on arbitrary bytes") {
+    import org.apache.spark.unsafe.types.UTF8String
+    // bytes biased to the classification boundaries: printable ASCII,
+    // bare continuation bytes, 2-byte leads (0xC3 starts à-ÿ), and
+    // 3/4-byte leads — mostly MALFORMED sequences
+    val genByte: Gen[Byte] = Gen.frequency(
+      4 -> Gen.choose(0x20, 0x7e), 2 -> Gen.choose(0x80, 0xbf),
+      1 -> Gen.choose(0xc0, 0xdf), 1 -> Gen.const(0xc3),
+      1 -> Gen.choose(0xe0, 0xef), 1 -> Gen.choose(0xf0, 0xff))
+      .map(_.toByte)
+    val inputs = Gen.listOfN(2000,
+        Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, genByte)))
+      .apply(Gen.Parameters.default, Seed(20261019L)).getOrElse(Nil)
+      .map(_.toArray)
+    assert(inputs.count(b => !java.util.Arrays.equals(b,
+      new String(b, "UTF-8").getBytes("UTF-8"))) > 1000,
+      "generator must mostly produce malformed UTF-8")
+    def tokens(s: UTF8String, ascii: Boolean): Seq[String] =
+      graft.functions.TokenArray.tokensOf(s, ascii).array.toSeq.map(_.toString)
+    inputs.foreach { bytes =>
+      val s = UTF8String.fromBytes(bytes)
+      val lower = s.toLowerCase.toString
+      def regex(cls: String): Seq[String] = lower.split(cls).toSeq.filter(_.nonEmpty)
+      val hex = bytes.map(b => f"${b & 0xff}%02x").mkString(" ")
+      assert(tokens(s, ascii = false) == regex("[^a-zà-ÿ0-9]+"), hex)
+      assert(tokens(s, ascii = true) == regex("[^a-z0-9]+"), hex)
+    }
+  }
+
   test("kernel family agrees on MALFORMED UTF-8 (the regex path can't " +
       "be the referee there — toString substitutes U+FFFD)") {
     import org.apache.spark.unsafe.types.UTF8String
