@@ -12,11 +12,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Scale design:
   *  - Exact dedup groups by a 64-bit content hash, never by the full
   *    text (the shuffle carries 8-byte keys + ids).
-  *  - MinHash/LSH: per-doc signatures via explode + groupBy(doc) min
-  *    over k permutations — one shuffle of (doc, shingle-hash) pairs;
-  *    band buckets then self-join equi on (band, hash), which Spark
-  *    executes as a shuffled hash join on small keys. No cartesian
-  *    product anywhere.
+  *  - MinHash/LSH: per-doc band buckets from the per-row
+  *    [[graft.functions.LshBands]] kernel (no shuffle); buckets then
+  *    self-join equi on (band, bucket), which Spark executes as a
+  *    shuffled hash join on small keys. No cartesian product anywhere.
   *  - N-gram Jaccard verifies candidate pairs only (inverted-index
   *    join), with a document-frequency cap dropping stop-shingles that
   *    would quadratically blow up candidate generation.
@@ -241,49 +240,42 @@ object Dedup {
     * too big for portable SQL: use a 31-bit prime so a*x fits in 63
     * bits with x < 2^31 (shingle hashes are truncated to 30 bits). */
   val P: Long = 2147483647L // 2^31 - 1
-  private def perm(k: Int): Seq[(Long, Long)] =
+
+  /** The (a, b) coefficients of MinHash permutations 1 … k, each
+    * h ↦ (a·h + b) mod [[P]]: the one definition [[minhashSignatures]],
+    * the [[graft.functions.LshBands]] kernel and the SQL mirrors read.
+    * Permutation i is the same at every width k. */
+  def perm(k: Int): IndexedSeq[(Long, Long)] =
     (1 to k).map(i => ((2 * i + 1).toLong, (7919L * i) % P))
 
   /** MinHash signature rows (id, perm_id, min_hash) over `numPerms`
-    * permutations of 30-bit md5 shingle hashes.
+    * permutations of 30-bit md5 shingle hashes — d3's output, and the
+    * reference the kernel's band buckets are pinned against.
     *
     * All `numPerms` mins run as ONE wide groupBy(id) aggregation —
     * map-side partial mins shrink the shuffle to #docs rows of k
     * longs. (The explode-then-group formulation shuffles
     * #shingles × k rows: measured ~3× slower at k=16.) The long
-    * (id, perm_id, min_hash) layout is exploded AFTER aggregation. */
+    * (id, perm_id, min_hash) layout is exploded AFTER aggregation.
+    * The 30-bit gram hash is projected once below the aggregate, not
+    * once per permutation inside each min(). */
   def minhashSignatures(shingles: DataFrame, numPerms: Int): DataFrame = {
+    val aggs = perm(numPerms).zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(lit(a) * col("__x") + lit(b), lit(P))).as(s"__h$i")
+    }
     val rows = (0 until numPerms).map(i =>
       struct(lit(i).as("perm_id"), col(s"__h$i").as("min_hash")))
-    minhashWide(shingles, numPerms)
+    shingles.select(col("id"),
+        pmod(md5Long(col("shingle")), lit(1073741824L)).as("__x"))
+      .groupBy("id").agg(aggs.head, aggs.tail: _*)
       .select(col("id"), explode(array(rows: _*)).as("ph"))
       .select(col("id"), col("ph.perm_id").as("perm_id"),
         col("ph.min_hash").as("min_hash"))
   }
 
-  /** One row per doc with all `numPerms` minhashes as columns
-    * (__h0..__hk) — the single wide groupBy both the long layout and
-    * the LSH buckets derive from. */
-  private def minhashWide(shingles: DataFrame, numPerms: Int): DataFrame =
-    // the 30-bit gram hash is PROJECTED once below the aggregate (r13):
-    // as a subexpression of every min() it rode inside each aggregate
-    // update expression — one md5 + hex parse per PERMUTATION per gram
-    // row instead of one per row
-    minhashWideFromHashed(shingles.select(col("id"),
-      pmod(md5Long(col("shingle")), lit(1073741824L)).as("__x")), numPerms)
-
-  /** The wide signature aggregation over PRE-COMPUTED 30-bit gram
-    * hashes (id, __x). */
-  private def minhashWideFromHashed(hashed: DataFrame,
-      numPerms: Int): DataFrame = {
-    val aggs = perm(numPerms).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(lit(a) * col("__x") + lit(b), lit(P))).as(s"__h$i")
-    }
-    hashed.groupBy("id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH band buckets: signatures split into bands of `rowsPerBand`;
-    * band key = md5 of the concatenated minhashes. */
+  /** LSH band buckets from signature rows: signatures split into bands
+    * of `rowsPerBand`; band key = md5 of the concatenated minhashes.
+    * The reference DedupSpec pins [[inlineLshBuckets]] against. */
   def lshBuckets(signatures: DataFrame, rowsPerBand: Int): DataFrame =
     signatures
       .withColumn("band", (col("perm_id") / rowsPerBand).cast("int"))
@@ -293,52 +285,18 @@ object Dedup {
           x => x.getField("min_hash").cast("string")),
         ",")).as("bucket"))
 
-  /** [[lshBuckets]] straight off the wide signature row: the bucket
-    * string is just a concat of adjacent minhash columns — no explode,
-    * no second shuffle, no per-group sort. Byte-identical keys to
-    * [[lshBuckets]] (same comma-joined perm order under md5). */
-  private def lshBucketsWide(wide: DataFrame, numPerms: Int,
-      rowsPerBand: Int): DataFrame = {
-    require(numPerms % rowsPerBand == 0,
-      s"numPerms ($numPerms) must be divisible by rowsPerBand ($rowsPerBand): " +
-        "a remainder would silently drop trailing permutations and lose recall")
-    val bands = (0 until numPerms / rowsPerBand).map { b =>
-      val hs = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => col(s"__h$i").cast("string"))
-      struct(lit(b).as("band"), md5(concat_ws(",", hs: _*)).as("bucket"))
-    }
-    wide.select(col("id"), explode(array(bands: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
-
-  /** Per-row LSH band buckets: byte-identical (id, band, bucket) rows
-    * to [[lshBuckets]]/[[lshBucketsWide]], computed entirely as scalar
-    * Columns — each permutation's signature min runs INSIDE the row
-    * over the doc's distinct shingle array (`array_min`∘`transform`)
-    * instead of via groupBy(id), so the whole bucket derivation is a
-    * stateless narrow map with zero exchanges. That makes it legal on
-    * an append-mode STREAM (the w9 streaming near-dedup path: no
-    * aggregation before the stateful stage) and exchange-free in batch.
-    * Docs with no shingles emit no rows, matching the aggregated
-    * formulation (they never reach the groupBy there). */
+  /** (id, band, bucket) rows of every document, from the fused native
+    * [[graft.functions.LshBands]] kernel: a stateless per-row map with
+    * no exchange, so it is legal on an append-mode stream (w9) and
+    * shuffle-free in batch. Byte-identical to [[lshBuckets]] over
+    * [[minhashSignatures]] (DedupSpec pins it). Docs with fewer than
+    * `shingleSize` words emit no rows. */
   def inlineLshBuckets(df: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int, numPerms: Int, rowsPerBand: Int): DataFrame = {
-    require(numPerms % rowsPerBand == 0,
-      s"numPerms ($numPerms) must be divisible by rowsPerBand ($rowsPerBand)")
-    // the whole words → distinct-gram-hash → perm-minima → band-bucket
-    // chain is the fused native [[graft.functions.LshBands]]: the
-    // Column formulation's higher-order functions (transform/filter/
-    // array_min) are CodegenFallback — interpreted, a closure per
-    // element — which cost ~25 ms/doc (w9 ~40 s for 50 k docs at sf1
-    // vs ~1 s fused). Bit-identical (LshBandsSpec pins it against the
-    // Column reference form; the w9 oracle pins it cross-engine).
-    // Fewer-than-k-word docs yield an empty array: explode drops them,
-    // matching the aggregated formulation.
-    df.select(col(idCol).as("id"), words(col(textCol)).as("__ws"))
-      .select(col("id"), explode(graft.functions.LshBands(col("__ws"),
-        shingleSize, numPerms, rowsPerBand)).as("bb"))
+      shingleSize: Int, numPerms: Int, rowsPerBand: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+        explode(lshBandArray(col(textCol), shingleSize, numPerms,
+          rowsPerBand)).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
 
   /** The per-row band/bucket ARRAY form of [[inlineLshBuckets]] (no
     * explode): array<struct<band:int,bucket:string>> per document —
@@ -350,11 +308,8 @@ object Dedup {
     * `try_element_at` (or guard on `size`): a bare `element_at(bb, k)`
     * throws under ANSI mode the moment a short document arrives. */
   def lshBandArray(textCol: Column, shingleSize: Int, numPerms: Int,
-      rowsPerBand: Int): Column = {
-    require(numPerms % rowsPerBand == 0,
-      s"numPerms ($numPerms) must be divisible by rowsPerBand ($rowsPerBand)")
+      rowsPerBand: Int): Column =
     graft.functions.LshBands(words(textCol), shingleSize, numPerms, rowsPerBand)
-  }
 
   /** Candidate near-duplicate pairs: ids sharing any LSH bucket. */
   def lshCandidates(buckets: DataFrame): DataFrame = {
@@ -365,139 +320,70 @@ object Dedup {
       .select("ida", "idb").distinct()
   }
 
-  /** End-to-end MinHash near-dup pairs: LSH candidates verified by true
-    * shingle Jaccard ≥ threshold.
-    *
-    * `collapseExactDups` handles duplication-DENSE inputs (a raw crawl
-    * where pages have many byte-identical copies): the signature/verify
-    * machinery runs on one REPRESENTATIVE per distinct text and the
-    * representative pairs expand back to member pairs afterwards —
-    * identical copies share every shingle, so the output is unchanged
-    * row-for-row (identical docs share all LSH buckets and verify at
-    * jaccard exactly 1), while the verify join shrinks by the SQUARE of
-    * the duplication factor (the ×100-copy rehearsal spilled >45 GB
-    * through the direct path; DedupSpec pins both paths equal). OFF by
-    * default: the collapse/expansion adds ~4 exchanges of fixed
-    * overhead, wasted when the input is already exact-deduped — which
-    * is how the composed pipelines (l1-l3, l5) always call this. */
-  def minhashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
-      threshold: Double = 0.5,
-      collapseExactDups: Boolean = false): DataFrame = {
-    if (!collapseExactDups)
-      return minhashNearDupReps(df, textCol, idCol, shingleSize, numPerms,
-        rowsPerBand, threshold)
-    // exact-dup collapse: gid = min id per distinct text
-    val members = StagePersists.track(
-      df.select(col(s"`$idCol`").as("id"), md5(col(s"`$textCol`")).as("__h"))
-        .withColumn("gid", min(col("id")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("__h")))
-        .select(col("gid"), col("id")))
-    val reps = df.join(
-      members.filter(col("gid") === col("id")).select(col("id").as("__rid")),
-      col(s"`$idCol`") === col("__rid")).drop("__rid")
-    val repPairs = minhashNearDupReps(reps, textCol, idCol, shingleSize,
-      numPerms, rowsPerBand, threshold)
-    // shingle-bearing groups only: docs below the shingle size produce
-    // no signature and therefore no pairs — even for identical copies.
-    // ≥ shingleSize words ⟺ ≥ 1 shingle, so a map-side predicate
-    // suffices (no second shingle explode)
-    val withSh = members.join(
-      reps.filter(size(words(col(s"`$textCol`"))) >= shingleSize)
-        .select(col(s"`$idCol`").as("gid")),
-      Seq("gid"))
-    // cross-group expansion + within-group all-pairs (jaccard exactly 1)
-    val ma = withSh.select(col("gid").as("__ga"), col("id").as("ia"))
-    val mb = withSh.select(col("gid").as("__gb"), col("id").as("ib"))
-    val cross = repPairs
-      .join(ma, col("ida") === col("__ga"))
-      .join(mb, col("idb") === col("__gb"))
-      .select(least(col("ia"), col("ib")).as("ida"),
-        greatest(col("ia"), col("ib")).as("idb"), col("jaccard"))
-    val within = ma.join(mb, col("__ga") === col("__gb"))
-      .filter(col("ia") < col("ib"))
-      .select(col("ia").as("ida"), col("ib").as("idb"),
-        lit(1.0).as("jaccard"))
-    cross.unionByName(within)
-  }
+  /** [[lshCandidates]] over the kernel's buckets of `df`. The bucket
+    * frame is self-joined, so it is checkpointed once rather than
+    * derived once per join side. */
+  def inlineLshCandidates(df: DataFrame, textCol: String, idCol: String,
+      shingleSize: Int, numPerms: Int, rowsPerBand: Int): DataFrame =
+    lshCandidates(StagePersists.checkpoint(inlineLshBuckets(df, textCol,
+      idCol, shingleSize, numPerms, rowsPerBand)))
 
-  /** The direct pair machinery — [[minhashNearDuplicates]] wraps it
-    * with optional exact-duplicate collapse/expansion. */
-  private def minhashNearDupReps(df: DataFrame, textCol: String,
-      idCol: String, shingleSize: Int, numPerms: Int, rowsPerBand: Int,
+  /** Candidate-first Jaccard verify: (ida, idb, jaccard) for every
+    * candidate pair (ida, idb) whose shingle sets — ida's in `aSh`,
+    * idb's in `bSh`, both (id, shingle) — reach `threshold`. Each
+    * candidate is expanded by its left doc's shingles, then the right
+    * side is equi-joined: O(|candidates| × shingles/doc), never
+    * all-pairs. jaccard = common / (sza + szb − common), one double
+    * division. A self-verify (`bSh eq aSh`) renames the one size
+    * aggregation instead of re-aggregating it. */
+  def verifiedPairs(cands: DataFrame, aSh: DataFrame, bSh: DataFrame,
       threshold: Double): DataFrame = {
-    // The shingle table feeds four consumers (signatures, sizes, both
-    // verify-join sides); without persist the split+explode+distinct
-    // shuffle re-runs per consumer. MEMORY_AND_DISK so the 100 TB case
-    // spills instead of OOMing; tracked in StagePersists so long-lived
-    // sessions can release it after materializing the result.
-    val sh = StagePersists.track(
-      wordShingles(df, textCol, idCol, shingleSize))
-    minhashPairsFromShingles(sh, numPerms, rowsPerBand, threshold)
-  }
-
-  /** The LSH candidate stage alone over a PREBUILT (id, shingle)
-    * frame: distinct band-bucket collision pairs (ida < idb), no
-    * Jaccard verify. A consumer that intersects the candidates with an
-    * ALREADY-verified pair set (d21's recall curve semi-joins truth,
-    * whose members carry exact jaccard ≥ the capture threshold by
-    * construction) gets a byte-identical result without paying the
-    * candidate-expansion verify joins (guide §1.2: don't compute what
-    * the consumer's own filter makes redundant). */
-  def lshCandidatesFromShingles(sh: DataFrame, numPerms: Int,
-      rowsPerBand: Int): DataFrame = {
-    // buckets are self-joined by lshCandidates: checkpoint the tiny
-    // (id, band, bucket) frame so the signature aggregation doesn't run
-    // once per join side
-    val buckets = StagePersists.checkpoint(
-      lshBucketsWide(minhashWide(sh, numPerms), numPerms, rowsPerBand)
-        .repartition(sh.sparkSession.sparkContext.defaultParallelism))
-    lshCandidates(buckets)
-  }
-
-  /** [[lshCandidatesFromShingles]] over PRE-HASHED 60-bit gram keys
-    * ((id, shingle) with shingle = [[md5Long]] of the gram string):
-    * the 30-bit minhash gram hash has always been pmod(md5Long(g),
-    * 2³⁰) — the low bits of the SAME 60-bit value — so a caller that
-    * also needs the 60-bit key (d21's exact-truth join) hashes each
-    * gram row ONCE for both sides instead of once per consumer. */
-  def lshCandidatesFromHashedShingles(shH: DataFrame, numPerms: Int,
-      rowsPerBand: Int): DataFrame = {
-    val buckets = StagePersists.checkpoint(lshBucketsWide(
-        minhashWideFromHashed(shH.select(col("id"),
-          pmod(col("shingle"), lit(1073741824L)).as("__x")), numPerms),
-        numPerms, rowsPerBand)
-      .repartition(shH.sparkSession.sparkContext.defaultParallelism))
-    lshCandidates(buckets)
-  }
-
-  /** The [[minhashNearDuplicates]] pair machinery over a PREBUILT
-    * (id, shingle) frame the caller already persists — lets an eval
-    * that needs both exact-Jaccard truth pairs and the captured LSH
-    * pairs (d21, s16) share ONE shingle pass instead of re-exploding
-    * the corpus per consumer. Same output as [[minhashNearDuplicates]]
-    * over the frame the shingles came from. */
-  def minhashPairsFromShingles(sh: DataFrame, numPerms: Int,
-      rowsPerBand: Int, threshold: Double): DataFrame = {
-    val cands = lshCandidatesFromShingles(sh, numPerms, rowsPerBand)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val a = sh.select(col("id").as("ida"), col("shingle"))
-    val b = sh.select(col("id").as("idb"), col("shingle"))
-    // candidate-first: expand each candidate pair by its left doc's
-    // shingles, then equi-join the right side — work is
-    // O(|candidates| × shingles/doc), never all-pairs
-    val common = cands.join(a, Seq("ida"))
-      .join(b, Seq("idb", "shingle"))
+    val szA = aSh.groupBy("id").agg(count(lit(1)).as("sza"))
+    val szB = if (bSh eq aSh) szA.withColumnRenamed("sza", "szb")
+      else bSh.groupBy("id").agg(count(lit(1)).as("szb"))
+    cands
+      .join(aSh.select(col("id").as("ida"), col("shingle")), Seq("ida"))
+      .join(bSh.select(col("id").as("idb"), col("shingle")),
+        Seq("idb", "shingle"))
       .groupBy("ida", "idb").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("id", "ida").withColumnRenamed("sz", "sza"), "ida")
-      .join(sizes.withColumnRenamed("id", "idb").withColumnRenamed("sz", "szb"), "idb")
+      .join(szA.withColumnRenamed("id", "ida"), "ida")
+      .join(szB.withColumnRenamed("id", "idb"), "idb")
       .withColumn("jaccard",
         col("common").cast(DoubleType) /
           (col("sza") + col("szb") - col("common")).cast(DoubleType))
       .filter(col("jaccard") >= threshold)
       .select("ida", "idb", "jaccard")
   }
+
+  /** End-to-end MinHash near-dup pairs (ida < idb, jaccard): LSH
+    * candidates verified by true shingle Jaccard ≥ threshold. */
+  def minhashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
+      shingleSize: Int = 3, numPerms: Int = 16, rowsPerBand: Int = 4,
+      threshold: Double = 0.5): DataFrame = {
+    // the shingle table feeds the sizes and both verify-join sides
+    val sh = StagePersists.track(
+      wordShingles(df, textCol, idCol, shingleSize))
+    verifiedPairs(inlineLshCandidates(df, textCol, idCol, shingleSize,
+      numPerms, rowsPerBand), sh, sh, threshold)
+  }
+
+  /** The LSH candidate pairs of a PREBUILT (id, shingle) frame: each
+    * doc's shingles are collected and banded by the kernel as 1-grams,
+    * which hashes every shingle exactly as the k-gram pass does. */
+  def lshCandidatesFromShingles(sh: DataFrame, numPerms: Int,
+      rowsPerBand: Int): DataFrame =
+    lshCandidates(StagePersists.checkpoint(
+      sh.groupBy("id").agg(collect_list(col("shingle")).as("__sh"))
+        .select(col("id"), explode(graft.functions.LshBands(col("__sh"), 1,
+          numPerms, rowsPerBand)).as("bb"))
+        .select(col("id"), col("bb.band").as("band"),
+          col("bb.bucket").as("bucket"))))
+
+  /** [[minhashNearDuplicates]] over a PREBUILT (id, shingle) frame. */
+  def minhashPairsFromShingles(sh: DataFrame, numPerms: Int,
+      rowsPerBand: Int, threshold: Double): DataFrame =
+    verifiedPairs(lshCandidatesFromShingles(sh, numPerms, rowsPerBand),
+      sh, sh, threshold)
 
   // ---- incremental (cross-corpus) dedup ---------------------------------
 
@@ -518,36 +404,21 @@ object Dedup {
       textCol: String, idCol: String, shingleSize: Int = 3,
       numPerms: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    // each shingle frame feeds three consumers (signatures, sizes, its
+    // each shingle frame feeds two consumers (its sizes and its
     // verify-join side): persist so the split+explode runs once per side
     val cs = StagePersists.track(
       wordShingles(corpus, textCol, idCol, shingleSize))
     val bs = StagePersists.track(
       wordShingles(batch, textCol, idCol, shingleSize))
-    val cb = lshBucketsWide(minhashWide(cs, numPerms), numPerms, rowsPerBand)
-    val bb = lshBucketsWide(minhashWide(bs, numPerms), numPerms, rowsPerBand)
-    val cands = bb.select(col("band"), col("bucket"), col("id").as("batch_id"))
-      .join(cb.select(col("band"), col("bucket"), col("id").as("corpus_id")),
+    def buckets(df: DataFrame, id: String) =
+      inlineLshBuckets(df, textCol, idCol, shingleSize, numPerms, rowsPerBand)
+        .select(col("band"), col("bucket"), col("id").as(id))
+    val cands = buckets(batch, "ida").join(buckets(corpus, "idb"),
         Seq("band", "bucket"))
-      .select("batch_id", "corpus_id").distinct()
-    val bSizes = bs.groupBy("id").agg(count(lit(1)).as("szb"))
-    val cSizes = cs.groupBy("id").agg(count(lit(1)).as("szc"))
-    // candidate-first verify, as in minhashNearDuplicates: expand each
-    // candidate by the batch doc's shingles, equi-join the corpus side —
-    // O(|candidates| × shingles/doc), never all-pairs
-    val common = cands
-      .join(bs.select(col("id").as("batch_id"), col("shingle")), Seq("batch_id"))
-      .join(cs.select(col("id").as("corpus_id"), col("shingle")),
-        Seq("corpus_id", "shingle"))
-      .groupBy("batch_id", "corpus_id").agg(count(lit(1)).as("common"))
-    common
-      .join(bSizes.withColumnRenamed("id", "batch_id"), "batch_id")
-      .join(cSizes.withColumnRenamed("id", "corpus_id"), "corpus_id")
-      .withColumn("jaccard",
-        col("common").cast(DoubleType) /
-          (col("szb") + col("szc") - col("common")).cast(DoubleType))
-      .filter(col("jaccard") >= threshold)
-      .select("batch_id", "corpus_id", "jaccard")
+      .select("ida", "idb").distinct()
+    verifiedPairs(cands, bs, cs, threshold)
+      .select(col("ida").as("batch_id"), col("idb").as("corpus_id"),
+        col("jaccard"))
   }
 
   // ---- duplicate passages -----------------------------------------------

@@ -12,25 +12,27 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fused per-row MinHash-LSH band buckets (SURVEY.md §7.3 "custom
   * Catalyst Expression, perf-only"): words array → k-shingles →
   * distinct 30-bit md5 gram hashes → numPerms permutation minima →
-  * per-band md5 bucket, all in ONE JVM loop.
+  * per-band md5 bucket, all in ONE JVM loop. The one band derivation
+  * every LSH consumer reads ([[graft.dedup.Dedup.inlineLshBuckets]],
+  * [[graft.dedup.Dedup.lshBandArray]] and the w13/w15 probes).
   *
-  * The Column formulation ([[graft.dedup.Dedup.inlineLshBuckets]]'s
-  * original body) chained higher-order functions — transform for the
-  * shingles, filter + array_distinct, a transform per gram hash, and
-  * 16 array_min(transform(...)) minima. Higher-order functions do not
-  * participate in whole-stage codegen (CodegenFallback + a closure per
-  * element), which made the w9 per-row bucket computation ~25 ms/doc
-  * interpreted (~40 s for 50 k docs at sf1) for work a flat loop does
-  * in microseconds. Same upgrade as PieceCounts/DotProduct.
+  * The Column formulation chained higher-order functions — transform
+  * for the shingles, filter + array_distinct, a transform per gram
+  * hash, and 16 array_min(transform(...)) minima. Higher-order
+  * functions do not participate in whole-stage codegen
+  * (CodegenFallback + a closure per element), which made the w9
+  * per-row bucket computation ~25 ms/doc interpreted (~40 s for 50 k
+  * docs at sf1) for work a flat loop does in microseconds.
   *
-  * BIT-IDENTICAL to the Column/oracle formulation (spec + w9 oracle
-  * pin): gram hash = [[BigramScore.bucket]](gram, 2^30) (first 15 md5
-  * hex chars parsed base-16 mod 2^30, [[graft.dedup.Dedup.md5Long]]);
-  * permutation i (1-based) maps h →
-  * (2i+1)·h + (7919·i mod P) mod P with P = 2^31−1; bucket = md5 hex
-  * of the band's minima joined by "," as decimal strings. Fewer than
-  * `shingleSize` words → empty array (the caller's explode drops the
-  * row, matching the old size(__gs) > 0 filter). */
+  * BIT-IDENTICAL to [[graft.dedup.Dedup.lshBuckets]] over
+  * [[graft.dedup.Dedup.minhashSignatures]] and to the oracle SQL
+  * (DedupSpec + LshBandsSpec + the w9 oracle pin): gram hash =
+  * [[BigramScore.bucket]](gram, 2^30) (first 15 md5 hex chars parsed
+  * base-16 mod 2^30, [[graft.dedup.Dedup.md5Long]]); permutation i maps
+  * h → (a·h + b) mod P with (a, b) from [[graft.dedup.Dedup.perm]];
+  * bucket = md5 hex of the band's minima joined by "," as decimal
+  * strings. Fewer than `shingleSize` words → empty array (the caller's
+  * explode drops the row). */
 case class LshBands(child: Expression, shingleSize: Int, numPerms: Int,
     rowsPerBand: Int) extends UnaryExpression {
   require(numPerms % rowsPerBand == 0,
@@ -65,6 +67,11 @@ case class LshBands(child: Expression, shingleSize: Int, numPerms: Int,
 object LshBands {
   private val P = graft.dedup.Dedup.P
 
+  /** [[graft.dedup.Dedup.perm]] as (a's, b's) arrays, built once per
+    * signature width rather than once per row. */
+  private val coefficients =
+    scala.collection.concurrent.TrieMap.empty[Int, (Array[Long], Array[Long])]
+
   /** One flat pass: distinct k-gram hashes → perm minima → band
     * buckets. */
   def bandsOf(words: ArrayData, k: Int, numPerms: Int,
@@ -73,8 +80,10 @@ object LshBands {
     if (n < k) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.HashSet[String]()
     val mins = Array.fill(numPerms)(Long.MaxValue)
-    val as = Array.tabulate(numPerms)(p => (2L * (p + 1) + 1))
-    val bs = Array.tabulate(numPerms)(p => (7919L * (p + 1)) % P)
+    val (as, bs) = coefficients.getOrElseUpdate(numPerms, {
+      val ps = graft.dedup.Dedup.perm(numPerms)
+      (ps.map(_._1).toArray, ps.map(_._2).toArray)
+    })
     val sb = new java.lang.StringBuilder
     var i = 0
     while (i <= n - k) {

@@ -79,11 +79,6 @@ object CorpusQueries {
   private def nearDupCtesSql: String = {
     val ws = WsSql
     val h30 = OracleSql.md5BucketSql("g", 1073741824)
-    val perms = (0 until DedupQueries.NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""g0 AS (
        |  SELECT doc_id, unnest(list_transform(range(1, greatest(len($ws) - 1, 1)),
        |    i -> $ws[i] || ' ' || $ws[i+1] || ' ' || $ws[i+2])) AS g
@@ -91,11 +86,7 @@ object CorpusQueries {
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
        |hashes AS (SELECT doc_id, $h30 AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", DedupQueries.NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket

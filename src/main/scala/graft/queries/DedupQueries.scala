@@ -78,19 +78,12 @@ object DedupQueries {
       .orderBy("id", "perm_id")
   }
 
-  val minhashSignaturesSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"""SELECT doc_id AS id, $p AS perm_id,
-         |  MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id""".stripMargin
-    }.mkString("\nUNION ALL\n")
+  val minhashSignaturesSql: String =
     s"""WITH $GRAMS3,
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams)
        |SELECT * FROM (
-       |$perms
+       |${OracleSql.minhashSigsSql("hashes", NumPerms)}
        |) ORDER BY id, perm_id""".stripMargin
-  }
 
   // ---- d4: MinHash-LSH near-duplicate pairs, end to end ----------------
 
@@ -103,18 +96,9 @@ object DedupQueries {
   }
 
   val minhashPairsSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""WITH $GRAMS3,
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
@@ -411,11 +395,6 @@ object DedupQueries {
   /** DuckDB mirror: the d4 + d5 pair pipelines verbatim, then a
     * recursive transitive closure; component id = min reachable id. */
   val dupComponentsSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     val bits = (0 until 64).map { i =>
       val src = if (i < 32) s"(hlo // ${1L << i})" else s"(hhi // ${1L << (i - 32)})"
       s"SUM(CASE WHEN $src % 2 = 1 THEN 1 ELSE -1 END) AS b$i"
@@ -428,11 +407,7 @@ object DedupQueries {
       .mkString("\nUNION ALL\n")
     s"""WITH RECURSIVE $GRAMS3,
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
@@ -554,18 +529,9 @@ object DedupQueries {
     * signatures/bands are per-doc, so computing them over all docs and
     * filtering parity IN the join is identical to two per-side runs. */
   val incrementalDedupSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""WITH $GRAMS3,
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id
        |  FROM bands b JOIN bands c ON b.band = c.band AND b.bucket = c.bucket
@@ -639,18 +605,9 @@ object DedupQueries {
     * mirror is d7's minhash closure at threshold 0.5, no parity split
     * needed. */
   val incrementalComponentsSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""WITH RECURSIVE $GRAMS3,
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
@@ -700,18 +657,9 @@ object DedupQueries {
     * min-reachable-id labels (the d7 convention), then a per-component
     * quality argmax window. */
   val keepBestCanonicalSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""WITH RECURSIVE $GRAMS3,
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
@@ -1103,30 +1051,19 @@ object DedupQueries {
     val sh = Dedup.wordShingles(docs, "text", "doc_id", 3)
     // truth is consumed twice (the captured semi-join and the per-bucket
     // totals): persist, or the exhaustive inverted-index join — the
-    // single most expensive stage of this eval — runs once per consumer
-    // (r13 optimization: the pair join now runs once, and the captured
-    // side shares sh instead of re-shingling the lake).
-    // The truth join itself runs on the 60-BIT MD5 gram key instead of
-    // the gram string (guide §2.3, narrower types): the join/groupBy
+    // single most expensive stage of this eval — runs once per consumer.
+    // The truth join runs on the 60-BIT MD5 gram key instead of the
+    // gram string (guide §2.3, narrower types): the join/groupBy
     // shuffles 8-byte longs, and the oracle joins the identical
     // md5-derived key, so the two engines agree bit for bit BY
-    // CONSTRUCTION (the established h30/Bloom convention) — and the
-    // 60-bit truth key is 2³⁰× finer than the 30-bit gram hashes the
-    // measured capture machinery itself runs on.
-    // ONE md5 per gram row for the whole eval (r14): the truth join's
-    // 60-bit key and the capture side's 30-bit minhash gram hash are
-    // the same md5Long value (h30 = h60 mod 2³⁰, as both forms always
-    // computed) — so the persisted frame is the HASHED grams, 8-byte
-    // longs instead of gram strings, and neither side re-hashes.
+    // CONSTRUCTION. The hashed grams are persisted because the truth
+    // machinery reads them four times (sizes, df filter, both sides).
     // Collision envelope of the 60-bit truth key (ADVICE r13): with g
     // distinct grams per document pair, P(any intra-pair collision) ≈
     // g²/2⁶¹ < 10⁻¹² even at g = 10⁶ grams — the truth set is
     // collision-approximate in principle, exact at any realistic
     // sample size; the oracle replays the identical key, so the two
     // engines agree bit for bit regardless.
-    // Previously the string-gram frame was cached and every consumer
-    // (five in the truth machinery, one in the captured signatures)
-    // re-ran md5 + hex parse per gram row.
     val shKeyed = graft.ops.StagePersists.track(sh.select(col("id"),
       Dedup.md5Long(col("shingle")).as("shingle")))
     val truth = graft.ops.StagePersists.track(
@@ -1139,8 +1076,8 @@ object DedupQueries {
     // (exactly the capt CTE the oracle below has always computed). This
     // drops the candidate-expansion verify joins (the second-most
     // expensive stage of the eval); hash-oracled at all three SFs.
-    val captured = Dedup.lshCandidatesFromHashedShingles(shKeyed, NumPerms,
-      rowsPerBand = 4)
+    val captured = Dedup.inlineLshCandidates(docs, "text", "doc_id",
+      shingleSize = 3, numPerms = NumPerms, rowsPerBand = 4)
     val cap = truth.join(captured, Seq("ida", "idb"), "left_semi")
       .groupBy("bucket").agg(count(lit(1)).as("n_captured"))
     truth.groupBy("bucket").agg(count(lit(1)).as("n_truth"))
@@ -1153,11 +1090,6 @@ object DedupQueries {
   }
 
   val lshRecallCurveSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""WITH lake AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL SELECT doc_id + 1000000,
@@ -1190,11 +1122,7 @@ object DedupQueries {
        |  WHERE CAST(common AS DOUBLE) / CAST(sa.sz + sb.sz - common AS DOUBLE)
        |          >= 0.4),
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
@@ -1275,11 +1203,6 @@ object DedupQueries {
   }
 
   val contrastiveTriplesSql: String = {
-    val perms = (0 until NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""WITH lake AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL SELECT doc_id + 1000000,
@@ -1295,11 +1218,7 @@ object DedupQueries {
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
        |hashes AS (SELECT doc_id, ${h30("g")} AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", NumPerms, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket

@@ -75,30 +75,6 @@ object IngestQueries {
   private def stage(df: DataFrame): DataFrame =
     StagePersists.track(df)
 
-  /** Candidate-first Jaccard verify (the minhashNearDuplicates shape,
-    * over caller-shared shingle frames): expand each candidate pair by
-    * the left doc's shingles, equi-join the right side —
-    * O(candidates × shingles/doc), never all-pairs. */
-  private def verifiedPairs(cands: DataFrame, aSh: DataFrame,
-      bSh: DataFrame): DataFrame = {
-    val szA = aSh.groupBy("id").agg(count(lit(1)).as("sza"))
-    // self-verify (one shared shingle frame): the b-side sizes are the
-    // SAME aggregation — a rename keeps the underlying plan identical
-    // so the exchange is reused instead of re-aggregated (r14)
-    val szB = if (bSh eq aSh) szA.withColumnRenamed("sza", "szb")
-      else bSh.groupBy("id").agg(count(lit(1)).as("szb"))
-    val common = cands
-      .join(aSh.select(col("id").as("ida"), col("shingle")), Seq("ida"))
-      .join(bSh.select(col("id").as("idb"), col("shingle")),
-        Seq("idb", "shingle"))
-      .groupBy("ida", "idb").agg(count(lit(1)).as("common"))
-    common.join(szA.withColumnRenamed("id", "ida"), "ida")
-      .join(szB.withColumnRenamed("id", "idb"), "idb")
-      .filter(col("common").cast("double") /
-        (col("sza") + col("szb") - col("common")).cast("double") >= Thr)
-      .select("ida", "idb")
-  }
-
   /** Every stage's frame, exposed for IngestSpec (stage-bite pins and
     * the composed release extension of SinksSpec). */
   private[graft] final case class Ingested(
@@ -169,14 +145,13 @@ object IngestQueries {
     // (and the oracle below always computed the unified mh_pairs set
     // over the lake, splitting n_new_pairs by d2 membership exactly as
     // here). Same d13/d17 minhash parameters — the incremental ≡ full
-    // proof needs identical candidate generation. inlineLshBuckets is
-    // the exchange-free native-kernel form, byte-identical to the
-    // aggregated buckets.
+    // proof needs identical candidate generation.
     val lake = corpus.unionByName(d2)
     val ls = stage(Dedup.wordShingles(lake, "text", "doc_id", ShingleN))
-    val lb = stage(Dedup.inlineLshBuckets(lake, "text", "doc_id",
-      ShingleN, DedupQueries.NumPerms, Band))
-    val allPairs = verifiedPairs(Dedup.lshCandidates(lb), ls, ls)
+    val cands = Dedup.inlineLshCandidates(lake, "text", "doc_id",
+      ShingleN, DedupQueries.NumPerms, Band)
+    val allPairs =
+      Dedup.verifiedPairs(cands, ls, ls, Thr).select("ida", "idb")
     // membership split: a pair endpoint not in d2 is in corpus (the
     // lake is their disjoint union), so flag by two id equi-joins
     // against the checkpointed dump — pair-set sized, broadcastable
@@ -291,11 +266,6 @@ object IngestQueries {
     val h30 = OracleSql.md5BucketSql("g", 1073741824)
     def pos(e: String) =
       OracleSql.md5BucketSql(s"j::VARCHAR || ':' || $e", BloomM)
-    val perms = (0 until DedupQueries.NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     val qe4 = s"CAST(${CorpusQueries.qualityE4ExprSql} AS BIGINT)"
     def profCol(c: String): String = {
       val v = s"CAST($c AS VARCHAR)"
@@ -352,11 +322,7 @@ object IngestQueries {
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
        |hashes AS (SELECT doc_id, $h30 AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // $Band AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // $Band),
+       |${OracleSql.lshBandsSql("hashes", DedupQueries.NumPerms, Band)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
@@ -524,11 +490,6 @@ object IngestQueries {
     val wsD = OracleSql.asciiWordsSql("text")
     def pos(e: String) =
       OracleSql.md5BucketSql(s"j::VARCHAR || ':' || $e", BloomM)
-    def perms(src: String) = (0 until DedupQueries.NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM ${src}hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     def bandCtes(src: String) =
       s"""${src}g0 AS (
          |  SELECT doc_id, unnest(list_transform(range(1, greatest(len($wsD) - 1, 1)),
@@ -538,11 +499,10 @@ object IngestQueries {
          |${src}hashes AS (SELECT doc_id,
          |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
          |  FROM ${src}grams),
-         |${src}sigs AS (${perms(src)}),
+         |${src}sigs AS (${OracleSql.minhashSigsSql(s"${src}hashes",
+             DedupQueries.NumPerms)}),
          |${src}bands AS (
-         |  SELECT id, perm_id // $Band AS band,
-         |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-         |  FROM ${src}sigs GROUP BY id, perm_id // $Band)""".stripMargin
+         |  ${OracleSql.lshBucketsSql(s"${src}sigs", Band)})""".stripMargin
     val qe4 = s"CAST(${CorpusQueries.qualityE4ExprSql} AS BIGINT)"
     s"""WITH corpus AS (
        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
@@ -738,11 +698,6 @@ object IngestQueries {
   val deleteFoldSql: String = {
     val ws = OracleSql.asciiWordsSql("text")
     val h30 = OracleSql.md5BucketSql("g", 1073741824)
-    val perms = (0 until DedupQueries.NumPerms).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     val qe4 = s"CAST(${CorpusQueries.qualityE4ExprSql} AS BIGINT)"
     s"""WITH RECURSIVE lake AS (
        |  SELECT doc_id, lang, text FROM documents
@@ -770,11 +725,7 @@ object IngestQueries {
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
        |hashes AS (SELECT doc_id, $h30 AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // $Band AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // $Band),
+       |${OracleSql.lshBandsSql("hashes", DedupQueries.NumPerms, Band)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket

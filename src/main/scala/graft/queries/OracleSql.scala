@@ -43,4 +43,48 @@ private[queries] object OracleSql {
        |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $punct / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
        |  + (1.0 - LEAST((CASE WHEN $len > 0 THEN $digits / $len ELSE 1.0 END) * 5, 1.0)) * 0.1
        |)""".stripMargin
+
+  /** MinHash signature rows (id, perm_id, min_hash) over a
+    * (doc_id, h) CTE named `hashes` of 30-bit gram hashes: one
+    * per-permutation MIN per [[graft.dedup.Dedup.perm]] entry — the
+    * mirror of [[graft.dedup.Dedup.minhashSignatures]]. */
+  def minhashSigsSql(hashes: String, numPerms: Int): String = {
+    val p = graft.dedup.Dedup.P
+    graft.dedup.Dedup.perm(numPerms).zipWithIndex.map { case ((a, b), i) =>
+      s"SELECT doc_id AS id, $i AS perm_id, MIN(($a * h + $b) % $p) AS min_hash FROM $hashes GROUP BY doc_id"
+    }.mkString("\nUNION ALL\n")
+  }
+
+  /** (id, band, bucket) rows of a signature relation `sigs`: md5 of
+    * each band's minima joined by "," in perm order — the mirror of
+    * [[graft.functions.LshBands]]. */
+  def lshBucketsSql(sigs: String, rowsPerBand: Int): String =
+    s"""SELECT id, perm_id // $rowsPerBand AS band,
+       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
+       |  FROM $sigs GROUP BY id, perm_id // $rowsPerBand""".stripMargin
+
+  /** The `sigs` and `bands` CTEs over the hashes CTE `hashes`. */
+  def lshBandsSql(hashes: String, numPerms: Int, rowsPerBand: Int): String =
+    s"""sigs AS (${minhashSigsSql(hashes, numPerms)}),
+       |bands AS (
+       |  ${lshBucketsSql("sigs", rowsPerBand)})""".stripMargin
+
+  /** e·F of ⌊log2 q⌋ for q ∈ [1, 2³⁰]: the CASE-ladder mirror of
+    * [[graft.text.LanguageModel]]'s `eF`. */
+  def eFSql(q: String): String = "CASE " + graft.text.LanguageModel.ladder
+    .map { case (thr, ef, _) => s"WHEN $q >= $thr THEN $ef" }
+    .mkString(" ") + " ELSE 0 END"
+
+  /** 2^⌊log2 q⌋ for q ∈ [1, 2³⁰]: the mirror of
+    * [[graft.text.LanguageModel]]'s `pow2`. */
+  def pow2Sql(q: String): String = "CASE " + graft.text.LanguageModel.ladder
+    .map { case (thr, _, p) => s"WHEN $q >= $thr THEN $p" }
+    .mkString(" ") + " ELSE 1 END"
+
+  /** 31·F − e·F − ⌊q·F / 2ᵉ⌋: the mirror of
+    * [[graft.text.LanguageModel.nllFp]]. */
+  def nllFpSql(q: String): String = {
+    val f = graft.text.LanguageModel.F
+    s"${31L * f} - (${eFSql(q)}) - (($q * $f) // (${pow2Sql(q)}))"
+  }
 }

@@ -568,12 +568,6 @@ object SimQueries {
     * the self pair and argmaxes per document). */
   private[queries] val Bm25ChainSql: String = {
     val lm = graft.text.LanguageModel
-    val eCase = "CASE " + lm.ladder
-      .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-      .mkString(" ") + " ELSE 0 END"
-    val pCase = "CASE " + lm.ladder
-      .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-      .mkString(" ") + " ELSE 1 END"
     val sS = graft.text.Bm25.S
     s"""docs2 AS (
        |  SELECT doc_id,
@@ -629,7 +623,7 @@ object SimQueries {
        |    FROM cand)
        |  WHERE crk <= ${graft.text.Bm25.Champions}),
        |idf AS (
-       |  SELECT term, (($eCase) + (q * ${lm.F}) // ($pCase) - ${17L * lm.F}) AS idf_fp
+       |  SELECT term, ((${OracleSql.eFSql("q")}) + (q * ${lm.F}) // (${OracleSql.pow2Sql("q")}) - ${17L * lm.F}) AS idf_fp
        |  FROM (SELECT term,
        |          LEAST(GREATEST(((n * 2 + 2) * ${lm.F}) // (df * 2 + 1), 1),
        |            ${lm.PScale}) AS q

@@ -320,11 +320,6 @@ object StreamQueries {
     OracleSql.asciiWordsSql("text")
 
   val streamNearDupEvidenceSql: String = {
-    val perms = (0 until 16).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % graft.dedup.Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${graft.dedup.Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     s"""WITH g0 AS (
        |  SELECT doc_id, unnest(list_transform(range(1, greatest(len($WS3) - 1, 1)),
        |    i -> $WS3[i] || ' ' || $WS3[i+1] || ' ' || $WS3[i+2])) AS g
@@ -333,11 +328,7 @@ object StreamQueries {
        |hashes AS (SELECT doc_id,
        |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
        |  FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", 16, 4)},
        |w AS (
        |  SELECT id, band, bucket,
        |    MIN(id) OVER (PARTITION BY band, bucket ORDER BY id
@@ -645,22 +636,10 @@ object StreamQueries {
     val w4l = OracleSql.asciiWordsSql("l")
     val qual = TextQueries.rawQualitySql
     val e4 = s"CAST(FLOOR($qual * 10000 + 0.5) AS BIGINT)"
-    val perms = (0 until 16).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % graft.dedup.Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${graft.dedup.Dedup.P}) AS min_hash FROM chashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     val bkt = OracleSql.md5BucketSql("g", 4096)
     // the LM gate's bucket hashes and fixed-point log2 ladders (the w14
     // mirror, trained on the cleaned corpus's en subset)
-    val lmECase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-      .mkString(" ") + " ELSE 0 END"
-    val lmPCase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-      .mkString(" ") + " ELSE 1 END"
     val lmPs = graft.text.LanguageModel.PScale
-    val lmTopF = 31L * graft.text.LanguageModel.F
     s"""WITH planted AS (
        |  SELECT doc_id, lang, source,
        |    substr(text, 1, 120) || '.' || chr(10) ||
@@ -701,11 +680,7 @@ object StreamQueries {
        |chashes AS (SELECT doc_id,
        |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
        |  FROM cgrams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("chashes", 16, 4)},
        |refb AS (
        |  SELECT DISTINCT band, bucket FROM bands WHERE id % 3 = 0),
        |collide AS (
@@ -767,7 +742,7 @@ object StreamQueries {
        |  LEFT JOIN lmcr USING (b2k) LEFT JOIN lmc1 USING (b1k)),
        |lmnll AS (
        |  SELECT doc_id, COUNT(*)::BIGINT AS lm_n,
-       |    SUM($lmTopF - ($lmECase) - ((q * 65536) // ($lmPCase)))::BIGINT AS lm_nll
+       |    SUM(${OracleSql.nllFpSql("q")})::BIGINT AS lm_nll
        |  FROM lmq GROUP BY doc_id),
        |kept AS (
        |  SELECT s.doc_id, s.lang, s.text
@@ -1003,16 +978,9 @@ object StreamQueries {
          |${pre}h AS (SELECT doc_id,
          |  ${OracleSql.md5BucketSql("g", 1073741824)} AS h
          |  FROM ${pre}grams),
-         |${pre}sig AS (${(0 until 16).map { p =>
-             val a = 2 * (p + 1) + 1
-             val b = (7919L * (p + 1)) % graft.dedup.Dedup.P
-             s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % " +
-               s"${graft.dedup.Dedup.P}) AS min_hash FROM ${pre}h GROUP BY doc_id"
-           }.mkString("\nUNION ALL\n")}),
+         |${pre}sig AS (${OracleSql.minhashSigsSql(s"${pre}h", 16)}),
          |${pre}bands AS (
-         |  SELECT id, perm_id // 4 AS band,
-         |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-         |  FROM ${pre}sig GROUP BY id, perm_id // 4)""".stripMargin
+         |  ${OracleSql.lshBucketsSql(s"${pre}sig", 4)})""".stripMargin
     val b2 = TextQueries.SLmB2
     val b1 = TextQueries.SLmB1
     def bigramCte(srcToks: String, name: String, scriptSrc: String) =
@@ -1156,14 +1124,7 @@ object StreamQueries {
 
   val streamLmGateSql: String = {
     val ws4 = OracleSql.asciiWordsSql("text")
-    val eCase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-      .mkString(" ") + " ELSE 0 END"
-    val pCase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-      .mkString(" ") + " ELSE 1 END"
     val pscale = graft.text.LanguageModel.PScale
-    val topF = 31L * graft.text.LanguageModel.F
     s"""WITH t AS (SELECT doc_id, lang, $ws4 AS ws FROM documents),
        |rb AS (
        |  SELECT doc_id, lang, ${OracleSql.md5BucketSql("g", LmB2)} AS b2k,
@@ -1181,7 +1142,7 @@ object StreamQueries {
        |  FROM rb LEFT JOIN cb2 USING (b2k) LEFT JOIN cb1 USING (b1k)),
        |per AS (
        |  SELECT doc_id, COUNT(*)::BIGINT AS n_grams,
-       |    SUM($topF - ($eCase) - ((q * 65536) // ($pCase)))::BIGINT AS nll_fp
+       |    SUM(${OracleSql.nllFpSql("q")})::BIGINT AS nll_fp
        |  FROM qq GROUP BY doc_id)
        |SELECT d.doc_id, coalesce(n_grams, 0)::BIGINT AS n_grams,
        |  coalesce(nll_fp, 0)::BIGINT AS nll_fp,
@@ -1349,8 +1310,7 @@ object StreamQueries {
        |  ${OracleSql.md5U60Sql("CAST(d.doc_id AS VARCHAR)")}
        |    ::BIGINT < r.rate_thr AS kept
        |FROM documents d JOIN rates r USING (source)
-       |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))
-       |  ::UBIGINT % 2 = 1
+       |WHERE ${OracleSql.md5U60Sql("CAST(d.doc_id AS VARCHAR)")} % 2 = 1
        |ORDER BY d.doc_id""".stripMargin
 
   // ---- w16: streaming per-LANGUAGE LM gate (batch twin) ------------------
@@ -1514,8 +1474,8 @@ object StreamQueries {
        |        FROM documents WHERE $key % 2 = 1))
        |SELECT d.doc_id, d.lang, d.n_toks, d.sample_key, r.rate_thr,
        |  d.sample_key < r.rate_thr AS admitted,
-       |  (('0x' || substr(md5('$FeedSeed:' || CAST(d.doc_id AS VARCHAR)),
-       |    1, 15))::UBIGINT::BIGINT % $FeedShards) AS shard
+       |  (${OracleSql.md5LongSql(s"'$FeedSeed:' || CAST(d.doc_id AS VARCHAR)")}
+       |    % $FeedShards) AS shard
        |FROM dump d JOIN plan r USING (lang)
        |ORDER BY d.doc_id""".stripMargin
   }

@@ -1002,14 +1002,7 @@ object TextQueries {
       * ('none' for the script vote, 'unknown' for langId routing). */
     def lmScoreSql(gg: String, b2: Int, b1: Int, pre: String = "",
         cntPre: String = "c", noneKey: String = "none"): String = {
-      val eCase = "CASE " + graft.text.LanguageModel.ladder
-        .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-        .mkString(" ") + " ELSE 0 END"
-      val pCase = "CASE " + graft.text.LanguageModel.ladder
-        .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-        .mkString(" ") + " ELSE 1 END"
       val pscale = graft.text.LanguageModel.PScale
-      val topF = 31L * graft.text.LanguageModel.F
       s"""${pre}qq AS (
          |  SELECT doc_id, LEAST(GREATEST(
          |    ((coalesce(c2, 0) + 1) * $pscale) // (coalesce(c1, 0) + $b2),
@@ -1021,7 +1014,7 @@ object TextQueries {
          |  LEFT JOIN ${cntPre}b1 USING (script, b1k)),
          |${pre}per AS (
          |  SELECT doc_id, COUNT(*)::BIGINT AS n_grams,
-         |    SUM($topF - ($eCase) - ((q * 65536) // ($pCase)))::BIGINT AS nll_fp
+         |    SUM(${OracleSql.nllFpSql("q")})::BIGINT AS nll_fp
          |  FROM ${pre}qq GROUP BY doc_id)""".stripMargin
     }
 
@@ -1329,16 +1322,7 @@ object TextQueries {
 
   val lmPerplexitySql: String = {
     val ws4 = OracleSql.asciiWordsSql("text")
-    // the ⌊log2⌋ CASE ladders, interpolated from the SAME constants the
-    // Spark expression chains on (LanguageModel.ladder)
-    val eCase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-      .mkString(" ") + " ELSE 0 END"
-    val pCase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-      .mkString(" ") + " ELSE 1 END"
     val pscale = graft.text.LanguageModel.PScale
-    val topF = 31L * graft.text.LanguageModel.F
     val unscorable = graft.text.LanguageModel.UnscorableKey
     s"""WITH t AS (SELECT doc_id, lang, $ws4 AS ws FROM documents),
        |gg AS (
@@ -1358,7 +1342,7 @@ object TextQueries {
        |  FROM gg LEFT JOIN c2 USING (g) LEFT JOIN c1 USING (w1), vv),
        |per AS (
        |  SELECT doc_id, COUNT(*)::BIGINT AS n_grams,
-       |    SUM($topF - ($eCase) - ((q * 65536) // ($pCase)))::BIGINT AS nll_fp
+       |    SUM(${OracleSql.nllFpSql("q")})::BIGINT AS nll_fp
        |  FROM qq GROUP BY doc_id),
        |sc AS (
        |  SELECT d.doc_id, coalesce(n_grams, 0)::BIGINT AS n_grams,
@@ -1591,14 +1575,7 @@ object TextQueries {
     * included. Shared by the t32 and w17 mirrors. */
   private[queries] val KnChainSql: String = {
     val ws4 = OracleSql.asciiWordsSql("text")
-    val eCase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-      .mkString(" ") + " ELSE 0 END"
-    val pCase = "CASE " + graft.text.LanguageModel.ladder
-      .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-      .mkString(" ") + " ELSE 1 END"
     val pscale = graft.text.LanguageModel.PScale
-    val topF = 31L * graft.text.LanguageModel.F
     s"""t AS (SELECT doc_id, lang, $ws4 AS ws FROM documents),
        |rb AS (
        |  SELECT doc_id, lang, ${OracleSql.md5BucketSql("g", KnB2)} AS b,
@@ -1629,7 +1606,7 @@ object TextQueries {
        |  LEFT JOIN n1s USING (j) LEFT JOIN conts USING (u) CROSS JOIN tt),
        |per AS (
        |  SELECT doc_id, COUNT(*)::BIGINT AS n_grams,
-       |    SUM($topF - ($eCase) - ((q * 65536) // ($pCase)))::BIGINT AS nll_fp
+       |    SUM(${OracleSql.nllFpSql("q")})::BIGINT AS nll_fp
        |  FROM qq GROUP BY doc_id)""".stripMargin
   }
 
@@ -1679,12 +1656,6 @@ object TextQueries {
   private object UnigramSql {
     val ug = graft.text.UnigramLm
     private val lm = graft.text.LanguageModel
-    private val eCase = "CASE " + lm.ladder
-      .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-      .mkString(" ") + " ELSE 0 END"
-    private val pCase = "CASE " + lm.ladder
-      .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-      .mkString(" ") + " ELSE 1 END"
     private val asciiToks =
       OracleSql.asciiWordsSql("text")
     private val pieceVals =
@@ -1694,7 +1665,7 @@ object TextQueries {
     def costSql(name: String, src: String, totSrc: String): String =
       s"""$name AS MATERIALIZED (
          |  SELECT piece,
-         |    (${31L * lm.F} - ($eCase) - ((q * ${lm.F}) // ($pCase)))::BIGINT
+         |    (${OracleSql.nllFpSql("q")})::BIGINT
          |      AS cost
          |  FROM (SELECT piece,
          |          LEAST(GREATEST((cnt * ${lm.PScale}) // tot, 1),
@@ -1996,14 +1967,7 @@ object TextQueries {
     * (the w19 stream twin trains on the even-id history). */
   private[queries] def domainReweightChainSql(where: String): String = {
     val lm = graft.text.LanguageModel
-    val eCase = "CASE " + lm.ladder
-      .map { case (thr, ef, _) => s"WHEN q >= $thr THEN $ef" }
-      .mkString(" ") + " ELSE 0 END"
-    val pCase = "CASE " + lm.ladder
-      .map { case (thr, _, p) => s"WHEN q >= $thr THEN $p" }
-      .mkString(" ") + " ELSE 1 END"
     val ws4 = OracleSql.asciiWordsSql("text")
-    val topF = 31L * lm.F
     val F = lm.F
     s"""t AS (SELECT doc_id, lang, source, $ws4 AS ws FROM documents $where),
        |gg AS (
@@ -2023,7 +1987,7 @@ object TextQueries {
        |  FROM gg LEFT JOIN c2 USING (g) LEFT JOIN c1 USING (w1), vv),
        |per AS (
        |  SELECT doc_id, COUNT(*)::BIGINT AS n_grams,
-       |    SUM($topF - ($eCase) - ((q * $F) // ($pCase)))::BIGINT AS nll_fp
+       |    SUM(${OracleSql.nllFpSql("q")})::BIGINT AS nll_fp
        |  FROM qq GROUP BY doc_id),
        |dom AS (
        |  SELECT t.source AS domain, COUNT(*)::BIGINT AS n_docs,
@@ -2316,8 +2280,7 @@ object TextQueries {
   val shuffleShardsSql: String =
     s"""WITH h AS (
        |  SELECT doc_id,
-       |    ('0x' || substr(md5('$ShuffleSeed:' || CAST(doc_id AS VARCHAR)),
-       |      1, 15))::UBIGINT::BIGINT AS k
+       |    ${OracleSql.md5LongSql(s"'$ShuffleSeed:' || CAST(doc_id AS VARCHAR)")} AS k
        |  FROM documents)
        |SELECT doc_id, k % $ShuffleShards AS shard,
        |  ROW_NUMBER() OVER (PARTITION BY k % $ShuffleShards
@@ -2355,11 +2318,6 @@ object TextQueries {
   val leakageSafeSplitSql: String = {
     val ws = OracleSql.asciiWordsSql("text")
     val h30 = OracleSql.md5BucketSql("g", 1073741824)
-    val perms = (0 until 16).map { p =>
-      val a = 2 * (p + 1) + 1
-      val b = (7919L * (p + 1)) % graft.dedup.Dedup.P
-      s"SELECT doc_id AS id, $p AS perm_id, MIN(($a * h + $b) % ${graft.dedup.Dedup.P}) AS min_hash FROM hashes GROUP BY doc_id"
-    }.mkString("\nUNION ALL\n")
     val thr = Sampling.splitThresholds(SplitFractions)
     s"""WITH RECURSIVE lake AS (
        |  SELECT doc_id, text FROM documents
@@ -2373,11 +2331,7 @@ object TextQueries {
        |grams AS (SELECT DISTINCT doc_id, g FROM g0),
        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
        |hashes AS (SELECT doc_id, $h30 AS h FROM grams),
-       |sigs AS ($perms),
-       |bands AS (
-       |  SELECT id, perm_id // 4 AS band,
-       |    md5(string_agg(min_hash::VARCHAR, ',' ORDER BY perm_id)) AS bucket
-       |  FROM sigs GROUP BY id, perm_id // 4),
+       |${OracleSql.lshBandsSql("hashes", 16, 4)},
        |cands AS (
        |  SELECT DISTINCT a.id AS ida, b.id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket

@@ -274,19 +274,54 @@ class DedupSpec extends SparkSpec {
       (0 until 4).map(c => (i * 100L + c, t))
     } ++ Seq((900L, "alpha beta gamma delta epsilon zeta eta NINE"),
       (901L, "ab"), (902L, "ab"))).toDF("doc_id", "text")
-    def run(collapse: Boolean) =
-      graft.dedup.Dedup.minhashNearDuplicates(docs, "text", "doc_id",
-          shingleSize = 3, numPerms = 16, rowsPerBand = 4, threshold = 0.5,
-          collapseExactDups = collapse)
-        .as[(Long, Long, Double)].collect().toSet
-    val direct = run(collapse = false)
-    val collapsed = run(collapse = true)
-    assert(direct.nonEmpty)
+    val pairs = graft.dedup.Dedup.minhashNearDuplicates(docs, "text", "doc_id",
+        shingleSize = 3, numPerms = 16, rowsPerBand = 4, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(pairs.nonEmpty)
     // identical copies pair at exactly 1.0; the short dup pair is absent
-    // from BOTH paths (no shingles → no signature)
-    assert(direct.exists(p => p._1 == 0L && p._2 == 1L && p._3 == 1.0))
-    assert(!direct.exists(p => p._1 == 901L))
-    assert(collapsed === direct)
+    // (no shingles → no bands)
+    assert(pairs.exists(p => p._1 == 0L && p._2 == 1L && p._3 == 1.0))
+    assert(!pairs.exists(p => p._1 == 901L))
+    // the same pairs by exact-dup collapse: one representative (min id)
+    // per distinct text through the pair machinery, its pairs expanded to
+    // every member pair, plus jaccard-1.0 pairs within each group of a
+    // text with at least one shingle
+    val rows = docs.as[(Long, String)].collect().toSeq
+    val groups = rows.groupBy(_._2).values.map(_.map(_._1).sorted).toSeq
+    val gidOf = groups.flatMap(g => g.map(_ -> g.head)).toMap
+    val members = groups.map(g => g.head -> g).toMap
+    val reps = rows.filter { case (id, _) => gidOf(id) == id }.toDF("doc_id", "text")
+    val repPairs = graft.dedup.Dedup.minhashNearDuplicates(reps, "text", "doc_id",
+        shingleSize = 3, numPerms = 16, rowsPerBand = 4, threshold = 0.5)
+      .as[(Long, Long, Double)].collect()
+    val cross = repPairs.flatMap { case (ga, gb, j) =>
+      for (a <- members(ga); b <- members(gb)) yield (a min b, a max b, j) }
+    val shingled = rows.collect { case (id, t) if t.split(" ").length >= 3 => id }.toSet
+    val within = groups.filter(g => shingled(g.head)).flatMap(g =>
+      for (a <- g; b <- g if a < b) yield (a, b, 1.0))
+    assert((cross ++ within).toSet === pairs)
+    graft.ops.StagePersists.release(spark)
+  }
+
+  test("cross-corpus pairs are the cross-parity slice of the self-join pairs") {
+    // the identity the d13 oracle states: bands and Jaccard are
+    // per-document and per-pair functions, so probing the odd docs
+    // against the even ones finds exactly the mixed-parity pairs of
+    // one self-join over all docs, oriented batch → corpus
+    val all = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text")
+    val cross = Dedup.crossCorpusNearDuplicates(
+        all.filter(col("doc_id") % 2 === 0), all.filter(col("doc_id") % 2 === 1),
+        "text", "doc_id", shingleSize = 3, numPerms = 16, rowsPerBand = 4,
+        threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    val sliced = Dedup.minhashNearDuplicates(all, "text", "doc_id",
+        shingleSize = 3, numPerms = 16, rowsPerBand = 4, threshold = 0.5)
+      .as[(Long, Long, Double)].collect()
+      .collect { case (a, b, j) if a % 2 != b % 2 =>
+        if (a % 2 == 1) (a, b, j) else (b, a, j) }.toSet
+    assert(cross.nonEmpty)
+    assert(cross === sliced)
     graft.ops.StagePersists.release(spark)
   }
 

@@ -89,8 +89,8 @@ class TokenArrayPropertySpec extends SparkSpec {
       "be the referee there — toString substitutes U+FFFD)") {
     import org.apache.spark.unsafe.types.UTF8String
     // continuation bytes, dangling leads, truncated sequences around
-    // token bytes — the family walker rule: 0x80-0xDF attempts a
-    // 2-byte decode (token iff cp in [0xE0,0xFF]) and steps 2
+    // token bytes; on each, QualityStats' token-run count equals the
+    // TokenArray size, and ASCII mode never yields more tokens
     val cases = Seq(
       Array(0x61, 0x83, 0xa0, 0x62),             // a <cont><cont> b
       Array(0x61, 0xc3, 0x61, 0x62),             // a <lead over 'a'> b

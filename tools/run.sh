@@ -2,7 +2,8 @@
 # Fast runner: compile once with sbt, then launch mains with plain java
 # (skips sbt JVM startup). Usage: tools/run.sh graft.Verify <args...>
 set -e
-CP="/root/repo/target/scala-2.13/classes:/root/repo/target/scala-2.13/test-classes"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes"
 for j in /opt/spark/jars/*.jar; do CP="$CP:$j"; done
 # scala-library comes with spark jars
 OPENS=""
@@ -13,6 +14,6 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   OPENS="$OPENS --add-opens $p=ALL-UNNAMED"
 done
-exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-24g} \
+exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-4g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"
