@@ -1,22 +1,21 @@
 package graft.cluster
 
-import graft.ops.StagePersists
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.Row
 
-/** Column clustering over profile vectors (SURVEY.md §2.9 M1-M6, M11;
-  * reference: utils/clustering.py:23-165,
+/** Column clustering over profile vectors (SURVEY.md §2.9 M1-M7,
+  * M11-M15; reference: utils/clustering.py:23-165,
   * utils/two_stage_clustering.py:127-235).
   *
-  * The data plane here is tiny by construction — one row per (table,
-  * column) — so DBSCAN runs driver-side on collected vectors exactly
-  * like the reference (there is no MLlib DBSCAN), while KMeans uses
-  * MLlib. Collecting profiles is correct at any lake scale because
-  * cardinality is #columns, not #rows (SURVEY.md §7.3).
+  * Every step runs on the driver over the collected profile rows
+  * (`Profiler.profileMany*Rows`): the data is one row per (table,
+  * column) at any lake scale (SURVEY.md §7.3), so a Spark job per step
+  * would cost more in scheduling than the arithmetic. Points are
+  * `(table::column, features)` pairs and assignments are
+  * `table::column → cluster id` maps.
   */
 object Clustering {
+
+  type Points = Seq[(String, Array[Double])]
 
   /** Default numeric profile features used as the clustering space
     * (mirrors the reference's profile-vector selection). */
@@ -25,106 +24,102 @@ object Clustering {
     "ratio_int", "ratio_float", "ratio_date", "mode_ratio",
     "dominant_pattern_ratio")
 
-  /** MinMax-scaled feature vectors (M1): one row per column, column id
-    * = "table::column" (reference: utils/clustering.py:48-50).
-    * `scaler` picks the M12 feature-block scaling: "minmax" (default),
-    * "standard" (z-score) or "maxabs" (reference:
+  /** Scaled feature points (M1), one per profile row, keyed
+    * "table::column" and sorted by that id (reference:
+    * utils/clustering.py:48-50). `scaler` picks the M12 feature-block
+    * scaling: "minmax" (default; constant feature → 0.5), "standard"
+    * (z-score with the sample std; constant feature → 0.0) or "maxabs"
+    * (max |x| = 0 → divide by 1) (reference:
     * experiment/cluster_feature_ablation_study/cluster_experiment.py:929-1047). */
-  def vectorize(profiles: DataFrame, features: Seq[String] = defaultFeatures,
-      scaler: String = "minmax"): DataFrame = {
-    if (!Set("minmax", "standard", "maxabs")(scaler))
-      throw new IllegalArgumentException(s"unknown scaler: $scaler")
-    val cleaned = profiles.select(
-      concat_ws("::", col("table"), col("column")).as("column_id") +:
-        features.map(f => coalesce(col(f).cast(DoubleType), lit(0.0)).as(f)): _*)
-    // One row per (table, column) — broadcast-sized at any lake scale —
-    // but its lineage is the full profiling agg over every table.
-    // A checkpoint (not cache) both materializes it once AND
-    // truncates the plan: everything downstream (the stats agg here,
-    // driver clustering, MLlib fits) would otherwise re-plan the
-    // ~10³-expression profiling tree on every job.
-    val checkpointed = StagePersists.checkpoint(cleaned)
-    // Scaling statistics come from ONE tiny agg and compile into plain
-    // column expressions — an MLlib Scaler.fit costs extra jobs and
-    // non-codegen transform overhead for the same arithmetic
-    // (semantics mirror MinMaxScaler / StandardScaler(withMean=true) /
-    // MaxAbsScaler, including their constant-feature conventions).
-    val statAggs = features.flatMap { f =>
-      Seq(min(col(f)).as(s"min_$f"), max(col(f)).as(s"max_$f"),
-        avg(col(f)).as(s"mean_$f"),
-        coalesce(stddev_samp(col(f)), lit(0.0)).as(s"std_$f"),
-        max(abs(col(f))).as(s"maxabs_$f"))
-    }
-    val st = checkpointed.agg(statAggs.head, statAggs.tail: _*).head()
-    def stat(n: String, f: String): Double = st.getAs[Double](s"${n}_$f")
-    val scaledCols = features.map { f =>
-      scaler match {
-        case "minmax" =>
-          val (lo, hi) = (stat("min", f), stat("max", f))
-          if (hi == lo) lit(0.5) else (col(f) - lo) / (hi - lo)
-        case "standard" =>
-          val (mu, sd) = (stat("mean", f), stat("std", f))
-          if (sd == 0.0) lit(0.0) else (col(f) - mu) / sd
-        case "maxabs" =>
-          val m = stat("maxabs", f)
-          col(f) / (if (m == 0.0) 1.0 else m)
+  def vectorize(rows: Seq[Row], features: Seq[String] = defaultFeatures,
+      scaler: String = "minmax"): Points = {
+    val pts = rows.map(r => columnId(r) -> featureVectorLocal(r, features))
+      .sortBy(_._1)
+    scaler match {
+      case "minmax" => minMaxScaleLocal(pts)
+      case "standard" => scaleEach(pts) { xs =>
+        val mu = xs.sum / xs.length
+        val sd = if (xs.length < 2) 0.0
+          else math.sqrt(xs.map(x => (x - mu) * (x - mu)).sum / (xs.length - 1))
+        if (sd == 0.0) _ => 0.0 else x => (x - mu) / sd
       }
+      case "maxabs" => scaleEach(pts) { xs =>
+        val m = xs.map(x => math.abs(x)).max
+        x => x / (if (m == 0.0) 1.0 else m)
+      }
+      case other => throw new IllegalArgumentException(s"unknown scaler: $other")
     }
-    checkpointed.select(col("column_id"),
-      org.apache.spark.ml.functions.array_to_vector(
-        array(scaledCols: _*)).as("features"))
   }
 
-  /** MLlib KMeans over profile vectors (M3), fixed seed. The
-    * distributed path — use [[kmeansLocal]] when the vectors are
-    * control-plane-sized (one row per column), which is every profile
-    * clustering: MLlib's ~20 iterative jobs dominate at that size. */
-  def kmeans(vectors: DataFrame, k: Int, seed: Long = 42L): DataFrame =
-    new KMeans().setK(k).setSeed(seed).setFeaturesCol("features")
-      .setPredictionCol("cluster_id")
-      .fit(vectors).transform(vectors)
-      .select("column_id", "cluster_id")
+  /** The "table::column" id of one collected profile row. */
+  def columnId(r: Row): String =
+    r.getAs[String]("table") + "::" + r.getAs[String]("column")
 
-  /** Seeded driver-side KMeans (kmeans++ init + Lloyd's) over a
-    * collected vector frame — the control-plane twin of [[kmeans]].
-    * Profiles are O(#columns) at any lake scale, so local iteration
-    * replaces ~20 MLlib jobs with microseconds of driver work.
-    * Cluster ids are relabeled by first appearance in `column_id`
-    * order, so output is deterministic for a fixed seed. */
-  def kmeansLocal(vectors: DataFrame, k: Int, seed: Long = 42L,
-      maxIter: Int = 50): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val pts = vectors.collect().map { r =>
-      r.getAs[String]("column_id") ->
-        r.getAs[org.apache.spark.ml.linalg.Vector]("features").toArray
-    }.toSeq
-    kmeansLocalPoints(pts, k, seed, maxIter).toDF("column_id", "cluster_id")
+  /** Numeric feature vector of one collected profile row: a null or
+    * non-numeric feature reads 0.0. */
+  def featureVectorLocal(r: Row,
+      features: Seq[String] = defaultFeatures): Array[Double] =
+    features.map { f =>
+      val i = r.fieldIndex(f)
+      if (r.isNullAt(i)) 0.0
+      else r.get(i) match {
+        case d: Double => d
+        case n: java.lang.Number => n.doubleValue()
+        case _ => 0.0
+      }
+    }.toArray
+
+  /** MinMax scaling of collected points: (x−min)/(max−min) per feature,
+    * constant feature → 0.5. */
+  def minMaxScaleLocal(pts: Points): Points = scaleEach(pts) { xs =>
+    var lo = Double.PositiveInfinity
+    var hi = Double.NegativeInfinity
+    xs.foreach { x => if (x < lo) lo = x; if (x > hi) hi = x }
+    if (hi == lo) _ => 0.5 else x => (x - lo) / (hi - lo)
   }
 
-  /** The driver core of [[kmeansLocal]] on already-collected points —
-    * the entry for callers that hold profile rows locally and skip the
-    * vectorize frame entirely. */
-  def kmeansLocalPoints(points: Seq[(String, Array[Double])], k: Int,
+  /** Per-feature scaling: `fit` sees one feature's values over all
+    * points and returns that feature's transform. */
+  private def scaleEach(pts: Points)(
+      fit: Array[Double] => Double => Double): Points =
+    if (pts.isEmpty) pts
+    else {
+      val fs = Array.tabulate(pts.head._2.length)(i =>
+        fit(pts.map(_._2(i)).toArray))
+      pts.map { case (id, v) => id -> Array.tabulate(fs.length)(i => fs(i)(v(i))) }
+    }
+
+  private def dist2(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
+  }
+
+  private def cos(a: Array[Double], b: Array[Double]): Double = {
+    val dot = a.zip(b).map { case (x, y) => x * y }.sum
+    val na = math.sqrt(a.map(x => x * x).sum)
+    val nb = math.sqrt(b.map(x => x * x).sum)
+    if (na == 0 || nb == 0) 0.0 else dot / (na * nb)
+  }
+
+  /** Seeded KMeans (M3): kmeans++ init + Lloyd's. Cluster ids are
+    * relabeled by first appearance in id order, so output is
+    * deterministic for a fixed seed. */
+  def kmeansLocalPoints(points: Points, k: Int,
       seed: Long = 42L, maxIter: Int = 50): Seq[(String, Int)] = {
-    // Sort by column_id: collect() order follows physical partitioning
+    // Sort by id: collect() order follows physical partitioning
     // (thread count, shuffle partitions), and the seeded kmeans++ draw
     // indexes into this array — without the sort the "deterministic"
     // fit silently depends on the session's parallelism.
     val pts = points.sortBy(_._1)
-    require(pts.nonEmpty, "kmeansLocal on empty vectors")
+    require(pts.nonEmpty, "kmeansLocalPoints on empty vectors")
     val kk = math.min(k, pts.length)
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
     val rng = new scala.util.Random(seed)
     // kmeans++ seeding
     val centers = scala.collection.mutable.ArrayBuffer(
       pts(rng.nextInt(pts.length))._2.clone())
     while (centers.length < kk) {
-      val dists = pts.map(p => centers.map(c => d2(p._2, c)).min)
+      val dists = pts.map(p => centers.map(c => dist2(p._2, c)).min)
       val total = dists.sum
       if (total == 0.0) centers += pts(rng.nextInt(pts.length))._2.clone()
       else {
@@ -139,7 +134,7 @@ object Clustering {
     var iter = 0
     while (changed && iter < maxIter) {
       changed = false
-      val next = pts.map(p => centers.indices.minBy(c => d2(p._2, centers(c))))
+      val next = pts.map(p => centers.indices.minBy(c => dist2(p._2, centers(c))))
       if (!java.util.Arrays.equals(next.toArray, assign)) {
         assign = next.toArray; changed = true
       }
@@ -161,60 +156,14 @@ object Clustering {
     ordered.map { case (id, c) => (id, relabel(c)) }.toSeq
   }
 
-  /** Driver-side twin of [[vectorize]]'s minmax scaler for rows that
-    * are ALREADY collected (the multi-table pipeline holds the profile
-    * rows for rule derivation anyway): identical arithmetic —
-    * (x−min)/(max−min), constant feature → 0.5 — without the
-    * checkpoint + stats-agg Spark jobs, which at control-plane size
-    * cost more in scheduling than the math. */
-  def minMaxScaleLocal(
-      pts: Seq[(String, Array[Double])]): Seq[(String, Array[Double])] = {
-    if (pts.isEmpty) pts
-    else {
-      val dim = pts.head._2.length
-      val lo = Array.fill(dim)(Double.PositiveInfinity)
-      val hi = Array.fill(dim)(Double.NegativeInfinity)
-      pts.foreach { case (_, v) =>
-        var i = 0
-        while (i < dim) {
-          if (v(i) < lo(i)) lo(i) = v(i)
-          if (v(i) > hi(i)) hi(i) = v(i)
-          i += 1
-        }
-      }
-      pts.map { case (id, v) =>
-        id -> Array.tabulate(dim)(i =>
-          if (hi(i) == lo(i)) 0.5 else (v(i) - lo(i)) / (hi(i) - lo(i)))
-      }
-    }
-  }
-
-  /** Numeric feature vector of one collected profile row, mirroring
-    * [[vectorize]]'s `coalesce(cast(f as double), 0.0)`. */
-  def featureVectorLocal(r: Row,
-      features: Seq[String] = defaultFeatures): Array[Double] =
-    features.map { f =>
-      val i = r.fieldIndex(f)
-      if (r.isNullAt(i)) 0.0
-      else r.get(i) match {
-        case d: Double => d
-        case n: java.lang.Number => n.doubleValue()
-        case _ => 0.0
-      }
-    }.toArray
-
-  /** Driver-side DBSCAN (M2) — the reference's default clusterer
-    * (eps-neighborhood density, noise dropped to cluster -1). Operates
-    * on collected vectors: O(n²) with n = #columns, intentionally local. */
-  def dbscan(points: Seq[(String, Array[Double])], eps: Double,
-      minPts: Int): Map[String, Int] = {
+  /** DBSCAN (M2) — the reference's default clusterer (eps-neighborhood
+    * density, noise dropped to cluster -1). O(n²) with n = #columns. */
+  def dbscan(points: Points, eps: Double, minPts: Int): Map[String, Int] = {
     val n = points.size
     val ids = points.map(_._1)
     val vs = points.map(_._2)
-    def dist(a: Array[Double], b: Array[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
     val neighbors = Array.tabulate(n)(i =>
-      (0 until n).filter(j => dist(vs(i), vs(j)) <= eps).toArray)
+      (0 until n).filter(j => math.sqrt(dist2(vs(i), vs(j))) <= eps).toArray)
     val labels = Array.fill(n)(-2) // -2 unvisited, -1 noise
     var cluster = -1
     for (i <- 0 until n if labels(i) == -2) {
@@ -237,103 +186,59 @@ object Clustering {
     ids.zip(labels).toMap
   }
 
-  /** DBSCAN over a vectorized profile frame; collects (tiny) then
-    * returns a DataFrame of assignments. */
-  def dbscanAssign(vectors: DataFrame, eps: Double, minPts: Int): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val pts = vectors.collect().map { r =>
-      r.getAs[String]("column_id") ->
-        r.getAs[org.apache.spark.ml.linalg.Vector]("features").toArray
-    }.toSeq
-    dbscan(pts, eps, minPts).toSeq.toDF("column_id", "cluster_id")
-  }
-
   /** k-distance curve for DBSCAN eps selection (M4; reference:
     * utils/clustering.py:9-21): sorted distance to the k-th nearest
-    * neighbor of every point. Driver-side (control plane). */
-  def kDistance(points: Seq[(String, Array[Double])], k: Int): Seq[Double] = {
-    def dist(a: Array[Double], b: Array[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
+    * neighbor of every point. */
+  def kDistance(points: Points, k: Int): Seq[Double] =
     points.map { case (_, v) =>
-      val ds = points.map { case (_, w) => dist(v, w) }.sorted
+      val ds = points.map { case (_, w) => math.sqrt(dist2(v, w)) }.sorted
       ds(math.min(k, ds.length - 1))
     }.sorted
-  }
 
   /** Rule-centric cosine assignment (M7; reference:
     * utils/strategy2_rule_centric.py:23-57): each column goes to the
     * rule whose feature unit-vector it is most cosine-similar to.
     * `rulePrototypes` maps rule name → unit vector over the same
-    * feature space as the profile vectors. */
-  def ruleCentricAssign(vectors: DataFrame,
-      rulePrototypes: Map[String, Array[Double]]): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      val na = math.sqrt(a.map(x => x * x).sum)
-      val nb = math.sqrt(b.map(x => x * x).sum)
-      if (na == 0 || nb == 0) 0.0 else dot / (na * nb)
-    }
+    * feature space as the points. Returns (id, rule, cosine) by id. */
+  def ruleCentricAssign(points: Points,
+      rulePrototypes: Map[String, Array[Double]]): Seq[(String, String, Double)] = {
     val protos = rulePrototypes.toSeq.sortBy(_._1)
-    vectors.collect().toSeq.map { r =>
-      val id = r.getAs[String]("column_id")
-      val v = r.getAs[org.apache.spark.ml.linalg.Vector]("features").toArray
+    points.sortBy(_._1).map { case (id, v) =>
       val (best, score) = protos.map { case (n, p) => (n, cos(v, p)) }
         .maxBy { case (n, s) => (s, n) }
       (id, best, score)
-    }.toDF("column_id", "rule", "cosine")
+    }
   }
+
+  /** The assigned points grouped by cluster id. */
+  private def members(points: Points,
+      assign: Map[String, Int]): Map[Int, Points] =
+    points.filter(p => assign.contains(p._1)).groupBy(p => assign(p._1))
 
   /** Within-cluster outlier columns (M14; reference:
     * rules/cluster_matcher.py:146-175): columns whose average cosine
-    * similarity to their cluster peers falls below `threshold`.
-    * Driver-side pairwise over collected vectors (control plane). */
-  def clusterOutlierColumns(vectors: DataFrame, assignments: DataFrame,
-      threshold: Double = 0.5): Seq[(String, Int, Double)] = {
-    val joined = vectors.join(assignments, "column_id").collect().map { r =>
-      (r.getAs[String]("column_id"), r.getAs[Int]("cluster_id"),
-        r.getAs[org.apache.spark.ml.linalg.Vector]("features").toArray)
-    }
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      val na = math.sqrt(a.map(x => x * x).sum)
-      val nb = math.sqrt(b.map(x => x * x).sum)
-      if (na == 0 || nb == 0) 0.0 else dot / (na * nb)
-    }
-    joined.groupBy(_._2).toSeq.flatMap { case (cluster, members) =>
-      if (members.length < 2) Nil
-      else members.toSeq.map { case (id, _, v) =>
-        val avgSim = members.filter(_._1 != id)
-          .map(m => cos(v, m._3)).sum / (members.length - 1)
+    * similarity to their cluster peers falls below `threshold`. */
+  def clusterOutlierColumns(points: Points, assign: Map[String, Int],
+      threshold: Double = 0.5): Seq[(String, Int, Double)] =
+    members(points, assign).toSeq.flatMap { case (cluster, ms) =>
+      if (ms.length < 2) Nil
+      else ms.map { case (id, v) =>
+        val avgSim = ms.filter(_._1 != id)
+          .map(m => cos(v, m._2)).sum / (ms.length - 1)
         (id, cluster, avgSim)
       }.filter(_._3 < threshold)
     }.sortBy(_._1)
-  }
 
   /** Cluster-merge suggestions (M15; reference:
     * rules/cluster_matcher.py:177-198): cluster pairs whose centroid
     * cosine similarity exceeds `threshold`. */
-  def mergeSuggestions(vectors: DataFrame, assignments: DataFrame,
+  def mergeSuggestions(points: Points, assign: Map[String, Int],
       threshold: Double = 0.75): Seq[(Int, Int, Double)] = {
-    val joined = vectors.join(assignments, "column_id").collect().map { r =>
-      (r.getAs[Int]("cluster_id"),
-        r.getAs[org.apache.spark.ml.linalg.Vector]("features").toArray)
-    }
-    val centroids = joined.groupBy(_._1).map { case (c, ms) =>
-      val dim = ms.head._2.length
-      val sum = ms.map(_._2).foldLeft(new Array[Double](dim)) { (acc, v) =>
-        acc.indices.foreach(i => acc(i) += v(i)); acc
-      }
+    val centroids = members(points, assign).map { case (c, ms) =>
+      val sum = new Array[Double](ms.head._2.length)
+      ms.foreach { case (_, v) => sum.indices.foreach(i => sum(i) += v(i)) }
       c -> sum.map(_ / ms.length)
     }.toSeq.sortBy(_._1)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      val na = math.sqrt(a.map(x => x * x).sum)
-      val nb = math.sqrt(b.map(x => x * x).sum)
-      if (na == 0 || nb == 0) 0.0 else dot / (na * nb)
-    }
     for {
       ((ci, vi), i) <- centroids.zipWithIndex
       (cj, vj) <- centroids.drop(i + 1)
@@ -341,64 +246,61 @@ object Clustering {
     } yield (ci, cj, sim)
   }
 
-  /** Adjusted Rand Index between two assignments, computed from
-    * join-based contingency counts (M11; reference ARI at
-    * experiment/cluster_feature_ablation_study/cluster_experiment.py:1118-1130). */
-  def adjustedRandIndex(a: DataFrame, b: DataFrame): Double = {
-    val joined = a.withColumnRenamed("cluster_id", "ca")
-      .join(b.withColumnRenamed("cluster_id", "cb"), "column_id")
-    def comb2(c: org.apache.spark.sql.Column) = c * (c - 1) / 2.0
-    val n = joined.count().toDouble
+  /** Contingency table of two assignments over the ids both assign:
+    * (cluster in a, cluster in b) → count. */
+  private def contingency(a: Map[String, Int],
+      b: Map[String, Int]): Map[(Int, Int), Int] =
+    a.toSeq.flatMap { case (id, ca) => b.get(id).map(ca -> _) }
+      .groupBy(identity).map { case (cell, ids) => cell -> ids.size }
+
+  /** Adjusted Rand Index between two assignments (M11; reference ARI
+    * at experiment/cluster_feature_ablation_study/cluster_experiment.py:1118-1130). */
+  def adjustedRandIndex(a: Map[String, Int], b: Map[String, Int]): Double = {
+    val cells = contingency(a, b)
+    val n = cells.values.sum.toDouble
     if (n < 2) return 1.0
-    val sumIj = joined.groupBy("ca", "cb").count()
-      .agg(sum(comb2(col("count")))).head().getDouble(0)
-    val sumI = joined.groupBy("ca").count()
-      .agg(sum(comb2(col("count")))).head().getDouble(0)
-    val sumJ = joined.groupBy("cb").count()
-      .agg(sum(comb2(col("count")))).head().getDouble(0)
-    val expected = sumI * sumJ / (n * (n - 1) / 2.0)
+    def comb2(c: Double) = c * (c - 1) / 2.0
+    def sumComb(counts: Iterable[Int]) = counts.map(c => comb2(c)).sum
+    val sumIj = sumComb(cells.values)
+    val sumI = sumComb(cells.groupMapReduce(_._1._1)(_._2)(_ + _).values)
+    val sumJ = sumComb(cells.groupMapReduce(_._1._2)(_._2)(_ + _).values)
+    val expected = sumI * sumJ / comb2(n)
     val maxIdx = (sumI + sumJ) / 2.0
     if (maxIdx == expected) 1.0 else (sumIj - expected) / (maxIdx - expected)
   }
 
   /** Normalized Mutual Information between two assignments, from the
-    * same join-based contingency counts as ARI (M11; reference NMI at
+    * same contingency table as ARI (M11; reference NMI at
     * experiment/cluster_feature_ablation_study/cluster_experiment.py:1118-1130).
     * Arithmetic-mean normalization (sklearn's default). */
-  def normalizedMutualInfo(a: DataFrame, b: DataFrame): Double = {
-    val joined = a.withColumnRenamed("cluster_id", "ca")
-      .join(b.withColumnRenamed("cluster_id", "cb"), "column_id")
-      .groupBy("ca", "cb").count()
-      .collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
-    val n = joined.map(_._3).sum.toDouble
+  def normalizedMutualInfo(a: Map[String, Int], b: Map[String, Int]): Double = {
+    val cells = contingency(a, b)
+    val n = cells.values.sum.toDouble
     if (n == 0) return 1.0
-    val pa = joined.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).sum / n }
-    val pb = joined.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).sum / n }
+    val pa = cells.groupMapReduce(_._1._1)(_._2 / n)(_ + _)
+    val pb = cells.groupMapReduce(_._1._2)(_._2 / n)(_ + _)
     def entropy(p: Iterable[Double]): Double =
       -p.filter(_ > 0).map(x => x * math.log(x)).sum
-    val mi = joined.map { case (i, j, c) =>
+    val mi = cells.map { case ((i, j), c) =>
       val pij = c / n
-      if (pij > 0) pij * math.log(pij / (pa(i) * pb(j))) else 0.0
+      pij * math.log(pij / (pa(i) * pb(j)))
     }.sum
     val ha = entropy(pa.values)
     val hb = entropy(pb.values)
     if (ha == 0 && hb == 0) 1.0
-    else if (ha + hb == 0) 0.0
     else mi / ((ha + hb) / 2.0)
   }
 
   /** Pairing accuracy (M11): share of same-named columns from different
     * tables landing in the same cluster (reference's split-table
-    * metric). */
-  def pairingAccuracy(assignments: DataFrame): Double = {
-    val parts = assignments
-      .withColumn("table", split(col("column_id"), "::").getItem(0))
-      .withColumn("column", split(col("column_id"), "::").getItem(1))
-    val pairs = parts.as("x").join(parts.as("y"),
-      col("x.column") === col("y.column") && col("x.table") < col("y.table"))
-    val total = pairs.count()
-    if (total == 0) 1.0
-    else pairs.filter(col("x.cluster_id") === col("y.cluster_id")).count()
-      .toDouble / total
+    * metric). Ids are "table::column". */
+  def pairingAccuracy(assign: Map[String, Int]): Double = {
+    val byColumn = assign.toSeq.collect { case (id, c) if id.contains("::") =>
+      val Array(t, col) = id.split("::", 2)
+      (t, col, c)
+    }.groupBy(_._2).values
+    val pairs = byColumn.toSeq.flatMap(ms =>
+      for (x <- ms; y <- ms if x._1 < y._1) yield x._3 == y._3)
+    if (pairs.isEmpty) 1.0 else pairs.count(identity).toDouble / pairs.size
   }
 }

@@ -1,7 +1,6 @@
 package graft.cluster
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
 /** Two-stage clustering with pluggable name embeddings (SURVEY.md §2.9
   * M5/M6; reference: utils/two_stage_clustering.py:73-235 — stage 1
@@ -56,33 +55,20 @@ object TwoStage {
     }.toMap
   }
 
-  /** Full two-stage pipeline: profiles → (column_id, table_group,
-    * cluster_id) where cluster ids are per-group DBSCAN results made
-    * globally unique. */
-  def cluster(profiles: DataFrame, embedder: NameEmbedder = new CharNgramEmbedder(),
+  /** Full two-stage pipeline over collected profile rows: (column_id,
+    * table_group, cluster_id) by column_id, where cluster ids are
+    * per-group DBSCAN results made globally unique (noise stays -1). */
+  def cluster(rows: Seq[Row], embedder: NameEmbedder = new CharNgramEmbedder(),
       tableEps: Double = 0.4, columnEps: Double = 0.5, minPts: Int = 1,
-      features: Seq[String] = Clustering.defaultFeatures): DataFrame = {
-    val spark = profiles.sparkSession
-    import spark.implicits._
-    val tables = profiles.select("table").distinct().collect()
-      .map(_.getString(0)).toSeq
+      features: Seq[String] = Clustering.defaultFeatures): Seq[(String, Int, Int)] = {
+    val tables = rows.map(_.getAs[String]("table")).distinct
     val groups = tableGroups(tables, embedder, tableEps, minPts)
-    val vecs = Clustering.vectorize(profiles, features).collect().map { r =>
-      val id = r.getAs[String]("column_id")
-      val v = r.getAs[org.apache.spark.ml.linalg.Vector]("features").toArray
-      (id, id.split("::")(0), v)
-    }
-    val assignments = vecs.groupBy { case (_, t, _) => groups(t) }
-      .toSeq.sortBy(_._1)
-      .flatMap { case (g, members) =>
-        val local = Clustering.dbscan(
-          members.toSeq.map { case (id, _, v) => (id, v) }, columnEps, minPts)
-        local.toSeq.map { case (id, c) => (id, g, c) }
-      }
-    assignments.toDF("column_id", "table_group", "local_cluster")
-      .withColumn("cluster_id",
-        when(col("local_cluster") >= 0,
-          col("table_group") * 1000 + col("local_cluster")).otherwise(-1))
-      .select("column_id", "table_group", "cluster_id")
+    Clustering.vectorize(rows, features)
+      .groupBy { case (id, _) => groups(id.split("::")(0)) }
+      .toSeq.flatMap { case (g, members) =>
+        Clustering.dbscan(members, columnEps, minPts).map { case (id, c) =>
+          (id, g, if (c >= 0) g * 1000 + c else -1)
+        }
+      }.sortBy(_._1)
   }
 }

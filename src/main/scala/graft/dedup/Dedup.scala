@@ -69,6 +69,16 @@ object Dedup {
 
   // ---- shingling --------------------------------------------------------
 
+  /** Opt-in tripwire for the [[wordShingles]] one-row-per-id contract:
+    * with `-Dgraft.debug.uniqueIds=true` every shingling pass verifies
+    * id uniqueness lazily (an id-partitioned window count + raise_error
+    * — ONE extra shuffle per call, debug-mode price) and fails LOUDLY
+    * on the first duplicate instead of silently inflating overlap
+    * counts downstream (the exact failure mode the sf10 rehearsal hit:
+    * colliding doc_ids → 2× `common` → ANSI divide-by-zero in d7). */
+  private[graft] def debugUniqueIds: Boolean =
+    sys.props.get("graft.debug.uniqueIds").contains("true")
+
   /** (id, shingle) pairs: lowercased word `n`-grams, distinct per doc.
     * The word array is materialized ONCE per row before the transform —
     * referencing the split expression inside the lambda would re-split
@@ -85,16 +95,6 @@ object Dedup {
     * would cost a full groupBy job per call, so the contract stays
     * documentation; callers that cannot guarantee uniqueness must
     * `dropDuplicates(idCol)` first. */
-  /** Opt-in tripwire for the [[wordShingles]] one-row-per-id contract:
-    * with `-Dgraft.debug.uniqueIds=true` every shingling pass verifies
-    * id uniqueness lazily (an id-partitioned window count + raise_error
-    * — ONE extra shuffle per call, debug-mode price) and fails LOUDLY
-    * on the first duplicate instead of silently inflating overlap
-    * counts downstream (the exact failure mode the sf10 rehearsal hit:
-    * colliding doc_ids → 2× `common` → ANSI divide-by-zero in d7). */
-  private[graft] def debugUniqueIds: Boolean =
-    sys.props.get("graft.debug.uniqueIds").contains("true")
-
   def wordShingles(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
     val keyed = df.select(col(idCol).as("id"), words(col(textCol)).as("__ws"))
     val checked =
@@ -136,11 +136,6 @@ object Dedup {
 
   // ---- n-gram Jaccard near-duplicates ----------------------------------
 
-  /** Near-duplicate pairs by shingle-set Jaccard ≥ `threshold`.
-    * Inverted-index self-join on shingles; shingles occurring in more
-    * than `maxDocFreq` docs are dropped (stop-shingles) to bound the
-    * candidate blowup — the standard trick for quadratic-safe similarity
-    * joins at scale. Pairs are emitted once (idA < idB). */
   /** Shared inverted-index pair machinery for [[jaccardPairs]] and
     * [[containmentPairs]]: (ida, idb, common, sza, szb) for every pair
     * sharing a sub-`maxDocFreq` shingle, ida < idb, sizes ≥ 1 by
@@ -164,6 +159,11 @@ object Dedup {
       .join(sizes.withColumnRenamed("id", "idb").withColumnRenamed("sz", "szb"), "idb")
   }
 
+  /** Near-duplicate pairs by shingle-set Jaccard ≥ `threshold`.
+    * Inverted-index self-join on shingles; shingles occurring in more
+    * than `maxDocFreq` docs are dropped (stop-shingles) to bound the
+    * candidate blowup — the standard trick for quadratic-safe similarity
+    * joins at scale. Pairs are emitted once (idA < idB). */
   def jaccardPairs(shingles: DataFrame, threshold: Double,
       maxDocFreq: Long = 1000): DataFrame =
     pairCommonCounts(shingles, maxDocFreq)
@@ -482,6 +482,16 @@ object Dedup {
       .filter(col("df") >= minDf)
   }
 
+  /** The original higher-order Column formulation of the positioned
+    * window-gram array — retained as the executable REFERENCE the
+    * [[graft.functions.PosShingles]] kernel is spec-pinned against. */
+  private[graft] def posShinglesReference(ws: Column, k: Int): Column =
+    when(size(ws) >= k,
+      transform(sequence(lit(0), size(ws) - k),
+        i => struct(i.as("pos"),
+          array_join(slice(ws, i + lit(1), lit(k)), " ").as("g"))))
+      .otherwise(array().cast("array<struct<pos:int,g:string>>"))
+
   /** Exact-substring dedup REWRITE (Lee et al. 2022 §4 at k-token
     * window grain): every k-token window whose text already occurred
     * at an earlier global position — (doc, pos) lexicographic, first
@@ -499,16 +509,6 @@ object Dedup {
     * pair join, so corpus-wide boilerplate costs one row per
     * occurrence, not a quadratic pair set) → per-doc covered-position
     * union (arrays bounded by document length) → map-side rewrite. */
-  /** The original higher-order Column formulation of the positioned
-    * window-gram array — retained as the executable REFERENCE the
-    * [[graft.functions.PosShingles]] kernel is spec-pinned against. */
-  private[graft] def posShinglesReference(ws: Column, k: Int): Column =
-    when(size(ws) >= k,
-      transform(sequence(lit(0), size(ws) - k),
-        i => struct(i.as("pos"),
-          array_join(slice(ws, i + lit(1), lit(k)), " ").as("g"))))
-      .otherwise(array().cast("array<struct<pos:int,g:string>>"))
-
   def exactSubstringDedup(df: DataFrame, textCol: String, idCol: String,
       k: Int = 10): DataFrame = {
     val ws = col("__ws")

@@ -3,8 +3,7 @@ package graft.pipeline
 import graft.cluster.Clustering
 import graft.profile.Profiler
 import graft.rules._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The reference's multi-table mode end to end (SURVEY.md §3.2;
   * reference: main.py --mode multi — profile every table, cluster
@@ -23,28 +22,16 @@ object MultiTablePipeline {
 
   final case class BoundRule(table: String, rule: RuleSpec, clusterId: Int)
 
-  /** Rules shared by a cluster: generated from each member profile,
-    * kept when every member's profile would generate a structurally
-    * equal rule kind for its own column (the reference's shared-rule
-    * containment, rules/evaluation.py:266-300), then re-bound to every
-    * member column. Range/length params widen to the cluster's hull so
-    * the shared rule is valid for all members. */
-  def sharedClusterRules(profiles: DataFrame, assignments: DataFrame): Seq[BoundRule] = {
-    val assign = assignments.collect().map(r =>
-      r.getAs[String]("column_id") -> r.getAs[Int]("cluster_id")).toMap
-    sharedClusterRulesLocal(profiles.collect().toSeq, assign)
-  }
-
-  /** [[sharedClusterRules]] on ALREADY-collected profile rows — the
-    * pipeline holds them for the violation-scan binding anyway, and at
-    * control-plane size (one row per column) the DataFrame join +
-    * second collect cost more in job scheduling than the derivation. */
-  def sharedClusterRulesLocal(rows: Seq[org.apache.spark.sql.Row],
+  /** Rules shared by a cluster, over the collected profile rows and a
+    * `table::column → cluster id` assignment: generated from each
+    * member profile, kept when every member's profile would generate a
+    * structurally equal rule kind for its own column (the reference's
+    * shared-rule containment, rules/evaluation.py:266-300), then
+    * re-bound to every member column. Range/length params widen to the
+    * cluster's hull so the shared rule is valid for all members. */
+  def sharedClusterRulesLocal(rows: Seq[Row],
       assign: Map[String, Int]): Seq[BoundRule] = {
-    val withCid = rows.flatMap { r =>
-      val id = r.getAs[String]("table") + "::" + r.getAs[String]("column")
-      assign.get(id).map(cid => (cid, r))
-    }
+    val withCid = rows.flatMap(r => assign.get(Clustering.columnId(r)).map(cid => (cid, r)))
     withCid.groupBy(_._1).toSeq.flatMap { case (cid, tagged) =>
       val members = tagged.map(_._2)
       if (cid < 0 || members.length < 2) Nil // noise / singleton clusters
@@ -111,16 +98,10 @@ object MultiTablePipeline {
     // One collect; everything between the profile and the violation
     // scans — minmax scaling, DBSCAN, shared-rule derivation — is
     // control-plane (one datum per column) and runs on the driver.
-    // The Spark twins (vectorize/dbscanAssign) spend ~0.5s of job
-    // scheduling on an 18-row frame for the same arithmetic.
     val profRows = Profiler.profileManyRows(trainSide.toSeq.sortBy(_._1),
         graft.profile.ProfilerConfig(exact = false, features = features),
         columns = consumed)
-    val pts = profRows.map { r =>
-      (r.getAs[String]("table") + "::" + r.getAs[String]("column")) ->
-        Clustering.featureVectorLocal(r)
-    }
-    val assign = Clustering.dbscan(Clustering.minMaxScaleLocal(pts), eps, minPts)
+    val assign = Clustering.dbscan(Clustering.vectorize(profRows), eps, minPts)
     val bound = sharedClusterRulesLocal(profRows, assign)
     val scans = bound.groupBy(_.table).toSeq.sortBy(_._1).map { case (t, brs) =>
       ViolationScanner.scan(tables(t), t, brs.map(_.rule).distinct,

@@ -365,12 +365,6 @@ object Profiler {
         transform(array_sort(col("kw")), x => x.getField("word")).as("top_keywords"))
   }
 
-  /** Like [[profile]] but picks exact vs sketch statistics from the
-    * data size: exact quartiles/distinct-chars below `exactThreshold`
-    * rows (small data, oracle-comparable), HLL + percentile_approx
-    * above (exact `percentile` materializes a value→count map per
-    * partition — measured 400 s on 600 k×11 values vs ~2 s for the
-    * sketch; at 100 TB only sketches are viable). */
   /** The exact/sketch flag only reaches the quartiles and
     * distinct-chars branches; when neither feature is requested the
     * sizing counts (a full job per table — through the rebalance
@@ -402,26 +396,34 @@ object Profiler {
     org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession, stripped).count()
   }
 
+  /** The `*Auto` entry points' exact/sketch decision, sized by the
+    * largest of `dfs`: exact at or below `exactThreshold` rows, sketch
+    * above, and exact without counting when no requested feature reads
+    * the flag. */
+  private def autoConfig(dfs: Seq[DataFrame], exactThreshold: Long,
+      features: Set[String]): ProfilerConfig = {
+    val n = if (exactnessMatters(features)) Some(dfs.map(cheapCount).max) else None
+    ProfilerConfig(exact = n.forall(_ <= exactThreshold), features = features,
+      maxGroupRows = n)
+  }
+
+  /** Like [[profile]] but picks exact vs sketch statistics from the
+    * data size: exact quartiles/distinct-chars below `exactThreshold`
+    * rows (small data, oracle-comparable), HLL + percentile_approx
+    * above (exact `percentile` materializes a value→count map per
+    * partition — measured 400 s on 600 k×11 values vs ~2 s for the
+    * sketch; at 100 TB only sketches are viable). */
   def profileAuto(df: DataFrame, table: String,
       exactThreshold: Long = 200000L,
-      features: Set[String] = AllFeatures): DataFrame = {
-    val n = if (exactnessMatters(features)) Some(cheapCount(df)) else None
-    val exact = n.forall(_ <= exactThreshold)
-    profile(df, table,
-      ProfilerConfig(exact = exact, features = features, maxGroupRows = n))
-  }
+      features: Set[String] = AllFeatures): DataFrame =
+    profile(df, table, autoConfig(Seq(df), exactThreshold, features))
 
   /** [[profileMany]] with the exact/sketch switch of [[profileAuto]],
     * decided by the largest table in the set. */
   def profileManyAuto(tables: Seq[(String, DataFrame)],
       exactThreshold: Long = 200000L,
-      features: Set[String] = AllFeatures): DataFrame = {
-    val n = if (exactnessMatters(features))
-      Some(tables.map(t => cheapCount(t._2)).max) else None
-    val exact = n.forall(_ <= exactThreshold)
-    profileMany(tables,
-      ProfilerConfig(exact = exact, features = features, maxGroupRows = n))
-  }
+      features: Set[String] = AllFeatures): DataFrame =
+    profileMany(tables, autoConfig(tables.map(_._2), exactThreshold, features))
 
   /** Profile every column of `df`. Returns one row per column, schema
     * matching [[graft.model.ColumnProfile]]. */
@@ -464,14 +466,9 @@ object Profiler {
   def profileManyAutoRows(tables: Seq[(String, DataFrame)],
       exactThreshold: Long = 200000L,
       features: Set[String] = AllFeatures,
-      columns: Seq[String] = Nil): Seq[org.apache.spark.sql.Row] = {
-    val n = if (exactnessMatters(features))
-      Some(tables.map(t => cheapCount(t._2)).max) else None
-    val exact = n.forall(_ <= exactThreshold)
-    profileManyRows(tables,
-      ProfilerConfig(exact = exact, features = features, maxGroupRows = n),
+      columns: Seq[String] = Nil): Seq[org.apache.spark.sql.Row] =
+    profileManyRows(tables, autoConfig(tables.map(_._2), exactThreshold, features),
       columns)
-  }
 
   // ---- incremental (mergeable) profiling --------------------------------
 

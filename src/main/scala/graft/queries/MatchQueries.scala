@@ -94,17 +94,13 @@ object MatchQueries {
     // char-explode / quartile / keyword branches here would dominate
     // the runtime for features nobody consumes. Rows: the profile is
     // consumed once, on the driver — everything after the one profiling
-    // job (minmax scaling, seeded kmeans++, size rollup) is local,
-    // identical arithmetic to the vectorize/kmeansLocal frame path.
+    // job (minmax scaling, seeded kmeans++, size rollup) is local.
     val profRows = Profiler.profileManyAutoRows(
       Seq("customer", "supplier", "part", "orders", "nation")
         .map(t => t -> Tables.load(spark, dir, t)),
       features = Set("mode", "pattern"),
       columns = "table" +: "column" +: Clustering.defaultFeatures)
-    val pts = Clustering.minMaxScaleLocal(profRows.map(r =>
-      (r.getAs[String]("table") + "::" + r.getAs[String]("column")) ->
-        Clustering.featureVectorLocal(r)))
-    val sizes = Clustering.kmeansLocalPoints(pts, k = 4)
+    val sizes = Clustering.kmeansLocalPoints(Clustering.vectorize(profRows), k = 4)
       .groupBy(_._2).map { case (cid, ms) => (cid, ms.size.toLong) }
       .toSeq.sortBy(_._1)
     import spark.implicits._
@@ -119,14 +115,12 @@ object MatchQueries {
         .map(t => t -> Tables.load(spark, dir, t)),
       features = Set("mode", "pattern"),
       columns = "table" +: "column" +: Clustering.defaultFeatures)
-    // sorted: DBSCAN cluster NUMBERING follows visit order; pinning the
-    // visit order to column_id makes the labels independent of collect
-    // partitioning (membership never depended on it)
-    val pts = Clustering.minMaxScaleLocal(profRows.map(r =>
-      (r.getAs[String]("table") + "::" + r.getAs[String]("column")) ->
-        Clustering.featureVectorLocal(r))).sortBy(_._1)
+    // vectorize sorts by column_id: DBSCAN cluster NUMBERING follows
+    // visit order, so the labels do not depend on collect partitioning
+    // (membership never did)
     import spark.implicits._
-    Clustering.dbscan(pts, eps = 0.5, minPts = 2).toSeq.sortBy(_._1)
+    Clustering.dbscan(Clustering.vectorize(profRows), eps = 0.5, minPts = 2)
+      .toSeq.sortBy(_._1)
       .toDF("column_id", "cluster_id")
   }
 
@@ -611,7 +605,6 @@ object MatchQueries {
       .mkString(",\n  ")
     def d2(a: String, b: String): String =
       fs.map(f => s"($a.$f - $b.$f) * ($a.$f - $b.$f)").mkString(" + ")
-    def fsOf(a: String): String = fs.map(f => s"$a.$f AS $f").mkString(", ")
     // seeding: center j+1 from the D² walk over min distance to 1..j
     val seeds = (2 to 4).map { j =>
       val aliases = (1 until j).map(t => s"cen$t c$t").mkString(", ")

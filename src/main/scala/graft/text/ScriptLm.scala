@@ -51,10 +51,6 @@ object ScriptLm {
     * order; a script's position is its dense-array segment index. */
   val Scripts: Seq[String] = Seq("arabic", "cjk", "cyrillic", "greek", "latin")
 
-  /** Script name → dense segment index; 'none' (and any unknown) → −1,
-    * the unscorable route. */
-  def scriptIndex(script: Column): Column = keyIndex(script, Scripts)
-
   /** Routing key → dense segment index over an arbitrary key set (per
     * LANGUAGE: the sorted [[TextAnalysis.markers]] codes); any value
     * outside `keys` → −1, the unscorable route. */

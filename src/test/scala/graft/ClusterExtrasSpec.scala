@@ -9,15 +9,53 @@ import org.apache.spark.sql.functions._
 class ClusterExtrasSpec extends SparkSpec {
 
   test("NMI: identical, permuted, and independent assignments") {
-    import spark.implicits._
-    val a = Seq(("x", 0), ("y", 0), ("z", 1), ("w", 1)).toDF("column_id", "cluster_id")
+    val a = Map("x" -> 0, "y" -> 0, "z" -> 1, "w" -> 1)
     // same partition under different labels → NMI 1
-    val b = Seq(("x", 5), ("y", 5), ("z", 9), ("w", 9)).toDF("column_id", "cluster_id")
+    val b = Map("x" -> 5, "y" -> 5, "z" -> 9, "w" -> 9)
     assert(math.abs(Clustering.normalizedMutualInfo(a, b) - 1.0) < 1e-9)
     assert(math.abs(Clustering.normalizedMutualInfo(a, a) - 1.0) < 1e-9)
     // one big cluster vs the split → MI 0
-    val c = Seq(("x", 0), ("y", 0), ("z", 0), ("w", 0)).toDF("column_id", "cluster_id")
+    val c = Map("x" -> 0, "y" -> 0, "z" -> 0, "w" -> 0)
     assert(Clustering.normalizedMutualInfo(a, c) === 0.0)
+  }
+
+  test("ARI and NMI of a split cluster match the sklearn definitions") {
+    // [0,0,1,1] vs [0,0,1,2]: sklearn's adjusted_rand_score = 4/7 and
+    // normalized_mutual_info_score (arithmetic mean) = 0.8
+    val a = Map("p" -> 0, "q" -> 0, "r" -> 1, "s" -> 1)
+    val b = Map("p" -> 0, "q" -> 0, "r" -> 1, "s" -> 2)
+    assert(math.abs(Clustering.adjustedRandIndex(a, b) - 4.0 / 7) < 1e-12)
+    assert(math.abs(Clustering.normalizedMutualInfo(a, b) - 0.8) < 1e-12)
+    // ids only one side assigns are left out of the contingency table
+    assert(Clustering.adjustedRandIndex(a, b + ("extra" -> 7)) ===
+      Clustering.adjustedRandIndex(a, b))
+  }
+
+  test("the driver-side clustering steps start no Spark job") {
+    val rows = Profiler.profileManyAutoRows(
+      Seq("customer", "supplier", "nation").map(t => t -> Tables.load(spark, sf, t)),
+      features = Set("mode", "pattern"),
+      columns = "table" +: "column" +: Clustering.defaultFeatures)
+    val protos = Map(
+      "is_unique" -> Array.tabulate(Clustering.defaultFeatures.size)(i =>
+        if (i == 1) 1.0 else 0.0),
+      "is_nullable" -> Array.tabulate(Clustering.defaultFeatures.size)(i =>
+        if (i == 0) 1.0 else 0.0))
+    var pts: Seq[(String, Array[Double])] = Nil
+    val jobs = jobsOf {
+      pts = Clustering.vectorize(rows)
+      val db = Clustering.dbscan(pts, eps = 0.5, minPts = 2)
+      val km = Clustering.kmeansLocalPoints(pts, k = 4).toMap
+      Clustering.ruleCentricAssign(pts, protos)
+      Clustering.clusterOutlierColumns(pts, km)
+      Clustering.mergeSuggestions(pts, km)
+      Clustering.adjustedRandIndex(db, km)
+      Clustering.normalizedMutualInfo(db, km)
+      Clustering.pairingAccuracy(km)
+    }
+    assert(jobs === 0)
+    assert(pts.map(_._1) === pts.map(_._1).sorted)
+    assert(pts.size === rows.size)
   }
 
   test("char-ngram embedder: similar names closer than dissimilar") {
@@ -32,13 +70,12 @@ class ClusterExtrasSpec extends SparkSpec {
 
   test("two-stage clustering groups split tables and clusters columns") {
     val need = Set("mode", "pattern")
-    val profiles = Seq("customer", "supplier", "nation")
-      .map(t => Profiler.profileAuto(Tables.load(spark, sf, t), t, features = need))
-      .reduce(_.unionByName(_))
-    val out = TwoStage.cluster(profiles).collect()
-    assert(out.length === profiles.count())
+    val rows = Profiler.profileManyAutoRows(Seq("customer", "supplier", "nation")
+      .map(t => t -> Tables.load(spark, sf, t)), features = need)
+    val out = TwoStage.cluster(rows)
+    assert(out.length === rows.size)
     // every column got a table group; ids are "table::column"
-    val groups = out.map(r => r.getString(0).split("::")(0) -> r.getInt(1)).toMap
+    val groups = out.map(r => r._1.split("::")(0) -> r._2).toMap
     assert(groups.keySet === Set("customer", "supplier", "nation"))
   }
 
@@ -64,28 +101,41 @@ class ClusterExtrasSpec extends SparkSpec {
   }
 
   test("rule-centric assignment picks the most similar prototype") {
-    import spark.implicits._
-    import org.apache.spark.ml.linalg.Vectors
-    val vecs = Seq(
-      ("t::unique_col", Vectors.dense(1.0, 0.0)),
-      ("t::nullable_col", Vectors.dense(0.0, 1.0))).toDF("column_id", "features")
+    val pts = Seq(
+      "t::unique_col" -> Array(1.0, 0.0),
+      "t::nullable_col" -> Array(0.0, 1.0))
     val protos = Map(
       "is_unique" -> Array(1.0, 0.0), "is_nullable" -> Array(0.0, 1.0))
-    val assigned = Clustering.ruleCentricAssign(vecs, protos).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val assigned = Clustering.ruleCentricAssign(pts, protos)
+      .map(r => r._1 -> r._2).toMap
     assert(assigned("t::unique_col") === "is_unique")
     assert(assigned("t::nullable_col") === "is_nullable")
   }
 
   test("vectorize supports standard and maxabs scaler blocks") {
-    val profiles = Profiler.profileAuto(Tables.load(spark, sf, "nation"),
-      "nation", features = Set("mode", "pattern"))
+    val rows = Profiler.profileAuto(Tables.load(spark, sf, "nation"),
+      "nation", features = Set("mode", "pattern")).collect().toSeq
+    val raw = rows.map(r => Clustering.featureVectorLocal(r))
+    val dims = Clustering.defaultFeatures.indices
     Seq("minmax", "standard", "maxabs").foreach { s =>
-      val v = Clustering.vectorize(profiles, scaler = s)
-      assert(v.count() === 3)
+      val v = Clustering.vectorize(rows, scaler = s)
+      assert(v.size === 3)
+      assert(v.map(_._1) === v.map(_._1).sorted)
+    }
+    // standard: per-feature mean 0; a constant feature scales to 0.0
+    val std = Clustering.vectorize(rows, scaler = "standard").map(_._2)
+    dims.foreach { i =>
+      assert(math.abs(std.map(_(i)).sum) < 1e-9)
+      if (raw.map(_(i)).distinct.size == 1) assert(std.forall(_(i) == 0.0))
+    }
+    // maxabs: every feature's largest magnitude is 1 unless all zero
+    val maxabs = Clustering.vectorize(rows, scaler = "maxabs").map(_._2)
+    dims.foreach { i =>
+      val m = maxabs.map(v => math.abs(v(i))).max
+      assert(m == 1.0 || raw.forall(_(i) == 0.0))
     }
     assertThrows[IllegalArgumentException](
-      Clustering.vectorize(profiles, scaler = "nope"))
+      Clustering.vectorize(rows, scaler = "nope"))
   }
 
   test("GBT predicts a planted monotone relation") {

@@ -43,15 +43,14 @@ class ClusterMatchSpec extends SparkSpec {
   }
 
   test("ARI of identical assignments is 1") {
-    val a = Seq(("x", 0), ("y", 0), ("z", 1)).toDF("column_id", "cluster_id")
+    val a = Map("x" -> 0, "y" -> 0, "z" -> 1)
     assert(math.abs(Clustering.adjustedRandIndex(a, a) - 1.0) < 1e-9)
   }
 
   test("pairing accuracy counts same-named columns across tables") {
-    val assign = Seq(
-      ("t1::id", 0), ("t2::id", 0), // paired correctly
-      ("t1::name", 1), ("t2::name", 2) // split — incorrect
-    ).toDF("column_id", "cluster_id")
+    val assign = Map(
+      "t1::id" -> 0, "t2::id" -> 0, // paired correctly
+      "t1::name" -> 1, "t2::name" -> 2) // split — incorrect
     assert(Clustering.pairingAccuracy(assign) == 0.5)
   }
 
@@ -140,13 +139,11 @@ class ClusterMatchSpec extends SparkSpec {
     // kmeans++ produces, stated as cluster-member sets so a label
     // permutation cannot hide a real assignment change: monetary/text
     // amounts, key columns, name-ish strings, small-int codes.
-    val profiles = graft.profile.Profiler.profileManyAuto(
+    val rows = graft.profile.Profiler.profileManyAutoRows(
       Seq("customer", "supplier", "part", "orders", "nation")
         .map(t => t -> graft.Tables.load(spark, sf, t)),
       features = Set("mode", "pattern"))
-    val assign = graft.cluster.Clustering
-      .kmeansLocal(graft.cluster.Clustering.vectorize(profiles), k = 4)
-      .collect().map(r => r.getString(0) -> r.getInt(1))
+    val assign = Clustering.kmeansLocalPoints(Clustering.vectorize(rows), k = 4)
     val clusters = assign.groupBy(_._2).values.map(_.map(_._1).toSet).toSet
     assert(clusters === Set(
       Set("customer::c_acctbal", "orders::o_totalprice",

@@ -73,15 +73,11 @@ class InventoryExtrasSpec extends SparkSpec {
   }
 
   test("cluster outliers and merge suggestions") {
-    import spark.implicits._
-    import org.apache.spark.ml.linalg.Vectors
     val vecs = Seq(
-      ("a1", Vectors.dense(1.0, 0.0)), ("a2", Vectors.dense(0.99, 0.05)),
-      ("a3", Vectors.dense(0.0, 1.0)), // outlier inside cluster 0
-      ("b1", Vectors.dense(0.98, 0.01)), ("b2", Vectors.dense(1.0, 0.02)))
-      .toDF("column_id", "features")
-    val assign = Seq(("a1", 0), ("a2", 0), ("a3", 0), ("b1", 1), ("b2", 1))
-      .toDF("column_id", "cluster_id")
+      "a1" -> Array(1.0, 0.0), "a2" -> Array(0.99, 0.05),
+      "a3" -> Array(0.0, 1.0), // outlier inside cluster 0
+      "b1" -> Array(0.98, 0.01), "b2" -> Array(1.0, 0.02))
+    val assign = Map("a1" -> 0, "a2" -> 0, "a3" -> 0, "b1" -> 1, "b2" -> 1)
     // the outlier drags every 3-member average down (~0.5 for a1/a2,
     // ~0.03 for a3) — threshold between those
     val outliers = Clustering.clusterOutlierColumns(vecs, assign, threshold = 0.3)

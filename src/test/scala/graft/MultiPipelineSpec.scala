@@ -49,17 +49,17 @@ class MultiPipelineSpec extends SparkSpec {
   }
 
   test("shared rules only emerge from multi-member clusters") {
-    val profiles = graft.profile.Profiler.profileAuto(
+    val rows = graft.profile.Profiler.profileAuto(
       Tables.load(spark, sf, "nation"), "nation",
-      features = Set("quartiles", "mode", "pattern"))
-    import spark.implicits._
+      features = Set("quartiles", "mode", "pattern")).collect().toSeq
     // every column its own singleton cluster → no shared rules
-    val singletons = profiles
-      .select(concat_ws("::", col("table"), col("column")).as("column_id"))
-      .withColumn("cluster_id",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy("column_id")))
-    val rules = MultiTablePipeline.sharedClusterRules(profiles, singletons)
-    assert(rules.isEmpty)
+    val singletons = rows.zipWithIndex
+      .map { case (r, i) => graft.cluster.Clustering.columnId(r) -> i }.toMap
+    assert(singletons.size === rows.size)
+    assert(MultiTablePipeline.sharedClusterRulesLocal(rows, singletons).isEmpty)
+    // the same rows in one cluster do share rules, so the empty result
+    // above comes from the singletons, not from the profile
+    val together = singletons.view.mapValues(_ => 0).toMap
+    assert(MultiTablePipeline.sharedClusterRulesLocal(rows, together).nonEmpty)
   }
 }
